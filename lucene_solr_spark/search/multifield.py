@@ -190,11 +190,11 @@ class MultiFieldWandSearcher:
                 "cross-field scoring needs the flat MultiFieldSearcher")
         return self.searchers[next(iter(fields))], stripped
 
-    def search(self, q, k: int = 10, **kw) -> DataFrame:
+    def search(self, q, k: int = 10) -> DataFrame:
         ws, inner = self._route(q)
-        return ws.search(inner, k=k, **kw)
+        return ws.search(inner, k=k)
 
-    def search_many(self, queries: dict, k: int = 10, **kw) -> DataFrame:
+    def search_many(self, queries: dict, k: int = 10) -> DataFrame:
         """Batched serving: queries route per entry; each field's
         batch runs through that field's shared-task-grid search_many,
         results union (qids must be globally unique)."""
@@ -209,7 +209,7 @@ class MultiFieldWandSearcher:
         for qid, q in queries.items():
             ws, inner = self._route(q)
             by_field.setdefault(id(ws), (ws, {}))[1][qid] = inner
-        outs = [ws.search_many(qs, k=k, **kw)
+        outs = [ws.search_many(qs, k=k)
                 for ws, qs in by_field.values()]
         return reduce(lambda a, b: a.unionByName(b), outs)
 
@@ -232,12 +232,11 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    from lucene_solr_spark.search.wand import (KERNEL_HASH_PARTITIONS,
-                                               METADATA_COLS,
+    from lucene_solr_spark.search.wand import (METADATA_COLS,
                                                _grouped_postings,
                                                _load_seg_norms,
+                                               global_topk,
                                                qf_dismax_topk)
 
     terms = [w.lower() for w in qstr.split()]
@@ -313,14 +312,9 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
              .select(*METADATA_COLS)
              .withColumn("_field", F.lit(f)))
         rows = r if rows is None else rows.unionByName(r)
-    per_seg = (rows
-               .repartition(KERNEL_HASH_PARTITIONS, F.col("seg_id"))
-               .groupBy("seg_id")
-               .applyInPandas(per_segment,
-                              schema="docid long, score float"))
-    top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("docid"))
-    return top.withColumn("rank", F.row_number().over(w))
+    per_seg = rows.groupBy("seg_id").applyInPandas(
+        per_segment, schema="docid long, score float")
+    return global_topk(per_seg, k)
 
 
 

@@ -4,7 +4,7 @@ The read path of EP2 (SURVEY §3) at block granularity:
 
   reference                                this engine
   ---------                                -----------
-  per-leaf scorer tree + BulkScorer        one applyInPandas group per
+  per-leaf scorer tree + BulkScorer        one grouped-map task per
     (IndexSearcher.search(leaves,...))       segment, numpy kernel inside
   ConjunctionDISI leapfrog / WAND          interval sweep over the merged
     (ConjunctionDISI.java:193-227;           block-boundary grid with
@@ -37,16 +37,18 @@ numpy oracle):
   in docid order — the same reasoning as TopScoreDocCollector's
   ``score <= pqTop.score`` reject).
 
-Scale: one Spark task per segment; each task touches only the query
-terms' posting rows (term-pruned parquet read), decodes only blocks
-whose bound beats theta, and emits k rows. The driver-side merge is
+Scale: one Spark task per segment (per segment and query shard in a
+batch); each task touches only the query terms' posting rows
+(term-pruned parquet read), decodes only blocks whose bound beats
+theta, and emits k rows per query. The driver-side merge is
 O(segments * k).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
+from functools import partial
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -132,7 +134,6 @@ def _decode_full_cached(ep) -> tuple[np.ndarray, np.ndarray]:
         return decode_posting(ep)
     hit = _lru_get(_FULLDEC_CACHE, ck)
     if hit is None:
-        FULLDEC_STATS["misses"] += 1
         hit = decode_posting(ep)
         global _FULLDEC_ELEMS
         _FULLDEC_ELEMS += len(hit[0])
@@ -140,9 +141,6 @@ def _decode_full_cached(ep) -> tuple[np.ndarray, np.ndarray]:
         while _FULLDEC_ELEMS > _FULLDEC_CACHE_MAX_ELEMS and len(_FULLDEC_CACHE) > 1:
             _, old = _FULLDEC_CACHE.popitem(last=False)
             _FULLDEC_ELEMS -= len(old[0])
-            FULLDEC_STATS["evictions"] += 1
-    else:
-        FULLDEC_STATS["hits"] += 1
     return hit
 
 
@@ -287,7 +285,6 @@ def boolean_topk(
     k: int,
     msm: int = 1,
     exclude: np.ndarray | None = None,
-    theta0: float = -np.inf,
     stats: WandStats | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Cost-model dispatch between the two bit-equal boolean scorers
@@ -299,7 +296,7 @@ def boolean_topk(
         return exhaustive_topk(postings, weights, norms, doc_base, bm25,
                                k, msm=msm, exclude=exclude, stats=stats)
     return wand_topk(postings, weights, norms, doc_base, bm25, k,
-                     msm=msm, exclude=exclude, theta0=theta0, stats=stats)
+                     msm=msm, exclude=exclude, stats=stats)
 
 
 def wand_topk(
@@ -559,6 +556,21 @@ def _positions_for(ep, docids: np.ndarray) -> list[np.ndarray]:
         s, t = int(starts[ii]), int(tfs[ii])
         out.append(np.cumsum(vals[s:s + t]))
     return out
+
+
+def _block_slice(decoded: dict, postings: dict, jd: dict, st: WandStats,
+                 t: str, i: int, lo: int, hi: int) -> np.ndarray:
+    """Docids of term ``t`` in interval ``i``'s (lo, hi] range. The
+    term's block there (``jd[t][i]``) is decoded once per kernel call
+    into ``decoded`` and counted in ``st.blocks_decoded``."""
+    key = (t, int(jd[t][i]))
+    if key not in decoded:
+        decoded[key] = _decode_block_cached(postings[t], key[1])
+        st.blocks_decoded += 1
+    docs_j = decoded[key][0]
+    a = np.searchsorted(docs_j, lo, side="right")
+    b = np.searchsorted(docs_j, hi, side="right")
+    return docs_j[a:b]
 
 
 def phrase_topk(
@@ -934,15 +946,7 @@ def span_nested_topk(
                      key=lambda gi: sum(eps[t].ndocs for t in groups[gi]))
     decoded: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
 
-    def _slice(t: str, i: int, lo: int, hi: int) -> np.ndarray:
-        key = (t, int(jd[t][i]))
-        if key not in decoded:
-            decoded[key] = _decode_block_cached(eps[t], key[1])
-            st.blocks_decoded += 1
-        docs_j = decoded[key][0]
-        a = np.searchsorted(docs_j, lo, side="right")
-        b = np.searchsorted(docs_j, hi, side="right")
-        return docs_j[a:b]
+    _slice = partial(_block_slice, decoded, eps, jd, st)
 
     hits: list[np.ndarray] = []
     n_hits = 0
@@ -1071,15 +1075,7 @@ def automaton_topk(
     cand_idx = np.nonzero(any_act)[0]
     decoded: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
 
-    def _slice(t: str, i: int, lo: int, hi: int) -> np.ndarray:
-        key = (t, int(jd[t][i]))
-        if key not in decoded:
-            decoded[key] = _decode_block_cached(eps[t], key[1])
-            st.blocks_decoded += 1
-        docs_j = decoded[key][0]
-        a = np.searchsorted(docs_j, lo, side="right")
-        b = np.searchsorted(docs_j, hi, side="right")
-        return docs_j[a:b]
+    _slice = partial(_block_slice, decoded, eps, jd, st)
 
     top_docs = np.empty(0, np.int64)
     top_scores = np.empty(0, np.float32)
@@ -1395,7 +1391,6 @@ def multiphrase_topk(
     groups: list[list[int]] | None = None,
     multi_term: bool = False,
     stats: WandStats | None = None,
-    collect_freqs: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Segment-native two-phase MultiPhrase kernel — phrase_topk
     generalized to OR-per-position slots (search/MultiPhraseQuery.java's
@@ -1430,8 +1425,6 @@ def multiphrase_topk(
     n_slots = len(slots)
     slot_terms = [[t for t in slot if t in postings] for slot in slots]
     if n_slots == 0 or any(not st for st in slot_terms):
-        if collect_freqs:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
         return np.empty(0, np.int64), np.empty(0, np.float32)
     uniq = sorted({t for st in slot_terms for t in st})
     grids = {t: _term_block_grid(postings[t]) for t in uniq}
@@ -1474,27 +1467,17 @@ def multiphrase_topk(
     if slop > 0:
         from lucene_solr_spark.search.executor import _sloppy_phrase_freq
 
-    def _slice(t: str, i: int, lo: int, hi: int) -> np.ndarray:
-        key = (t, int(jd[t][i]))
-        if key not in decoded:
-            decoded[key] = _decode_block_cached(postings[t], key[1])
-            st.blocks_decoded += 1
-        docs_j = decoded[key][0]
-        a = np.searchsorted(docs_j, lo, side="right")
-        b = np.searchsorted(docs_j, hi, side="right")
-        return docs_j[a:b]
+    _slice = partial(_block_slice, decoded, postings, jd, st)
 
     top_docs = np.empty(0, np.int64)
     top_scores = np.empty(0, np.float32)
     theta = np.float32(-np.inf)
-    out_d: list[np.ndarray] = []
-    out_f: list[np.ndarray] = []
 
     for i in cand_idx:
         hi = int(bounds[i])
         lo = int(bounds[i - 1]) if i > 0 else -1
         full = len(top_scores) >= k
-        if not collect_freqs and full and ub32[i] <= theta:
+        if full and ub32[i] <= theta:
             continue
 
         # phase 1: slot-union docid conjunction, cheapest slot first
@@ -1558,11 +1541,6 @@ def multiphrase_topk(
             continue
         cand_d = inter[mask]
         f = freqs[mask]
-        if collect_freqs:
-            out_d.append(cand_d)
-            out_f.append(f)
-            continue
-
         nb = norms[cand_d - doc_base]
         cand_s = bm25.score(
             np.full(len(cand_d), np.float32(weight), np.float32), f, nb)
@@ -1578,25 +1556,35 @@ def multiphrase_topk(
         if len(top_scores) >= k:
             theta = top_scores[-1]
 
-    if collect_freqs:
-        if not out_d:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        return np.concatenate(out_d), np.concatenate(out_f)
     return top_docs, top_scores
 
 
 # --- Spark orchestration ----------------------------------------------------
 
 
-# Hash width for the POSITIONAL kernel task grids (phrase /
-# multiphrase / span plans): segment ids are FEW (8-64) — hashed into
-# the default shuffle width (2x cores) two segments collide in one
-# task ~35% of the time and their kernels run serially (measured ~2x
-# wall on hot-hot phrases, whose kernels are the most expensive).
-# 128 buckets cut the collision odds to ~20% with negligible AQE
-# overhead; the cheap WAND/batched paths keep the default width (the
-# extra exchange planning costs more than a rare collision there).
-KERNEL_HASH_PARTITIONS = 128
+class KernelSpec(NamedTuple):
+    """One query's segment kernel: the terms whose metadata rows it
+    reads, and ``run(eps, norms, doc_base) -> (docids, scores)`` over
+    one segment's postings (None when the query cannot match there).
+    ``bulk``: the kernel decodes every posting group anyway, so the
+    task reads all payloads in one go."""
+    terms: tuple[str, ...]
+    run: Callable | None
+    bulk: bool = False
+
+
+def _only(eps: dict, terms) -> dict:
+    """The postings of ``terms`` that this segment has."""
+    return {t: eps[t] for t in terms if t in eps}
+
+
+def global_topk(hits: DataFrame, k: int) -> DataFrame:
+    """TopDocs.merge over per-segment hits: global (score desc,
+    docid asc) top-k with its 1-based rank."""
+    top = hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+    w = Window.orderBy(F.desc("score"), F.asc("docid"))
+    return top.withColumn("rank", F.row_number().over(w))
+
 
 # Batched-serving result schema — shared with MultiFieldWandSearcher's
 # empty fast path so the two can never drift.
@@ -1636,7 +1624,6 @@ _FULLDEC_CACHE: "_OD[tuple, tuple]" = _OD()
 _FULLDEC_CACHE_MAX_ELEMS = int(_os.environ.get("LSS_FULLDEC_CACHE_ELEMS",
                                                str(8_000_000)))
 _FULLDEC_ELEMS = 0
-FULLDEC_STATS = {"hits": 0, "misses": 0, "evictions": 0}
 
 
 def _lru_get(cache: "_OD", key):
@@ -1652,32 +1639,37 @@ def _lru_put(cache: "_OD", key, val, cap: int) -> None:
         cache.popitem(last=False)
 
 
-def _prefetch_payloads(idx_path: str, seg_id: int, terms: list[str],
-                       cache: dict) -> None:
-    """Seed the fetch cache with ALL group payloads of ``terms`` in one
-    columnar read (used for single-group terms, whose whole payload is
-    one small cell — per-term point reads would cost more IO round
-    trips than the bytes saved by laziness)."""
+def _read_payloads(idx_path: str, seg_id: int, filters: list,
+                   cache: dict) -> None:
+    """Read the (docs_enc, tfs_enc) group cells that match ``filters``
+    into ``cache`` and the worker-global payload LRU."""
     import pyarrow.parquet as pq
 
-    missing = [t for t in terms
-               if _lru_get(_PAYLOAD_CACHE, (idx_path, seg_id, t, 0)) is None]
-    for t in terms:
-        if t in missing:
-            continue
-        cache[(t, 0)] = _lru_get(_PAYLOAD_CACHE, (idx_path, seg_id, t, 0))
-    if not missing:
-        return
-    t = pq.read_table(
-        f"{idx_path}/postings/seg_id={seg_id}",
-        columns=["term", "grp_id", "docs_enc", "tfs_enc"],
-        filters=[("term", "in", list(missing))])
+    t = pq.read_table(f"{idx_path}/postings/seg_id={seg_id}",
+                      columns=["term", "grp_id", "docs_enc", "tfs_enc"],
+                      filters=filters)
     for tm, g, d, f in zip(t["term"].to_pylist(), t["grp_id"].to_pylist(),
                            t["docs_enc"].to_pylist(), t["tfs_enc"].to_pylist()):
         cell = (d if d is not None else b"", f if f is not None else b"")
         cache[(tm, int(g))] = cell
         _lru_put(_PAYLOAD_CACHE, (idx_path, seg_id, tm, int(g)), cell,
                  _PAYLOAD_CACHE_CELLS)
+
+
+def _prefetch_payloads(idx_path: str, seg_id: int, terms: list[str],
+                       cache: dict) -> None:
+    """Seed the fetch cache with ALL group payloads of ``terms`` in one
+    columnar read (used for single-group terms, whose whole payload is
+    one small cell — per-term point reads would cost more IO round
+    trips than the bytes saved by laziness)."""
+    missing = [t for t in terms
+               if _lru_get(_PAYLOAD_CACHE, (idx_path, seg_id, t, 0)) is None]
+    for t in terms:
+        if t in missing:
+            continue
+        cache[(t, 0)] = _lru_get(_PAYLOAD_CACHE, (idx_path, seg_id, t, 0))
+    if missing:
+        _read_payloads(idx_path, seg_id, [("term", "in", missing)], cache)
 
 
 def _make_group_fetcher(idx_path: str, seg_id: int, readahead: int = 4):
@@ -1696,10 +1688,7 @@ def _make_group_fetcher(idx_path: str, seg_id: int, readahead: int = 4):
     interval sweep requests ascend in docid order — the per-leaf .doc
     stream readahead of the reference, with the scorer task doing its
     own IO instead of the planner mailing it the stream."""
-    import pyarrow.parquet as pq
-
     cache: dict[tuple[str, int], tuple[bytes, bytes]] = {}
-    fetch_cache = cache  # exposed for bulk seeding (fetch.cache)
 
     def fetch(term: str, grp: int) -> tuple[bytes, bytes]:
         key = (term, grp)
@@ -1708,23 +1697,12 @@ def _make_group_fetcher(idx_path: str, seg_id: int, readahead: int = 4):
             if hit is not None:
                 cache[key] = hit
                 return hit
-            t = pq.read_table(
-                f"{idx_path}/postings/seg_id={seg_id}",
-                columns=["term", "grp_id", "docs_enc", "tfs_enc"],
-                filters=[("term", "==", term), ("grp_id", ">=", grp),
-                         ("grp_id", "<", grp + readahead)])
-            for tm, g, d, f in zip(t["term"].to_pylist(),
-                                   t["grp_id"].to_pylist(),
-                                   t["docs_enc"].to_pylist(),
-                                   t["tfs_enc"].to_pylist()):
-                cell = (d if d is not None else b"",
-                        f if f is not None else b"")
-                cache[(tm, int(g))] = cell
-                _lru_put(_PAYLOAD_CACHE, (idx_path, seg_id, tm, int(g)),
-                         cell, _PAYLOAD_CACHE_CELLS)
+            _read_payloads(idx_path, seg_id,
+                           [("term", "==", term), ("grp_id", ">=", grp),
+                            ("grp_id", "<", grp + readahead)], cache)
         return cache[key]
 
-    fetch.cache = fetch_cache
+    fetch.cache = cache  # exposed for bulk seeding
     return fetch
 
 
@@ -1843,11 +1821,24 @@ def _load_seg_norms(idx_path: str, seg_id: int) -> tuple[np.ndarray, int]:
 class WandSearcher:
     """Segment-level top-k search with block-max WAND pruning.
 
-    Supports flat boolean shapes — TermQ, AndQ/OrQ over terms (with
-    min_should_match), NotQ whose negative side is a term/OR-of-terms
-    — which covers the north rule's query set (term + boolean AND/OR).
-    Anything else falls back to the exhaustive flat executor over
-    decoded postings (same scores, no pruning).
+    Segment-native shapes, each a per-segment kernel that search()
+    runs alone and search_many() batches:
+
+    - flat boolean: TermQ, AndQ/OrQ over unboosted terms (with
+      min_should_match), NotQ whose negative side is a
+      term/OR-of-terms (boolean_topk);
+    - PhraseQ, exact and sloppy (phrase_topk);
+    - MultiPhraseQ (multiphrase_topk);
+    - top-level SpanNearQ (span_near_topk) and nested SpanNearNQ
+      trees (span_nested_topk);
+    - TermAutomatonQ (automaton_topk);
+    - SynonymQ (synonym_topk) and BlendedTermQ (exhaustive_topk with
+      the blended weight);
+    - DisMaxQ over unboosted terms (dismax_terms_topk).
+
+    Anything else (nested boolean trees, boosted terms, multi-term
+    and payload shapes) falls back in search() to the exhaustive flat
+    executor over decoded postings (same scores, no pruning).
     """
 
     def __init__(self, si: SegmentIndex, k1: float = 1.2, b: float = 0.75,
@@ -1983,563 +1974,252 @@ class WandSearcher:
                 self._df_cache[t] = got.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
 
-    def search(self, q: A.Query | str, k: int = 10,
-               seed_theta: bool = False) -> DataFrame:
-        """``seed_theta``: spend one extra (tiny) Spark job running the
-        lowest-doc_base segment first and seed every other segment's
-        kernel with its kth score — at large segment counts this
-        prunes most blocks fleet-wide before any local heap fills.
-        Off by default: in local/interactive mode the extra job
-        round-trip outweighs the pruning."""
+    def search(self, q: A.Query | str, k: int = 10) -> DataFrame:
+        """Top-k (docid, score, rank) of one query. Segment-native shapes
+        (see the class docstring) run their kernel in one grouped-map
+        task per segment, then a global (score desc, docid asc) top-k;
+        other shapes take the flat executor fallback."""
         self._check_snapshot()
         if isinstance(q, str):
             q = A.parse_query(q)
         q = q.rewrite()
+        spec = self._kernel_spec(q, k)
+        if spec is None:
+            return self._search_flat(q, k)
+        hits = self._kernel_plan({"": spec})
+        if hits is None:
+            return self.si.spark.createDataFrame(
+                [], "docid long, score float, rank int")
+        return global_topk(hits.select("docid", "score"), k)
+
+    def _search_flat(self, q: A.Query, k: int) -> DataFrame:
+        """Fallback for shapes with no segment kernel: exhaustive over
+        decoded postings; positions are decoded from the .pos stream
+        only when the query needs them (phrase/span shapes)."""
+        from lucene_solr_spark.search.executor import Searcher, _collect_terms
+
+        def scan(node, pred) -> bool:
+            if pred(node):
+                return True
+            kids = []
+            if isinstance(node, (A.AndQ, A.OrQ, A.DisMaxQ)):
+                kids = node.clauses
+            elif isinstance(node, A.NotQ):
+                kids = (node.positive, node.negative)
+            elif isinstance(node, A.ReqOptQ):
+                kids = (node.required, node.optional)
+            elif isinstance(node, A.ConstQ):
+                kids = (node.inner,)
+            return any(scan(c, pred) for c in kids)
+
+        needs_pos = scan(q, lambda n: isinstance(
+            n, (A.PhraseQ, A.MultiPhraseQ, A.SpanNearQ,
+                A.SpanOrNQ, A.SpanNearNQ, A.TermAutomatonQ)))
+        needs_offs = scan(q, lambda n: isinstance(n, A.PayloadScoreQ))
+        # term-restricted decode is only valid when the term set is
+        # closed (multi-term queries expand against the dictionary;
+        # Synonym/Blended/SpanNear leaves are closed — their terms
+        # come back from _collect_terms, and df/coll stats stay
+        # index-global under restriction)
+        expands = scan(q, lambda n: isinstance(
+            n, (A.MultiTermQ, A.MatchAllQ)))
+        qterms = None if expands else (sorted(_collect_terms(q)) or None)
+        flat = self.si.as_flat_tables(with_positions=needs_pos,
+                                      terms=qterms,
+                                      with_offsets=needs_offs)
+        return Searcher(flat, mode="lucene").search(q, k=k)
+
+    def _phrase_weight(self, boost: float, terms, dfs: dict) -> np.float32:
+        """The flat phrase weight recipe, f32(boost) * f32(sum of idf
+        over ``terms`` in the given order) * f32(k1 + 1)."""
+        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in terms))
+        return (np.float32(boost) * np.float32(idf_sum64)
+                * np.float32(self._k1 + 1.0))
+
+    def _kernel_spec(self, q: A.Query, k: int) -> KernelSpec | None:
+        """The segment kernel of a rewritten query, or None when the
+        shape has none (flat fallback). A spec with no terms can match
+        nothing. Every kernel scores bit-equal to the flat executor's
+        evaluator of the same shape (duel-tested)."""
+        bm25 = self.bm25
+        k = int(k)
+        nothing = KernelSpec((), None)
         if isinstance(q, A.PhraseQ):
-            # segment-native two-phase phrase path (no full decode)
-            return self._search_phrase(q, k)
+            # two-phase phrase kernel; a segment missing a term cannot
+            # match
+            terms = list(q.terms)
+            uniq = sorted(set(terms))
+            dfs = self._global_df(uniq)
+            if any(dfs[t] == 0 for t in uniq):
+                return nothing
+            weight = self._phrase_weight(q.boost, terms, dfs)
+            slop = int(q.slop)
+
+            def run_phrase(eps, norms, doc_base):
+                if any(t not in eps for t in uniq):
+                    return None
+                return phrase_topk(terms, eps, weight, norms, doc_base,
+                                   bm25, k=k, slop=slop)
+            return KernelSpec(tuple(uniq), run_phrase)
         if isinstance(q, A.MultiPhraseQ):
-            return self._search_multiphrase(q, k)
-        if isinstance(q, A.SpanNearQ):
-            return self._search_span_near(q, k)
-        if isinstance(q, A.SpanNearNQ):
-            return self._search_span_nested(q, k)
+            # slot-union kernel; weight over ALL distinct slot terms,
+            # rptGroups from the flat evaluator's multiphrase_rpt_groups
+            from lucene_solr_spark.search.executor import (
+                multiphrase_rpt_groups)
+
+            all_terms = sorted({t for slot in q.slots for t in slot})
+            dfs = self._global_df(all_terms)
+            if any(all(dfs[t] == 0 for t in slot) for slot in q.slots):
+                return nothing
+            weight = self._phrase_weight(q.boost, all_terms, dfs)
+            groups, multi_term = multiphrase_rpt_groups(q.slots, q.slop)
+            slots = [tuple(s) for s in q.slots]
+            slop = int(q.slop)
+            return KernelSpec(
+                tuple(t for t in all_terms if dfs[t] > 0),
+                lambda eps, norms, doc_base: multiphrase_topk(
+                    slots, eps, weight, norms, doc_base, bm25, k=k,
+                    slop=slop, groups=groups, multi_term=multi_term))
+        if isinstance(q, (A.SpanNearQ, A.SpanNearNQ)):
+            # constant-score span kernels: per-segment early
+            # termination at k matches is exact (lowest docids win)
+            from lucene_solr_spark.search.spannest import leaf_terms
+
+            nested = isinstance(q, A.SpanNearNQ)
+            terms = sorted(leaf_terms(q) if nested else {q.first, q.second})
+            dfs = self._global_df(terms)
+            present = tuple(t for t in terms if dfs[t] > 0)
+            if not present or (not nested and len(present) < len(terms)):
+                return nothing
+            boost = float(np.float32(q.boost))
+            if nested:
+                return KernelSpec(present, lambda eps, norms, doc_base:
+                                  span_nested_topk(q, eps, boost, k=k))
+            first, second = q.first, q.second
+            slop, in_order = int(q.slop), bool(q.in_order)
+            return KernelSpec(present, lambda eps, norms, doc_base:
+                              span_near_topk(first, second, eps, boost,
+                                             k=k, slop=slop,
+                                             in_order=in_order))
         if isinstance(q, A.TermAutomatonQ):
-            return self._search_term_automaton(q, k)
+            # per-path block-grid conjunctions; weight = the phrase
+            # recipe over ALL automaton terms (absent ones add their
+            # df=0 idf, as the flat path does)
+            paths = q.finite_strings()
+            all_terms = sorted({t for p in paths for t in p
+                                if t is not None})
+            dfs = self._global_df(all_terms)
+            present = tuple(t for t in all_terms if dfs[t] > 0)
+            if not present:
+                return nothing
+            weight = self._phrase_weight(q.boost, all_terms, dfs)
+            return KernelSpec(present, lambda eps, norms, doc_base:
+                              automaton_topk(paths, eps, weight, norms,
+                                             doc_base, bm25, k=k))
         if isinstance(q, (A.SynonymQ, A.BlendedTermQ)):
-            return self._search_blend(q, k)
+            # both score with the BLENDED df (max over the terms);
+            # Synonym sums tf and scores once, Blended scores per term
+            # with the shared weight and SHOULD-folds
+            terms = sorted(set(q.terms))
+            dfs = self._global_df(terms)
+            present = tuple(t for t in terms if dfs[t] > 0)
+            if not present:
+                return nothing
+            w32 = np.float32(bm25.term_weight(
+                max(dfs[t] for t in present), q.boost))
+            if isinstance(q, A.SynonymQ):
+                return KernelSpec(present, lambda eps, norms, doc_base:
+                                  synonym_topk(_only(eps, present), w32,
+                                               norms, doc_base, bm25, k=k),
+                                  bulk=True)
+            return KernelSpec(present, lambda eps, norms, doc_base:
+                              exhaustive_topk(_only(eps, present),
+                                              dict.fromkeys(present, w32),
+                                              norms, doc_base, bm25, k=k),
+                              bulk=True)
         if (isinstance(q, A.DisMaxQ)
                 and all(isinstance(c, A.TermQ) and c.boost == 1.0
                         for c in q.clauses)):
-            return self._search_dismax_terms(q, k)
+            terms = sorted({c.term for c in q.clauses})
+            dfs = self._global_df(terms)
+            present = tuple(t for t in terms if dfs[t] > 0)
+            if not present:
+                return nothing
+            weights = {t: bm25.term_weight(dfs[t]) for t in present}
+            tie = float(q.tie_breaker)
+            return KernelSpec(present, lambda eps, norms, doc_base:
+                              dismax_terms_topk(_only(eps, present),
+                                                weights, tie, norms,
+                                                doc_base, bm25, k=k),
+                              bulk=True)
         shape = self._flat_terms(q)
         if shape is None:
-            # fallback: exhaustive over decoded postings; positions are
-            # decoded from the .pos stream only when the query needs
-            # them (phrase/span shapes)
-            from lucene_solr_spark.search.executor import Searcher
-
-            def scan(node, pred) -> bool:
-                if pred(node):
-                    return True
-                kids = []
-                if isinstance(node, (A.AndQ, A.OrQ, A.DisMaxQ)):
-                    kids = node.clauses
-                elif isinstance(node, A.NotQ):
-                    kids = (node.positive, node.negative)
-                elif isinstance(node, A.ReqOptQ):
-                    kids = (node.required, node.optional)
-                elif isinstance(node, A.ConstQ):
-                    kids = (node.inner,)
-                return any(scan(c, pred) for c in kids)
-
-            needs_pos = scan(q, lambda n: isinstance(
-                n, (A.PhraseQ, A.MultiPhraseQ, A.SpanNearQ,
-                    A.SpanOrNQ, A.SpanNearNQ, A.TermAutomatonQ)))
-            needs_offs = scan(q, lambda n: isinstance(n, A.PayloadScoreQ))
-            # term-restricted decode is only valid when the term set is
-            # closed (multi-term queries expand against the dictionary;
-            # Synonym/Blended/SpanNear leaves are closed — their terms
-            # come back from _collect_terms, and df/coll stats stay
-            # index-global under restriction)
-            expands = scan(q, lambda n: isinstance(
-                n, (A.MultiTermQ, A.MatchAllQ)))
-            from lucene_solr_spark.search.executor import _collect_terms
-
-            qterms = None if expands else (sorted(_collect_terms(q)) or None)
-            flat = self.si.as_flat_tables(with_positions=needs_pos,
-                                          terms=qterms,
-                                          with_offsets=needs_offs)
-            return Searcher(flat, mode="lucene").search(q, k=k)
+            return None
         terms, msm, neg_terms = shape
         dfs = self._global_df(terms + neg_terms)
-        present = sorted({t for t in terms if dfs[t] > 0})
+        present = tuple(sorted({t for t in terms if dfs[t] > 0}))
         if len(present) < msm or not present:
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        weights = {t: self.bm25.term_weight(dfs[t]) for t in present}
-        neg_present = sorted({t for t in neg_terms if dfs[t] > 0})
+            return nothing
+        weights = {t: bm25.term_weight(dfs[t]) for t in present}
+        negs = tuple(sorted({t for t in neg_terms if dfs[t] > 0}))
 
-        bm25 = self.bm25
-        k_ = int(k)
-        msm_ = int(msm)
-        neg_set = set(neg_present)
-        pos_set = set(present)
-        idx_path = self.si.path
+        def run_boolean(eps, norms, doc_base):
+            postings = _only(eps, present)
+            if len(postings) < msm:
+                return None
+            neg_parts = [_decode_full_cached(eps[t])[0]
+                         for t in negs if t in eps]
+            exclude = (np.unique(np.concatenate(neg_parts))
+                       if neg_parts else None)
+            return boolean_topk(postings, weights, norms, doc_base, bm25,
+                                k=k, msm=msm, exclude=exclude)
+        return KernelSpec(present + negs, run_boolean)
 
-        def make_per_segment(theta0: float):
-            def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                from lucene_solr_spark.index.codec import decode_posting
+    def _kernel_plan(self, specs: dict[str, KernelSpec]) -> DataFrame | None:
+        """The one Spark plan every segment kernel runs in: metadata
+        rows of the specs' terms, exploded to the (seg_id, shard)
+        tasks whose specs read them, one grouped-map task per pair
+        that runs its specs in turn. Returns (qid, docid, score), at
+        most k rows per (query, segment), or None when no spec can
+        match.
 
-                sid = int(key[0])
-                norms, doc_base = _load_seg_norms(idx_path, sid)
-                eps = _grouped_postings(idx_path, sid, pdf)
-                postings = {t: gp for t, gp in eps.items() if t in pos_set}
-                exclude = None
-                neg_parts = [_decode_full_cached(eps[t])[0]
-                             for t in neg_set if t in eps]
-                if neg_parts:
-                    exclude = np.unique(np.concatenate(neg_parts))
-                d, s = boolean_topk(postings, weights, norms, doc_base, bm25,
-                                    k=k_, msm=msm_, exclude=exclude,
-                                    theta0=theta0)
-                return pd.DataFrame({"docid": d, "score": s})
-            return per_segment
-
-        rows = self._meta_rows().where(
-            F.col("term").isin(present + neg_present))
-        if seed_theta and len(self.si.live_segments()) > 1:
-            # Cross-segment threshold seeding (the distributed
-            # TopScoreDocCollector's setMinCompetitiveScore round):
-            # run the kernel on the LOWEST-DOC_BASE segment first; its
-            # kth score is a valid floor for the global threshold, so
-            # every other segment's kernel starts with a competitive
-            # theta and skips strictly-below blocks before its own
-            # heap fills. Results stay bit-identical: ties at the
-            # seed are kept, and equal-score docs in later segments
-            # lose the docid tie-break anyway (their docids are
-            # larger than the seed segment's).
-            seed_seg = self._lowest_docbase_segment()
-            seed_hits = (rows.where(F.col("seg_id") == seed_seg)
-                         .groupBy("seg_id")
-                         .applyInPandas(make_per_segment(float("-inf")),
-                                        schema="docid long, score float")
-                         .collect())
-            theta0 = float("-inf")
-            if len(seed_hits) >= k:
-                theta0 = float(sorted(
-                    (r["score"] for r in seed_hits), reverse=True)[k - 1])
-            rest = (rows.where(F.col("seg_id") != seed_seg)
-                    .groupBy("seg_id")
-                    .applyInPandas(make_per_segment(theta0),
-                                   schema="docid long, score float"))
-            seed_df = self.si.spark.createDataFrame(
-                [(int(r["docid"]), float(r["score"])) for r in seed_hits],
-                "docid long, score float")
-            per_seg = rest.unionByName(seed_df)
-        else:
-            per_seg = rows.groupBy("seg_id").applyInPandas(
-                make_per_segment(float("-inf")),
-                schema="docid long, score float")
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _phrase_plan(self, terms: list[str], slop: int, k: int,
-                     weight: np.float32, collect_freqs: bool) -> DataFrame:
-        """Shared phrase orchestration: ship METADATA-ONLY posting rows
-        of the phrase's distinct terms to one applyInPandas task per
-        segment; the kernel does lazy payload + .pos IO task-side.
-        Schema: (docid, score) for top-k, (docid, pfreq) for freqs."""
-        bm25 = self.bm25
-        k_ = int(k)
-        slop_ = int(slop)
-        idx_path = self.si.path
-        terms_ = list(terms)
-        uniq = sorted(set(terms_))
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf)
-            if any(t not in eps for t in uniq):
-                cols = {"docid": np.empty(0, np.int64)}
-                cols["pfreq" if collect_freqs else "score"] = (
-                    np.empty(0, np.float64 if collect_freqs else np.float32))
-                return pd.DataFrame(cols)
-            d, v = phrase_topk(terms_, eps, weight, norms, doc_base, bm25,
-                               k=k_, slop=slop_, collect_freqs=collect_freqs)
-            if collect_freqs:
-                return pd.DataFrame({"docid": d, "pfreq": v})
-            return pd.DataFrame({"docid": d, "score": v})
-
-        rows = self._meta_rows().where(F.col("term").isin(uniq))
-        schema = ("docid long, pfreq double" if collect_freqs
-                  else "docid long, score float")
-        rows = rows.repartition(KERNEL_HASH_PARTITIONS,
-                                F.col("seg_id"))
-        return rows.groupBy("seg_id").applyInPandas(per_segment,
-                                                    schema=schema)
-
-    def _search_phrase(self, q: A.PhraseQ, k: int) -> DataFrame:
-        """PhraseQ over the segment index via the two-phase kernel —
-        same scores as the flat executor's _eval_phrase (duel-tested):
-        weight = f32(boost * f32(sum idf over the slot array) * (k1+1)),
-        score = f32 BM25 of the phrase freq."""
-        terms = list(q.terms)
-        dfs = self._global_df(sorted(set(terms)))
-        if any(dfs[t] == 0 for t in set(terms)):
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in terms))
-        weight = (np.float32(q.boost) * np.float32(idf_sum64)
-                  * np.float32(self._k1 + 1.0))
-        per_seg = self._phrase_plan(terms, q.slop, k, weight,
-                                    collect_freqs=False)
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _search_multiphrase(self, q: A.MultiPhraseQ, k: int) -> DataFrame:
-        """MultiPhraseQ over the segment index via the two-phase
-        slot-union kernel (multiphrase_topk) — same scores as the flat
-        _eval_multi_phrase (duel-tested): weight = f32(boost *
-        f32(sum idf over ALL distinct slot terms) * (k1+1)), rptGroups
-        from the shared multiphrase_rpt_groups."""
-        from lucene_solr_spark.search.executor import multiphrase_rpt_groups
-
-        all_terms = sorted({t for slot in q.slots for t in slot})
-        dfs = self._global_df(all_terms)
-        if any(all(dfs[t] == 0 for t in slot) for slot in q.slots):
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in all_terms))
-        weight = (np.float32(q.boost) * np.float32(idf_sum64)
-                  * np.float32(self._k1 + 1.0))
-        groups, multi_term = multiphrase_rpt_groups(q.slots, q.slop)
-
-        bm25 = self.bm25
-        k_ = int(k)
-        slop_ = int(q.slop)
-        idx_path = self.si.path
-        slots_ = [tuple(s) for s in q.slots]
-        present = sorted({t for t in all_terms if dfs[t] > 0})
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf)
-            d, s = multiphrase_topk(slots_, eps, weight, norms, doc_base,
-                                    bm25, k=k_, slop=slop_, groups=groups,
-                                    multi_term=multi_term)
-            return pd.DataFrame({"docid": d, "score": s})
-
-        rows = self._meta_rows().where(F.col("term").isin(present))
-        per_seg = (rows
-                   .repartition(KERNEL_HASH_PARTITIONS, F.col("seg_id"))
-                   .groupBy("seg_id").applyInPandas(
-                       per_segment, schema="docid long, score float"))
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _search_span_near(self, q: A.SpanNearQ, k: int) -> DataFrame:
-        """Top-level SpanNearQ over the segment index via the two-phase
-        span kernel (span_near_topk) — no full posting decode; the
-        constant score makes per-segment early termination exact (k
-        lowest docids win the tie-break). Same matches and scores as
-        the flat executor's _eval_span_near (duel-tested)."""
-        dfs = self._global_df(sorted({q.first, q.second}))
-        if any(v == 0 for v in dfs.values()):
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        k_ = int(k)
-        slop_ = int(q.slop)
-        in_order_ = bool(q.in_order)
-        boost_ = float(np.float32(q.boost))
-        idx_path = self.si.path
-        first_, second_ = q.first, q.second
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            eps = _grouped_postings(idx_path, sid, pdf)
-            d, s = span_near_topk(first_, second_, eps, boost_, k=k_,
-                                  slop=slop_, in_order=in_order_)
-            return pd.DataFrame({"docid": d, "score": s})
-
-        rows = self._meta_rows().where(
-            F.col("term").isin(sorted({first_, second_})))
-        per_seg = (rows
-                   .repartition(KERNEL_HASH_PARTITIONS, F.col("seg_id"))
-                   .groupBy("seg_id").applyInPandas(
-                       per_segment, schema="docid long, score float"))
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _search_span_nested(self, q, k: int) -> DataFrame:
-        """Nested span tree (SpanNearNQ with SpanOrNQ / SpanNearNQ
-        sub-clauses) over the segment index via span_nested_topk — a
-        nested span pairing a zipf-head term no longer full-decodes it
-        (the r4 fallback went through as_flat_tables). Same matches
-        and scores as the flat executor's _eval_span_nested: both call
-        spannest.emit_spans (duel-tested)."""
-        from lucene_solr_spark.search.spannest import leaf_terms
-
-        terms = sorted(leaf_terms(q))
-        dfs = self._global_df(terms)
-        if all(dfs[t] == 0 for t in terms):
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        k_ = int(k)
-        boost_ = float(np.float32(q.boost))
-        idx_path = self.si.path
-        present = [t for t in terms if dfs[t] > 0]
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            eps = _grouped_postings(idx_path, sid, pdf)
-            d, s = span_nested_topk(q, eps, boost_, k=k_)
-            return pd.DataFrame({"docid": d, "score": s})
-
-        rows = self._meta_rows().where(F.col("term").isin(present))
-        per_seg = (rows
-                   .repartition(KERNEL_HASH_PARTITIONS, F.col("seg_id"))
-                   .groupBy("seg_id").applyInPandas(
-                       per_segment, schema="docid long, score float"))
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _search_blend(self, q, k: int) -> DataFrame:
-        """SynonymQ / BlendedTermQ on the segment tier — both score
-        with the BLENDED df (max over the terms); Synonym sums tf and
-        scores once (synonym_topk), Blended scores per term with the
-        shared weight and SHOULD-folds (== exhaustive_topk with one
-        weight). Bit-equal to the flat evaluators (duels)."""
-        terms = sorted(set(q.terms))
-        dfs = self._global_df(terms)
-        present = [t for t in terms if dfs[t] > 0]
-        if not present:
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        w32 = np.float32(self.bm25.term_weight(
-            max(dfs[t] for t in present), q.boost))
-        is_syn = isinstance(q, A.SynonymQ)
-        bm25 = self.bm25
-        k_ = int(k)
-        idx_path = self.si.path
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf, bulk_all=True)
-            if is_syn:
-                d, s = synonym_topk(eps, w32, norms, doc_base, bm25, k=k_)
-            else:
-                d, s = exhaustive_topk(eps, {t: w32 for t in eps},
-                                       norms, doc_base, bm25, k=k_)
-            return pd.DataFrame({"docid": d, "score": s})
-
-        rows = self._meta_rows().where(F.col("term").isin(present))
-        per_seg = (rows.groupBy("seg_id").applyInPandas(
-            per_segment, schema="docid long, score float"))
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _search_dismax_terms(self, q, k: int) -> DataFrame:
-        """DisMaxQ over plain term clauses on the segment tier
-        (dismax_terms_topk). Bit-equal to the flat _eval_dismax."""
-        terms = sorted({c.term for c in q.clauses})
-        dfs = self._global_df(terms)
-        present = [t for t in terms if dfs[t] > 0]
-        if not present:
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        weights = {t: self.bm25.term_weight(dfs[t]) for t in present}
-        tie = float(q.tie_breaker)
-        bm25 = self.bm25
-        k_ = int(k)
-        idx_path = self.si.path
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf, bulk_all=True)
-            d, s = dismax_terms_topk(eps, weights, tie, norms, doc_base,
-                                     bm25, k=k_)
-            return pd.DataFrame({"docid": d, "score": s})
-
-        rows = self._meta_rows().where(F.col("term").isin(present))
-        per_seg = (rows.groupBy("seg_id").applyInPandas(
-            per_segment, schema="docid long, score float"))
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def _search_term_automaton(self, q, k: int) -> DataFrame:
-        """TermAutomatonQ over the segment index via automaton_topk —
-        the finite strings run as per-path block-grid conjunctions
-        with lazy .pos (the r4 fallback full-decoded the automaton's
-        terms). Same matches/scores as the flat executor's
-        _eval_term_automaton (duel-tested): weight = the phrase recipe
-        over ALL automaton terms (absent terms contribute their
-        df=0 idf, as the flat path does)."""
-        paths = q.finite_strings()
-        all_terms = sorted({t for p in paths for t in p if t is not None})
-        if not all_terms:
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        dfs = self._global_df(all_terms)
-        present = [t for t in all_terms if dfs[t] > 0]
-        if not present:
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in all_terms))
-        weight = np.float32(np.float32(q.boost) * np.float32(idf_sum64)
-                            * np.float32(self._k1 + 1.0))
-        bm25 = self.bm25
-        k_ = int(k)
-        idx_path = self.si.path
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf)
-            d, s = automaton_topk(paths, eps, weight, norms, doc_base,
-                                  bm25, k=k_)
-            return pd.DataFrame({"docid": d, "score": s})
-
-        rows = self._meta_rows().where(F.col("term").isin(present))
-        per_seg = (rows
-                   .repartition(KERNEL_HASH_PARTITIONS, F.col("seg_id"))
-                   .groupBy("seg_id").applyInPandas(
-                       per_segment, schema="docid long, score float"))
-        top = per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("docid"))
-        return top.withColumn("rank", F.row_number().over(w))
-
-    def phrase_freqs(self, terms: list[str], slop: int = 0) -> DataFrame:
-        """All (docid, phrase freq) matches of a phrase — the unranked
-        MatchesIterator view. Runs the same two-phase kernel with no
-        theta (every match is returned), still decoding docs only in
-        all-terms-active intervals and positions only for intersection
-        docs. pfreq is integral for slop=0, fractional (sloppyFreq
-        sums 1/(len+1)) for slop>0."""
-        self._check_snapshot()
-        dfs = self._global_df(sorted(set(terms)))
-        if any(dfs[t] == 0 for t in set(terms)):
-            return self.si.spark.createDataFrame([], "docid long, pfreq double")
-        return self._phrase_plan(list(terms), slop, 0, np.float32(1.0),
-                                 collect_freqs=True)
-
-    def _lowest_docbase_segment(self) -> int:
-        snap = tuple(self.si.live_segments())
-        if getattr(self, "_seed_seg_snap", None) != snap:
-            row = self.si.meta.orderBy("doc_base").select("seg_id").first()
-            self._seed_seg = int(row["seg_id"])
-            self._seed_seg_snap = snap
-        return self._seed_seg
-
-    def search_many(self, queries: dict[str, A.Query | str],
-                    k: int = 10, query_shards: int | None = None) -> DataFrame:
-        """Batched serving: run MANY WAND-shaped queries in ONE Spark
-        job. Each segment task receives the union of all queries'
-        term postings once and runs the kernel per query — the
-        per-query job-scheduling overhead (the dominant latency at
-        interactive k) is amortized across the batch, which is how a
-        Spark-based search tier actually serves traffic (micro-batched
-        scatter-gather, EP2b's PURPOSE_GET_TOP_IDS phase for a whole
-        request window). Returns (qid, docid, score, rank).
-
-        ``query_shards``: split the query batch over S tasks PER
-        SEGMENT (task key = (seg_id, qid-hash shard)) so batch
-        parallelism is segments x shards instead of capping at the
-        segment count — the replica fan-out of a serving tier, with
-        metadata rows (tiny) duplicated per shard and payload reads
-        shared via the OS page cache. Default: auto —
-        ceil(parallelism / live segments), so a big batch uses the
-        whole cluster. Accepts WAND shapes AND exact/sloppy PhraseQ
-        (routed to the two-phase phrase kernel inside the same
-        segment task); other shapes are not accepted here (use
-        search()).
-        """
-        self._check_snapshot()
+        Specs are dealt round-robin (sorted qids) over
+        ceil(parallelism / live segments) shards, capped by their
+        count, so a batch uses the whole cluster and one query runs
+        one task per segment. Payload reads follow the specs a task
+        serves: lazy per group for one pruning kernel, one bulk read
+        for several specs or an exhaustive kernel, which decode
+        every group anyway."""
+        specs = {qid: s for qid, s in specs.items() if s.terms}
+        if not specs:
+            return None
         n_seg = max(1, len(self.si.live_segments()))
-        if query_shards is None:
-            par = self.si.spark.sparkContext.defaultParallelism
-            query_shards = max(1, -(-par // n_seg))  # ceil
-        query_shards = max(1, min(int(query_shards), len(queries)))
-        parsed: dict[str, tuple[list[str], int, list[str]]] = {}
-        phrase_specs: dict[str, tuple[list[str], int, float]] = {}
-        for qid, q in queries.items():
-            if isinstance(q, str):
-                q = A.parse_query(q)
-            q = q.rewrite()
-            if isinstance(q, A.PhraseQ):
-                phrase_specs[qid] = (list(q.terms), int(q.slop),
-                                     float(q.boost))
-                continue
-            shape = self._flat_terms(q)
-            if shape is None:
-                raise ValueError(f"query {qid!r} is not WAND-shaped")
-            parsed[qid] = shape
-        all_terms = sorted(
-            {t for s in parsed.values() for t in s[0] + s[2]}
-            | {t for ts, _, _ in phrase_specs.values() for t in ts})
-        if not all_terms:
-            return self.si.spark.createDataFrame([], SEARCH_MANY_SCHEMA)
-        dfs = self._global_df(all_terms)
-        weights = {t: self.bm25.term_weight(dfs[t])
-                   for t in all_terms if dfs[t] > 0}
-        plan = {
-            qid: (sorted({t for t in terms if dfs[t] > 0}), msm,
-                  sorted({t for t in negs if dfs[t] > 0}))
-            for qid, (terms, msm, negs) in parsed.items()
-        }
-        # phrase weight = f32(boost * f32(sum idf over slots) * (k1+1)),
-        # exactly _search_phrase's; phrases with a missing term match
-        # nothing and drop out of the plan here
-        phrase_plan = {
-            qid: (terms, slop,
-                  np.float32(boost)
-                  * np.float32(float(sum(self.bm25.idf(dfs[t])
-                                         for t in terms)))
-                  * np.float32(self._k1 + 1.0))
-            for qid, (terms, slop, boost) in phrase_specs.items()
-            if all(dfs[t] > 0 for t in set(terms))
-        }
-        bm25 = self.bm25
-        k_ = int(k)
+        par = self.si.spark.sparkContext.defaultParallelism
+        n_shards = min(-(-par // n_seg), len(specs))
+        by_shard: dict[int, list[tuple[str, KernelSpec]]] = {}
+        term_shards: dict[str, set[int]] = {}
+        for i, qid in enumerate(sorted(specs)):
+            by_shard.setdefault(i % n_shards, []).append((qid, specs[qid]))
+            for t in specs[qid].terms:
+                term_shards.setdefault(t, set()).add(i % n_shards)
         idx_path = self.si.path
 
-        # deterministic round-robin shard assignment over sorted qids;
-        # each metadata row is exploded only to the shards whose
-        # queries use its term (no blanket duplication)
-        shard_of = {qid: i % query_shards
-                    for i, qid in enumerate(sorted(plan) + sorted(phrase_plan))}
-        term_shards: dict[str, set[int]] = {}
-        for qid, (terms, msm, negs) in plan.items():
-            for t in terms + negs:
-                term_shards.setdefault(t, set()).add(shard_of[qid])
-        for qid, (terms, slop, weight) in phrase_plan.items():
-            for t in terms:
-                term_shards.setdefault(t, set()).add(shard_of[qid])
-
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        def per_task(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             sid, shard = int(key[0]), int(key[1])
+            mine = by_shard[shard]
             norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf, bulk_all=True)
-            from lucene_solr_spark.index.codec import decode_posting
-
+            bulk = len(mine) > 1 or any(s.bulk for _, s in mine)
+            eps = _grouped_postings(idx_path, sid, pdf, bulk_all=bulk)
             out_q, out_d, out_s = [], [], []
-            for qid, (terms, msm, negs) in plan.items():
-                if shard_of[qid] != shard:
+            for qid, spec in mine:
+                if not any(t in eps for t in spec.terms):
                     continue
-                postings = {t: eps[t] for t in terms if t in eps}
-                if len(postings) < msm or not postings:
+                hit = spec.run(eps, norms, doc_base)
+                if hit is None:
                     continue
-                exclude = None
-                neg_parts = [_decode_full_cached(eps[t])[0]
-                             for t in negs if t in eps]
-                if neg_parts:
-                    exclude = np.unique(np.concatenate(neg_parts))
-                d, s = boolean_topk(postings, weights, norms, doc_base, bm25,
-                                    k=k_, msm=msm, exclude=exclude)
-                out_q.extend([qid] * len(d))
-                out_d.append(d)
-                out_s.append(s)
-            for qid, (terms, slop, weight) in phrase_plan.items():
-                if shard_of[qid] != shard:
-                    continue
-                if any(t not in eps for t in set(terms)):
-                    continue
-                d, s = phrase_topk(terms, eps, weight, norms, doc_base,
-                                   bm25, k=k_, slop=slop)
-                out_q.extend([qid] * len(d))
-                out_d.append(d)
-                out_s.append(s)
+                out_q.extend([qid] * len(hit[0]))
+                out_d.append(hit[0])
+                out_s.append(hit[1])
             if not out_q:
                 return pd.DataFrame({"qid": [], "docid": [], "score": []})
             return pd.DataFrame({
@@ -2553,10 +2233,79 @@ class WandSearcher:
             for x in (F.lit(t),
                       F.array(*[F.lit(int(s)) for s in sorted(ss)]))])
         rows = (self._meta_rows()
-                .where(F.col("term").isin([t for t in all_terms if dfs[t] > 0]))
+                .where(F.col("term").isin(sorted(term_shards)))
                 .withColumn("shard", F.explode(shard_map[F.col("term")])))
-        per_seg = rows.groupBy("seg_id", "shard").applyInPandas(
-            per_segment, schema="qid string, docid long, score float")
+        return rows.groupBy("seg_id", "shard").applyInPandas(
+            per_task, schema="qid string, docid long, score float")
+
+    def phrase_freqs(self, terms: list[str], slop: int = 0) -> DataFrame:
+        """All (docid, phrase freq) matches of a phrase — the unranked
+        MatchesIterator view. Runs the same two-phase kernel with no
+        theta (every match is returned), still decoding docs only in
+        all-terms-active intervals and positions only for intersection
+        docs. pfreq is integral for slop=0, fractional (sloppyFreq
+        sums 1/(len+1)) for slop>0."""
+        self._check_snapshot()
+        terms_ = list(terms)
+        uniq = sorted(set(terms_))
+        dfs = self._global_df(uniq)
+        if any(dfs[t] == 0 for t in uniq):
+            return self.si.spark.createDataFrame([], "docid long, pfreq double")
+        bm25 = self.bm25
+        slop_ = int(slop)
+        idx_path = self.si.path
+
+        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            sid = int(key[0])
+            norms, doc_base = _load_seg_norms(idx_path, sid)
+            eps = _grouped_postings(idx_path, sid, pdf)
+            if any(t not in eps for t in uniq):
+                return pd.DataFrame({"docid": np.empty(0, np.int64),
+                                     "pfreq": np.empty(0, np.float64)})
+            d, f = phrase_topk(terms_, eps, np.float32(1.0), norms,
+                               doc_base, bm25, k=0, slop=slop_,
+                               collect_freqs=True)
+            return pd.DataFrame({"docid": d, "pfreq": f})
+
+        return (self._meta_rows().where(F.col("term").isin(uniq))
+                .groupBy("seg_id")
+                .applyInPandas(per_segment, schema="docid long, pfreq double"))
+
+    def search_many(self, queries: dict[str, A.Query | str],
+                    k: int = 10) -> DataFrame:
+        """Batched serving: run MANY queries in ONE Spark job. Each
+        (segment, shard) task receives the union of its queries' term
+        postings once and runs each query's kernel — the per-query
+        job-scheduling overhead (the dominant latency at interactive
+        k) is amortized across the batch, which is how a Spark-based
+        search tier actually serves traffic (micro-batched
+        scatter-gather, EP2b's PURPOSE_GET_TOP_IDS phase for a whole
+        request window). Returns (qid, docid, score, rank), each
+        query's rows bit-equal to its own search().
+
+        Accepts every segment-native shape (see the class docstring);
+        a shape that search() would route to the flat executor raises
+        ValueError.
+        """
+        from lucene_solr_spark.search.executor import _collect_terms
+
+        self._check_snapshot()
+        parsed = {qid: (A.parse_query(q) if isinstance(q, str) else q)
+                  .rewrite() for qid, q in queries.items()}
+        # one df lookup for the whole batch; the per-query specs below
+        # then hit the df cache
+        all_terms = sorted(set().union(*map(_collect_terms,
+                                            parsed.values())))
+        if all_terms:
+            self._global_df(all_terms)
+        specs = {}
+        for qid, q in parsed.items():
+            specs[qid] = self._kernel_spec(q, k)
+            if specs[qid] is None:
+                raise ValueError(f"query {qid!r} has no segment kernel")
+        hits = self._kernel_plan(specs)
+        if hits is None:
+            return self.si.spark.createDataFrame([], SEARCH_MANY_SCHEMA)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (per_seg.withColumn("rank", F.row_number().over(w))
+        return (hits.withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= k))

@@ -221,36 +221,77 @@ def test_kernel_exclude():
     assert not np.isin(d, excl).any()
 
 
+# every segment-native shape: flat boolean, phrases, multiphrase,
+# spans, automaton, synonym/blended and dismax-over-terms
+SEGMENT_NATIVE_SHAPES = {
+    "term": A.TermQ("t000100"),
+    "and": A.AndQ((A.TermQ("t000001"), A.TermQ("t000002"))),
+    "or": A.OrQ((A.TermQ("t000001"), A.TermQ("t000002"))),
+    "not": A.NotQ(A.TermQ("t000000"), A.TermQ("t000001")),
+    "msm": A.OrQ((A.TermQ("t000001"), A.TermQ("t000002"),
+                  A.TermQ("t000003")), min_should_match=2),
+    "phrase": A.PhraseQ(("t000001", "t000002")),
+    "sloppy_phrase": A.PhraseQ(("t000001", "t000002"), slop=2),
+    "multiphrase": A.MultiPhraseQ((("t000000", "t000001"), ("t000002",))),
+    "span_near": A.SpanNearQ("t000001", "t000002", slop=1),
+    "span_nested": A.SpanNearNQ((A.SpanOrNQ(("t000001", "t000002")),
+                                 "t000000"), slop=4),
+    "automaton": A.TermAutomatonQ(
+        ((0, 1, "t000000"), (1, 2, "t000001"), (1, 2, "t000002")), (2,)),
+    "synonym": A.SynonymQ(("t000001", "t000002")),
+    "blended": A.BlendedTermQ(("t000000", "t000001", "t000002"), boost=0.7),
+    "dismax_terms": A.DisMaxQ((A.TermQ("t000000"), A.TermQ("t000010"),
+                               A.TermQ("t000050")), tie_breaker=0.3),
+}
+
+
 def test_search_many_matches_individual(seg_index):
-    """Batched multi-query execution == per-query execution exactly —
-    including exact and sloppy phrases routed to the two-phase kernel
-    inside the same segment task (round 4)."""
+    """A batch holding every segment-native shape (plus string queries
+    and one that matches nothing) is bit-equal (docid and float32
+    score bits) to per-query search(), with enough queries that the
+    batch spans several shards per segment."""
+    spark = seg_index.spark
     ws = WandSearcher(seg_index)
-    batch = {
-        "q1": "t000001 AND t000002",
-        "q2": "t000001 OR t000002",
-        "q3": "t000100",
-        "q4": "t000000 NOT t000001",
-        "q5": '"t000001 t000002"',
-        "q6": '"t000001 t000002"~2',
-    }
-    many = ws.search_many(batch, k=10)
-    got = {}
-    for r in many.collect():
-        got.setdefault(r["qid"], []).append(
-            (r["rank"], r["docid"], np.float32(r["score"])))
+    batch = dict(SEGMENT_NATIVE_SHAPES)
+    batch.update({"str_and": "t000001 AND t000002",
+                  "str_phrase": '"t000001 t000002"~2',
+                  "none": "t000000 AND missingterm"})
+    per_shard = -(-spark.sparkContext.defaultParallelism
+                  // len(seg_index.live_segments()))
+    assert len(batch) > per_shard
+
+    def bits(r):
+        return r["rank"], r["docid"], np.float32(r["score"]).tobytes()
+
+    got: dict = {}
+    for r in ws.search_many(batch, k=10).collect():
+        got.setdefault(r["qid"], []).append(bits(r))
     for qid, q in batch.items():
-        single = [(r["rank"], r["docid"], np.float32(r["score"]))
-                  for r in ws.search(q, k=10).collect()]
+        single = [bits(r) for r in ws.search(q, k=10).collect()]
         assert sorted(got.get(qid, [])) == sorted(single), qid
+    assert "none" not in got
 
 
 def test_search_many_rejects_non_wand(seg_index):
-    from lucene_solr_spark.search import ast as A
-
+    """Shapes without a segment kernel (nested boolean trees take the
+    flat fallback in search()) are refused by search_many."""
     ws = WandSearcher(seg_index)
+    nested = A.OrQ((A.AndQ((A.TermQ("t000001"), A.TermQ("t000002"))),
+                    A.TermQ("t000003")))
     with pytest.raises(ValueError):
-        ws.search_many({"p": A.SpanNearQ("t000001", "t000002", slop=1)})
+        ws.search_many({"n": nested})
+
+
+@pytest.mark.parametrize("shape", sorted(SEGMENT_NATIVE_SHAPES))
+def test_segment_native_plan_one_grouped_map(seg_index, shape):
+    """Every segment-native shape runs in one grouped-map kernel stage
+    over metadata-only rows: no as_flat_tables MapInPandas full
+    decode, and no fixed-width repartition before the kernel."""
+    df = WandSearcher(seg_index).search(SEGMENT_NATIVE_SHAPES[shape], k=10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "MapInPandas" not in plan
+    assert "REPARTITION_BY_NUM" not in plan
 
 
 def test_impact_frontier_tightens_bounds_safely():
@@ -314,19 +355,6 @@ def test_impact_frontier_cap_is_safe():
         assert any(t <= ft and b <= fb for ft, fb in zip(ftf, fnb)), (t, b)
 
 
-@pytest.mark.parametrize("q", ["t000000", "t000001 AND t000002",
-                               "t000000 OR t000111 OR t004999",
-                               "t000001 NOT t000002"])
-def test_seeded_theta_duels_unseeded(seg_index, q):
-    """Cross-segment threshold seeding must not change results — the
-    seed segment owns the lowest docids, so equal-score docs in later
-    segments lose the tie-break whether or not they are pruned."""
-    ws = WandSearcher(seg_index)
-    a = _rows(ws.search(q, k=10))
-    b = _rows(ws.search(q, k=10, seed_theta=True))
-    assert a == b, q
-
-
 # --- segment-native two-phase phrases ---------------------------------------
 
 
@@ -349,17 +377,6 @@ def test_phrase_duels_flat(seg_index, flat_searcher, terms, slop):
     a = _rows(WandSearcher(seg_index).search(q, k=10))
     b = _rows(flat_searcher.search(q, k=10))
     assert a == b, f"{terms} slop={slop}: wand={a[:3]} flat={b[:3]}"
-
-
-def test_phrase_plan_no_full_decode(seg_index):
-    """The phrase plan ships metadata-only rows to applyInPandas — no
-    as_flat_tables mapInPandas full decode anywhere in the plan."""
-    from lucene_solr_spark.search import ast as A
-
-    df = WandSearcher(seg_index).search(A.PhraseQ(("t000001", "t000002")), k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "MapInPandas" not in plan
 
 
 MULTIPHRASES = [
@@ -432,18 +449,6 @@ def test_span_near_duels_flat(seg_index, flat_searcher,
     assert a == b, f"{first},{second} slop={slop} ord={in_order}"
 
 
-def test_span_near_plan_no_full_decode(seg_index):
-    """The span plan ships metadata-only rows to applyInPandas — no
-    as_flat_tables mapInPandas full decode anywhere in the plan."""
-    from lucene_solr_spark.search import ast as A
-
-    df = WandSearcher(seg_index).search(
-        A.SpanNearQ("t000001", "t000002", slop=1), k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "MapInPandas" not in plan
-
-
 def test_span_near_kernel_early_terminates(seg_index):
     """With a constant score, the kernel stops at k matches: asking
     for k=3 of a frequent pair decodes strictly fewer blocks than the
@@ -479,18 +484,6 @@ def test_multiphrase_dead_slot_is_empty(seg_index, flat_searcher):
     q = A.MultiPhraseQ((("t000001",), ("missingterm",)))
     assert WandSearcher(seg_index).search(q, k=10).count() == 0
     assert flat_searcher.search(q, k=10).count() == 0
-
-
-def test_multiphrase_plan_no_full_decode(seg_index):
-    """The multiphrase plan ships metadata-only rows to applyInPandas —
-    no as_flat_tables mapInPandas full decode anywhere in the plan."""
-    from lucene_solr_spark.search import ast as A
-
-    df = WandSearcher(seg_index).search(
-        A.MultiPhraseQ((("t000000", "t000001"), ("t000002",))), k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "MapInPandas" not in plan
 
 
 def test_phrase_freqs_matches_flat(seg_index, flat_searcher):
@@ -658,18 +651,6 @@ def test_span_nested_duels_flat(seg_index, flat_searcher, q):
     assert a == b, q.key()
 
 
-def test_span_nested_plan_no_full_decode(seg_index):
-    """A nested span pairing the zipf-head term ships metadata-only
-    rows to applyInPandas — no as_flat_tables MapInPandas decode
-    (the round-4 fallback) anywhere in the plan."""
-    q = A.SpanNearNQ((A.SpanOrNQ(("t000001", "t000002")), "t000000"),
-                     slop=4)
-    df = WandSearcher(seg_index).search(q, k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "MapInPandas" not in plan
-
-
 def test_span_nested_kernel_early_terminates(seg_index):
     """Constant score => the nested kernel stops at k matches, like
     span_near_topk (ascending docids win the tie-break)."""
@@ -779,15 +760,6 @@ def test_term_automaton_kernel_duels_flat(seg_index, flat_searcher,
     a = _rows(WandSearcher(seg_index).search(q, k=10))
     b = _rows(flat_searcher.search(q, k=10))
     assert a == b, (transitions, accept)
-
-
-def test_term_automaton_plan_no_full_decode(seg_index):
-    q = A.TermAutomatonQ(
-        ((0, 1, "t000000"), (1, 2, "t000001"), (1, 2, "t000002")), (2,))
-    df = WandSearcher(seg_index).search(q, k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "MapInPandas" not in plan
 
 
 def test_synonym_blended_dismax_segment_native(seg_index, flat_searcher):

@@ -46,8 +46,9 @@ O(segments * k).
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from dataclasses import dataclass
-from functools import partial
+from functools import reduce
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -148,11 +149,8 @@ def _decode_full_cached(ep) -> tuple[np.ndarray, np.ndarray]:
 # beats the per-interval WAND sweep (the sweep's Python loop costs
 # ~10-25 ms/query on 65k-doc segments while one fused numpy pass over
 # every posting costs ~1-3 ms; at production segment sizes the sweep's
-# theta pruning wins and this path steps aside). Env-tunable.
-import os as _os_mod
-
-EXHAUSTIVE_MAX_NDOCS = int(
-    _os_mod.environ.get("LSS_EXHAUSTIVE_MAX_NDOCS", str(1 << 19)))
+# theta pruning wins and this path steps aside).
+EXHAUSTIVE_MAX_NDOCS = 1 << 19
 
 
 def exhaustive_topk(
@@ -299,6 +297,199 @@ def boolean_topk(
                      msm=msm, exclude=exclude, stats=stats)
 
 
+class _Grid:
+    """The interval sweep every block-grid kernel runs — the
+    ConjunctionDISI / WAND advance over skip data, as one merged
+    block-boundary grid (ICDE'25 "Columnar Formatted Inverted Index":
+    one vectorized operator over decoded blocks, the query shape
+    supplied as data).
+
+    ``postings`` maps a key (a term, a (term, field) pair — any
+    hashable) to its posting. Interval i covers docids
+    (bounds[i-1], bounds[i]]; ``j[key][i]`` is the key's active block
+    there (the first block whose last doc >= bounds[i]) and
+    ``ok[key][i]`` says the posting is not exhausted. A block decodes
+    at most once per grid, counted in ``stats.blocks_decoded``."""
+
+    def __init__(self, postings: dict, stats: WandStats | None):
+        self.postings = postings
+        self.stats = stats if stats is not None else WandStats()
+        lasts = {}
+        for key, ep in postings.items():
+            # only a tail block needs the posting's last doc: group rows
+            # carry it as metadata, a plain posting decodes its tail
+            last = -1
+            if ep.has_tail:
+                last = int(getattr(ep, "last_doc", -1))
+                if last < 0:
+                    last = int(_decode_block_cached(
+                        ep, ep.n_full_blocks)[0][-1])
+            lasts[key] = block_last_docs(ep, last)
+        self.bounds = np.unique(np.concatenate(list(lasts.values())))
+        self.n = len(self.bounds)
+        self.j = {key: np.searchsorted(ld, self.bounds, side="left")
+                  for key, ld in lasts.items()}
+        self.ok = {key: self.j[key] < len(ld) for key, ld in lasts.items()}
+        self._decoded: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
+        self.stats.blocks_total += sum(len(ld) for ld in lasts.values())
+        self.stats.intervals_total += self.n
+
+    def at(self, key, per_block, fill) -> np.ndarray:
+        """``per_block`` of the key's active block in every interval,
+        ``fill`` where the posting is exhausted."""
+        per_block = np.asarray(per_block)
+        out = np.full(self.n, fill, dtype=per_block.dtype)
+        ok = self.ok[key]
+        out[ok] = per_block[self.j[key][ok]]
+        return out
+
+    def max_tf(self, key) -> np.ndarray:
+        return self.at(key, np.asarray(self.postings[key].blockmax_tf,
+                                       dtype=np.int64), 0)
+
+    def max_norm(self, key) -> np.ndarray:
+        return self.at(key, np.asarray(self.postings[key].blockmax_norm,
+                                       dtype=np.int64), 255)
+
+    def live(self, groups, need: int | None = None) -> np.ndarray:
+        """Intervals where at least ``need`` groups (default: all) have
+        an active key; a group is a tuple of keys."""
+        n_act = sum(reduce(np.logical_or, [self.ok[k] for k in g])
+                    .astype(np.int32) for g in groups)
+        return n_act >= (len(groups) if need is None else need)
+
+    def cheapest_first(self, groups) -> list[tuple]:
+        """The distinct groups by (summed df, keys): the conjunction
+        order, ConjunctionDISI's cheapest-lead rule."""
+        return sorted({tuple(g) for g in groups}, key=lambda g: (
+            sum(self.postings[k].ndocs for k in g), g))
+
+    def lo_hi(self, i: int) -> tuple[int, int]:
+        return (int(self.bounds[i - 1]) if i > 0 else -1,
+                int(self.bounds[i]))
+
+    def block(self, key, i: int) -> tuple[np.ndarray, np.ndarray]:
+        """(docids, tfs) of the key's active block in interval i,
+        decoded on first use; empty when the posting is exhausted."""
+        if not self.ok[key][i]:
+            return _EMPTY_BLOCK
+        bk = (key, int(self.j[key][i]))
+        hit = self._decoded.get(bk)
+        if hit is None:
+            hit = self._decoded[bk] = _decode_block_cached(
+                self.postings[key], bk[1])
+            self.stats.blocks_decoded += 1
+        return hit
+
+    def slice(self, key, i: int) -> tuple[np.ndarray, np.ndarray]:
+        """(docids, tfs) of the key's posting inside interval i."""
+        docs, tfs = self.block(key, i)
+        lo, hi = self.lo_hi(i)
+        a = np.searchsorted(docs, lo, side="right")
+        b = np.searchsorted(docs, hi, side="right")
+        return docs[a:b], tfs[a:b]
+
+
+_EMPTY_BLOCK = (np.empty(0, np.int64), np.empty(0, np.int64))
+
+
+class _TopK:
+    """TopScoreDocCollector's bounded heap as sorted arrays: the k best
+    hits pushed so far by (score desc, docid asc). TWO thresholds with
+    different tie semantics (conflating them either weakens pruning or
+    drops seed-tied docs):
+
+    - theta: the LOCAL kth score once k hits are held; prunes <=
+      (intervals ascend in docid, so equal scores lose the tie-break to
+      earlier-collected docs — ``score <= pqTop.score``).
+    - floor (theta0): the cross-segment seed; prunes STRICTLY < at all
+      times, full or not (a doc below another segment's kth can never
+      reach the global top-k; ties at the seed are KEPT so the global
+      docid tie-break stays exact). Never lowered by a local kth.
+
+    A constant-score kernel pushes with ub = its constant: once full,
+    theta equals it and every later interval is skipped — exact early
+    termination at k matches."""
+
+    def __init__(self, k: int, theta0: float = -np.inf):
+        self.k = k
+        self.floor = np.float32(theta0)
+        self.theta = np.float32(-np.inf)
+        self.docs = np.empty(0, np.int64)
+        self.scores = np.empty(0, np.float32)
+
+    def skip(self, ub) -> bool:
+        """True when no doc scoring at most ``ub`` can enter."""
+        return ub <= self.theta or ub < self.floor
+
+    def push(self, docs: np.ndarray, scores: np.ndarray) -> None:
+        keep = (scores > self.theta) & (scores >= self.floor)
+        if not keep.any():
+            return
+        md = np.concatenate([self.docs, docs[keep]])
+        ms = np.concatenate([self.scores, scores[keep]])
+        order = np.lexsort((md, -ms.astype(np.float64)))[:self.k]
+        self.docs, self.scores = md[order], ms[order]
+        if len(self.scores) >= self.k:
+            self.theta = self.scores[-1]
+
+    def result(self) -> tuple[np.ndarray, np.ndarray]:
+        return self.docs, self.scores
+
+
+def _union(parts: list[np.ndarray]) -> np.ndarray:
+    return parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
+
+
+def _conjoin(grid: _Grid, groups: list[tuple], i: int) -> np.ndarray | None:
+    """Docids of interval i present in EVERY group, where a group's
+    docid set is the union of its keys' (MultiPhraseQuery's
+    UnionPostingsEnum). ``groups`` come cheapest first
+    (_Grid.cheapest_first): a later group's blocks decode only while
+    the intersection is non-empty. None when it is empty."""
+    inter = None
+    for g in groups:
+        parts = [d for d in (grid.slice(key, i)[0] for key in g) if len(d)]
+        if not parts:
+            return None
+        d = _union(parts)
+        inter = d if inter is None else np.intersect1d(
+            inter, d, assume_unique=True)
+        if len(inter) == 0:
+            return None
+    return inter
+
+
+def _rows_holding(grid: _Grid, t, inter: np.ndarray, i: int) -> np.ndarray:
+    """Indices of the ``inter`` docs (all in interval i) that t's
+    active block holds — both sorted and unique, so a searchsorted
+    probe, no sort."""
+    d = grid.block(t, i)[0]
+    at = np.searchsorted(d, inter)
+    hit = at < len(d)
+    hit[hit] = d[at[hit]] == inter[hit]
+    return np.nonzero(hit)[0]
+
+
+def _positions_by_doc(grid: _Grid, terms, inter: np.ndarray,
+                      i: int) -> list[dict[str, np.ndarray]]:
+    """Per intersection doc, {term: positions} of the ``terms`` whose
+    interval-i slice holds it — .pos payloads fetched lazily per group
+    for those docs only (the TwoPhaseIterator verify step)."""
+    out: list[dict[str, np.ndarray]] = [{} for _ in range(len(inter))]
+    for t in terms:
+        rows = _rows_holding(grid, t, inter, i)
+        if len(rows):
+            for oi, arr in zip(rows, _positions_for(grid.postings[t],
+                                                    inter[rows])):
+                out[oi][t] = arr.astype(np.int64, copy=False)
+    return out
+
+
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
+    return np.empty(0, np.int64), np.empty(0, np.float32)
+
+
 def wand_topk(
     postings: dict[str, EncodedPosting],
     weights: dict[str, np.float32],
@@ -321,199 +512,59 @@ def wand_topk(
     array of MUST_NOT matches within this segment. theta0: initial
     threshold (enables cross-segment threshold passing).
 
-    Returns (docids, scores_float32) of up to k hits sorted by
-    (score desc, docid asc).
+    Interval bound: the f64 sum of the active terms' block bounds
+    (_block_bounds), downcast. Returns (docids, scores_float32) of up
+    to k hits sorted by (score desc, docid asc).
     """
     terms = sorted(postings)  # canonical clause-key order == sorted term
-    m = len(terms)
-    if m < msm or m == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-
-    eps = [postings[t] for t in terms]
-    w = [np.float32(weights[t]) for t in terms]
-
-    # per-term logical block boundary tables + block score bounds
-    last_docs: list[np.ndarray] = []
-    ubs: list[np.ndarray] = []
-    for t, ep in zip(terms, eps):
-        # last docid of the term's posting overall:
-        if ep.singleton_docid is not None:
-            last = ep.singleton_docid
-        elif getattr(ep, "last_doc", -1) >= 0:
-            # group rows carry the exact last doc as metadata — no
-            # payload IO just to learn the posting's end
-            last = int(ep.last_doc)
-        else:
-            # tail's last doc isn't in skip data; decode lazily only if
-            # needed — bound it by scanning the tail once here (cheap:
-            # <128 vints) via decode_nth_block on the tail.
-            if ep.has_tail:
-                tdocs, _ = _decode_block_cached(ep, ep.n_full_blocks)
-                last = int(tdocs[-1])
-            else:
-                last = int(ep.skip_last_doc[-1])
-        last_docs.append(block_last_docs(ep, last))
-        ubs.append(_block_bounds(bm25, weights[t], ep))
-
-    # merged interval grid: all block boundaries, sorted unique.
-    bounds = np.unique(np.concatenate(last_docs))
-    n_int = len(bounds)
-    # j[t, i] = term t's active block for interval i (= first block
-    # whose last >= bounds[i]); >= nblocks -> exhausted.
-    ub_sum = np.zeros(n_int, dtype=np.float64)
-    active = np.zeros(n_int, dtype=np.int32)
-    jmat = np.empty((m, n_int), dtype=np.int64)
-    for ti in range(m):
-        j = np.searchsorted(last_docs[ti], bounds, side="left")
-        jmat[ti] = j
-        ok = j < len(last_docs[ti])
-        active[ok] += 1
-        ub_sum[ok] += ubs[ti][j[ok]].astype(np.float64)
-
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(x) for x in last_docs)
-    st.intervals_total += n_int
-
-    decoded: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+    if len(terms) < msm or not terms:
+        return _no_hits()
+    grid = _Grid({t: postings[t] for t in terms}, stats)
+    w = {t: np.float32(weights[t]) for t in terms}
+    ub = sum(grid.at(t, _block_bounds(bm25, weights[t], postings[t]), 0)
+             .astype(np.float64) for t in terms).astype(np.float32)
 
     # Cost-ordered lead-driven candidate filter (ConjunctionDISI's
-    # "two cheapest lead, others confirm", ConjunctionDISI.java:181-189,
-    # generalized by pigeonhole to n-of-m: every match must occur in at
-    # least one of the (m - msm + 1) lowest-df terms). The leads are
-    # decoded LAZILY, inside the sweep, only for intervals that survive
-    # the block-max theta test — the leapfrog discipline of
-    # ConjunctionDISI over Lucene50SkipReader: advance() never
-    # materializes the lead stream, so theta-pruned intervals cost the
-    # leads neither decode CPU nor (via the lazy group fetcher) any
-    # payload IO. Only pays when msm >= 2; for pure OR the block-max
-    # bound below is the only (and correct) pruning.
-    leads: list[int] | None = None
-    if msm >= 2:
-        by_cost = sorted(range(m), key=lambda ti: eps[ti].ndocs)
-        leads = by_cost[: m - msm + 1]
-
-    # bounded collector state. TWO thresholds with different tie
-    # semantics (the distinction matters — conflating them either
-    # weakens pruning or drops seed-tied docs):
-    # - theta: the LOCAL kth score once the heap fills; prunes <=
-    #   (equal scores lose the docid tie-break to earlier-collected
-    #   docs, TopScoreDocCollector's ``score <= pqTop.score`` reject).
-    # - theta_seed: the cross-segment floor; prunes STRICTLY < at all
-    #   times, full or not (a doc scoring below another segment's kth
-    #   can never reach the global top-k; ties at the seed are KEPT so
-    #   the global docid tie-break stays exact). The floor is never
-    #   lowered by a local kth that sits below it.
-    top_docs = np.empty(0, np.int64)
-    top_scores = np.empty(0, np.float32)
-    seeded = bool(np.isfinite(theta0))
-    theta_seed = np.float32(theta0) if seeded else None
-    theta = np.float32(-np.inf)
-
+    # "two cheapest lead, others confirm", generalized by pigeonhole to
+    # n-of-m: every match occurs in at least one of the (m - msm + 1)
+    # lowest-df terms). Leads decode lazily, only in intervals that
+    # survive the theta test, so pruned intervals cost them neither
+    # decode CPU nor payload IO. For pure OR the block-max bound is
+    # the only pruning.
+    leads = (sorted(terms, key=lambda t: postings[t].ndocs)
+             [: len(terms) - msm + 1] if msm >= 2 else None)
     excl = exclude if exclude is not None and len(exclude) else None
-
-    # iterate only candidate intervals (msm filter applied vectorized;
-    # dead intervals never enter the Python loop)
-    cand_idx = np.nonzero(active >= msm)[0]
-    ub32 = ub_sum.astype(np.float32)
-
-    for i in cand_idx:
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        full = len(top_scores) >= k
-        if full and ub32[i] <= theta:
+    top = _TopK(k, theta0)
+    for i in np.nonzero(grid.live([(t,) for t in terms], msm))[0]:
+        if top.skip(ub[i]):
             continue
-        if seeded and ub32[i] < theta_seed:
+        if leads is not None and not any(
+                len(grid.slice(t, i)[0]) for t in leads):
             continue
-
-        if leads is not None:
-            # pigeonhole: skip the interval unless at least one lead
-            # term has a docid inside (lo, hi] — decoding only the
-            # leads' ACTIVE blocks (cached across the intervals each
-            # block spans), never the expensive terms'
-            hit = False
-            for ti in leads:
-                j = int(jmat[ti, i])
-                if j >= len(last_docs[ti]):
-                    continue
-                key = (ti, j)
-                if key not in decoded:
-                    decoded[key] = _decode_block_cached(eps[ti], j)
-                    st.blocks_decoded += 1
-                docs_j = decoded[key][0]
-                a = np.searchsorted(docs_j, lo, side="right")
-                if a < len(docs_j) and docs_j[a] <= hi:
-                    hit = True
-                    break
-            if not hit:
-                continue
-
-        # exact scoring of the interval
-        st.intervals_scored += 1
+        grid.stats.intervals_scored += 1
         d_parts: list[np.ndarray] = []
         s_parts: list[np.ndarray] = []
-        for ti in range(m):
-            j = int(jmat[ti, i])
-            if j >= len(last_docs[ti]):
-                continue
-            key = (ti, j)
-            if key not in decoded:
-                decoded[key] = _decode_block_cached(eps[ti], j)
-                st.blocks_decoded += 1
-            docs_j, tfs_j = decoded[key]
-            a = np.searchsorted(docs_j, lo, side="right")
-            b = np.searchsorted(docs_j, hi, side="right")
-            if a == b:
-                d_parts.append(np.empty(0, np.int64))
-                s_parts.append(np.empty(0, np.float32))
-                continue
-            d = docs_j[a:b]
-            tf = tfs_j[a:b]
-            nb = norms[d - doc_base]
-            s_parts.append(bm25.score(
-                np.full(len(d), w[ti], dtype=np.float32), tf, nb))
-            d_parts.append(d)
-
+        for t in terms:
+            d, tf = grid.slice(t, i)
+            if len(d):
+                d_parts.append(d)
+                s_parts.append(bm25.score(
+                    np.full(len(d), w[t], dtype=np.float32), tf,
+                    norms[d - doc_base]))
         if not d_parts:
             continue
-        all_d = np.concatenate(d_parts)
-        if len(all_d) == 0:
-            continue
-        uniq = np.unique(all_d)
+        uniq = np.unique(np.concatenate(d_parts))
         acc = np.zeros(len(uniq), dtype=np.float64)
         cnt = np.zeros(len(uniq), dtype=np.int32)
         for d, s in zip(d_parts, s_parts):  # term-sorted order fold
-            if len(d) == 0:
-                continue
             idx = np.searchsorted(uniq, d)
             acc[idx] += s.astype(np.float64)
             cnt[idx] += 1
         mask = cnt >= msm
-        if excl is not None and mask.any():
+        if excl is not None:
             mask &= ~np.isin(uniq, excl, assume_unique=True)
-        if not mask.any():
-            continue
-        cand_d = uniq[mask]
-        cand_s = acc[mask].astype(np.float32)
-
-        # collector merge: keep k best by (score desc, docid asc).
-        # Earlier-collected docs have smaller docids within equal
-        # scores automatically because intervals ascend in docid.
-        if seeded:
-            keep = cand_s >= theta_seed  # strictly-below floor dropped
-            cand_d, cand_s = cand_d[keep], cand_s[keep]
-        if full and len(cand_s):
-            keep = cand_s > theta
-            cand_d, cand_s = cand_d[keep], cand_s[keep]
-        if len(cand_d) == 0:
-            continue
-        md = np.concatenate([top_docs, cand_d])
-        ms = np.concatenate([top_scores, cand_s])
-        order = np.lexsort((md, -ms.astype(np.float64)))[:k]
-        top_docs, top_scores = md[order], ms[order]
-        if len(top_scores) >= k:
-            theta = top_scores[-1]
-
-    return top_docs, top_scores
+        top.push(uniq[mask], acc[mask].astype(np.float32))
+    return top.result()
 
 
 def _positions_flat(ep, docids: np.ndarray) -> tuple[np.ndarray,
@@ -558,21 +609,6 @@ def _positions_for(ep, docids: np.ndarray) -> list[np.ndarray]:
     return out
 
 
-def _block_slice(decoded: dict, postings: dict, jd: dict, st: WandStats,
-                 t: str, i: int, lo: int, hi: int) -> np.ndarray:
-    """Docids of term ``t`` in interval ``i``'s (lo, hi] range. The
-    term's block there (``jd[t][i]``) is decoded once per kernel call
-    into ``decoded`` and counted in ``st.blocks_decoded``."""
-    key = (t, int(jd[t][i]))
-    if key not in decoded:
-        decoded[key] = _decode_block_cached(postings[t], key[1])
-        st.blocks_decoded += 1
-    docs_j = decoded[key][0]
-    a = np.searchsorted(docs_j, lo, side="right")
-    b = np.searchsorted(docs_j, hi, side="right")
-    return docs_j[a:b]
-
-
 def phrase_topk(
     terms: list[str],
     postings: dict[str, "object"],
@@ -586,194 +622,135 @@ def phrase_topk(
     collect_freqs: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Segment-native two-phase phrase kernel — the reference's
-    ExactPhraseScorer discipline (search/ExactPhraseScorer.java:62,123:
-    ConjunctionDISI.intersectIterators drives docids, phraseFreq runs
-    only on the intersection, behind search/TwoPhaseIterator.java)
-    instead of a full posting decode:
-
-    phase 1 (approximation): interval sweep over the merged block grid
-    of the phrase's DISTINCT terms; an interval is live only where ALL
-    terms have an active block. Surviving intervals decode blocks
-    cheapest-term-first and intersect docids, so a (rare, zipf-head)
-    phrase does O(df_rare) work — the head term's blocks are decoded
-    only in intervals the rare term reaches, and its .pos stream only
-    for groups holding intersection docs.
-
-    phase 2 (verify): positions are fetched lazily per GROUP for
-    intersection docs only (GroupedPosting.positions_for), rebased per
-    slot, and matched — vectorized intersect for slop=0, the reference
-    SloppyPhraseScorer traversal for slop>0.
-
-    Pruning (skipped when ``collect_freqs``): per-interval score bound
-    = f32(weight, tf_bound, min-over-terms block-max norm byte) with
-    tf_bound = min-over-terms block-max tf for slop=0 (each phrase
-    occurrence consumes one occurrence of every slot) or the
-    slot-multiplicity-weighted sum for slop>0 (sloppy freq adds <= 1
-    per PhrasePositions advance; advances <= sum of slot tfs). The
-    bound dominates any in-interval doc's score (score is monotone in
-    tf and norm byte; float32 rounding is monotone), so skipped
-    intervals cannot beat theta — the block-max WAND safety argument.
+    ExactPhraseScorer / SloppyPhraseScorer discipline: multiphrase_topk
+    over single-term slots. Repeated terms form the flat
+    _eval_sloppy_phrase repeat groups (slots of one term, per distinct
+    term in sorted order), so sloppy scores duel bit-equal.
 
     weight: f32(boost * f32(sum idf over the SLOT array) * (k1+1)) —
-    the flat executor's phrase weight, so scores duel bit-equal.
-
-    Returns top-k (docids, float32 scores) by (score desc, docid asc);
-    with ``collect_freqs`` returns ALL matches' (docids, float64
-    phrase freqs) and applies no theta pruning.
+    the flat executor's phrase weight. Returns top-k (docids, float32
+    scores) by (score desc, docid asc); with ``collect_freqs`` ALL
+    matches' (docids, float64 phrase freqs), unpruned.
     """
-    uniq = sorted(set(terms))
-    m = len(uniq)
-    if m == 0 or any(t not in postings for t in uniq):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    eps = [postings[t] for t in uniq]
-    mult = {t: terms.count(t) for t in uniq}
+    return multiphrase_topk(
+        [(t,) for t in terms], postings, weight, norms, doc_base, bm25, k,
+        slop=slop, stats=stats, collect_freqs=collect_freqs,
+        groups=[[i for i, t in enumerate(terms) if t == d]
+                for d in sorted(set(terms)) if terms.count(d) > 1] or None)
 
-    last_docs: list[np.ndarray] = []
-    for t, ep in zip(uniq, eps):
-        if ep.singleton_docid is not None:
-            last = ep.singleton_docid
-        elif getattr(ep, "last_doc", -1) >= 0:
-            last = int(ep.last_doc)
-        elif ep.has_tail:
-            last = int(_decode_block_cached(ep, ep.n_full_blocks)[0][-1])
-        else:
-            last = int(ep.skip_last_doc[-1])
-        last_docs.append(block_last_docs(ep, last))
 
-    bounds = np.unique(np.concatenate(last_docs))
-    n_int = len(bounds)
-    jmat = np.empty((m, n_int), dtype=np.int64)
-    active = np.zeros(n_int, dtype=np.int32)
-    tf_bound = (np.full(n_int, np.iinfo(np.int32).max, dtype=np.int64)
-                if slop == 0 else np.zeros(n_int, dtype=np.int64))
-    nb_min = np.full(n_int, 255, dtype=np.int64)
-    for ti in range(m):
-        bm_tf = np.asarray(eps[ti].blockmax_tf, dtype=np.int64)
-        bm_nb = np.asarray(eps[ti].blockmax_norm, dtype=np.int64)
-        j = np.searchsorted(last_docs[ti], bounds, side="left")
-        jmat[ti] = j
-        ok = j < len(last_docs[ti])
-        active[ok] += 1
-        if slop == 0:
-            tf_bound[ok] = np.minimum(tf_bound[ok], bm_tf[j[ok]])
-        else:
-            tf_bound[ok] += mult[uniq[ti]] * bm_tf[j[ok]]
-        nb_min[ok] = np.minimum(nb_min[ok], bm_nb[j[ok]])
+def multiphrase_topk(
+    slots: list[tuple[str, ...]],
+    postings: dict[str, "object"],
+    weight: np.float32,
+    norms: np.ndarray,
+    doc_base: int,
+    bm25: BM25,
+    k: int,
+    slop: int = 0,
+    groups: list[list[int]] | None = None,
+    multi_term: bool = False,
+    stats: WandStats | None = None,
+    collect_freqs: bool = False,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Segment-native two-phase MultiPhrase kernel
+    (search/MultiPhraseQuery.java's UnionPostingsEnum over each slot,
+    driven by ConjunctionDISI + TwoPhaseIterator like
+    ExactPhraseScorer); phrase_topk is this over single-term slots.
 
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(x) for x in last_docs)
-    st.intervals_total += n_int
+    phase 1: an interval is live only where EVERY slot has an active
+    term; slots (a slot's docids = the union of its terms') intersect
+    cheapest first, so a rare-led phrase does O(df_rare) work — the
+    head term's blocks decode only in intervals the rare term reaches.
 
-    ub32 = bm25.score(np.full(n_int, np.float32(weight), np.float32),
-                      tf_bound, nb_min)
-    cand_idx = np.nonzero(active == m)[0]
-    by_cost = sorted(range(m), key=lambda ti: eps[ti].ndocs)
-    decoded: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+    phase 2: .pos payloads are fetched lazily per group for
+    intersection docs only. slop=0: vectorized across all
+    intersection docs — per slot the union of its terms' compound keys
+    (doc_index << 33 | position - offset + n_slots), one sorted
+    intersect per slot, no per-doc Python loop. slop>0: the
+    SloppyPhraseScorer traversal (executor._sloppy_phrase_freq) over
+    per-slot position unions with the caller's rptGroups
+    (groups/multi_term, as the flat evaluator uses them).
 
-    groups = [[i for i, t in enumerate(terms) if t == d]
-              for d in uniq if mult[d] > 1] or None
+    Pruning: per-interval bound = f32 BM25 of (tf_bound, min active
+    block-max norm byte), tf_bound = min over slots of the slot's
+    summed block-max tfs for slop=0 (an exact occurrence consumes a
+    position of every slot) or the all-slot sum for slop>0 (sloppy
+    freq adds <= 1 per PhrasePositions advance). Monotone in tf and
+    norm byte, so skipped intervals cannot beat theta.
+
+    weight: f32(boost * f32(sum idf over ALL DISTINCT slot terms) *
+    (k1+1)) — the flat _eval_multi_phrase weight. ``collect_freqs``:
+    return ALL matches' (docids, float64 freqs) with no theta pruning
+    (WandSearcher.phrase_freqs).
+    """
+    slot_terms = [tuple(t for t in slot if t in postings) for slot in slots]
+    if not slots or any(not s for s in slot_terms):
+        return _no_hits()
+    uniq = sorted({t for s in slot_terms for t in s})
+    grid = _Grid({t: postings[t] for t in uniq}, stats)
+    slot_tf = [sum(grid.max_tf(t) for t in s) for s in slot_terms]
+    tf_bound = reduce(np.minimum if slop == 0 else np.add, slot_tf)
+    nb_min = reduce(np.minimum, [grid.max_norm(t) for t in uniq])
+    ub = bm25.score(np.full(grid.n, np.float32(weight), np.float32),
+                    tf_bound, nb_min)
+    conj = grid.cheapest_first(slot_terms)
     if slop > 0:
         from lucene_solr_spark.search.executor import _sloppy_phrase_freq
 
-    top_docs = np.empty(0, np.int64)
-    top_scores = np.empty(0, np.float32)
-    theta = np.float32(-np.inf)
+    top = _TopK(k)
     out_d: list[np.ndarray] = []
     out_f: list[np.ndarray] = []
-
-    for i in cand_idx:
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        full = len(top_scores) >= k
-        if not collect_freqs and full and ub32[i] <= theta:
+    for i in np.nonzero(grid.live(conj))[0]:
+        if not collect_freqs and top.skip(ub[i]):
             continue
-
-        # phase 1: docid conjunction, cheapest term's block first
-        inter: np.ndarray | None = None
-        for ti in by_cost:
-            j = int(jmat[ti, i])
-            key = (ti, j)
-            if key not in decoded:
-                decoded[key] = _decode_block_cached(eps[ti], j)
-                st.blocks_decoded += 1
-            docs_j = decoded[key][0]
-            a = np.searchsorted(docs_j, lo, side="right")
-            b = np.searchsorted(docs_j, hi, side="right")
-            d = docs_j[a:b]
-            if len(d) == 0:
-                inter = None
-                break
-            inter = d if inter is None else np.intersect1d(
-                inter, d, assume_unique=True)
-            if len(inter) == 0:
-                inter = None
-                break
-        if inter is None or len(inter) == 0:
+        inter = _conjoin(grid, conj, i)
+        if inter is None:
             continue
-        st.intervals_scored += 1
-
-        # phase 2: positions verify on the intersection only
-        nd = len(inter)
-        freqs = np.zeros(nd, dtype=np.float64)
+        grid.stats.intervals_scored += 1
+        freqs = np.zeros(len(inter), dtype=np.float64)
         if slop == 0:
-            # vectorized across ALL intersection docs at once: fold
-            # per-slot compound keys (doc_index << 33 | rebased
-            # position) through one sorted intersect per slot — no
-            # per-doc Python loop (hot-hot phrases have large
-            # intersections; per-doc work was the phase-2 bottleneck).
-            # Keys are unique (positions unique per doc) and sorted
-            # (docs ascend, rebased positions ascend within a doc).
-            max_off = len(terms)
-            flat = {t: _positions_flat(postings[t], inter) for t in uniq}
+            # keys are unique per term (positions unique per doc); a
+            # multi-term slot unions its terms' keys
+            flat = {}
+            for t in uniq:
+                rows = _rows_holding(grid, t, inter, i)
+                if len(rows):
+                    di, pos = _positions_flat(postings[t], inter[rows])
+                    flat[t] = (rows[di], pos)
             base: np.ndarray | None = None
-            for off, t in enumerate(terms):
-                di_rep, pos = flat[t]
-                keys = (di_rep << 33) | (pos - off + max_off)
+            for off, s in enumerate(slot_terms):
+                keys = _union([(di << 33) | (pos - off + len(slots))
+                               for di, pos in (flat[t] for t in s
+                                               if t in flat)])
                 base = keys if base is None else np.intersect1d(
                     base, keys, assume_unique=True)
                 if base.size == 0:
                     break
-            if base is not None and base.size:
-                di_surv, counts = np.unique(base >> 33,
-                                            return_counts=True)
+            if base.size:
+                di_surv, counts = np.unique(base >> 33, return_counts=True)
                 freqs[di_surv] = counts.astype(np.float64)
         else:
-            pos_by_term = {t: _positions_for(postings[t], inter)
-                           for t in uniq}
-            for di in range(nd):
-                rebased = [pos_by_term[t][di] - off
-                           for off, t in enumerate(terms)]
-                freqs[di] = _sloppy_phrase_freq(rebased, slop, groups)
+            for di, pos in enumerate(_positions_by_doc(grid, uniq, inter, i)):
+                freqs[di] = _sloppy_phrase_freq(
+                    [_union([pos[t] for t in s if t in pos]) - off
+                     for off, s in enumerate(slot_terms)],
+                    slop, groups, multi_term)
         mask = freqs > 0
         if not mask.any():
             continue
-        cand_d = inter[mask]
-        f = freqs[mask]
+        cand, f = inter[mask], freqs[mask]
         if collect_freqs:
-            out_d.append(cand_d)
+            out_d.append(cand)
             out_f.append(f)
             continue
-
-        nb = norms[cand_d - doc_base]
-        cand_s = bm25.score(
-            np.full(len(cand_d), np.float32(weight), np.float32), f, nb)
-        if full and len(cand_s):
-            keep = cand_s > theta
-            cand_d, cand_s = cand_d[keep], cand_s[keep]
-        if len(cand_d) == 0:
-            continue
-        md = np.concatenate([top_docs, cand_d])
-        ms = np.concatenate([top_scores, cand_s])
-        order = np.lexsort((md, -ms.astype(np.float64)))[:k]
-        top_docs, top_scores = md[order], ms[order]
-        if len(top_scores) >= k:
-            theta = top_scores[-1]
-
+        top.push(cand, bm25.score(
+            np.full(len(cand), np.float32(weight), np.float32), f,
+            norms[cand - doc_base]))
     if collect_freqs:
-        if not out_d:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        return np.concatenate(out_d), np.concatenate(out_f)
-    return top_docs, top_scores
+        return (np.concatenate(out_d) if out_d else np.empty(0, np.int64),
+                np.concatenate(out_f) if out_f else np.empty(0, np.float64))
+    return top.result()
 
 
 def span_near_topk(
@@ -792,12 +769,9 @@ def span_near_topk(
     0 < p2 - p1 <= slop + 1 (in_order) or 0 < |p2 - p1| <= slop + 1
     (unordered).
 
-    phase 1: AND-mode interval sweep over the two terms' merged block
-    grid — identical discipline to phrase_topk (intervals live only
-    where BOTH terms have an active block; cheapest block decodes
-    first, docids intersect). phase 2: .pos payloads are fetched
-    lazily per group for intersection docs only; the pair test is a
-    vectorized double-searchsorted, no per-position Python loop.
+    phase 1: the two terms' docid conjunction on the block grid.
+    phase 2: .pos payloads fetched lazily per group for intersection
+    docs only; the pair test is a vectorized double-searchsorted.
 
     The score is CONSTANT (float32(boost), the flat executor's span
     score), so theta pruning degenerates to early termination: matches
@@ -809,57 +783,19 @@ def span_near_topk(
     Returns (docids, float32 scores) — at most k, ascending docid.
     """
     if first not in postings or second not in postings:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    uniq = sorted({first, second})
-    eps = [postings[t] for t in uniq]
-    m = len(uniq)
-    last_docs = [_term_block_grid(ep) for ep in eps]
-    bounds = np.unique(np.concatenate(last_docs))
-    n_int = len(bounds)
-    jmat = np.empty((m, n_int), dtype=np.int64)
-    active = np.zeros(n_int, dtype=np.int32)
-    for ti in range(m):
-        j = np.searchsorted(last_docs[ti], bounds, side="left")
-        jmat[ti] = j
-        active[j < len(last_docs[ti])] += 1
-
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(x) for x in last_docs)
-    st.intervals_total += n_int
-    cand_idx = np.nonzero(active == m)[0]
-    by_cost = sorted(range(m), key=lambda ti: eps[ti].ndocs)
-    decoded: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+        return _no_hits()
+    grid = _Grid({t: postings[t] for t in sorted({first, second})}, stats)
+    conj = grid.cheapest_first([(first,), (second,)])
+    score = np.float32(boost)
     win = slop + 1
-    hits: list[np.ndarray] = []
-    n_hits = 0
-
-    for i in cand_idx:
-        if n_hits >= k:
-            break
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        inter: np.ndarray | None = None
-        for ti in by_cost:
-            j = int(jmat[ti, i])
-            key = (ti, j)
-            if key not in decoded:
-                decoded[key] = _decode_block_cached(eps[ti], j)
-                st.blocks_decoded += 1
-            docs_j = decoded[key][0]
-            a = np.searchsorted(docs_j, lo, side="right")
-            b = np.searchsorted(docs_j, hi, side="right")
-            d = docs_j[a:b]
-            if len(d) == 0:
-                inter = None
-                break
-            inter = d if inter is None else np.intersect1d(
-                inter, d, assume_unique=True)
-            if len(inter) == 0:
-                inter = None
-                break
-        if inter is None or len(inter) == 0:
+    top = _TopK(k)
+    for i in np.nonzero(grid.live(conj))[0]:
+        if top.skip(score):
             continue
-        st.intervals_scored += 1
+        inter = _conjoin(grid, conj, i)
+        if inter is None:
+            continue
+        grid.stats.intervals_scored += 1
         # self-pair guard: first == second still needs two distinct
         # occurrences, which the y != x / y > x conditions encode
         p1s = _positions_for(postings[first], inter)
@@ -878,15 +814,8 @@ def span_near_topk(
                 hi_r = np.searchsorted(p2, p1, side="left")
                 ok = bool((hi_r > lo_r).any())
             keep[di] = ok
-        matched = inter[keep]
-        if len(matched):
-            hits.append(matched)
-            n_hits += len(matched)
-
-    if not hits:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    d = np.concatenate(hits)[:k]
-    return d, np.full(len(d), np.float32(boost), np.float32)
+        top.push(inter[keep], np.full(int(keep.sum()), score))
+    return top.result()
 
 
 def span_nested_topk(
@@ -901,13 +830,11 @@ def span_nested_topk(
     SpanOrQuery.java, expressed as the two-phase discipline the other
     positional kernels use — no full posting decode of any term.
 
-    phase 1: interval sweep over the merged block grid of every leaf
-    term, conjunction over spannest.slot_groups (each group's docid
-    set is the union of its active terms' docids — the multiphrase
-    slot-union), cheapest group decodes first. phase 2: .pos payloads
-    fetched lazily per group for intersection docs only; the match
-    test is the SHARED spannest.emit_spans (the same function the flat
-    executor runs, so duels agree bit-for-bit).
+    phase 1: conjunction over spannest.slot_groups (each group's docid
+    set is the union of its terms' — the multiphrase slot-union).
+    phase 2: .pos payloads fetched lazily per group for intersection
+    docs only; the match test is the SHARED spannest.emit_spans (the
+    same function the flat executor runs, so duels agree bit-for-bit).
 
     Constant score (float32(boost), the SpanNear contract) ⇒ theta
     pruning degenerates to EXACT early termination at k matches
@@ -917,86 +844,25 @@ def span_nested_topk(
     from lucene_solr_spark.search.spannest import (emit_spans,
                                                    slot_groups)
 
-    groups = [[t for t in g if t in postings] for g in slot_groups(node)]
+    groups = [tuple(t for t in g if t in postings) for g in slot_groups(node)]
     if not groups or any(not g for g in groups):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
+        return _no_hits()
     uniq = sorted({t for g in groups for t in g})
-    eps = {t: postings[t] for t in uniq}
-    grids = {t: _term_block_grid(eps[t]) for t in uniq}
-    bounds = np.unique(np.concatenate([grids[t] for t in uniq]))
-    n_int = len(bounds)
-    jd: dict[str, np.ndarray] = {}
-    okd: dict[str, np.ndarray] = {}
-    for t in uniq:
-        j = np.searchsorted(grids[t], bounds, side="left")
-        jd[t] = j
-        okd[t] = j < len(grids[t])
-    grp_act = np.ones(n_int, dtype=bool)
-    for g in groups:
-        act_g = np.zeros(n_int, dtype=bool)
-        for t in g:
-            act_g |= okd[t]
-        grp_act &= act_g
-
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(grids[t]) for t in uniq)
-    st.intervals_total += n_int
-    cand_idx = np.nonzero(grp_act)[0]
-    by_cost = sorted(range(len(groups)),
-                     key=lambda gi: sum(eps[t].ndocs for t in groups[gi]))
-    decoded: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
-
-    _slice = partial(_block_slice, decoded, eps, jd, st)
-
-    hits: list[np.ndarray] = []
-    n_hits = 0
-    for i in cand_idx:
-        if n_hits >= k:
-            break
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        inter: np.ndarray | None = None
-        for gi in by_cost:
-            parts = [d for t in groups[gi] if okd[t][i]
-                     for d in (_slice(t, i, lo, hi),) if len(d)]
-            if not parts:
-                inter = None
-                break
-            d_u = (parts[0] if len(parts) == 1
-                   else np.unique(np.concatenate(parts)))
-            inter = d_u if inter is None else np.intersect1d(
-                inter, d_u, assume_unique=True)
-            if len(inter) == 0:
-                inter = None
-                break
-        if inter is None or len(inter) == 0:
+    grid = _Grid({t: postings[t] for t in uniq}, stats)
+    conj = grid.cheapest_first(groups)
+    score = np.float32(boost)
+    top = _TopK(k)
+    for i in np.nonzero(grid.live(conj))[0]:
+        if top.skip(score):
             continue
-        st.intervals_scored += 1
-        # positions per term, only for intersection docs it contains
-        nd = len(inter)
-        pos_by_doc: list[dict[str, np.ndarray]] = [dict() for _ in range(nd)]
-        for t in uniq:
-            if not okd[t][i]:
-                continue
-            d_t = _slice(t, i, lo, hi)
-            mask = np.isin(inter, d_t, assume_unique=True)
-            if not mask.any():
-                continue
-            plists = _positions_for(eps[t], inter[mask])
-            for oi, arr in zip(np.nonzero(mask)[0], plists):
-                pos_by_doc[oi][t] = arr.astype(np.int64, copy=False)
-        keep = np.zeros(nd, dtype=bool)
-        for di in range(nd):
-            keep[di] = len(emit_spans(node, pos_by_doc[di])[0]) > 0
-        matched = inter[keep]
-        if len(matched):
-            hits.append(matched)
-            n_hits += len(matched)
-
-    if not hits:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    d = np.concatenate(hits)[:k]
-    return d, np.full(len(d), np.float32(boost), np.float32)
+        inter = _conjoin(grid, conj, i)
+        if inter is None:
+            continue
+        grid.stats.intervals_scored += 1
+        keep = np.array([len(emit_spans(node, pos)[0]) > 0 for pos in
+                         _positions_by_doc(grid, uniq, inter, i)])
+        top.push(inter[keep], np.full(int(keep.sum()), score))
+    return top.result()
 
 
 def automaton_topk(
@@ -1014,14 +880,14 @@ def automaton_topk(
     enumerated finite strings like GraphTokenStreamFiniteStrings):
 
     ``paths``: the automaton's accepted term sequences (None = ANY
-    slot, one position ordinal). phase 1: per-path docid conjunction
-    over the merged block grid of the paths' terms (an interval is
-    live when SOME path has all its terms active; candidates = the
-    union over live paths of their term-slice intersections). phase 2:
-    .pos fetched lazily per group for intersection docs only; freq =
-    distinct start positions matched by ANY path (the reference's
-    merge-sorted position run), via the same rebased-intersect the
-    flat _eval_term_automaton runs — scores duel bit-equal.
+    slot, one position ordinal). phase 1: one docid conjunction per
+    path over its terms (an interval is live when SOME path has all
+    its terms active; candidates = the union of the live paths'
+    intersections). phase 2: .pos fetched lazily per group for
+    intersection docs only; freq = distinct start positions matched by
+    ANY path (the reference's merge-sorted position run), via the same
+    rebased-intersect the flat _eval_term_automaton runs — scores duel
+    bit-equal.
 
     theta bound: freq <= sum over live paths of the path's min
     slot-level block-max tf (a start consumes >= 1 occurrence of every
@@ -1030,148 +896,55 @@ def automaton_topk(
     f32(f32(boost) * f32(sum idf over ALL automaton terms) * f32(k1+1)).
     """
     pterms = [sorted({t for t in p if t is not None}) for p in paths]
-    live_paths = [i for i, ts in enumerate(pterms)
+    live_paths = [pi for pi, ts in enumerate(pterms)
                   if ts and all(t in postings for t in ts)]
     if not live_paths:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    uniq = sorted({t for i in live_paths for t in pterms[i]})
-    eps = {t: postings[t] for t in uniq}
-    grids = {t: _term_block_grid(eps[t]) for t in uniq}
-    bounds = np.unique(np.concatenate([grids[t] for t in uniq]))
-    n_int = len(bounds)
-    jd: dict[str, np.ndarray] = {}
-    okd: dict[str, np.ndarray] = {}
-    for t in uniq:
-        j = np.searchsorted(grids[t], bounds, side="left")
-        jd[t] = j
-        okd[t] = j < len(grids[t])
-    # per-path activity + freq bound
-    path_act = np.zeros((len(live_paths), n_int), dtype=bool)
-    tf_bound = np.zeros(n_int, dtype=np.int64)
-    nb_min = np.full(n_int, 255, dtype=np.int64)
-    for t in uniq:
-        ok = okd[t]
-        bm_nb = np.asarray(eps[t].blockmax_norm, dtype=np.int64)
-        nb_min[ok] = np.minimum(nb_min[ok], bm_nb[jd[t][ok]])
-    for pi, i0 in enumerate(live_paths):
-        act = np.ones(n_int, dtype=bool)
-        ptf = np.full(n_int, np.iinfo(np.int64).max, dtype=np.int64)
-        for t in pterms[i0]:
-            ok = okd[t]
-            act &= ok
-            bm_tf = np.asarray(eps[t].blockmax_tf, dtype=np.int64)
-            cur = np.full(n_int, np.iinfo(np.int64).max, dtype=np.int64)
-            cur[ok] = bm_tf[jd[t][ok]]
-            ptf = np.minimum(ptf, cur)
-        path_act[pi] = act
-        tf_bound[act] += ptf[act]
-    any_act = path_act.any(axis=0)
-
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(grids[t]) for t in uniq)
-    st.intervals_total += n_int
-    ub32 = bm25.score(np.full(n_int, np.float32(weight), np.float32),
-                      np.maximum(tf_bound, 0), nb_min)
-    cand_idx = np.nonzero(any_act)[0]
-    decoded: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
-
-    _slice = partial(_block_slice, decoded, eps, jd, st)
-
-    top_docs = np.empty(0, np.int64)
-    top_scores = np.empty(0, np.float32)
-    theta = np.float32(-np.inf)
-    for i in cand_idx:
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        full = len(top_scores) >= k
-        if full and ub32[i] <= theta:
+        return _no_hits()
+    uniq = sorted({t for pi in live_paths for t in pterms[pi]})
+    grid = _Grid({t: postings[t] for t in uniq}, stats)
+    conj = [grid.cheapest_first([(t,) for t in pterms[pi]])
+            for pi in live_paths]
+    path_act = [grid.live(c) for c in conj]
+    tf_bound = sum(np.where(act, reduce(
+        np.minimum, [grid.max_tf(t) for t in pterms[pi]]), 0)
+        for pi, act in zip(live_paths, path_act))
+    nb_min = reduce(np.minimum, [grid.max_norm(t) for t in uniq])
+    ub = bm25.score(np.full(grid.n, np.float32(weight), np.float32),
+                    tf_bound, nb_min)
+    top = _TopK(k)
+    for i in np.nonzero(reduce(np.logical_or, path_act))[0]:
+        if top.skip(ub[i]):
             continue
-        # phase 1: union over live paths of their term intersections
-        inter: np.ndarray | None = None
-        per_term_slice: dict[str, np.ndarray] = {}
-        for pi, i0 in enumerate(live_paths):
-            if not path_act[pi, i]:
-                continue
-            cur: np.ndarray | None = None
-            ok_path = True
-            for t in sorted(pterms[i0], key=lambda t: eps[t].ndocs):
-                if t not in per_term_slice:
-                    per_term_slice[t] = _slice(t, i, lo, hi)
-                d = per_term_slice[t]
-                if len(d) == 0:
-                    ok_path = False
-                    break
-                cur = d if cur is None else np.intersect1d(
-                    cur, d, assume_unique=True)
-                if len(cur) == 0:
-                    ok_path = False
-                    break
-            if not ok_path or cur is None:
-                continue
-            inter = cur if inter is None else np.union1d(inter, cur)
-        if inter is None or len(inter) == 0:
+        hits = [h for c, act in zip(conj, path_act) if act[i]
+                for h in (_conjoin(grid, c, i),) if h is not None]
+        if not hits:
             continue
-        st.intervals_scored += 1
-
-        # phase 2: positions per term for the docs it contains
-        nd = len(inter)
-        pos_by_doc: list[dict[str, np.ndarray]] = [dict() for _ in range(nd)]
-        for t in uniq:
-            if not okd[t][i]:
-                continue
-            d_t = per_term_slice.get(t)
-            if d_t is None:
-                d_t = _slice(t, i, lo, hi)
-            mask = np.isin(inter, d_t, assume_unique=True)
-            if not mask.any():
-                continue
-            plists = _positions_for(eps[t], inter[mask])
-            for oi, arr in zip(np.nonzero(mask)[0], plists):
-                pos_by_doc[oi][t] = arr
-        freqs = np.zeros(nd, dtype=np.float64)
-        for di in range(nd):
-            m = pos_by_doc[di]
+        inter = reduce(np.union1d, hits)
+        grid.stats.intervals_scored += 1
+        freqs = np.zeros(len(inter), dtype=np.float64)
+        for di, pos in enumerate(_positions_by_doc(grid, uniq, inter, i)):
             starts: set = set()
-            for i0 in live_paths:
+            for pi in live_paths:
                 base: np.ndarray | None = None
-                ok_p = True
-                for off, t in enumerate(paths[i0]):
+                for off, t in enumerate(paths[pi]):
                     if t is None:
                         continue
-                    pl = m.get(t)
-                    if pl is None:
-                        ok_p = False
+                    if t not in pos:
+                        base = None
                         break
-                    arr = np.asarray(pl, dtype=np.int64) - off
-                    base = arr if base is None else np.intersect1d(
-                        base, arr, assume_unique=True)
+                    base = (pos[t] - off if base is None else np.intersect1d(
+                        base, pos[t] - off, assume_unique=True))
                     if base.size == 0:
-                        ok_p = False
                         break
-                if ok_p and base is not None:
+                if base is not None:
                     starts.update(int(x) for x in base if x >= 0)
             freqs[di] = float(len(starts))
         mask = freqs > 0
-        if not mask.any():
-            continue
-        cand_d = inter[mask]
-        nb = norms[cand_d - doc_base]
-        cand_s = bm25.score(
-            np.full(len(cand_d), np.float32(weight), np.float32),
-            freqs[mask], nb)
-        if full and len(cand_s):
-            keep = cand_s > theta
-            cand_d, cand_s = cand_d[keep], cand_s[keep]
-        if len(cand_d) == 0:
-            continue
-        md = np.concatenate([top_docs, cand_d])
-        ms = np.concatenate([top_scores, cand_s])
-        order = np.lexsort((md, -ms.astype(np.float64)))[:k]
-        top_docs, top_scores = md[order], ms[order]
-        if len(top_scores) >= k:
-            theta = top_scores[-1]
-
-    return top_docs, top_scores
+        cand = inter[mask]
+        top.push(cand, bm25.score(
+            np.full(len(cand), np.float32(weight), np.float32),
+            freqs[mask], norms[cand - doc_base]))
+    return top.result()
 
 
 def qf_dismax_topk(
@@ -1194,9 +967,10 @@ def qf_dismax_topk(
 
     ``sources[t][f]`` is field f's GroupedPosting for t (fields are
     SEPARATE per-field segment indexes with aligned docids —
-    build_multifield_segment_index); ``weights[t][f]`` the per-field
-    f32 term weight (that field's idf/docCount); ``norms[f]`` /
-    ``bm25s[f]`` field-local norms and similarity.
+    build_multifield_segment_index), gridded on (term, field) keys;
+    ``weights[t][f]`` the per-field f32 term weight (that field's
+    idf/docCount); ``norms[f]`` / ``bm25s[f]`` field-local norms and
+    similarity.
 
     Pruning bound: per interval, each (t, f)'s block-max bound
     dominates that field's f32 scores (functions/bm25.py
@@ -1214,7 +988,6 @@ def qf_dismax_topk(
     nodes), one f32 downcast; (score desc, docid asc) top-k; msm
     counts terms with any matching field.
     """
-    terms = sorted(terms)
     boosts = boosts or {}
 
     def _boosted(f: str, s32: np.ndarray) -> np.ndarray:
@@ -1227,111 +1000,60 @@ def qf_dismax_topk(
         return (s32.astype(np.float64) * np.float64(b)).astype(
             np.float32)
 
-    pairs = [(t, f) for t in terms for f in sorted(sources.get(t, {}))]
-    if not pairs:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    eps = {tf_: sources[tf_[0]][tf_[1]] for tf_ in pairs}
-    grids = {tf_: _term_block_grid(eps[tf_]) for tf_ in pairs}
-    bounds = np.unique(np.concatenate(list(grids.values())))
-    n_int = len(bounds)
-    jmap: dict[tuple, np.ndarray] = {}
-    active: dict[tuple, np.ndarray] = {}
-    pair_ub: dict[tuple, np.ndarray] = {}
-    for tf_ in pairs:
-        t, f = tf_
-        g = grids[tf_]
-        j = np.searchsorted(g, bounds, side="left")
-        jmap[tf_] = j
-        ok = j < len(g)
-        active[tf_] = ok
-        ub = np.zeros(n_int, dtype=np.float64)
-        jj = j[ok]
-        b32 = _boosted(f, bm25s[f].score(
-            np.full(len(jj), weights[t][f], np.float32),
-            np.asarray(eps[tf_].blockmax_tf, dtype=np.int64)[jj],
-            np.asarray(eps[tf_].blockmax_norm, dtype=np.int64)[jj]))
-        ub[ok] = b32.astype(np.float64)
-        pair_ub[tf_] = ub
-
+    by_term = {t: [(t, f) for f in sorted(sources[t])]
+               for t in sorted(terms) if sources.get(t)}
+    if not by_term:
+        return _no_hits()
+    grid = _Grid({p: sources[p[0]][p[1]] for ps in by_term.values()
+                  for p in ps}, stats)
     tie64 = float(tie)
-    ub_total = np.zeros(n_int, dtype=np.float64)
-    n_active_terms = np.zeros(n_int, dtype=np.int32)
-    for t in terms:
-        fb = [pair_ub[(t, f)] for f in sorted(sources.get(t, {}))]
-        if not fb:
-            continue
-        stack = np.stack(fb)
-        mx = stack.max(axis=0)
-        sm = stack.sum(axis=0)
+    ub_total = np.zeros(grid.n, dtype=np.float64)
+    for t, ps in by_term.items():
+        fb = []
+        for p in ps:
+            ok = grid.ok[p]
+            ub = np.zeros(grid.n, dtype=np.float64)
+            ub[ok] = _boosted(p[1], bm25s[p[1]].score(
+                np.full(int(ok.sum()), weights[t][p[1]], np.float32),
+                grid.max_tf(p)[ok], grid.max_norm(p)[ok]))
+            fb.append(ub)
+        mx = np.maximum.reduce(fb)
+        sm = np.sum(fb, axis=0)
         # mirror the doc path's PER-TERM f32 downcast (f32 rounding is
         # monotone, so downcasting both sides preserves domination; a
         # bound kept in f64 while the doc value rounds to f32 can lose
         # by half an ulp for tie > 0)
         ub_total += (mx + tie64 * (sm - mx)).astype(
             np.float32).astype(np.float64)
-        t_active = np.zeros(n_int, dtype=bool)
-        for f in sorted(sources.get(t, {})):
-            t_active |= active[(t, f)]
-        n_active_terms += t_active.astype(np.int32)
     ub32 = ub_total.astype(np.float32)
 
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(g) for g in grids.values())
-    st.intervals_total += n_int
-
-    top_docs = np.empty(0, np.int64)
-    top_scores = np.empty(0, np.float32)
-    theta = np.float32(-np.inf)
-    decoded: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-
-    for i in range(n_int):
-        if n_active_terms[i] < msm:
+    top = _TopK(k)
+    for i in np.nonzero(grid.live(list(by_term.values()), msm))[0]:
+        if top.skip(ub32[i]):
             continue
-        full = len(top_scores) >= k
-        if full and ub32[i] <= theta:
-            continue
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        # decode every active (t, f) block slice; disjunction, so no
+        # every active (t, f) block slice; disjunction, so no
         # conjunction shortcut — theta does the pruning
-        per_pair: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-        for tf_ in pairs:
-            if not active[tf_][i]:
-                continue
-            j = int(jmap[tf_][i])
-            key = (tf_, j)
-            hit = decoded.get(key)
-            if hit is None:
-                hit = _decode_block_cached(eps[tf_], j)
-                decoded[key] = hit
-                st.blocks_decoded += 1
-            docs_j, tfs_j = hit
-            a = np.searchsorted(docs_j, lo, side="right")
-            b = np.searchsorted(docs_j, hi, side="right")
-            if a < b:
-                per_pair[tf_] = (docs_j[a:b], tfs_j[a:b])
+        per_pair = {p: sl for ps in by_term.values() for p in ps
+                    for sl in (grid.slice(p, i),) if len(sl[0])}
         if not per_pair:
             continue
-        st.intervals_scored += 1
-        union = np.unique(np.concatenate([d for d, _ in
-                                          per_pair.values()]))
+        grid.stats.intervals_scored += 1
+        union = np.unique(np.concatenate([d for d, _ in per_pair.values()]))
         nd = len(union)
         total = np.zeros(nd, dtype=np.float64)
         matched = np.zeros(nd, dtype=np.int32)
-        for t in terms:
+        for ps in by_term.values():
             mx = np.full(nd, -np.inf, dtype=np.float64)
             sm = np.zeros(nd, dtype=np.float64)
             seen = np.zeros(nd, dtype=bool)
-            for f in sorted(sources.get(t, {})):
-                pp = per_pair.get((t, f))
-                if pp is None:
+            for p in ps:
+                if p not in per_pair:
                     continue
-                d, tfv = pp
+                (t, f), (d, tfv) = p, per_pair[p]
                 idx = np.searchsorted(union, d)
-                s32 = _boosted(f, bm25s[f].score(
+                s64 = _boosted(f, bm25s[f].score(
                     np.full(len(d), weights[t][f], np.float32),
-                    tfv, norms[f][d - doc_base]))
-                s64 = s32.astype(np.float64)
+                    tfv, norms[f][d - doc_base])).astype(np.float64)
                 np.maximum.at(mx, idx, s64)
                 sm[idx] += s64
                 seen[idx] = True
@@ -1346,217 +1068,8 @@ def qf_dismax_topk(
             total += np.where(seen, val32.astype(np.float64), 0.0)
             matched += seen.astype(np.int32)
         ok = matched >= msm
-        if not ok.any():
-            continue
-        cand_d = union[ok]
-        cand_s = total[ok].astype(np.float32)
-        if full and len(cand_s):
-            keep = cand_s > theta
-            cand_d, cand_s = cand_d[keep], cand_s[keep]
-        if len(cand_d) == 0:
-            continue
-        md = np.concatenate([top_docs, cand_d])
-        ms = np.concatenate([top_scores, cand_s])
-        order = np.lexsort((md, -ms.astype(np.float64)))[:k]
-        top_docs, top_scores = md[order], ms[order]
-        if len(top_scores) >= k:
-            theta = top_scores[-1]
-
-    return top_docs, top_scores
-
-
-def _term_block_grid(ep) -> np.ndarray:
-    """Block boundary table of a posting (last docid per logical
-    block), resolving the posting's own last doc without decoding."""
-    if ep.singleton_docid is not None:
-        last = ep.singleton_docid
-    elif getattr(ep, "last_doc", -1) >= 0:
-        last = int(ep.last_doc)
-    elif ep.has_tail:
-        last = int(_decode_block_cached(ep, ep.n_full_blocks)[0][-1])
-    else:
-        last = int(ep.skip_last_doc[-1])
-    return block_last_docs(ep, last)
-
-
-def multiphrase_topk(
-    slots: list[tuple[str, ...]],
-    postings: dict[str, "object"],
-    weight: np.float32,
-    norms: np.ndarray,
-    doc_base: int,
-    bm25: BM25,
-    k: int,
-    slop: int = 0,
-    groups: list[list[int]] | None = None,
-    multi_term: bool = False,
-    stats: WandStats | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Segment-native two-phase MultiPhrase kernel — phrase_topk
-    generalized to OR-per-position slots (search/MultiPhraseQuery.java's
-    UnionPostingsEnum over each slot, driven by the same
-    ConjunctionDISI + TwoPhaseIterator discipline as the exact kernel):
-
-    phase 1: interval sweep over the merged block grid of every slot
-    term; an interval is live only where EVERY SLOT has at least one
-    active term. Surviving intervals decode blocks cheapest-slot-first;
-    a slot's docid set is the union of its active terms' docids, and
-    slots intersect ConjunctionDISI-style.
-
-    phase 2: per intersection doc, each slot's position set is the
-    sorted union of its terms' positions (terms consulted only where
-    they contain the doc; .pos payloads fetched lazily per group) —
-    vectorized intersect for slop=0, the SloppyPhraseScorer traversal
-    with the caller-supplied rptGroups for slop>0 (groups/multi_term
-    from executor.multiphrase_rpt_groups, the same inputs the flat
-    evaluator uses, so scores duel bit-equal).
-
-    Pruning: per-interval bound = f32 BM25 of (tf_bound, min active
-    block-max norm byte) where tf_bound is min-over-slots of the
-    slot's summed block-max tfs for slop=0 (an exact occurrence
-    consumes >= 1 position of every slot) or the all-slot sum for
-    slop>0 (sloppy freq adds <= 1 per PhrasePositions advance;
-    advances <= total slot-union positions). Monotone in tf and norm
-    byte, so skipped intervals cannot beat theta.
-
-    weight: f32(boost * f32(sum idf over ALL DISTINCT slot terms) *
-    (k1+1)) — the flat _eval_multi_phrase weight.
-    """
-    n_slots = len(slots)
-    slot_terms = [[t for t in slot if t in postings] for slot in slots]
-    if n_slots == 0 or any(not st for st in slot_terms):
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    uniq = sorted({t for st in slot_terms for t in st})
-    grids = {t: _term_block_grid(postings[t]) for t in uniq}
-
-    bounds = np.unique(np.concatenate([grids[t] for t in uniq]))
-    n_int = len(bounds)
-    jd: dict[str, np.ndarray] = {}
-    okd: dict[str, np.ndarray] = {}
-    nb_min = np.full(n_int, 255, dtype=np.int64)
-    slot_act = np.ones(n_int, dtype=bool)
-    slot_tf = np.zeros((n_slots, n_int), dtype=np.int64)
-    for t in uniq:
-        j = np.searchsorted(grids[t], bounds, side="left")
-        jd[t] = j
-        okd[t] = j < len(grids[t])
-    for s, sterms in enumerate(slot_terms):
-        act_s = np.zeros(n_int, dtype=bool)
-        for t in sterms:
-            ok = okd[t]
-            act_s |= ok
-            bm_tf = np.asarray(postings[t].blockmax_tf, dtype=np.int64)
-            bm_nb = np.asarray(postings[t].blockmax_norm, dtype=np.int64)
-            slot_tf[s][ok] += bm_tf[jd[t][ok]]
-            nb_min[ok] = np.minimum(nb_min[ok], bm_nb[jd[t][ok]])
-        slot_act &= act_s
-    tf_bound = (slot_tf.min(axis=0) if slop == 0
-                else slot_tf.sum(axis=0))
-
-    st = stats if stats is not None else WandStats()
-    st.blocks_total += sum(len(grids[t]) for t in uniq)
-    st.intervals_total += n_int
-
-    ub32 = bm25.score(np.full(n_int, np.float32(weight), np.float32),
-                      tf_bound, nb_min)
-    cand_idx = np.nonzero(slot_act)[0]
-    by_cost = sorted(range(n_slots),
-                     key=lambda s: sum(postings[t].ndocs
-                                       for t in slot_terms[s]))
-    decoded: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
-    if slop > 0:
-        from lucene_solr_spark.search.executor import _sloppy_phrase_freq
-
-    _slice = partial(_block_slice, decoded, postings, jd, st)
-
-    top_docs = np.empty(0, np.int64)
-    top_scores = np.empty(0, np.float32)
-    theta = np.float32(-np.inf)
-
-    for i in cand_idx:
-        hi = int(bounds[i])
-        lo = int(bounds[i - 1]) if i > 0 else -1
-        full = len(top_scores) >= k
-        if full and ub32[i] <= theta:
-            continue
-
-        # phase 1: slot-union docid conjunction, cheapest slot first
-        inter: np.ndarray | None = None
-        for s in by_cost:
-            parts = [d for t in slot_terms[s] if okd[t][i]
-                     for d in (_slice(t, i, lo, hi),) if len(d)]
-            if not parts:
-                inter = None
-                break
-            d_u = (parts[0] if len(parts) == 1
-                   else np.unique(np.concatenate(parts)))
-            inter = d_u if inter is None else np.intersect1d(
-                inter, d_u, assume_unique=True)
-            if len(inter) == 0:
-                inter = None
-                break
-        if inter is None or len(inter) == 0:
-            continue
-        st.intervals_scored += 1
-
-        # phase 2: per-slot position unions on the intersection only
-        nd = len(inter)
-        pos_by_slot: list[list[np.ndarray | None]] = []
-        for s in range(n_slots):
-            per_doc: list[np.ndarray | None] = [None] * nd
-            for t in slot_terms[s]:
-                if not okd[t][i]:
-                    continue
-                d_t = _slice(t, i, lo, hi)
-                mask = np.isin(inter, d_t, assume_unique=True)
-                if not mask.any():
-                    continue
-                plists = _positions_for(postings[t], inter[mask])
-                for oi, arr in zip(np.nonzero(mask)[0], plists):
-                    cur = per_doc[oi]
-                    per_doc[oi] = (arr if cur is None
-                                   else np.union1d(cur, arr))
-            pos_by_slot.append(per_doc)
-
-        freqs = np.zeros(nd, dtype=np.float64)
-        for di in range(nd):
-            plists = [pos_by_slot[s][di] for s in range(n_slots)]
-            if any(p is None for p in plists):
-                continue
-            if slop == 0:
-                base: np.ndarray | None = None
-                for off, arr in enumerate(plists):
-                    a2 = arr - off
-                    base = a2 if base is None else np.intersect1d(
-                        base, a2, assume_unique=True)
-                    if base.size == 0:
-                        break
-                freqs[di] = float(base.size)
-            else:
-                rebased = [arr - off for off, arr in enumerate(plists)]
-                freqs[di] = _sloppy_phrase_freq(rebased, slop, groups,
-                                                multi_term)
-        mask = freqs > 0
-        if not mask.any():
-            continue
-        cand_d = inter[mask]
-        f = freqs[mask]
-        nb = norms[cand_d - doc_base]
-        cand_s = bm25.score(
-            np.full(len(cand_d), np.float32(weight), np.float32), f, nb)
-        if full and len(cand_s):
-            keep = cand_s > theta
-            cand_d, cand_s = cand_d[keep], cand_s[keep]
-        if len(cand_d) == 0:
-            continue
-        md = np.concatenate([top_docs, cand_d])
-        ms = np.concatenate([top_scores, cand_s])
-        order = np.lexsort((md, -ms.astype(np.float64)))[:k]
-        top_docs, top_scores = md[order], ms[order]
-        if len(top_scores) >= k:
-            theta = top_scores[-1]
-
-    return top_docs, top_scores
+        top.push(union[ok], total[ok].astype(np.float32))
+    return top.result()
 
 
 # --- Spark orchestration ----------------------------------------------------
@@ -1603,37 +1116,37 @@ METADATA_COLS = ("seg_id", "term", "df", "ttf", "singleton_docid",
 # Safe because index cells are IMMUTABLE: segments are never rewritten
 # in place (merges mint fresh seg_ids; the manifest is generational),
 # so a (path, seg_id, term, grp) key can never go stale. Bounded by
-# cell count (LSS_PAYLOAD_CACHE_CELLS, ~1-20KB/cell); norms blobs get
-# a small separate ring.
-import os as _os
-from collections import OrderedDict as _OD
-
-_PAYLOAD_CACHE: "_OD[tuple, tuple[bytes, bytes]]" = _OD()
-_PAYLOAD_CACHE_CELLS = int(_os.environ.get("LSS_PAYLOAD_CACHE_CELLS", "4096"))
-_NORMS_CACHE: "_OD[tuple, tuple]" = _OD()
-_NORMS_CACHE_MAX = int(_os.environ.get("LSS_NORMS_CACHE_SEGS", "64"))
+# cell count (~1-20KB/cell); norms blobs get a small separate ring.
+_PAYLOAD_CACHE: "OrderedDict[tuple, tuple[bytes, bytes]]" = OrderedDict()
+_PAYLOAD_CACHE_CELLS = 4096
+_NORMS_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
+_NORMS_CACHE_MAX = 64
 # decoded (docids, tfs) block arrays — ~2KB per full block; shared
 # read-only (the kernel only slices them)
-_DECODED_CACHE: "_OD[tuple, tuple]" = _OD()
-_DECODED_CACHE_BLOCKS = int(_os.environ.get("LSS_DECODED_CACHE_BLOCKS",
-                                            "16384"))
+_DECODED_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
+_DECODED_CACHE_BLOCKS = 16384
 # FULL decoded (docids, tfs) postings for the exhaustive scorer —
-# element-budgeted (16 bytes/element; the default 8M elements is
-# ~128 MB/worker), same immutable-cell key argument
-_FULLDEC_CACHE: "_OD[tuple, tuple]" = _OD()
-_FULLDEC_CACHE_MAX_ELEMS = int(_os.environ.get("LSS_FULLDEC_CACHE_ELEMS",
-                                               str(8_000_000)))
+# element-budgeted (16 bytes/element; 8M elements is ~128 MB/worker),
+# same immutable-cell key argument
+_FULLDEC_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
+_FULLDEC_CACHE_MAX_ELEMS = 8_000_000
 _FULLDEC_ELEMS = 0
+# payload groups read per lazy .doc/.tfs fetch, and per .pos fetch
+# before a term's third miss (see _make_group_fetcher/_make_pos_fetcher)
+_GROUP_READAHEAD = 4
+_POS_READAHEAD = 2
+# driver-side (term -> global df) entries WandSearcher keeps
+DF_CACHE_TERMS = 1 << 16
 
 
-def _lru_get(cache: "_OD", key):
+def _lru_get(cache: OrderedDict, key):
     v = cache.get(key)
     if v is not None:
         cache.move_to_end(key)
     return v
 
 
-def _lru_put(cache: "_OD", key, val, cap: int) -> None:
+def _lru_put(cache: OrderedDict, key, val, cap: int) -> None:
     cache[key] = val
     while len(cache) > cap:
         cache.popitem(last=False)
@@ -1672,7 +1185,7 @@ def _prefetch_payloads(idx_path: str, seg_id: int, terms: list[str],
         _read_payloads(idx_path, seg_id, [("term", "in", missing)], cache)
 
 
-def _make_group_fetcher(idx_path: str, seg_id: int, readahead: int = 4):
+def _make_group_fetcher(idx_path: str, seg_id: int):
     """Task-side lazy payload reader for one segment.
 
     The Spark plan ships METADATA-ONLY posting rows to the kernel task
@@ -1684,7 +1197,7 @@ def _make_group_fetcher(idx_path: str, seg_id: int, readahead: int = 4):
     (term, grp_id), so min/max statistics skip unrelated row groups)
     and column-pruned (pos_enc is never touched on WAND shapes).
     Groups whose blocks the kernel prunes by score bound cost NO IO at
-    all. ``readahead`` groups are fetched per read because the
+    all. _GROUP_READAHEAD groups are fetched per read because the
     interval sweep requests ascend in docid order — the per-leaf .doc
     stream readahead of the reference, with the scorer task doing its
     own IO instead of the planner mailing it the stream."""
@@ -1699,14 +1212,14 @@ def _make_group_fetcher(idx_path: str, seg_id: int, readahead: int = 4):
                 return hit
             _read_payloads(idx_path, seg_id,
                            [("term", "==", term), ("grp_id", ">=", grp),
-                            ("grp_id", "<", grp + readahead)], cache)
+                            ("grp_id", "<", grp + _GROUP_READAHEAD)], cache)
         return cache[key]
 
     fetch.cache = cache  # exposed for bulk seeding
     return fetch
 
 
-def _make_pos_fetcher(idx_path: str, seg_id: int, readahead: int = 2):
+def _make_pos_fetcher(idx_path: str, seg_id: int):
     """Lazy .pos payload reader (the .pos stream open of
     ExactPhraseScorer): per-(term, group) point reads of the pos_enc
     column only — docs/tfs payloads are NOT re-read, and groups whose
@@ -1736,7 +1249,7 @@ def _make_pos_fetcher(idx_path: str, seg_id: int, readahead: int = 2):
             misses[term] = misses.get(term, 0) + 1
             filters = [("term", "==", term), ("grp_id", ">=", grp)]
             if misses[term] < 3:
-                filters.append(("grp_id", "<", grp + readahead))
+                filters.append(("grp_id", "<", grp + _POS_READAHEAD))
             t = pq.read_table(
                 f"{idx_path}/postings/seg_id={seg_id}",
                 columns=["term", "grp_id", "pos_enc"],
@@ -1826,8 +1339,9 @@ class WandSearcher:
 
     - flat boolean: TermQ, AndQ/OrQ over unboosted terms (with
       min_should_match), NotQ whose negative side is a
-      term/OR-of-terms (boolean_topk);
-    - PhraseQ, exact and sloppy (phrase_topk);
+      term/OR-of-terms (boolean_topk: exhaustive_topk or wand_topk);
+    - PhraseQ, exact and sloppy (phrase_topk = multiphrase_topk over
+      single-term slots);
     - MultiPhraseQ (multiphrase_topk);
     - top-level SpanNearQ (span_near_topk) and nested SpanNearNQ
       trees (span_nested_topk);
@@ -1835,6 +1349,12 @@ class WandSearcher:
     - SynonymQ (synonym_topk) and BlendedTermQ (exhaustive_topk with
       the blended weight);
     - DisMaxQ over unboosted terms (dismax_terms_topk).
+
+    The block-grid kernels (wand_topk, the phrase, span and automaton
+    kernels, and MultiFieldWandSearcher's qf_dismax_topk) share one
+    interval sweep: _Grid, _TopK and _conjoin; each adds only its
+    interval bound and its match test. The exhaustive ones decode
+    whole postings.
 
     Anything else (nested boolean trees, boosted terms, multi-term
     and payload shapes) falls back in search() to the exhaustive flat
@@ -1855,7 +1375,7 @@ class WandSearcher:
         self._b = b
         self.coll = si.coll_stats()
         self.bm25 = BM25(self.coll["doc_count"], self.coll["sum_ttf"], k1=k1, b=b)
-        self._df_cache: dict[str, int] = {}
+        self._df_cache: OrderedDict[str, int] = OrderedDict()
         self._preload = preload_stats
         self._preloaded = False
         self._snapshot = tuple(si.live_segments())
@@ -1958,12 +1478,14 @@ class WandSearcher:
         in the coordinator) and collects ONLY the queried terms' rows:
         O(query terms) driver transfer per novel-term batch, never the
         O(vocabulary) driver collect this used to do. Looked-up terms
-        LRU into _df_cache so repeat traffic costs zero jobs."""
+        LRU into _df_cache (at most DF_CACHE_TERMS entries) so repeat
+        traffic costs zero jobs."""
         if self._preload and getattr(self, "_stats_df", None) is None:
             self._stats_df = (self.si.postings.groupBy("term")
                               .agg(F.sum("df").alias("df")).persist())
             self._stats_df.count()  # materialize once (one stats job)
-        missing = [t for t in set(terms) if t not in self._df_cache]
+        dfs = {t: _lru_get(self._df_cache, t) for t in set(terms)}
+        missing = [t for t, df in dfs.items() if df is None]
         if missing:
             src = (self._stats_df.where(F.col("term").isin(missing))
                    if self._preload else
@@ -1971,8 +1493,9 @@ class WandSearcher:
                    .groupBy("term").agg(F.sum("df").alias("df")))
             got = {r["term"]: int(r["df"]) for r in src.collect()}
             for t in missing:
-                self._df_cache[t] = got.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+                dfs[t] = got.get(t, 0)
+                _lru_put(self._df_cache, t, dfs[t], DF_CACHE_TERMS)
+        return {t: dfs[t] for t in terms}
 
     def search(self, q: A.Query | str, k: int = 10) -> DataFrame:
         """Top-k (docid, score, rank) of one query. Segment-native shapes

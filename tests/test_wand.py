@@ -17,6 +17,7 @@ from lucene_solr_spark.index.codec import encode_posting
 from lucene_solr_spark.search import ast as A
 from lucene_solr_spark.index.segments import build_segment_index
 from lucene_solr_spark.search.executor import Searcher
+import lucene_solr_spark.search.wand as W
 from lucene_solr_spark.search.wand import WandSearcher, WandStats, wand_topk
 
 QUERIES = [
@@ -403,12 +404,12 @@ def test_multiphrase_duels_flat(seg_index, flat_searcher, slots, slop):
 
 
 def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
-    """Synonym/Blended (and NESTED SpanNear) over the segment index go
-    through the exhaustive fallback with a TERM-RESTRICTED decode
-    (closed term sets) — results duel the flat executor and the plan
-    filters the postings scan on the query terms instead of decoding
-    the whole dictionary. (Top-level SpanNear routes to the two-phase
-    kernel — covered by test_span_near_duels_flat.)"""
+    """Synonym and Blended run segment-native kernels; a SpanNear
+    inside an OR has none and goes through the exhaustive flat
+    fallback with a TERM-RESTRICTED decode (closed term set). All
+    three duel the flat executor, and the fallback's plan filters the
+    postings scan on the query's terms below the decode instead of
+    decoding the whole dictionary."""
     from lucene_solr_spark.search import ast as A
 
     ws = WandSearcher(seg_index)
@@ -420,9 +421,13 @@ def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
         a = _rows(ws.search(q, k=10))
         b = _rows(flat_searcher.search(q, k=10))
         assert a == b, type(q).__name__
-    plan = (ws.search(shapes[0], k=10)
+    fallback = shapes[2]
+    assert ws._kernel_spec(fallback.rewrite(), 10) is None
+    plan = (ws.search(fallback, k=10)
             ._jdf.queryExecution().executedPlan().toString())
-    assert "t000001" in plan  # the term filter reached the scan side
+    assert "MapInPandas" in plan  # the flat decode ran
+    # the restriction: one isin over exactly the query's terms
+    assert "t000001,t000002,t000100" in plan.replace(" ", ""), plan
 
 
 SPAN_SHAPES = [
@@ -496,6 +501,44 @@ def test_phrase_freqs_matches_flat(seg_index, flat_searcher):
            flat_searcher.matches(A.PhraseQ(("t000001", "t000002"))).collect()}
     assert set(got) == exp
     assert all(v >= 1 for v in got.values())
+
+
+@pytest.mark.parametrize("slop", [0, 2])
+@pytest.mark.parametrize("terms", [("t000001", "t000002"),
+                                   ("t000000", "t000000")])
+def test_phrase_freqs_values_match_flat(seg_index, terms, slop):
+    """phrase_freqs returns every match with the flat executor's own
+    phrase freq: the exact position intersect (slop=0) and
+    _sloppy_phrase_freq with the flat repeat groups (slop>0), over the
+    positions of as_flat_tables."""
+    from lucene_solr_spark.search.executor import _sloppy_phrase_freq
+
+    got = {r["docid"]: r["pfreq"] for r in WandSearcher(seg_index)
+           .phrase_freqs(list(terms), slop=slop).collect()}
+    flat = seg_index.as_flat_tables(with_positions=True,
+                                    terms=sorted(set(terms)))
+    pos: dict = {}
+    for r in flat.postings.collect():
+        pos.setdefault(r["docid"], {})[r["term"]] = np.asarray(
+            r["positions"], np.int64)
+    groups = [[i for i, t in enumerate(terms) if t == d]
+              for d in sorted(set(terms)) if terms.count(d) > 1] or None
+    exp = {}
+    for d, m in pos.items():
+        if any(t not in m for t in terms):
+            continue
+        if slop == 0:
+            base = m[terms[0]]
+            for off, t in enumerate(terms[1:], start=1):
+                base = np.intersect1d(base, m[t] - off, assume_unique=True)
+            f = float(base.size)
+        else:
+            f = _sloppy_phrase_freq([m[t] - off for off, t in
+                                     enumerate(terms)], slop, groups)
+        if f > 0:
+            exp[d] = f
+    assert exp, "fixture has no matches"
+    assert got == exp
 
 
 def _mk_phrase_fixture(seed=3):
@@ -788,3 +831,117 @@ def test_synonym_blended_dismax_segment_native(seg_index, flat_searcher):
     plan = (ws.search(shapes[4], k=10)
             ._jdf.queryExecution().executedPlan().toString())
     assert "FlatMapGroupsInPandas" in plan and "MapInPandas" not in plan
+
+
+def test_df_cache_is_bounded(seg_index, monkeypatch):
+    """The driver-side df cache keeps at most DF_CACHE_TERMS terms; a
+    search_many batch over more terms than that is still bit-equal to
+    per-query search()."""
+    monkeypatch.setattr(W, "DF_CACHE_TERMS", 3)
+    ws = WandSearcher(seg_index)
+    batch = {"or": "t000001 OR t000002", "and": "t000003 AND t000000",
+             "phrase": '"t000001 t000002"',
+             "or3": "t000010 OR t000050 OR t000100"}
+
+    def bits(r):
+        return r["rank"], r["docid"], np.float32(r["score"]).tobytes()
+
+    got: dict = {}
+    for r in ws.search_many(batch, k=10).collect():
+        got.setdefault(r["qid"], []).append(bits(r))
+    assert len(ws._df_cache) <= 3
+    for qid, q in batch.items():
+        single = [bits(r) for r in ws.search(q, k=10).collect()]
+        assert sorted(got.get(qid, [])) == sorted(single), qid
+    assert len(ws._df_cache) <= 3
+
+
+def _weights(bm25, eps) -> dict:
+    return {t: np.float32(bm25.term_weight(ep.ndocs)) for t, ep in eps.items()}
+
+
+def _phrase_w(bm25, terms, eps) -> np.float32:
+    return np.float32(sum(bm25.idf(eps[t].ndocs) for t in terms))
+
+
+# kernel name -> (terms it reads, call(eps, norms, doc_base, bm25, k, stats))
+GRID_KERNELS = {
+    "wand": (["t000000", "t000001", "t000002"],
+             lambda eps, nm, base, bm, k, st: wand_topk(
+                 eps, _weights(bm, eps), nm, base, bm, k, msm=2, stats=st)),
+    "phrase": (["t000000", "t000001"],
+               lambda eps, nm, base, bm, k, st: W.phrase_topk(
+                   ["t000000", "t000001", "t000000"], eps,
+                   _phrase_w(bm, ["t000000", "t000001", "t000000"], eps),
+                   nm, base, bm, k, slop=2, stats=st)),
+    "multiphrase": (["t000000", "t000001", "t000002"],
+                    lambda eps, nm, base, bm, k, st: W.multiphrase_topk(
+                        [("t000000", "t000001"), ("t000002",)], eps,
+                        _phrase_w(bm, sorted(eps), eps), nm, base, bm, k,
+                        stats=st)),
+    "span_near": (["t000000", "t000001"],
+                  lambda eps, nm, base, bm, k, st: W.span_near_topk(
+                      "t000000", "t000001", eps, 1.0, k, slop=3,
+                      in_order=False, stats=st)),
+    "span_nested": (["t000000", "t000001", "t000002"],
+                    lambda eps, nm, base, bm, k, st: W.span_nested_topk(
+                        A.SpanNearNQ((A.SpanOrNQ(("t000000", "t000001")),
+                                      "t000002"), slop=4),
+                        eps, 1.0, k, stats=st)),
+    "automaton": (["t000000", "t000001", "t000002"],
+                  lambda eps, nm, base, bm, k, st: W.automaton_topk(
+                      [("t000000", "t000001"), ("t000000", "t000002")], eps,
+                      _phrase_w(bm, sorted(eps), eps), nm, base, bm, k,
+                      stats=st)),
+    "qf_dismax": (["t000000", "t000002"],
+                  lambda eps, nm, base, bm, k, st: W.qf_dismax_topk(
+                      sorted(eps), {t: {"body": ep} for t, ep in eps.items()},
+                      {t: {"body": w} for t, w in _weights(bm, eps).items()},
+                      {"body": nm}, base, {"body": bm}, k, stats=st)),
+}
+
+
+@pytest.fixture(scope="module")
+def seg_index_blocks(spark, tmp_path_factory):
+    """One 2,000-doc segment: the head terms' postings span ~15 blocks,
+    so their block grid has many intervals (seg_index's 128-doc
+    segments hold one block per posting)."""
+    from lucene_solr_spark.sources.webtext import synth_pages
+
+    path = str(tmp_path_factory.mktemp("gridstats") / "idx")
+    return build_segment_index(synth_pages(spark, 2000, seed=42), path,
+                               seg_size=2048, salt_span=32)
+
+
+@pytest.mark.parametrize("kernel", sorted(GRID_KERNELS))
+def test_block_grid_kernel_stats(seg_index_blocks, kernel):
+    """Every block-grid kernel reports its pruning counters: it decodes
+    some but at most all of its postings' blocks, blocks_total is the
+    summed block count of the postings it read, it scores at most
+    every interval, and a k=1 call decodes no more than an unbounded
+    one."""
+    seg_index = seg_index_blocks
+    from pyspark.sql import functions as F
+
+    from lucene_solr_spark.search.wand import (METADATA_COLS,
+                                               _grouped_postings,
+                                               _load_seg_norms)
+
+    terms, call = GRID_KERNELS[kernel]
+    bm25 = WandSearcher(seg_index).bm25
+    sid = int(seg_index.live_segments()[0])
+    pdf = (seg_index.postings.where(F.col("term").isin(terms))
+           .where(F.col("seg_id") == sid).select(*METADATA_COLS).toPandas())
+    norms, doc_base = _load_seg_norms(seg_index.path, sid)
+    stats = {}
+    for k in (1, 10 ** 9):
+        eps = _grouped_postings(seg_index.path, sid, pdf)
+        assert sorted(eps) == sorted(terms)
+        st = stats[k] = WandStats()
+        call(eps, norms, doc_base, bm25, k, st)
+        assert 0 < st.blocks_decoded <= st.blocks_total
+        assert st.blocks_total == sum(
+            1 if ep.singleton_docid is not None
+            else ep.n_full_blocks + int(ep.has_tail) for ep in eps.values())
+        assert st.intervals_scored <= st.intervals_total
+    assert stats[1].blocks_decoded <= stats[10 ** 9].blocks_decoded

@@ -369,12 +369,12 @@ def drill_sideways(df: DataFrame, base_cond: Column | None,
     (dim, value, cnt, rank-per-dim) — each dim's top values by
     (count desc, value asc).
 
-    Scale: ONE pass over the base-filtered frame — the near-miss test
-    per dimension is a Column predicate (grouping-set-style
-    conditional aggregation), so N dimensions cost N conditional
-    aggregates in one shuffle, not N scans (the reference's
-    DrillSidewaysScorer also scores base+near-miss docs in one
-    traversal)."""
+    Scale: N scans for N drilled dimensions — one filtered groupBy
+    per dimension over the base-filtered frame (its near-miss filter:
+    every OTHER drill-down applied), unioned. The reference's
+    DrillSidewaysScorer scores base and near-miss docs in one
+    traversal; a single conditional aggregation would be the
+    one-scan equivalent here."""
     base = df.where(base_cond) if base_cond is not None else df
     dims = list(drill.items())
     conds = {c: (F.col(c) == F.lit(v)) for c, v in dims}

@@ -49,6 +49,7 @@ from __future__ import annotations
 from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
+from itertools import groupby
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -145,133 +146,86 @@ def _decode_full_cached(ep) -> tuple[np.ndarray, np.ndarray]:
     return hit
 
 
-# sum-of-df crossover below which the vectorized exhaustive scorer
-# beats the per-interval WAND sweep (the sweep's Python loop costs
-# ~10-25 ms/query on 65k-doc segments while one fused numpy pass over
+# sum-of-df crossover below which one fused fold over fully decoded
+# postings beats the per-interval WAND sweep (the sweep's Python loop
+# costs ~10-25 ms/query on 65k-doc segments while one numpy pass over
 # every posting costs ~1-3 ms; at production segment sizes the sweep's
 # theta pruning wins and this path steps aside).
 EXHAUSTIVE_MAX_NDOCS = 1 << 19
 
 
-def exhaustive_topk(
-    postings: dict[str, EncodedPosting],
-    weights: dict[str, np.float32],
-    norms: np.ndarray,
-    doc_base: int,
-    bm25: BM25,
-    k: int,
-    msm: int = 1,
-    exclude: np.ndarray | None = None,
-    stats: WandStats | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized exhaustive boolean scorer for ONE segment — the
-    BooleanScorer bulk-scoring tier (search/BooleanScorer.java scores
-    whole 2048-doc windows without advancing iterators when pruning
-    can't pay): every term's posting is fully decoded (worker-global
-    LRU) and scored in ONE fused numpy pass, f64 accumulation in
-    sorted-term (clause-key) order, downcast at the end — BIT-EQUAL to
-    wand_topk on every input (duel-gated), just a different cost
-    model. Dominates below EXHAUSTIVE_MAX_NDOCS summed df; above it
-    the WAND sweep's theta pruning wins."""
-    terms = sorted(postings)
-    m = len(terms)
-    if m < msm or m == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    st = stats if stats is not None else WandStats()
-    d_parts: list[np.ndarray] = []
-    s_parts: list[np.ndarray] = []
-    for t in terms:
-        d, tf = _decode_full_cached(postings[t])
-        st.blocks_decoded += max(1, len(d) // 128)
-        s_parts.append(bm25.score(
-            np.full(len(d), np.float32(weights[t]), np.float32),
-            tf, norms[d - doc_base]))
-        d_parts.append(d)
-    uniq = np.unique(np.concatenate(d_parts))
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    cnt = np.zeros(len(uniq), dtype=np.int32)
-    for d, s in zip(d_parts, s_parts):  # term-sorted order fold
-        if len(d) == 0:
-            continue
-        idx = np.searchsorted(uniq, d)
-        acc[idx] += s.astype(np.float64)
-        cnt[idx] += 1
-    mask = cnt >= msm
-    if exclude is not None and len(exclude) and mask.any():
-        mask &= ~np.isin(uniq, exclude, assume_unique=True)
-    if not mask.any():
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    cand_d = uniq[mask]
-    cand_s = acc[mask].astype(np.float32)
-    order = np.lexsort((cand_d, -cand_s.astype(np.float64)))[:k]
-    return cand_d[order], cand_s[order]
+def _decoded(ep, stats: WandStats) -> tuple[np.ndarray, np.ndarray]:
+    """A posting's full (docids, tfs); all of its blocks count as
+    decoded."""
+    n_blocks = max(1, ep.n_full_blocks + int(ep.has_tail))
+    stats.blocks_total += n_blocks
+    stats.blocks_decoded += n_blocks
+    return _decode_full_cached(ep)
 
 
-def synonym_topk(
-    postings: dict[str, EncodedPosting],
-    w32: np.float32,
-    norms: np.ndarray,
-    doc_base: int,
-    bm25: BM25,
-    k: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """SynonymQuery.java on the segment tier: the terms' postings
-    union with tf SUMMED per doc (integer, order-free), scored ONCE as
-    a pseudo-term with the blended weight — bit-equal to the flat
-    _eval_synonym (duel-gated)."""
-    terms = sorted(postings)
-    if not terms:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    d_parts = []
-    tf_parts = []
-    for t in terms:
-        d, tf = _decode_full_cached(postings[t])
-        d_parts.append(d)
-        tf_parts.append(tf)
-    uniq = np.unique(np.concatenate(d_parts))
-    tf_sum = np.zeros(len(uniq), dtype=np.int64)
-    for d, tf in zip(d_parts, tf_parts):
-        np.add.at(tf_sum, np.searchsorted(uniq, d), tf)
-    s32 = bm25.score(np.full(len(uniq), np.float32(w32), np.float32),
-                     tf_sum, norms[uniq - doc_base])
-    order = np.lexsort((uniq, -s32.astype(np.float64)))[:k]
-    return uniq[order], s32[order]
+def _term_hits(ep, w32, norms: np.ndarray, doc_base: int, bm25: BM25,
+               stats: WandStats) -> tuple[np.ndarray, np.ndarray]:
+    """Every (docid, f32 BM25) of one posting — TermQuery's scorer over
+    the whole posting."""
+    d, tf = _decoded(ep, stats)
+    return d, bm25.score(np.full(len(d), np.float32(w32), np.float32), tf,
+                         norms[d - doc_base])
 
 
-def dismax_terms_topk(
-    postings: dict[str, EncodedPosting],
-    weights: dict[str, np.float32],
-    tie: float,
-    norms: np.ndarray,
-    doc_base: int,
-    bm25: BM25,
-    k: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """DisjunctionMaxQuery over term clauses on the segment tier:
-    per-term f32 scores, f64 max + tie*(sum-max) (DisjunctionMax
-    Scorer.java:36-61), downcast — bit-equal to the flat _eval_dismax
-    over TermQ clauses (duel-gated)."""
-    terms = sorted(postings)  # clause key "t:<term>" order == sorted
-    if not terms:
-        return np.empty(0, np.int64), np.empty(0, np.float32)
-    d_parts, s_parts = [], []
-    for t in terms:
-        d, tf = _decode_full_cached(postings[t])
-        s_parts.append(bm25.score(
-            np.full(len(d), np.float32(weights[t]), np.float32),
-            tf, norms[d - doc_base]))
-        d_parts.append(d)
-    uniq = np.unique(np.concatenate(d_parts))
-    mx = np.full(len(uniq), -np.inf, dtype=np.float64)
-    sm = np.zeros(len(uniq), dtype=np.float64)
-    for d, s in zip(d_parts, s_parts):
-        idx = np.searchsorted(uniq, d)
-        s64 = s.astype(np.float64)
-        np.maximum.at(mx, idx, s64)
-        sm[idx] += s64
-    s32 = (mx + np.float64(tie) * (sm - mx)).astype(np.float32)
-    order = np.lexsort((uniq, -s32.astype(np.float64)))[:k]
-    return uniq[order], s32[order]
+def _boost(s32: np.ndarray, boost: float) -> np.ndarray:
+    """BoostQuery as the flat executor applies it after scoring:
+    f32(f64(score) * f32(boost))."""
+    if boost == 1.0:
+        return s32
+    return (s32.astype(np.float64) * np.float64(np.float32(boost))).astype(
+        np.float32)
+
+
+def _fold(parts: list[list[tuple]], need: int,
+          tie: float | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """The flat executor's clause fold (AND, OR with msm, DisMax) over
+    per-clause (docids ascending, f32 scores) hits.
+
+    ``parts``: the clauses in sorted clause-key order, as groups of
+    clauses with EQUAL keys. Per doc the f64 sum runs in that order and,
+    inside a group, in ascending score order (the flat OR sorts each
+    doc's (key, score) pairs). Keeps docs matched by at least ``need``
+    clauses; with ``tie`` the score is DisjunctionMaxScorer's
+    max + tie * (sum - max). One f32 downcast."""
+    ds = [d for g in parts for d, _ in g if len(d)]
+    if not ds:
+        return _no_hits()
+    docs = _union(ds)
+    acc = np.zeros(len(docs))
+    top = np.full(len(docs), -np.inf)
+    cnt = np.zeros(len(docs), np.int32)
+    for g in parts:
+        cols = [(np.searchsorted(docs, d), s.astype(np.float64)) for d, s in g]
+        if len(g) > 1:
+            m = np.full((len(g), len(docs)), np.inf)
+            for row, (i, s) in zip(m, cols):
+                row[i] = s
+            m.sort(axis=0)
+            cols = [(np.flatnonzero(row < np.inf), row[row < np.inf])
+                    for row in m]
+        for i, s in cols:
+            acc[i] += s
+            cnt[i] += 1
+            if tie is not None:
+                top[i] = np.maximum(top[i], s)
+    if tie is not None:
+        acc = top + np.float64(tie) * (acc - top)
+    keep = cnt >= need
+    return docs[keep], acc[keep].astype(np.float32)
+
+
+def _without(hits: tuple, docids) -> tuple[np.ndarray, np.ndarray]:
+    """``hits`` minus the docs in ``docids`` (ReqExclScorer); both
+    sides unique."""
+    if docids is None or not len(docids):
+        return hits
+    keep = ~np.isin(hits[0], docids, assume_unique=True)
+    return hits[0][keep], hits[1][keep]
 
 
 def boolean_topk(
@@ -285,16 +239,21 @@ def boolean_topk(
     exclude: np.ndarray | None = None,
     stats: WandStats | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Cost-model dispatch between the two bit-equal boolean scorers
-    (Lucene's BooleanWeight chooses BooleanScorer vs WAND-pruned
-    scorers the same way): small summed segment-local df -> the fused
-    exhaustive pass; large -> the block-max WAND sweep."""
-    total = sum(postings[t].ndocs for t in postings)
-    if total <= EXHAUSTIVE_MAX_NDOCS:
-        return exhaustive_topk(postings, weights, norms, doc_base, bm25,
-                               k, msm=msm, exclude=exclude, stats=stats)
-    return wand_topk(postings, weights, norms, doc_base, bm25, k,
-                     msm=msm, exclude=exclude, stats=stats)
+    """Top-k of a flat term AND/OR (msm) with an optional MUST_NOT
+    docid set, by a cost model (Lucene's BooleanWeight chooses
+    BooleanScorer vs WAND-pruned scorers the same way): small summed
+    segment-local df -> the term leaves through one _fold, the bulk
+    tier that scores whole postings without advancing iterators;
+    large -> the block-max WAND sweep. Both are bit-equal."""
+    if sum(ep.ndocs for ep in postings.values()) > EXHAUSTIVE_MAX_NDOCS:
+        return wand_topk(postings, weights, norms, doc_base, bm25, k,
+                         msm=msm, exclude=exclude, stats=stats)
+    st = stats if stats is not None else WandStats()
+    top = _TopK(k)
+    top.push(*_without(_fold([[_term_hits(postings[t], weights[t], norms,
+                                          doc_base, bm25, st)]
+                               for t in sorted(postings)], msm), exclude))
+    return top.result()
 
 
 class _Grid:
@@ -533,7 +492,6 @@ def wand_topk(
     # the only pruning.
     leads = (sorted(terms, key=lambda t: postings[t].ndocs)
              [: len(terms) - msm + 1] if msm >= 2 else None)
-    excl = exclude if exclude is not None and len(exclude) else None
     top = _TopK(k, theta0)
     for i in np.nonzero(grid.live([(t,) for t in terms], msm))[0]:
         if top.skip(ub[i]):
@@ -542,28 +500,10 @@ def wand_topk(
                 len(grid.slice(t, i)[0]) for t in leads):
             continue
         grid.stats.intervals_scored += 1
-        d_parts: list[np.ndarray] = []
-        s_parts: list[np.ndarray] = []
-        for t in terms:
-            d, tf = grid.slice(t, i)
-            if len(d):
-                d_parts.append(d)
-                s_parts.append(bm25.score(
-                    np.full(len(d), w[t], dtype=np.float32), tf,
-                    norms[d - doc_base]))
-        if not d_parts:
-            continue
-        uniq = np.unique(np.concatenate(d_parts))
-        acc = np.zeros(len(uniq), dtype=np.float64)
-        cnt = np.zeros(len(uniq), dtype=np.int32)
-        for d, s in zip(d_parts, s_parts):  # term-sorted order fold
-            idx = np.searchsorted(uniq, d)
-            acc[idx] += s.astype(np.float64)
-            cnt[idx] += 1
-        mask = cnt >= msm
-        if excl is not None:
-            mask &= ~np.isin(uniq, excl, assume_unique=True)
-        top.push(uniq[mask], acc[mask].astype(np.float32))
+        hits = [(d, bm25.score(np.full(len(d), w[t], np.float32), tf,
+                               norms[d - doc_base]))
+                for t in terms for d, tf in (grid.slice(t, i),) if len(d)]
+        top.push(*_without(_fold([[h] for h in hits], msm), exclude))
     return top.result()
 
 
@@ -989,17 +929,6 @@ def qf_dismax_topk(
     counts terms with any matching field.
     """
     boosts = boosts or {}
-
-    def _boosted(f: str, s32: np.ndarray) -> np.ndarray:
-        # the flat executor applies the FieldedQ boost as a
-        # post-multiply: f32(f64(score) * f32(boost)) (_boost in
-        # executor.py) — mirror it exactly so duels stay bit-equal
-        b = boosts.get(f)
-        if b is None or float(b) == 1.0:
-            return s32
-        return (s32.astype(np.float64) * np.float64(b)).astype(
-            np.float32)
-
     by_term = {t: [(t, f) for f in sorted(sources[t])]
                for t in sorted(terms) if sources.get(t)}
     if not by_term:
@@ -1013,9 +942,10 @@ def qf_dismax_topk(
         for p in ps:
             ok = grid.ok[p]
             ub = np.zeros(grid.n, dtype=np.float64)
-            ub[ok] = _boosted(p[1], bm25s[p[1]].score(
+            ub[ok] = _boost(bm25s[p[1]].score(
                 np.full(int(ok.sum()), weights[t][p[1]], np.float32),
-                grid.max_tf(p)[ok], grid.max_norm(p)[ok]))
+                grid.max_tf(p)[ok], grid.max_norm(p)[ok]),
+                boosts.get(p[1], 1.0))
             fb.append(ub)
         mx = np.maximum.reduce(fb)
         sm = np.sum(fb, axis=0)
@@ -1032,43 +962,22 @@ def qf_dismax_topk(
         if top.skip(ub32[i]):
             continue
         # every active (t, f) block slice; disjunction, so no
-        # conjunction shortcut — theta does the pruning
-        per_pair = {p: sl for ps in by_term.values() for p in ps
-                    for sl in (grid.slice(p, i),) if len(sl[0])}
-        if not per_pair:
+        # conjunction shortcut — theta does the pruning. Per term the
+        # DisMax over its fields, downcast to f32 BEFORE the f64 SHOULD
+        # fold over the terms (the flat _eval_dismax casts to the score
+        # type)
+        per_term = []
+        for ps in by_term.values():
+            fields = [(d, _boost(bm25s[f].score(
+                np.full(len(d), weights[t][f], np.float32), tf,
+                norms[f][d - doc_base]), boosts.get(f, 1.0)))
+                for t, f in ps for d, tf in (grid.slice((t, f), i),)
+                if len(d)]
+            per_term.append(_fold([[h] for h in fields], 1, tie))
+        if not any(len(d) for d, _ in per_term):
             continue
         grid.stats.intervals_scored += 1
-        union = np.unique(np.concatenate([d for d, _ in per_pair.values()]))
-        nd = len(union)
-        total = np.zeros(nd, dtype=np.float64)
-        matched = np.zeros(nd, dtype=np.int32)
-        for ps in by_term.values():
-            mx = np.full(nd, -np.inf, dtype=np.float64)
-            sm = np.zeros(nd, dtype=np.float64)
-            seen = np.zeros(nd, dtype=bool)
-            for p in ps:
-                if p not in per_pair:
-                    continue
-                (t, f), (d, tfv) = p, per_pair[p]
-                idx = np.searchsorted(union, d)
-                s64 = _boosted(f, bm25s[f].score(
-                    np.full(len(d), weights[t][f], np.float32),
-                    tfv, norms[f][d - doc_base])).astype(np.float64)
-                np.maximum.at(mx, idx, s64)
-                sm[idx] += s64
-                seen[idx] = True
-            if not seen.any():
-                continue
-            # the flat DisMax clause downcasts to f32 BEFORE the f64
-            # SHOULD fold (_eval_dismax casts to the score type);
-            # zero unseen slots first — mx stays -inf there and the
-            # fold would form 0*inf=NaN intermediates otherwise
-            mx = np.where(seen, mx, 0.0)
-            val32 = (mx + tie64 * (sm - mx)).astype(np.float32)
-            total += np.where(seen, val32.astype(np.float64), 0.0)
-            matched += seen.astype(np.int32)
-        ok = matched >= msm
-        top.push(union[ok], total[ok].astype(np.float32))
+        top.push(*_fold([[h] for h in per_term], msm))
     return top.result()
 
 
@@ -1089,6 +998,30 @@ class KernelSpec(NamedTuple):
 def _only(eps: dict, terms) -> dict:
     """The postings of ``terms`` that this segment has."""
     return {t: eps[t] for t in terms if t in eps}
+
+
+def _any_node(q: A.Query, pred) -> bool:
+    """True when ``pred`` holds for q or a node of its boolean tree
+    (span and phrase leaves are not descended into)."""
+    if pred(q):
+        return True
+    kids = ()
+    if isinstance(q, (A.AndQ, A.OrQ, A.DisMaxQ)):
+        kids = q.clauses
+    elif isinstance(q, A.NotQ):
+        kids = (q.positive, q.negative)
+    elif isinstance(q, A.ReqOptQ):
+        kids = (q.required, q.optional)
+    elif isinstance(q, A.ConstQ):
+        kids = (q.inner,)
+    return any(_any_node(c, pred) for c in kids)
+
+
+# the nodes WandSearcher._tree folds on the segment tier
+_POSITIONAL = (A.PhraseQ, A.MultiPhraseQ, A.SpanNearQ, A.SpanNearNQ,
+               A.TermAutomatonQ)
+_TREE_NODES = _POSITIONAL + (A.TermQ, A.SynonymQ, A.BlendedTermQ, A.AndQ,
+                             A.OrQ, A.DisMaxQ, A.NotQ, A.ReqOptQ, A.ConstQ)
 
 
 def global_topk(hits: DataFrame, k: int) -> DataFrame:
@@ -1125,7 +1058,7 @@ _NORMS_CACHE_MAX = 64
 # read-only (the kernel only slices them)
 _DECODED_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
 _DECODED_CACHE_BLOCKS = 16384
-# FULL decoded (docids, tfs) postings for the exhaustive scorer —
+# FULL decoded (docids, tfs) postings for the tree fold's leaves —
 # element-budgeted (16 bytes/element; 8M elements is ~128 MB/worker),
 # same immutable-cell key argument
 _FULLDEC_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
@@ -1283,7 +1216,7 @@ def _grouped_postings(idx_path: str, seg_id: int,
     point read each. MULTI-group (hot) terms stay lazy per group: the
     kernel's score-bound pruning decides which groups' bytes are read
     at all. ``bulk_all``: seed EVERY term's groups in the one read —
-    the batched-serving path, where the exhaustive bulk scorer will
+    the batched-serving path and the tree fold, which will
     decode every group anyway, so per-group point reads only add IO
     round trips."""
     from lucene_solr_spark.index.codec import GroupedPosting
@@ -1339,26 +1272,29 @@ class WandSearcher:
 
     - flat boolean: TermQ, AndQ/OrQ over unboosted terms (with
       min_should_match), NotQ whose negative side is a
-      term/OR-of-terms (boolean_topk: exhaustive_topk or wand_topk);
+      term/OR-of-terms (boolean_topk: the term fold or wand_topk);
     - PhraseQ, exact and sloppy (phrase_topk = multiphrase_topk over
       single-term slots);
     - MultiPhraseQ (multiphrase_topk);
     - top-level SpanNearQ (span_near_topk) and nested SpanNearNQ
       trees (span_nested_topk);
     - TermAutomatonQ (automaton_topk);
-    - SynonymQ (synonym_topk) and BlendedTermQ (exhaustive_topk with
-      the blended weight);
-    - DisMaxQ over unboosted terms (dismax_terms_topk).
+    - every other tree of boosted terms, SynonymQ, BlendedTermQ,
+      AndQ, OrQ (msm), DisMaxQ, NotQ, ReqOptQ, ConstQ and the
+      positional leaves above, at any depth (_tree: one recursive
+      fold over the segment's decoded postings, BooleanWeight's
+      per-leaf scorer tree).
 
     The block-grid kernels (wand_topk, the phrase, span and automaton
     kernels, and MultiFieldWandSearcher's qf_dismax_topk) share one
     interval sweep: _Grid, _TopK and _conjoin; each adds only its
-    interval bound and its match test. The exhaustive ones decode
-    whole postings.
+    interval bound and its match test. The tree fold decodes whole
+    postings.
 
-    Anything else (nested boolean trees, boosted terms, multi-term
-    and payload shapes) falls back in search() to the exhaustive flat
-    executor over decoded postings (same scores, no pruning).
+    Anything else (multi-term, MatchAll, payload and fielded shapes
+    anywhere in the tree, a standalone SpanOrNQ) falls back in
+    search() to the exhaustive flat executor over decoded postings
+    (same scores, no pruning).
     """
 
     def __init__(self, si: SegmentIndex, k1: float = 1.2, b: float = 0.75,
@@ -1413,39 +1349,28 @@ class WandSearcher:
         not distinct matching terms, and (b) the flat executor folds a
         nested OR to float32 before the outer float64 sum, so a
         flattened single fold would break bit-exact score parity.
-        Nested trees take the exhaustive fallback (same scores, no
-        pruning). The MUST_NOT side may still be an OR-of-terms — it
-        contributes an unscored docid set, where flattening is exact.
+        Nested trees and boosted terms go to _tree's fold (same
+        scores, no pruning). The MUST_NOT side may still be an
+        OR-of-terms — it contributes an unscored docid set, where
+        flattening is exact.
         """
         def neg_terms_of(node) -> list[str] | None:
             if isinstance(node, A.TermQ):
                 return [node.term]
             if isinstance(node, A.OrQ) and node.min_should_match <= 1:
-                out = []
-                for c in node.clauses:
-                    t = neg_terms_of(c)
-                    if t is None:
-                        return None
-                    out.extend(t)
-                return out
+                parts = [neg_terms_of(c) for c in node.clauses]
+                return None if None in parts else [t for p in parts for t in p]
             return None
 
         if isinstance(q, A.TermQ) and q.boost == 1.0:
             return [q.term], 1, []
-        if isinstance(q, A.AndQ):
-            out = []
-            for c in q.clauses:
-                if not (isinstance(c, A.TermQ) and c.boost == 1.0):
-                    return None
-                out.append(c.term)
-            return out, len(out), []
-        if isinstance(q, A.OrQ):
-            out = []
-            for c in q.clauses:
-                if not (isinstance(c, A.TermQ) and c.boost == 1.0):
-                    return None
-                out.append(c.term)
-            return out, max(1, q.min_should_match), []
+        if isinstance(q, (A.AndQ, A.OrQ)):
+            if not all(isinstance(c, A.TermQ) and c.boost == 1.0
+                       for c in q.clauses):
+                return None
+            terms = [c.term for c in q.clauses]
+            return terms, (len(terms) if isinstance(q, A.AndQ)
+                           else max(1, q.min_should_match)), []
         if isinstance(q, A.NotQ):
             pos = WandSearcher._flat_terms(q.positive)
             neg = neg_terms_of(q.negative)
@@ -1516,35 +1441,21 @@ class WandSearcher:
         return global_topk(hits.select("docid", "score"), k)
 
     def _search_flat(self, q: A.Query, k: int) -> DataFrame:
-        """Fallback for shapes with no segment kernel: exhaustive over
-        decoded postings; positions are decoded from the .pos stream
-        only when the query needs them (phrase/span shapes)."""
+        """Fallback for trees with a node _tree has no case for:
+        exhaustive over decoded postings; positions are decoded from
+        the .pos stream only when the query needs them (phrase/span
+        shapes)."""
         from lucene_solr_spark.search.executor import Searcher, _collect_terms
 
-        def scan(node, pred) -> bool:
-            if pred(node):
-                return True
-            kids = []
-            if isinstance(node, (A.AndQ, A.OrQ, A.DisMaxQ)):
-                kids = node.clauses
-            elif isinstance(node, A.NotQ):
-                kids = (node.positive, node.negative)
-            elif isinstance(node, A.ReqOptQ):
-                kids = (node.required, node.optional)
-            elif isinstance(node, A.ConstQ):
-                kids = (node.inner,)
-            return any(scan(c, pred) for c in kids)
-
-        needs_pos = scan(q, lambda n: isinstance(
-            n, (A.PhraseQ, A.MultiPhraseQ, A.SpanNearQ,
-                A.SpanOrNQ, A.SpanNearNQ, A.TermAutomatonQ)))
-        needs_offs = scan(q, lambda n: isinstance(n, A.PayloadScoreQ))
+        needs_pos = _any_node(q, lambda n: isinstance(
+            n, _POSITIONAL + (A.SpanOrNQ,)))
+        needs_offs = _any_node(q, lambda n: isinstance(n, A.PayloadScoreQ))
         # term-restricted decode is only valid when the term set is
         # closed (multi-term queries expand against the dictionary;
         # Synonym/Blended/SpanNear leaves are closed — their terms
         # come back from _collect_terms, and df/coll stats stay
         # index-global under restriction)
-        expands = scan(q, lambda n: isinstance(
+        expands = _any_node(q, lambda n: isinstance(
             n, (A.MultiTermQ, A.MatchAllQ)))
         qterms = None if expands else (sorted(_collect_terms(q)) or None)
         flat = self.si.as_flat_tables(with_positions=needs_pos,
@@ -1561,9 +1472,11 @@ class WandSearcher:
 
     def _kernel_spec(self, q: A.Query, k: int) -> KernelSpec | None:
         """The segment kernel of a rewritten query, or None when the
-        shape has none (flat fallback). A spec with no terms can match
-        nothing. Every kernel scores bit-equal to the flat executor's
-        evaluator of the same shape (duel-tested)."""
+        shape has none (flat fallback): a top-level positional shape
+        keeps its pruning kernel, a flat term AND/OR/NOT takes
+        boolean_topk, and any other tree the _tree fold. A spec with no
+        terms can match nothing. Every kernel scores bit-equal to the
+        flat executor's evaluator of the same shape (duel-tested)."""
         bm25 = self.bm25
         k = int(k)
         nothing = KernelSpec((), None)
@@ -1639,45 +1552,17 @@ class WandSearcher:
             return KernelSpec(present, lambda eps, norms, doc_base:
                               automaton_topk(paths, eps, weight, norms,
                                              doc_base, bm25, k=k))
-        if isinstance(q, (A.SynonymQ, A.BlendedTermQ)):
-            # both score with the BLENDED df (max over the terms);
-            # Synonym sums tf and scores once, Blended scores per term
-            # with the shared weight and SHOULD-folds
-            terms = sorted(set(q.terms))
-            dfs = self._global_df(terms)
-            present = tuple(t for t in terms if dfs[t] > 0)
-            if not present:
-                return nothing
-            w32 = np.float32(bm25.term_weight(
-                max(dfs[t] for t in present), q.boost))
-            if isinstance(q, A.SynonymQ):
-                return KernelSpec(present, lambda eps, norms, doc_base:
-                                  synonym_topk(_only(eps, present), w32,
-                                               norms, doc_base, bm25, k=k),
-                                  bulk=True)
-            return KernelSpec(present, lambda eps, norms, doc_base:
-                              exhaustive_topk(_only(eps, present),
-                                              dict.fromkeys(present, w32),
-                                              norms, doc_base, bm25, k=k),
-                              bulk=True)
-        if (isinstance(q, A.DisMaxQ)
-                and all(isinstance(c, A.TermQ) and c.boost == 1.0
-                        for c in q.clauses)):
-            terms = sorted({c.term for c in q.clauses})
-            dfs = self._global_df(terms)
-            present = tuple(t for t in terms if dfs[t] > 0)
-            if not present:
-                return nothing
-            weights = {t: bm25.term_weight(dfs[t]) for t in present}
-            tie = float(q.tie_breaker)
-            return KernelSpec(present, lambda eps, norms, doc_base:
-                              dismax_terms_topk(_only(eps, present),
-                                                weights, tie, norms,
-                                                doc_base, bm25, k=k),
-                              bulk=True)
         shape = self._flat_terms(q)
         if shape is None:
-            return None
+            tree = self._tree(q)
+            if tree is None:
+                return None
+
+            def run_tree(eps, norms, doc_base):
+                top = _TopK(k)
+                top.push(*tree[1](eps, norms, doc_base, WandStats()))
+                return top.result()
+            return KernelSpec(tree[0], run_tree, bulk=True)
         terms, msm, neg_terms = shape
         dfs = self._global_df(terms + neg_terms)
         present = tuple(sorted({t for t in terms if dfs[t] > 0}))
@@ -1697,6 +1582,105 @@ class WandSearcher:
             return boolean_topk(postings, weights, norms, doc_base, bm25,
                                 k=k, msm=msm, exclude=exclude)
         return KernelSpec(present + negs, run_boolean)
+
+    def _tree(self, q: A.Query) -> tuple[tuple[str, ...], Callable] | None:
+        """Compile a rewritten query tree to ``(terms, run)``:
+        ``run(eps, norms, doc_base, stats)`` returns every match of the
+        tree in one segment as (docids ascending, f32 scores), folded
+        node by node exactly as executor.Searcher._eval folds it
+        (duel-tested). None when some node has no case here
+        (_TREE_NODES), which leaves the query to the flat fallback."""
+        from lucene_solr_spark.search.executor import _collect_terms
+
+        if _any_node(q, lambda n: not isinstance(n, _TREE_NODES)):
+            return None
+        dfs = self._global_df(sorted(_collect_terms(q)))
+        bm25, n_docs = self.bm25, int(self.coll["doc_count"])
+
+        def node(q: A.Query) -> Callable:
+            if isinstance(q, _POSITIONAL):
+                # the leaf's own kernel, asked for every match
+                leaf = self._kernel_spec(q, n_docs).run or (lambda *_: None)
+
+                def run(eps, norms, doc_base, stats):
+                    hit = leaf(eps, norms, doc_base)
+                    if hit is None:
+                        return _no_hits()
+                    order = np.argsort(hit[0])
+                    return hit[0][order], hit[1][order]
+                return run
+            if isinstance(q, A.TermQ):
+                t, boost = q.term, q.boost
+                w = bm25.term_weight(dfs[t])
+
+                def run(eps, norms, doc_base, stats):
+                    if t not in eps:
+                        return _no_hits()
+                    d, s = _term_hits(eps[t], w, norms, doc_base, bm25, stats)
+                    return d, _boost(s, boost)
+                return run
+            if isinstance(q, (A.SynonymQ, A.BlendedTermQ)):
+                # one weight from the blended df (max over the terms)
+                terms = sorted(t for t in set(q.terms) if dfs[t] > 0)
+                w = bm25.term_weight(max([dfs[t] for t in terms] or [0]),
+                                     q.boost)
+                if isinstance(q, A.BlendedTermQ):
+                    return lambda eps, norms, doc_base, stats: _fold(
+                        [[_term_hits(eps[t], w, norms, doc_base, bm25, stats)]
+                         for t in terms if t in eps], 1)
+
+                def run(eps, norms, doc_base, stats):
+                    # SynonymQuery: tf summed per doc, scored once
+                    hits = [_decoded(eps[t], stats) for t in terms if t in eps]
+                    if not hits:
+                        return _no_hits()
+                    d = _union([hd for hd, _ in hits])
+                    tf = np.zeros(len(d), np.int64)
+                    for hd, htf in hits:
+                        tf[np.searchsorted(d, hd)] += htf
+                    return d, bm25.score(np.full(len(d), w, np.float32), tf,
+                                         norms[d - doc_base])
+                return run
+            if isinstance(q, A.NotQ):
+                pos, neg = node(q.positive), node(q.negative)
+                return lambda eps, norms, doc_base, stats: _without(
+                    pos(eps, norms, doc_base, stats),
+                    neg(eps, norms, doc_base, stats)[0])
+            if isinstance(q, A.ReqOptQ):
+                req, opt = node(q.required), node(q.optional)
+
+                def run(eps, norms, doc_base, stats):
+                    r = req(eps, norms, doc_base, stats)
+                    d, s = _fold([[r], [opt(eps, norms, doc_base, stats)]], 1)
+                    keep = np.isin(d, r[0])
+                    return d[keep], s[keep]
+                return run
+            if isinstance(q, A.ConstQ):
+                inner, c = node(q.inner), np.float32(q.boost)
+
+                def run(eps, norms, doc_base, stats):
+                    d = inner(eps, norms, doc_base, stats)[0]
+                    return d, np.full(len(d), c, np.float32)
+                return run
+            # AndQ / OrQ / DisMaxQ: clauses in sorted key order; only
+            # the flat OR orders equal-key clauses by score (one group)
+            kids = sorted(q.clauses, key=lambda c: c.key())
+            runs = [node(c) for c in kids]
+            groups = [[i] for i in range(len(kids))]
+            need, tie = len(kids), None
+            if isinstance(q, A.OrQ):
+                groups = [[i for i, _ in g] for _, g in
+                          groupby(enumerate(kids), key=lambda x: x[1].key())]
+                need = max(1, q.min_should_match)
+            elif isinstance(q, A.DisMaxQ):
+                need, tie = 1, float(q.tie_breaker)
+
+            def run(eps, norms, doc_base, stats):
+                hits = [r(eps, norms, doc_base, stats) for r in runs]
+                return _fold([[hits[i] for i in g] for g in groups], need, tie)
+            return run
+
+        return tuple(t for t in sorted(dfs) if dfs[t] > 0), node(q)
 
     def _kernel_plan(self, specs: dict[str, KernelSpec]) -> DataFrame | None:
         """The one Spark plan every segment kernel runs in: metadata

@@ -7,7 +7,12 @@ from lucene_solr_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="lss-tests", cores=8, shuffle_partitions=8)
+    # The suite's corpora are a few thousand docs; session.py's default
+    # heap is sized for a large driver, and with it the one JVM of a
+    # 20-minute run grows past 13 GB of RSS, enough for the kernel's
+    # OOM killer on a 16 GB host. A small heap bounds it.
+    s = get_spark(app_name="lss-tests", cores=8, shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "4g"})
     yield s
 
 

@@ -138,8 +138,8 @@ def test_docid_assignment_unique_on_parquet_source(spark, pages_tiny, tmp_path_f
 
 def test_positions_roundtrip_and_phrase(spark, seg_index, tiny_index):
     """The .pos stream: decoded positions equal the flat index's, and
-    phrase queries answered from the segment store (WandSearcher
-    fallback) are bit-identical to the flat engine."""
+    phrase queries answered from the segment store (WandSearcher's
+    two-phase phrase kernel) are bit-identical to the flat engine."""
     import numpy as np
 
     from lucene_solr_spark.search.executor import Searcher

@@ -81,8 +81,8 @@ def test_wand_msm(seg_index, flat_searcher):
 def test_wand_nested_or_duels_flat(seg_index, flat_searcher):
     """Nested OR trees are NOT WAND-shaped (msm counts top-level
     clauses; the executor folds the inner OR to float32 before the
-    outer float64 sum) — they must route to the exhaustive fallback
-    and stay bit-equal with the flat executor."""
+    outer float64 sum) — they run the segment-tier tree fold and stay
+    bit-equal with the flat executor."""
     from lucene_solr_spark.search import ast as A
 
     inner = A.OrQ((A.TermQ("t000001"), A.TermQ("t000002")))
@@ -223,7 +223,8 @@ def test_kernel_exclude():
 
 
 # every segment-native shape: flat boolean, phrases, multiphrase,
-# spans, automaton, synonym/blended and dismax-over-terms
+# spans, automaton, and trees for the fold (synonym/blended, dismax,
+# nesting, boosts, ReqOpt, Const, a span leaf inside an OR)
 SEGMENT_NATIVE_SHAPES = {
     "term": A.TermQ("t000100"),
     "and": A.AndQ((A.TermQ("t000001"), A.TermQ("t000002"))),
@@ -243,6 +244,17 @@ SEGMENT_NATIVE_SHAPES = {
     "blended": A.BlendedTermQ(("t000000", "t000001", "t000002"), boost=0.7),
     "dismax_terms": A.DisMaxQ((A.TermQ("t000000"), A.TermQ("t000010"),
                                A.TermQ("t000050")), tie_breaker=0.3),
+    "nested": A.OrQ((A.AndQ((A.TermQ("t000001"), A.TermQ("t000002"))),
+                     A.TermQ("t000003"))),
+    "boosted": A.OrQ((A.TermQ("t000001", boost=2.0), A.TermQ("t000002"))),
+    "reqopt": A.ReqOptQ(A.TermQ("t000000"),
+                        A.OrQ((A.TermQ("t000001"), A.TermQ("t000010")))),
+    "dismax_and": A.DisMaxQ((A.AndQ((A.TermQ("t000000"), A.TermQ("t000001"))),
+                             A.TermQ("t000002")), tie_breaker=0.2),
+    "const": A.OrQ((A.ConstQ(A.TermQ("t000001"), boost=1.5),
+                    A.TermQ("t000002"))),
+    "span_in_or": A.OrQ((A.SpanNearQ("t000001", "t000002", slop=2),
+                         A.TermQ("t000100"))),
 }
 
 
@@ -274,13 +286,13 @@ def test_search_many_matches_individual(seg_index):
 
 
 def test_search_many_rejects_non_wand(seg_index):
-    """Shapes without a segment kernel (nested boolean trees take the
-    flat fallback in search()) are refused by search_many."""
+    """Shapes without a segment kernel (a multi-term leaf anywhere in
+    the tree takes the flat fallback in search()) are refused by
+    search_many."""
     ws = WandSearcher(seg_index)
-    nested = A.OrQ((A.AndQ((A.TermQ("t000001"), A.TermQ("t000002"))),
-                    A.TermQ("t000003")))
+    expanding = A.OrQ((A.PrefixQ("t00000"), A.TermQ("t000100")))
     with pytest.raises(ValueError):
-        ws.search_many({"n": nested})
+        ws.search_many({"n": expanding})
 
 
 @pytest.mark.parametrize("shape", sorted(SEGMENT_NATIVE_SHAPES))
@@ -404,24 +416,27 @@ def test_multiphrase_duels_flat(seg_index, flat_searcher, slots, slop):
 
 
 def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
-    """Synonym and Blended run segment-native kernels; a SpanNear
-    inside an OR has none and goes through the exhaustive flat
-    fallback with a TERM-RESTRICTED decode (closed term set). All
-    three duel the flat executor, and the fallback's plan filters the
-    postings scan on the query's terms below the decode instead of
-    decoding the whole dictionary."""
+    """Synonym, Blended and a SpanNear inside an OR run the segment
+    tree fold; a standalone SpanOrNQ inside an OR has no segment case
+    and goes through the exhaustive flat fallback with a
+    TERM-RESTRICTED decode (closed term set). All four duel the flat
+    executor, and the fallback's plan filters the postings scan on the
+    query's terms below the decode instead of decoding the whole
+    dictionary."""
     from lucene_solr_spark.search import ast as A
 
     ws = WandSearcher(seg_index)
     shapes = [A.SynonymQ(("t000001", "t000002")),
               A.BlendedTermQ(("t000001", "t000100")),
               A.OrQ((A.SpanNearQ("t000001", "t000002", slop=2),
+                     A.TermQ("t000100"))),
+              A.OrQ((A.SpanOrNQ(("t000001", "t000002")),
                      A.TermQ("t000100")))]
     for q in shapes:
         a = _rows(ws.search(q, k=10))
         b = _rows(flat_searcher.search(q, k=10))
-        assert a == b, type(q).__name__
-    fallback = shapes[2]
+        assert a == b, q.key()
+    fallback = shapes[3]
     assert ws._kernel_spec(fallback.rewrite(), 10) is None
     plan = (ws.search(fallback, k=10)
             ._jdf.queryExecution().executedPlan().toString())
@@ -725,41 +740,29 @@ def test_span_nested_kernel_early_terminates(seg_index):
 @pytest.mark.parametrize("msm", [1, 2, 3])
 @pytest.mark.parametrize("seed", [7, 19, 42])
 def test_exhaustive_topk_bit_equals_wand(msm, seed):
-    """exhaustive_topk (the BooleanScorer bulk tier boolean_topk
-    dispatches to below EXHAUSTIVE_MAX_NDOCS) is bit-equal to the
-    WAND sweep on every (docid, f32 score): same sorted-term f64 fold,
-    same (score desc, docid asc) selection."""
-    from lucene_solr_spark.search.wand import exhaustive_topk
-
+    """boolean_topk's term fold (the BooleanScorer bulk tier it takes
+    below EXHAUSTIVE_MAX_NDOCS) is bit-equal to the WAND sweep on every
+    (docid, f32 score), with and without a MUST_NOT exclusion: same
+    sorted-term f64 fold, same (score desc, docid asc) selection."""
     postings, weights, norms, bm25, raw = _mk_kernel_fixture(seed=seed)
-    for k in (3, 10, 50):
-        dw, sw = wand_topk(postings, weights, norms, 0, bm25, k=k, msm=msm)
-        de, se = exhaustive_topk(postings, weights, norms, 0, bm25,
-                                 k=k, msm=msm)
+    assert sum(ep.ndocs for ep in postings.values()) <= W.EXHAUSTIVE_MAX_NDOCS
+    excl = np.sort(raw["term0"][0][::3])
+    for k, exclude in [(3, None), (10, None), (50, None), (10, excl)]:
+        dw, sw = wand_topk(postings, weights, norms, 0, bm25, k=k, msm=msm,
+                           exclude=exclude)
+        de, se = W.boolean_topk(postings, weights, norms, 0, bm25, k=k,
+                                msm=msm, exclude=exclude)
         assert list(dw) == list(de)
         assert sw.tobytes() == se.tobytes()
-    # with MUST_NOT exclusion
-    excl = np.sort(raw["term0"][0][::3])
-    dw, sw = wand_topk(postings, weights, norms, 0, bm25, k=10, msm=msm,
-                       exclude=excl)
-    de, se = exhaustive_topk(postings, weights, norms, 0, bm25, k=10,
-                             msm=msm, exclude=excl)
-    assert list(dw) == list(de) and sw.tobytes() == se.tobytes()
 
 
-def test_boolean_topk_dispatch():
+def test_boolean_topk_dispatch(monkeypatch):
     """boolean_topk routes by summed segment-local df and both sides
     agree (the dispatch can never change results)."""
-    import lucene_solr_spark.search.wand as W
-
     postings, weights, norms, bm25, raw = _mk_kernel_fixture()
     d1, s1 = W.boolean_topk(postings, weights, norms, 0, bm25, k=10)
-    old = W.EXHAUSTIVE_MAX_NDOCS
-    try:
-        W.EXHAUSTIVE_MAX_NDOCS = 0  # force the sweep
-        d2, s2 = W.boolean_topk(postings, weights, norms, 0, bm25, k=10)
-    finally:
-        W.EXHAUSTIVE_MAX_NDOCS = old
+    monkeypatch.setattr(W, "EXHAUSTIVE_MAX_NDOCS", 0)  # force the sweep
+    d2, s2 = W.boolean_topk(postings, weights, norms, 0, bm25, k=10)
     assert list(d1) == list(d2) and s1.tobytes() == s2.tobytes()
 
 
@@ -807,9 +810,9 @@ def test_term_automaton_kernel_duels_flat(seg_index, flat_searcher,
 
 def test_synonym_blended_dismax_segment_native(seg_index, flat_searcher):
     """SynonymQ / BlendedTermQ / DisMaxQ-of-terms run segment-native
-    (synonym_topk / exhaustive_topk / dismax_terms_topk) and duel the
-    flat executor bit-equal; the plan ships metadata-only rows (no
-    as_flat_tables MapInPandas)."""
+    (node cases of the _tree fold) and duel the flat executor
+    bit-equal; the plan ships metadata-only rows (no as_flat_tables
+    MapInPandas)."""
     ws = WandSearcher(seg_index)
     shapes = [
         A.SynonymQ(("t000001", "t000002")),
@@ -893,6 +896,10 @@ GRID_KERNELS = {
                       [("t000000", "t000001"), ("t000000", "t000002")], eps,
                       _phrase_w(bm, sorted(eps), eps), nm, base, bm, k,
                       stats=st)),
+    "boolean_fold": (["t000000", "t000001", "t000002"],
+                     lambda eps, nm, base, bm, k, st: W.boolean_topk(
+                         eps, _weights(bm, eps), nm, base, bm, k, msm=2,
+                         stats=st)),
     "qf_dismax": (["t000000", "t000002"],
                   lambda eps, nm, base, bm, k, st: W.qf_dismax_topk(
                       sorted(eps), {t: {"body": ep} for t, ep in eps.items()},
@@ -915,11 +922,12 @@ def seg_index_blocks(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("kernel", sorted(GRID_KERNELS))
 def test_block_grid_kernel_stats(seg_index_blocks, kernel):
-    """Every block-grid kernel reports its pruning counters: it decodes
-    some but at most all of its postings' blocks, blocks_total is the
-    summed block count of the postings it read, it scores at most
-    every interval, and a k=1 call decodes no more than an unbounded
-    one."""
+    """Every block-grid kernel, and the term fold boolean_topk takes
+    below EXHAUSTIVE_MAX_NDOCS, reports its pruning counters: it
+    decodes some but at most all of its postings' blocks, blocks_total
+    is the summed block count of the postings it read, it scores at
+    most every interval, and a k=1 call decodes no more than an
+    unbounded one."""
     seg_index = seg_index_blocks
     from pyspark.sql import functions as F
 
@@ -945,3 +953,114 @@ def test_block_grid_kernel_stats(seg_index_blocks, kernel):
             else ep.n_full_blocks + int(ep.has_tail) for ep in eps.values())
         assert st.intervals_scored <= st.intervals_total
     assert stats[1].blocks_decoded <= stats[10 ** 9].blocks_decoded
+
+
+TREE_TERMS = ["t000000", "t000001", "t000002", "t000003", "t000010",
+              "t000050", "t000100", "t000300", "missingterm"]
+
+
+def _random_tree(rng, depth: int) -> A.Query:
+    """A random query tree of at most ``depth`` combinator levels over
+    zipf-head, tail and missing terms."""
+    if depth == 0 or rng.random() < 0.45:
+        r, t = rng.random(), rng.choice(TREE_TERMS)
+        if r < 0.7:
+            return A.TermQ(t, boost=rng.choice([1.0, 1.0, 2.0, 0.7]))
+        if r < 0.78:
+            return A.SynonymQ(tuple(rng.sample(TREE_TERMS, 2)),
+                              boost=rng.choice([1.0, 1.5]))
+        if r < 0.86:
+            return A.BlendedTermQ(tuple(rng.sample(TREE_TERMS, 3)))
+        if r < 0.93:
+            return A.PhraseQ(("t000000", t), slop=rng.choice([0, 2]))
+        return A.SpanNearQ("t000001", t, slop=rng.choice([0, 3]),
+                           in_order=rng.random() < 0.5)
+
+    def kids(n):
+        return tuple(_random_tree(rng, depth - 1) for _ in range(n))
+    kind = rng.choice(["and", "or", "or", "not", "reqopt", "dismax",
+                       "const"])
+    if kind == "and":
+        return A.AndQ(kids(2))
+    if kind == "or":
+        n = rng.choice([2, 3])
+        return A.OrQ(kids(n), min_should_match=rng.choice([1, 1, 2]))
+    if kind == "not":
+        return A.NotQ(*kids(2))
+    if kind == "reqopt":
+        return A.ReqOptQ(*kids(2))
+    if kind == "dismax":
+        return A.DisMaxQ(kids(2), tie_breaker=rng.choice([0.0, 0.1, 0.5]))
+    return A.ConstQ(kids(1)[0], boost=rng.choice([1.0, 2.5]))
+
+
+def _walk(q):
+    yield q
+    for attr in ("clauses", "positive", "negative", "required", "optional",
+                 "inner"):
+        sub = getattr(q, attr, None)
+        for c in (sub if isinstance(sub, tuple) else (sub,)):
+            if isinstance(c, A.Query):
+                yield from _walk(c)
+
+
+def test_random_tree_fold_duels_flat(seg_index, flat_searcher):
+    """Seeded random boolean trees (depth <= 4: boosts, msm, NOT,
+    ReqOpt, DisMax with tie, Const, Synonym/Blended, phrase and span
+    leaves, equal-key clauses) all run the segment-tier fold — one
+    grouped map, no flat decode — and one WandSearcher.search_many
+    batch is bit-equal (docids and float32 score bits) to one flat
+    Searcher.search_many batch."""
+    import random
+
+    rng = random.Random(2024)
+    trees = [
+        # equal keys after another clause: the flat OR adds a doc's
+        # equal-key scores in ascending order
+        A.OrQ((A.TermQ("t000002", boost=2.0), A.TermQ("t000002"),
+               A.TermQ("t000001"))),
+        A.OrQ((A.TermQ("t000001", boost=2.0), A.TermQ("t000001"),
+               A.TermQ("t000003"))),
+        A.NotQ(A.OrQ((A.AndQ((A.TermQ("t000000"), A.TermQ("t000001"))),
+                      A.TermQ("t000002", boost=0.5),
+                      A.PhraseQ(("t000000", "t000001"))),
+                     min_should_match=2),
+               A.SynonymQ(("t000003", "t000300"))),
+        A.DisMaxQ((A.AndQ((A.TermQ("t000000"), A.TermQ("t000010"))),
+                   A.SpanNearQ("t000001", "t000002", slop=2),
+                   A.BlendedTermQ(("t000000", "t000050", "missingterm"))),
+                  tie_breaker=0.4),
+    ]
+    while len(trees) < 24:
+        q = _random_tree(rng, 3).rewrite()
+        if isinstance(q, (A.AndQ, A.OrQ, A.DisMaxQ, A.NotQ, A.ReqOptQ,
+                          A.ConstQ)):
+            trees.append(q)
+    nodes = [n for q in trees for n in _walk(q.rewrite())]
+    assert {A.TermQ, A.SynonymQ, A.BlendedTermQ, A.PhraseQ, A.SpanNearQ,
+            A.AndQ, A.OrQ, A.NotQ, A.ReqOptQ, A.DisMaxQ,
+            A.ConstQ} <= {type(n) for n in nodes}
+    assert any(isinstance(n, A.OrQ) and n.min_should_match > 1 for n in nodes)
+    assert any(isinstance(n, A.DisMaxQ) and n.tie_breaker > 0 for n in nodes)
+    assert any(getattr(n, "boost", 1.0) != 1.0 for n in nodes)
+
+    ws = WandSearcher(seg_index)
+    for q in trees:
+        assert ws._kernel_spec(q.rewrite(), 10) is not None, q.key()
+    batch = {f"q{i:02d}": q for i, q in enumerate(trees)}
+
+    def by_qid(df):
+        out: dict = {}
+        for r in df.collect():
+            out.setdefault(r["qid"], []).append(
+                (r["rank"], r["docid"], np.float32(r["score"]).tobytes()))
+        return {qid: sorted(rows) for qid, rows in out.items()}
+    hits = ws.search_many(batch, k=10)
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "MapInPandas" not in plan
+    got = by_qid(hits)
+    exp = by_qid(flat_searcher.search_many(batch, k=10))
+    assert len(exp) >= 12, "too few trees match anything"
+    for qid in batch:
+        assert got.get(qid) == exp.get(qid), (qid, batch[qid].key())

@@ -1136,8 +1136,9 @@ GROUP BY p1.doc_id
 def _f32_phrase_sql(t1: str, t2: str, k: int = 10) -> str:
     """Float32-exact BM25 phrase top-k oracle: pfreq from the position
     join, weight = f32(f32(idf(t1)+idf(t2)) * (k1+1)), score =
-    f32(w * pf / (pf + cache)) — the exact op order of
-    WandSearcher._search_phrase / the flat _eval_phrase."""
+    f32(w * pf / (pf + cache)) — the exact op order of the segment
+    phrase kernel (wand.phrase_topk) and the flat executor's
+    _score_phrase_freq."""
     from lucene_solr_spark.oracle_f32 import NT_SQL, K1P1_F32, ONE_MINUS_B_F32
 
     return f"""

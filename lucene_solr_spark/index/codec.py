@@ -747,59 +747,24 @@ class GroupedPosting:
 
     def positions_for(self, docids: np.ndarray) -> list[np.ndarray]:
         """Positions of each requested docid (ascending, all present in
-        this posting) — the lazy .pos read of the two-phase iterator
-        (search/TwoPhaseIterator.java + ExactPhraseScorer.java:123:
-        positions are consulted only for docs surviving the docid
-        conjunction). The .pos payload is fetched per GROUP through
-        ``pos_fetch``; groups containing no requested doc cost no IO.
-        Each group's stream decodes standalone (split_posting_to_rows
-        re-encodes group slices with per-doc resets)."""
-        if self.pos_fetch is None:
-            raise ValueError("GroupedPosting has no pos_fetch attached")
-        docids = np.asarray(docids, dtype=np.int64)
-        out: list[np.ndarray | None] = [None] * len(docids)
-        if self.singleton_docid is not None:
-            blob = self.pos_fetch(int(self._rows[0]["grp_id"]))
-            if not blob:
-                raise ValueError("index was built without positions")
-            pos = np.cumsum(read_vints_arr(blob)[: int(self.blockmax_tf[0])])
-            return [pos] * len(docids)
-        glast = getattr(self, "_glast", None)
-        if glast is None:
-            glast = np.fromiter(
-                (int(r["grp_last_doc"]) for r in self._rows),
-                dtype=np.int64, count=len(self._rows))
-            self._glast = glast
-        gi = np.searchsorted(glast, docids, side="left")
-        for g in np.unique(gi):
-            g = int(g)
-            cached = self._pos_cache.get(g)
-            if cached is None:
-                gdocs, gtfs = decode_posting(self._group_ep(g))
-                blob = self.pos_fetch(int(self._rows[g]["grp_id"]))
-                if not blob:
-                    raise ValueError("index was built without positions")
-                vals = read_vints_arr(blob)
-                starts = np.concatenate(([0], np.cumsum(gtfs)))
-                cached = (gdocs, gtfs, vals, starts)
-                self._pos_cache[g] = cached
-            gdocs, gtfs, vals, starts = cached
-            sel = np.nonzero(gi == g)[0]
-            idxs = np.searchsorted(gdocs, docids[sel])
-            for oi, ii in zip(sel, idxs):
-                ii = int(ii)
-                s, t = int(starts[ii]), int(gtfs[ii])
-                out[oi] = np.cumsum(vals[s:s + t])
-        return out
+        this posting): positions_flat split per doc."""
+        idx, pos = self.positions_flat(docids)
+        return np.split(pos, np.searchsorted(
+            idx, np.arange(1, len(docids))))[:len(docids)]
 
     def positions_flat(self, docids: np.ndarray) -> tuple[np.ndarray,
                                                           np.ndarray]:
-        """Flattened positions of the requested docids as
-        (idx_rep, positions) — idx_rep[i] indexes into ``docids``.
-        Same lazy per-group .pos IO as positions_for, but the per-doc
-        delta-cumsum is one segmented cumsum over the whole batch (no
-        per-doc Python loop) — the bulk shape the exact-phrase verify
-        wants, where per-doc list materialization dominated."""
+        """Flattened positions of the requested docids (ascending, all
+        present in this posting) as (idx_rep, positions) — idx_rep[i]
+        indexes into ``docids``, ascending. The lazy .pos read of the
+        two-phase iterator (search/TwoPhaseIterator.java +
+        ExactPhraseScorer.java:123: positions are consulted only for
+        docs surviving the docid conjunction): the .pos payload is
+        fetched per GROUP through ``pos_fetch``, so groups containing
+        no requested doc cost no IO; each group's stream decodes
+        standalone (split_posting_to_rows re-encodes group slices with
+        per-doc resets). The per-doc delta-cumsum is one segmented
+        cumsum over the whole batch, no per-doc Python loop."""
         if self.pos_fetch is None:
             raise ValueError("GroupedPosting has no pos_fetch attached")
         docids = np.asarray(docids, dtype=np.int64)

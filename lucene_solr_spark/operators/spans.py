@@ -6,6 +6,9 @@ algebra: join the two terms' postings on docid (phase 1, cheap), then
 count position pairs satisfying the window constraint with a JVM-side
 array expression (phase 2) — the TwoPhaseIterator pattern
 (search/TwoPhaseIterator.java) without any Python in the loop.
+These operators count spans for the oracled span_* queries; SpanNearQ
+and nested-span MATCHING is the positional match layer
+(search/executor.py, search/spannest.py) that both searchers run.
 """
 
 from __future__ import annotations
@@ -20,7 +23,11 @@ def span_near_pairs(index: IndexTables, first: str, second: str,
                     slop: int = 0, in_order: bool = True) -> DataFrame:
     """(docid, pairs): number of (p1, p2) occurrence pairs with
     0 < p2 - p1 <= slop + 1 (in_order) or 0 < |p2 - p1| <= slop + 1
-    (unordered). slop=0 in_order == exact adjacency (phrase shape)."""
+    (unordered). slop=0 in_order == exact adjacency (phrase shape).
+    The pair-count operator behind the oracled ``span_near`` query; it
+    does not define SpanNearQ matching, which is
+    executor.span_near_match in both the segment kernel and the flat
+    executor."""
     a = index.postings.where(F.col("term") == first).select(
         "docid", F.col("positions").alias("p1"))
     b = index.postings.where(F.col("term") == second).select(

@@ -10,10 +10,12 @@ Mapping of Lucene's scorer tree onto Spark operators (SURVEY §2.3):
                                     (constant-score, the default
                                     CONSTANT_SCORE_REWRITE of
                                     search/MultiTermQuery.java)
-  ExactPhraseScorer                 positions-array intersection in a
-                                    vectorized pandas UDF (two-phase:
-                                    docid-join first, positions second,
-                                    like search/TwoPhaseIterator.java)
+  Exact/SloppyPhraseScorer,         one two-phase plan (search/
+    TermAutomatonScorer, spans      TwoPhaseIterator.java): a docid
+                                    groupBy keeps the docs holding every
+                                    slot, then one pandas UDF per Arrow
+                                    batch runs the match rule shared
+                                    with the segment kernels
   TopScoreDocCollector + TopDocs    orderBy(score desc, docid asc)
     .merge                          .limit(k) → TakeOrderedAndProject
                                     (per-partition bounded heaps + a
@@ -36,6 +38,7 @@ Two scoring modes:
 
 from __future__ import annotations
 
+from collections import deque
 from functools import reduce
 
 import numpy as np
@@ -211,8 +214,9 @@ def multiphrase_rpt_groups(
     repeatingTerms + gatherRptGroups' multi-term path): slots sharing
     ANY repeating term form one group (connected components of the
     slot/term bipartite graph, unionTermGroups); ``multi_term`` when a
-    grouped slot holds several terms. Shared by the flat evaluator and
-    the segment-native kernel so both stay in lockstep."""
+    grouped slot holds several terms. Phrases and multiphrases take
+    their groups from here in the flat executor and in the segment
+    kernels alike (a PhraseQ is single-term slots)."""
     from collections import Counter
 
     term_cnt = Counter(t for slot in slots for t in set(slot))
@@ -240,6 +244,105 @@ def multiphrase_rpt_groups(
         if groups:
             multi_term = any(len(slots[i]) > 1 for g in groups for i in g)
     return groups, multi_term
+
+
+# -- the positional match layer ---------------------------------------------
+# Each positional shape's per-document match rule, written once: the
+# segment kernels (wand.multiphrase_topk, automaton_topk,
+# span_near_topk) and the flat Searcher._eval_positional both call
+# these; nested spans share spannest.emit_spans the same way.
+
+POSITIONAL = (A.PhraseQ, A.MultiPhraseQ, A.TermAutomatonQ, A.SpanNearQ,
+              A.SpanNearNQ, A.SpanOrNQ)
+
+
+def _union(parts: list[np.ndarray]) -> np.ndarray:
+    """Sorted union of sorted unique int64 arrays."""
+    if len(parts) == 1:
+        return parts[0]
+    return np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
+
+
+def exact_phrase_freqs(slots, flat: dict) -> tuple[np.ndarray, np.ndarray]:
+    """ExactPhraseScorer over a batch of docs: (doc indexes, freqs) of
+    the docs with some start p where slot i holds position p + i for
+    every i; freq = the number of such starts. ``flat[t]``: term t's
+    (doc index, position) arrays, ascending. A slot is the union of
+    its terms (MultiPhraseQuery's UnionPostingsEnum). Vectorized over
+    the batch: keys doc << 33 | pos - off + n_slots, per slot the union
+    of its terms' keys, one sorted intersect per slot."""
+    base = np.empty(0, np.int64)
+    for off, s in enumerate(slots):
+        keys = _union([(di << 33) | (pos - off + len(slots))
+                       for di, pos in (flat[t] for t in s if t in flat)])
+        base = keys if off == 0 else np.intersect1d(base, keys,
+                                                    assume_unique=True)
+        if base.size == 0:
+            break
+    return np.unique(base >> 33, return_counts=True)
+
+
+def sloppy_phrase_freq(slots, pos: dict, slop: int,
+                       groups: list[list[int]] | None = None,
+                       multi_term: bool = False) -> float:
+    """SloppyPhraseScorer for one doc (``pos``: term -> ascending
+    positions): _sloppy_phrase_freq over each slot's position union,
+    rebased by the slot offset, with the multiphrase_rpt_groups
+    repeat groups."""
+    return _sloppy_phrase_freq(
+        [_union([pos[t] for t in s if t in pos]) - off
+         for off, s in enumerate(slots)], slop, groups, multi_term)
+
+
+def automaton_freq(paths: list[tuple], pos: dict) -> float:
+    """TermAutomatonScorer for one doc: the number of distinct start
+    positions (>= 0) from which some enumerated path matches, a path
+    slot of None (ANY) stepping over one position."""
+    starts: set = set()
+    for path in paths:
+        base: np.ndarray | None = None
+        for off, t in enumerate(path):
+            if t is None:
+                continue
+            if t not in pos:
+                base = None
+                break
+            base = (pos[t] - off if base is None else np.intersect1d(
+                base, pos[t] - off, assume_unique=True))
+            if base.size == 0:
+                break
+        if base is not None:
+            starts.update(int(x) for x in base if x >= 0)
+    return float(len(starts))
+
+
+def span_near_match(p1: np.ndarray | None, p2: np.ndarray | None,
+                    slop: int, in_order: bool) -> bool:
+    """SpanNearQuery over two terms for one doc: some occurrence pair
+    with 0 < p2 - p1 <= slop + 1 (in order) or 0 < |p2 - p1| <= slop + 1
+    (unordered). When both terms are the same, p1 is p2 and the strict
+    inequalities demand two distinct occurrences."""
+    if p1 is None or p2 is None:
+        return False
+    win = slop + 1
+    if (np.searchsorted(p2, p1 + win, side="right")
+            > np.searchsorted(p2, p1, side="right")).any():
+        return True
+    return not in_order and bool(
+        (np.searchsorted(p2, p1, side="left")
+         > np.searchsorted(p2, p1 - win, side="left")).any())
+
+
+def positional_idf_terms(q: A.Query) -> list[str]:
+    """The terms whose idf a phrase-scored shape sums: the query-order
+    term array with repeats for PhraseQ, the sorted distinct terms for
+    MultiPhraseQ and TermAutomatonQ (BM25Similarity.idfExplain over
+    the TermStatistics array)."""
+    if isinstance(q, A.PhraseQ):
+        return list(q.terms)
+    if isinstance(q, A.MultiPhraseQ):
+        return sorted({t for slot in q.slots for t in slot})
+    return sorted({t for p in q.finite_strings() for t in p if t is not None})
 
 
 def _collect_terms(q: A.Query) -> set[str]:
@@ -281,14 +384,17 @@ class QueryCache:
     """LRUQueryCache analogue (search/LRUQueryCache.java:807,
     UsageTrackingQueryCachingPolicy): caches the MATCHING DOC SET of a
     subquery (persisted DataFrame keyed by the query's canonical
-    clause key) once it has been seen ``min_uses`` times — scores are
-    never cached, exactly like the reference, which caches filter
-    DocIdSets only."""
+    clause key) once it appears ``min_uses`` times among the last
+    USE_HISTORY keys looked up (the policy's bounded recent-filter
+    ring) — scores are never cached, exactly like the reference, which
+    caches filter DocIdSets only."""
+
+    USE_HISTORY = 256
 
     def __init__(self, max_entries: int = 32, min_uses: int = 2):
         self.max_entries = max_entries
         self.min_uses = min_uses
-        self._uses: dict[str, int] = {}
+        self._history: deque[str] = deque(maxlen=self.USE_HISTORY)
         self._cached: dict[str, DataFrame] = {}
         self.hits = 0
         self.misses = 0
@@ -298,8 +404,8 @@ class QueryCache:
             self.hits += 1
             return self._cached[key]
         self.misses += 1
-        self._uses[key] = self._uses.get(key, 0) + 1
-        if self._uses[key] < self.min_uses:
+        self._history.append(key)
+        if self._history.count(key) < self.min_uses:
             return None
         if len(self._cached) >= self.max_entries:  # simple eviction
             old_key, old = next(iter(self._cached.items()))
@@ -466,10 +572,8 @@ class Searcher:
             pos = self._eval(q.positive, scored)
             neg = self._eval(q.negative, scored).select("docid")
             return pos.join(neg, "docid", "left_anti")
-        if isinstance(q, A.PhraseQ):
-            return self._eval_phrase(q)
-        if isinstance(q, A.MultiPhraseQ):
-            return self._eval_multi_phrase(q)
+        if isinstance(q, POSITIONAL):
+            return self._eval_positional(q)
         if isinstance(q, A.DisMaxQ):
             return self._eval_dismax(q, scored)
         if isinstance(q, A.SynonymQ):
@@ -478,66 +582,11 @@ class Searcher:
             return self._eval_blended(q)
         if isinstance(q, A.ReqOptQ):
             return self._eval_reqopt(q, scored)
-        if isinstance(q, A.SpanNearQ):
-            return self._eval_span_near(q)
-        if isinstance(q, (A.SpanOrNQ, A.SpanNearNQ)):
-            return self._eval_span_nested(q)
         if isinstance(q, A.PayloadScoreQ):
             return self._eval_payload_score(q)
         if isinstance(q, A.SpanPayloadCheckQ):
             return self._eval_payload_check(q)
-        if isinstance(q, A.TermAutomatonQ):
-            return self._eval_term_automaton(q)
         raise TypeError(f"unsupported query node {type(q).__name__}")
-
-    def _eval_span_nested(self, q) -> DataFrame:
-        """Nested span query (SpanOrNQ / SpanNearNQ) over the flat
-        positions arrays: docid-level pre-filter (every phase-1 slot
-        group must contribute >= 1 term — the spannest.slot_groups
-        necessary condition, pushed down as a groupBy/HAVING before
-        any Python runs), then the SHARED spannest.emit_spans match
-        test per surviving doc in one Arrow batch pass. Constant
-        score = boost (the SpanNear contract)."""
-        from lucene_solr_spark.search.spannest import (leaf_terms,
-                                                       nested_match,
-                                                       slot_groups)
-
-        terms = sorted(leaf_terms(q))
-        dfs = self._df_for(set(terms))
-        if all(dfs[t] == 0 for t in terms):
-            return self._empty_scored().select("docid", "score")
-        groups = slot_groups(q)
-        gid_of = {t: sorted({gi for gi, g in enumerate(groups)
-                             if t in g}) for t in terms}
-        n_groups = len(groups)
-        p = self.index.postings.where(F.col("term").isin(terms)).select(
-            "docid", "term", "positions")
-        # phase 1: every conjunction group present (distinct group ids
-        # covered by the doc's terms == n_groups)
-        gmap = F.create_map(*[x for t in terms
-                              for x in (F.lit(t), F.lit(gid_of[t]))])
-        covered = p.select(
-            "docid", F.explode(gmap[F.col("term")]).alias("gid")
-        ).groupBy("docid").agg(
-            F.countDistinct("gid").alias("_ng")).where(
-            F.col("_ng") == n_groups).select("docid")
-        agg = p.join(covered, "docid").groupBy("docid").agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))).alias("tpos"))
-
-        @pandas_udf("boolean")
-        def span_ok(maps: pd.Series) -> pd.Series:
-            out = np.zeros(len(maps), dtype=bool)
-            for row_i, m in enumerate(maps):
-                pos = {t: np.asarray(pl, dtype=np.int64)
-                       for t, pl in m.items()}
-                out[row_i] = nested_match(q, pos)
-            return pd.Series(out)
-
-        boost = float(np.float32(q.boost))
-        return (agg.where(span_ok(F.col("tpos")))
-                .select("docid",
-                        F.lit(boost).cast(self._score_type()).alias("score")))
 
     def _eval_payload_score(self, q: A.PayloadScoreQ) -> DataFrame:
         """PayloadScoreQuery.java + PayloadFunction.java: fold the
@@ -628,60 +677,6 @@ class Searcher:
         return out.select("docid",
                           score.cast(self._score_type()).alias("score"))
 
-    def _eval_term_automaton(self, q: A.TermAutomatonQ) -> DataFrame:
-        """TermAutomatonQuery via finite-string enumeration (the
-        GraphTokenStreamFiniteStrings route, util/graph/
-        GraphTokenStreamFiniteStrings.java): the acyclic automaton's
-        accepted strings become path templates (term sequences with
-        ANY gaps); per doc, freq = count of distinct start positions
-        from which some path matches consecutive positions (the
-        'merge-sort all positions' run of TermAutomatonScorer,
-        sandbox/search/TermAutomatonQuery.java). Scoring follows the
-        phrase recipe: idf summed over the automaton's distinct terms,
-        freq as above."""
-        paths = q.finite_strings()
-        terms = sorted({t for p in paths for t in p if t is not None})
-        dfs = self._df_for(set(terms))
-        present = [t for t in terms if dfs[t] > 0]
-        if not present:
-            return self._empty_scored().select("docid", "score")
-        p = self.index.postings.where(F.col("term").isin(present)).select(
-            "docid", "term", "positions")
-        agg = p.groupBy("docid").agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))).alias("tpos"))
-
-        @pandas_udf("double")
-        def auto_freq(maps: pd.Series) -> pd.Series:
-            out = np.zeros(len(maps), dtype=np.float64)
-            for row_i, m in enumerate(maps):
-                starts: set = set()
-                for path in paths:
-                    base = None
-                    ok = True
-                    for off, t in enumerate(path):
-                        if t is None:
-                            continue  # ANY: one position step
-                        pl = m.get(t)
-                        if pl is None:
-                            ok = False
-                            break
-                        arr = np.asarray(pl, dtype=np.int64) - off
-                        base = arr if base is None else np.intersect1d(
-                            base, arr, assume_unique=True)
-                        if base.size == 0:
-                            ok = False
-                            break
-                    if ok and base is not None:
-                        starts.update(int(x) for x in base if x >= 0)
-                out[row_i] = float(len(starts))
-            return pd.Series(out)
-
-        with_freq = agg.select(
-            "docid", auto_freq(F.col("tpos")).alias("pfreq")).where(
-            F.col("pfreq") > 0)
-        return self._score_phrase_freq(with_freq, terms, dfs, q.boost)
-
     def _eval_dismax(self, q: A.DisMaxQ, scored: DataFrame | None) -> DataFrame:
         """DisjunctionMaxScorer.java:36-61: scoreMax + tieBreaker *
         (scoreSum - scoreMax), accumulated in double, downcast."""
@@ -703,33 +698,10 @@ class Searcher:
         present = [t for t in q.terms if dfs[t] > 0]
         if not present:
             return self._empty_scored().select("docid", "score")
-        df_syn = max(dfs[t] for t in present)
         p = (self.index.postings.where(F.col("term").isin(present))
              .groupBy("docid").agg(F.sum("tf").alias("tf")))
-        n = float(self.index.coll_stats["doc_count"])
-        if self.mode == "sql":
-            d = self.index.docs.select("docid", "doclen")
-            j = p.join(d, "docid")
-            avgdl = self.index.coll_stats["sum_ttf"] / self.index.coll_stats["doc_count"]
-            idf = float(np.log(1.0 + (n - df_syn + 0.5) / (df_syn + 0.5)))
-            tf = F.col("tf").cast("double")
-            cache = F.lit(self.k1) * (
-                F.lit(1.0 - self.b) + F.lit(self.b) * F.col("doclen") / F.lit(avgdl))
-            score = F.lit(idf * (self.k1 + 1.0) * q.boost) * tf / (tf + cache)
-            return j.select("docid", score.alias("score"))
-        w32 = np.float32(self.bm25.term_weight(df_syn, q.boost))
-        bm25 = self.bm25
-        d = self.index.docs.select("docid", "norm_byte")
-        j = p.join(d, "docid")
-
-        @pandas_udf("float")
-        def sscore(tf: pd.Series, norm: pd.Series) -> pd.Series:
-            return pd.Series(bm25.score(
-                np.full(len(tf), w32, dtype=np.float32),
-                tf.to_numpy(dtype=np.int64),
-                norm.to_numpy(dtype=np.int64).astype(np.uint8)))
-
-        return j.select("docid", sscore(F.col("tf"), F.col("norm_byte")).alias("score"))
+        return self._score_tf(p, "tf", *self._blend_weights(
+            max(dfs[t] for t in present), q.boost))
 
     def _eval_blended(self, q: A.BlendedTermQ) -> DataFrame:
         """BlendedTermQuery.java: per-term scoring with BLENDED df =
@@ -739,35 +711,12 @@ class Searcher:
         present = sorted(t for t in set(q.terms) if dfs[t] > 0)
         if not present:
             return self._empty_scored().select("docid", "score")
-        df_blend = max(dfs[t] for t in present)
         p = self.index.postings.where(F.col("term").isin(present)).select(
             "term", "docid", "tf")
+        per_term = self._score_tf(p, "tf", *self._blend_weights(
+            max(dfs[t] for t in present), q.boost), keep=("term",))
         if self.mode == "sql":
-            n = float(self.index.coll_stats["doc_count"])
-            avgdl = self.index.coll_stats["sum_ttf"] / self.index.coll_stats["doc_count"]
-            idf = float(np.log(1.0 + (n - df_blend + 0.5) / (df_blend + 0.5)))
-            d = self.index.docs.select("docid", "doclen")
-            j = p.join(d, "docid")
-            tf = F.col("tf").cast("double")
-            cache = F.lit(self.k1) * (
-                F.lit(1.0 - self.b) + F.lit(self.b) * F.col("doclen") / F.lit(avgdl))
-            s = F.lit(idf * (self.k1 + 1.0) * q.boost) * tf / (tf + cache)
-            scored = j.select("docid", s.alias("score"))
-            return scored.groupBy("docid").agg(F.sum("score").alias("score"))
-        w32 = np.float32(self.bm25.term_weight(df_blend, q.boost))
-        bm25 = self.bm25
-        d = self.index.docs.select("docid", "norm_byte")
-        j = p.join(d, "docid")
-
-        @pandas_udf("float")
-        def bscore(tf: pd.Series, norm: pd.Series) -> pd.Series:
-            return pd.Series(bm25.score(
-                np.full(len(tf), w32, dtype=np.float32),
-                tf.to_numpy(dtype=np.int64),
-                norm.to_numpy(dtype=np.int64).astype(np.uint8)))
-
-        per_term = j.select("term", "docid",
-                            bscore(F.col("tf"), F.col("norm_byte")).alias("score"))
+            return per_term.groupBy("docid").agg(F.sum("score").alias("score"))
         # float64 fold in term order, downcast (DisjunctionSumScorer)
         return per_term.groupBy("docid").agg(
             F.aggregate(
@@ -776,6 +725,14 @@ class Searcher:
                 F.lit(0.0),
                 lambda acc, x: acc + x["s"].cast("double"),
             ).cast("float").alias("score"))
+
+    def _blend_weights(self, df: int, boost: float) -> tuple[float, np.float32]:
+        """(sql-mode f64 weight, f32 weight) of one pseudo-term of
+        document frequency ``df``."""
+        n = float(self.index.coll_stats["doc_count"])
+        idf = float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
+        return (idf * (self.k1 + 1.0) * boost,
+                np.float32(self.bm25.term_weight(df, boost)))
 
     def _eval_reqopt(self, q: A.ReqOptQ, scored: DataFrame | None) -> DataFrame:
         """ReqOptSumScorer.java: required score + optional score when
@@ -786,17 +743,6 @@ class Searcher:
         total = (F.col("_rs").cast("double")
                  + F.coalesce(F.col("_os").cast("double"), F.lit(0.0)))
         return j.select("docid", total.cast(self._score_type()).alias("score"))
-
-    def _eval_span_near(self, q: A.SpanNearQ) -> DataFrame:
-        """Positional proximity via the positions arrays (two-phase:
-        docid join, then position-window verify — the spans analogue
-        of TwoPhaseIterator). Constant score = boost; pair count is
-        computed by span_near_pairs() for callers that need it."""
-        from lucene_solr_spark.operators.spans import span_near_pairs
-
-        pairs = span_near_pairs(self.index, q.first, q.second, q.slop, q.in_order)
-        return pairs.select("docid").distinct().withColumn(
-            "score", F.lit(q.boost).cast(self._score_type()))
 
     def _boost(self, df: DataFrame, boost: float) -> DataFrame:
         if self.mode == "sql":
@@ -888,173 +834,79 @@ class Searcher:
         got = self.query_cache.get_or_build(key, build)
         return got if got is not None else build()
 
-    def _eval_phrase(self, q: A.PhraseQ) -> DataFrame:
-        if q.slop != 0:
-            return self._eval_sloppy_phrase(q)
-        terms = list(q.terms)
-        dfs = self._df_for(set(terms))
-        if any(dfs[t] == 0 for t in terms):
+    def _eval_positional(self, q: A.Query) -> DataFrame:
+        """Every positional shape (POSITIONAL) as one two-phase plan
+        (search/TwoPhaseIterator.java). Phase 1, in Catalyst: keep the
+        docs holding a term of every slot group. Phase 2: one
+        {term: positions} map per surviving doc, and one pandas UDF
+        call per Arrow batch that runs the shape's rule from the
+        positional match layer, shared with the segment kernels.
+        Phrases and automata score through _score_phrase_freq over
+        positional_idf_terms; spans score the constant boost."""
+        from lucene_solr_spark.search.spannest import nested_match, slot_groups
+
+        if isinstance(q, (A.PhraseQ, A.MultiPhraseQ)):
+            slots = ([(t,) for t in q.terms] if isinstance(q, A.PhraseQ)
+                     else [tuple(s) for s in q.slots])
+            groups, slop = slots, int(q.slop)
+            rpt = multiphrase_rpt_groups(slots, slop)
+
+            def match(docs: list[dict]):
+                if slop:
+                    return [sloppy_phrase_freq(slots, pos, slop, *rpt)
+                            for pos in docs]
+                held = {t: [(i, pos[t]) for i, pos in enumerate(docs)
+                            if t in pos] for s in slots for t in s}
+                di, freqs = exact_phrase_freqs(slots, {
+                    t: (np.repeat([i for i, _ in h], [len(p) for _, p in h]),
+                        np.concatenate([p for _, p in h]))
+                    for t, h in held.items() if h})
+                out = np.zeros(len(docs))
+                out[di] = freqs
+                return out
+        elif isinstance(q, A.TermAutomatonQ):
+            paths = q.finite_strings()
+            groups = [tuple(positional_idf_terms(q))]
+            match = (lambda docs: [automaton_freq(paths, pos) for pos in docs])
+        elif isinstance(q, A.SpanNearQ):
+            first, second = q.first, q.second
+            slop, in_order = int(q.slop), bool(q.in_order)
+            groups = [(first,), (second,)]
+            match = (lambda docs: [span_near_match(
+                pos.get(first), pos.get(second), slop, in_order)
+                for pos in docs])
+        else:
+            groups = slot_groups(q)
+            match = (lambda docs: [nested_match(q, pos) for pos in docs])
+
+        dfs = self._df_for({t for g in groups for t in g})
+        groups = [tuple(t for t in g if dfs[t] > 0) for g in groups]
+        if not all(groups):
             return self._empty_scored().select("docid", "score")
-        # phase 1: docid conjunction; phase 2: positions verify (the
-        # TwoPhaseIterator pattern).
-        frames = []
-        for i, t in enumerate(terms):
-            frames.append(
-                self.index.postings.where(F.col("term") == t)
-                .select("docid", F.col("positions").alias(f"_p{i}"))
-            )
-        joined = reduce(lambda a, b: a.join(b, "docid"), frames)
-        arrs = F.array(*[F.col(f"_p{i}") for i in range(len(terms))])
-
-        @pandas_udf("int")
-        def phrase_freq(parr: pd.Series) -> pd.Series:
-            out = np.zeros(len(parr), dtype=np.int32)
-            for row_i, plists in enumerate(parr):
-                base = np.asarray(plists[0], dtype=np.int64)
-                for off, pl in enumerate(plists[1:], start=1):
-                    base = np.intersect1d(
-                        base, np.asarray(pl, dtype=np.int64) - off, assume_unique=True)
-                    if base.size == 0:
-                        break
-                out[row_i] = base.size
-            return pd.Series(out)
-
-        with_freq = joined.select("docid", phrase_freq(arrs).alias("pfreq")).where(
-            F.col("pfreq") > 0
-        )
-        # scoring: idf summed across phrase terms (BM25Similarity
-        # idfExplain over TermStatistics[], lines 196-205), freq =
-        # phrase occurrences.
-        n = self.index.coll_stats["doc_count"]
-        if self.mode == "sql":
-            avgdl = self.index.coll_stats["sum_ttf"] / self.index.coll_stats["doc_count"]
-            idf_sum = float(sum(
-                np.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms))
-            d = self.index.docs.select("docid", "doclen")
-            j = with_freq.join(d, "docid")
-            tf = F.col("pfreq").cast("double")
-            cache = F.lit(self.k1) * (
-                F.lit(1.0 - self.b) + F.lit(self.b) * F.col("doclen")
-                / F.lit(avgdl))
-            score = F.lit(idf_sum * (self.k1 + 1.0)) * tf / (tf + cache)
-            return j.select("docid", score.alias("score"))
-        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in terms))
-        weight = np.float32(np.float32(q.boost) * np.float32(idf_sum64)
-                            * np.float32(self.k1 + 1.0))
-        bm25 = self.bm25
-        d = self.index.docs.select("docid", "norm_byte")
-        j = with_freq.join(d, "docid")
-
-        @pandas_udf("float")
-        def pscore(tf: pd.Series, norm: pd.Series) -> pd.Series:
-            return pd.Series(bm25.score(
-                np.full(len(tf), weight, dtype=np.float32),
-                tf.to_numpy(dtype=np.int64),
-                norm.to_numpy(dtype=np.int64).astype(np.uint8)))
-
-        return j.select("docid", pscore(F.col("pfreq"), F.col("norm_byte")).alias("score"))
-
-    def _eval_sloppy_phrase(self, q: A.PhraseQ) -> DataFrame:
-        """Lucene-exact sloppy phrase: the greedy PhraseQueue traversal
-        of SloppyPhraseScorer.phraseFreq (SloppyPhraseScorer.java:
-        96-133) — repeatedly advance the least rebased PhrasePosition,
-        scoring a match of length d as sloppyFreq(d) = 1/(d+1)
-        (BM25Similarity.java:77) whenever the current minimal window
-        closes with d <= slop. Repeated terms ("ho my my"~2) follow
-        the reference's rptGroups machinery — staggered group
-        initialization plus collision resolution (see
-        _sloppy_phrase_freq). freq accumulates in float64 (a sub-ulp
-        deviation from the reference's running float32 sum, absorbed
-        by quantization)."""
-        terms = list(q.terms)
-        distinct = sorted(set(terms))
-        dfs = self._df_for(set(terms))
-        if any(dfs[t] == 0 for t in terms):
-            return self._empty_scored().select("docid", "score")
-        # one frame per distinct term; slots of a repeated term reuse it
-        frames = []
-        for i, t in enumerate(distinct):
-            frames.append(
-                self.index.postings.where(F.col("term") == t)
-                .select("docid", F.col("positions").alias(f"_p{i}")))
-        joined = reduce(lambda a, b: a.join(b, "docid"), frames)
-        slot_src = [distinct.index(t) for t in terms]   # slot -> frame
-        arrs = F.array(*[F.col(f"_p{i}") for i in slot_src])
-        slop = int(q.slop)
-        groups = [
-            [i for i, t in enumerate(terms) if t == d]
-            for d in distinct
-            if sum(1 for t in terms if t == d) > 1
-        ] or None
+        present = sorted({t for g in groups for t in g})
+        gids = F.create_map(*[x for t in present for x in (F.lit(t), F.lit(
+            [gi for gi, g in enumerate(groups) if t in g]))])
+        docs = (self.index.postings.where(F.col("term").isin(present))
+                .groupBy("docid").agg(
+                    F.map_from_entries(F.collect_list(
+                        F.struct("term", "positions"))).alias("tpos"),
+                    F.size(F.array_distinct(F.flatten(F.collect_list(
+                        gids[F.col("term")])))).alias("_ng"))
+                .where(F.col("_ng") == len(groups)))
 
         @pandas_udf("double")
-        def sloppy_freq(parr: pd.Series) -> pd.Series:
-            out = np.zeros(len(parr), dtype=np.float64)
-            for row_i, plists in enumerate(parr):
-                rebased = [np.asarray(pl, dtype=np.int64) - off
-                           for off, pl in enumerate(plists)]
-                out[row_i] = _sloppy_phrase_freq(rebased, slop, groups)
-            return pd.Series(out)
+        def freq(maps: pd.Series) -> pd.Series:
+            return pd.Series(np.asarray(match([
+                {t: np.asarray(p, np.int64) for t, p in m.items()}
+                for m in maps]), np.float64))
 
-        with_freq = joined.select(
-            "docid", sloppy_freq(arrs).alias("pfreq")).where(F.col("pfreq") > 0)
-        # idf sums over the query's TERM ARRAY (repeats counted each
-        # time, idfExplain over TermStatistics[] per occurrence)
-        return self._score_phrase_freq(with_freq, terms, dfs, q.boost)
-
-    def _eval_multi_phrase(self, q: A.MultiPhraseQ) -> DataFrame:
-        """MultiPhraseQuery (search/MultiPhraseQuery.java): each phrase
-        slot holds a SET of terms (OR-per-position, the UnionPostings
-        of MultiPhraseQuery's scorer). Per slot the position set is the
-        union of the slot terms' positions; matching and freq then
-        follow the exact-phrase intersection (slop=0) or the greedy
-        sloppy traversal (slop>0). idf sums over ALL the query's terms
-        (idfExplain over the full TermStatistics array)."""
-        all_terms = sorted({t for slot in q.slots for t in slot})
-        dfs = self._df_for(set(all_terms))
-        slot_frames = []
-        for i, slot in enumerate(q.slots):
-            if all(dfs[t] == 0 for t in slot):
-                return self._empty_scored().select("docid", "score")
-            u = (self.index.postings.where(F.col("term").isin(list(slot)))
-                 .select("docid", F.explode("positions").alias("pos"))
-                 .distinct()
-                 .groupBy("docid")
-                 .agg(F.sort_array(F.collect_list("pos")).alias(f"_p{i}")))
-            slot_frames.append(u)
-        joined = reduce(lambda a, b: a.join(b, "docid"), slot_frames)
-        arrs = F.array(*[F.col(f"_p{i}") for i in range(len(q.slots))])
-        slop = int(q.slop)
-        groups, multi_term = multiphrase_rpt_groups(q.slots, slop)
-
-        if slop == 0:
-            @pandas_udf("double")
-            def mp_freq(parr: pd.Series) -> pd.Series:
-                out = np.zeros(len(parr), dtype=np.float64)
-                for row_i, plists in enumerate(parr):
-                    base = np.asarray(plists[0], dtype=np.int64)
-                    for off, pl in enumerate(plists[1:], start=1):
-                        base = np.intersect1d(
-                            base, np.asarray(pl, dtype=np.int64) - off,
-                            assume_unique=True)
-                        if base.size == 0:
-                            break
-                    out[row_i] = float(base.size)
-                return pd.Series(out)
-        else:
-            @pandas_udf("double")
-            def mp_freq(parr: pd.Series) -> pd.Series:
-                out = np.zeros(len(parr), dtype=np.float64)
-                for row_i, plists in enumerate(parr):
-                    rebased = [np.asarray(pl, dtype=np.int64) - off
-                               for off, pl in enumerate(plists)]
-                    out[row_i] = _sloppy_phrase_freq(rebased, slop, groups,
-                                                     multi_term)
-                return pd.Series(out)
-
-        with_freq = joined.select(
-            "docid", mp_freq(arrs).alias("pfreq")).where(F.col("pfreq") > 0)
-        return self._score_phrase_freq(with_freq, all_terms, dfs, q.boost)
+        with_freq = docs.select("docid", freq("tpos").alias("pfreq")).where(
+            F.col("pfreq") > 0)
+        if isinstance(q, (A.PhraseQ, A.MultiPhraseQ, A.TermAutomatonQ)):
+            return self._score_phrase_freq(
+                with_freq, positional_idf_terms(q), dfs, q.boost)
+        return with_freq.select("docid", F.lit(float(q.boost)).cast(
+            self._score_type()).alias("score"))
 
     def _score_phrase_freq(self, with_freq: DataFrame, terms: list[str],
                            dfs: dict[str, int], boost: float) -> DataFrame:
@@ -1062,33 +914,40 @@ class Searcher:
         freq = phrase occurrences (BM25Similarity idfExplain over
         TermStatistics[], lines 196-205)."""
         n = self.index.coll_stats["doc_count"]
-        if self.mode == "sql":
-            avgdl = self.index.coll_stats["sum_ttf"] / self.index.coll_stats["doc_count"]
-            idf_sum = float(sum(
-                np.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms))
-            d = self.index.docs.select("docid", "doclen")
-            j2 = with_freq.join(d, "docid")
-            tf = F.col("pfreq").cast("double")
-            cache = F.lit(self.k1) * (
-                F.lit(1.0 - self.b) + F.lit(self.b) * F.col("doclen") / F.lit(avgdl))
-            score = F.lit(idf_sum * (self.k1 + 1.0) * boost) * tf / (tf + cache)
-            return j2.select("docid", score.alias("score"))
+        idf_sum = float(sum(
+            np.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms))
         idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in terms))
         weight = np.float32(np.float32(boost) * np.float32(idf_sum64)
                             * np.float32(self.k1 + 1.0))
+        return self._score_tf(with_freq, "pfreq",
+                              idf_sum * (self.k1 + 1.0) * boost, weight)
+
+    def _score_tf(self, frame: DataFrame, tf_col: str, w64: float,
+                  w32: np.float32, keep: tuple[str, ...] = ()) -> DataFrame:
+        """(*keep, docid, score): BM25 at one weight over a frame's
+        (possibly fractional) tf column — w64 * tf / (tf + cache) over
+        the exact doc length in sql mode, the f32 BM25 at w32 over the
+        norm byte otherwise."""
+        if self.mode == "sql":
+            avgdl = self.index.coll_stats["sum_ttf"] / self.index.coll_stats["doc_count"]
+            j = frame.join(self.index.docs.select("docid", "doclen"), "docid")
+            tf = F.col(tf_col).cast("double")
+            cache = F.lit(self.k1) * (
+                F.lit(1.0 - self.b) + F.lit(self.b) * F.col("doclen") / F.lit(avgdl))
+            return j.select(*keep, "docid",
+                            (F.lit(w64) * tf / (tf + cache)).alias("score"))
         bm25 = self.bm25
-        d = self.index.docs.select("docid", "norm_byte")
-        j2 = with_freq.join(d, "docid")
+        j = frame.join(self.index.docs.select("docid", "norm_byte"), "docid")
 
         @pandas_udf("float")
-        def pscore(tf: pd.Series, norm: pd.Series) -> pd.Series:
-            # pfreq may be fractional (sloppyFreq sums 1/(d+1))
+        def score(tf: pd.Series, norm: pd.Series) -> pd.Series:
             return pd.Series(bm25.score(
-                np.full(len(tf), weight, dtype=np.float32),
+                np.full(len(tf), w32, dtype=np.float32),
                 tf.to_numpy(dtype=np.float64),
                 norm.to_numpy(dtype=np.int64).astype(np.uint8)))
 
-        return j2.select("docid", pscore(F.col("pfreq"), F.col("norm_byte")).alias("score"))
+        return j.select(*keep, "docid",
+                        score(F.col(tf_col), F.col("norm_byte")).alias("score"))
 
     # -- top-k --------------------------------------------------------------
 

@@ -1,7 +1,10 @@
-"""Nested span-query matching: one pure-numpy evaluator shared by the
-segment kernel (wand.span_nested_topk), the flat executor
-(executor._eval_span_nested), and the tests — the three paths agree
-bit-for-bit because they call the same function.
+"""Nested span-query matching: the span rule of the positional match
+layer (beside the phrase, automaton and span-near rules in
+search/executor.py). One pure-numpy evaluator that the segment kernel
+(wand.span_nested_topk) and the flat executor
+(executor.Searcher._eval_positional) both call, so the two paths agree
+bit-for-bit; tests/test_spannest.py checks it against a brute-force
+all-chains reference.
 
 Reference: lucene/core/src/java/org/apache/lucene/search/spans/
 NearSpansOrdered.java (ordered sub-span chaining +

@@ -66,6 +66,11 @@ from lucene_solr_spark.index.codec import (
 )
 from lucene_solr_spark.index.segments import SegmentIndex
 from lucene_solr_spark.search import ast as A
+from lucene_solr_spark.search.executor import (
+    Searcher, _collect_terms, _union, automaton_freq, exact_phrase_freqs,
+    multiphrase_rpt_groups, positional_idf_terms, sloppy_phrase_freq,
+    span_near_match)
+from lucene_solr_spark.search.spannest import emit_spans, leaf_terms, slot_groups
 
 
 @dataclass
@@ -396,10 +401,6 @@ class _TopK:
         return self.docs, self.scores
 
 
-def _union(parts: list[np.ndarray]) -> np.ndarray:
-    return parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
-
-
 def _conjoin(grid: _Grid, groups: list[tuple], i: int) -> np.ndarray | None:
     """Docids of interval i present in EVERY group, where a group's
     docid set is the union of its keys' (MultiPhraseQuery's
@@ -563,20 +564,20 @@ def phrase_topk(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Segment-native two-phase phrase kernel — the reference's
     ExactPhraseScorer / SloppyPhraseScorer discipline: multiphrase_topk
-    over single-term slots. Repeated terms form the flat
-    _eval_sloppy_phrase repeat groups (slots of one term, per distinct
-    term in sorted order), so sloppy scores duel bit-equal.
+    over single-term slots, with their multiphrase_rpt_groups repeat
+    groups (slots of one term), as the flat executor runs a PhraseQ.
 
     weight: f32(boost * f32(sum idf over the SLOT array) * (k1+1)) —
     the flat executor's phrase weight. Returns top-k (docids, float32
     scores) by (score desc, docid asc); with ``collect_freqs`` ALL
     matches' (docids, float64 phrase freqs), unpruned.
     """
+    slots = [(t,) for t in terms]
+    groups, multi_term = multiphrase_rpt_groups(slots, slop)
     return multiphrase_topk(
-        [(t,) for t in terms], postings, weight, norms, doc_base, bm25, k,
-        slop=slop, stats=stats, collect_freqs=collect_freqs,
-        groups=[[i for i, t in enumerate(terms) if t == d]
-                for d in sorted(set(terms)) if terms.count(d) > 1] or None)
+        slots, postings, weight, norms, doc_base, bm25, k, slop=slop,
+        groups=groups, multi_term=multi_term, stats=stats,
+        collect_freqs=collect_freqs)
 
 
 def multiphrase_topk(
@@ -604,13 +605,11 @@ def multiphrase_topk(
     head term's blocks decode only in intervals the rare term reaches.
 
     phase 2: .pos payloads are fetched lazily per group for
-    intersection docs only. slop=0: vectorized across all
-    intersection docs — per slot the union of its terms' compound keys
-    (doc_index << 33 | position - offset + n_slots), one sorted
-    intersect per slot, no per-doc Python loop. slop>0: the
-    SloppyPhraseScorer traversal (executor._sloppy_phrase_freq) over
-    per-slot position unions with the caller's rptGroups
-    (groups/multi_term, as the flat evaluator uses them).
+    intersection docs only. slop=0: executor.exact_phrase_freqs over
+    the flat (doc index, position) arrays of all intersection docs at
+    once, no per-doc Python loop. slop>0: executor.sloppy_phrase_freq
+    per doc with the caller's rptGroups (groups/multi_term, from
+    multiphrase_rpt_groups as the flat executor takes them).
 
     Pruning: per-interval bound = f32 BM25 of (tf_bound, min active
     block-max norm byte), tf_bound = min over slots of the slot's
@@ -620,7 +619,7 @@ def multiphrase_topk(
     norm byte, so skipped intervals cannot beat theta.
 
     weight: f32(boost * f32(sum idf over ALL DISTINCT slot terms) *
-    (k1+1)) — the flat _eval_multi_phrase weight. ``collect_freqs``:
+    (k1+1)) — the flat MultiPhraseQ weight. ``collect_freqs``:
     return ALL matches' (docids, float64 freqs) with no theta pruning
     (WandSearcher.phrase_freqs).
     """
@@ -635,9 +634,6 @@ def multiphrase_topk(
     ub = bm25.score(np.full(grid.n, np.float32(weight), np.float32),
                     tf_bound, nb_min)
     conj = grid.cheapest_first(slot_terms)
-    if slop > 0:
-        from lucene_solr_spark.search.executor import _sloppy_phrase_freq
-
     top = _TopK(k)
     out_d: list[np.ndarray] = []
     out_f: list[np.ndarray] = []
@@ -650,32 +646,18 @@ def multiphrase_topk(
         grid.stats.intervals_scored += 1
         freqs = np.zeros(len(inter), dtype=np.float64)
         if slop == 0:
-            # keys are unique per term (positions unique per doc); a
-            # multi-term slot unions its terms' keys
             flat = {}
             for t in uniq:
                 rows = _rows_holding(grid, t, inter, i)
                 if len(rows):
                     di, pos = _positions_flat(postings[t], inter[rows])
                     flat[t] = (rows[di], pos)
-            base: np.ndarray | None = None
-            for off, s in enumerate(slot_terms):
-                keys = _union([(di << 33) | (pos - off + len(slots))
-                               for di, pos in (flat[t] for t in s
-                                               if t in flat)])
-                base = keys if base is None else np.intersect1d(
-                    base, keys, assume_unique=True)
-                if base.size == 0:
-                    break
-            if base.size:
-                di_surv, counts = np.unique(base >> 33, return_counts=True)
-                freqs[di_surv] = counts.astype(np.float64)
+            di, counts = exact_phrase_freqs(slot_terms, flat)
+            freqs[di] = counts
         else:
             for di, pos in enumerate(_positions_by_doc(grid, uniq, inter, i)):
-                freqs[di] = _sloppy_phrase_freq(
-                    [_union([pos[t] for t in s if t in pos]) - off
-                     for off, s in enumerate(slot_terms)],
-                    slop, groups, multi_term)
+                freqs[di] = sloppy_phrase_freq(slot_terms, pos, slop,
+                                               groups, multi_term)
         mask = freqs > 0
         if not mask.any():
             continue
@@ -704,14 +686,14 @@ def span_near_topk(
     stats: WandStats | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Segment-native two-phase SpanNear kernel (search/spans/
-    SpanNearQuery.java semantics, the flat executor's pair condition):
-    a doc matches when some occurrence pair satisfies
-    0 < p2 - p1 <= slop + 1 (in_order) or 0 < |p2 - p1| <= slop + 1
-    (unordered).
+    SpanNearQuery.java semantics): a doc matches when
+    executor.span_near_match, the flat executor's pair test too, finds
+    an occurrence pair 0 < p2 - p1 <= slop + 1 (in_order) or
+    0 < |p2 - p1| <= slop + 1 (unordered).
 
     phase 1: the two terms' docid conjunction on the block grid.
     phase 2: .pos payloads fetched lazily per group for intersection
-    docs only; the pair test is a vectorized double-searchsorted.
+    docs only.
 
     The score is CONSTANT (float32(boost), the flat executor's span
     score), so theta pruning degenerates to early termination: matches
@@ -727,7 +709,6 @@ def span_near_topk(
     grid = _Grid({t: postings[t] for t in sorted({first, second})}, stats)
     conj = grid.cheapest_first([(first,), (second,)])
     score = np.float32(boost)
-    win = slop + 1
     top = _TopK(k)
     for i in np.nonzero(grid.live(conj))[0]:
         if top.skip(score):
@@ -736,24 +717,11 @@ def span_near_topk(
         if inter is None:
             continue
         grid.stats.intervals_scored += 1
-        # self-pair guard: first == second still needs two distinct
-        # occurrences, which the y != x / y > x conditions encode
         p1s = _positions_for(postings[first], inter)
         p2s = (p1s if second == first
                else _positions_for(postings[second], inter))
-        keep = np.zeros(len(inter), dtype=bool)
-        for di in range(len(inter)):
-            p1, p2 = p1s[di], p2s[di]
-            # in-order: exists y in (x, x + win]
-            lo_i = np.searchsorted(p2, p1, side="right")
-            hi_i = np.searchsorted(p2, p1 + win, side="right")
-            ok = bool((hi_i > lo_i).any())
-            if not ok and not in_order:
-                # reverse: exists y in [x - win, x)
-                lo_r = np.searchsorted(p2, p1 - win, side="left")
-                hi_r = np.searchsorted(p2, p1, side="left")
-                ok = bool((hi_r > lo_r).any())
-            keep[di] = ok
+        keep = np.array([span_near_match(p1, p2, slop, in_order)
+                         for p1, p2 in zip(p1s, p2s)], dtype=bool)
         top.push(inter[keep], np.full(int(keep.sum()), score))
     return top.result()
 
@@ -773,17 +741,14 @@ def span_nested_topk(
     phase 1: conjunction over spannest.slot_groups (each group's docid
     set is the union of its terms' — the multiphrase slot-union).
     phase 2: .pos payloads fetched lazily per group for intersection
-    docs only; the match test is the SHARED spannest.emit_spans (the
-    same function the flat executor runs, so duels agree bit-for-bit).
+    docs only; the match test is spannest.emit_spans, the span rule of
+    the positional match layer that the flat executor runs too.
 
     Constant score (float32(boost), the SpanNear contract) ⇒ theta
     pruning degenerates to EXACT early termination at k matches
     (ascending docids win the (score desc, docid asc) tie-break) —
     the span_near_topk argument, inherited verbatim.
     """
-    from lucene_solr_spark.search.spannest import (emit_spans,
-                                                   slot_groups)
-
     groups = [tuple(t for t in g if t in postings) for g in slot_groups(node)]
     if not groups or any(not g for g in groups):
         return _no_hits()
@@ -824,10 +789,9 @@ def automaton_topk(
     path over its terms (an interval is live when SOME path has all
     its terms active; candidates = the union of the live paths'
     intersections). phase 2: .pos fetched lazily per group for
-    intersection docs only; freq = distinct start positions matched by
-    ANY path (the reference's merge-sorted position run), via the same
-    rebased-intersect the flat _eval_term_automaton runs — scores duel
-    bit-equal.
+    intersection docs only; freq = executor.automaton_freq, the
+    distinct start positions matched by ANY path (the reference's
+    merge-sorted position run), which the flat executor runs too.
 
     theta bound: freq <= sum over live paths of the path's min
     slot-level block-max tf (a start consumes >= 1 occurrence of every
@@ -861,24 +825,8 @@ def automaton_topk(
             continue
         inter = reduce(np.union1d, hits)
         grid.stats.intervals_scored += 1
-        freqs = np.zeros(len(inter), dtype=np.float64)
-        for di, pos in enumerate(_positions_by_doc(grid, uniq, inter, i)):
-            starts: set = set()
-            for pi in live_paths:
-                base: np.ndarray | None = None
-                for off, t in enumerate(paths[pi]):
-                    if t is None:
-                        continue
-                    if t not in pos:
-                        base = None
-                        break
-                    base = (pos[t] - off if base is None else np.intersect1d(
-                        base, pos[t] - off, assume_unique=True))
-                    if base.size == 0:
-                        break
-                if base is not None:
-                    starts.update(int(x) for x in base if x >= 0)
-            freqs[di] = float(len(starts))
+        freqs = np.array([automaton_freq(paths, pos)
+                          for pos in _positions_by_doc(grid, uniq, inter, i)])
         mask = freqs > 0
         cand = inter[mask]
         top.push(cand, bm25.score(
@@ -1273,9 +1221,8 @@ class WandSearcher:
     - flat boolean: TermQ, AndQ/OrQ over unboosted terms (with
       min_should_match), NotQ whose negative side is a
       term/OR-of-terms (boolean_topk: the term fold or wand_topk);
-    - PhraseQ, exact and sloppy (phrase_topk = multiphrase_topk over
-      single-term slots);
-    - MultiPhraseQ (multiphrase_topk);
+    - PhraseQ and MultiPhraseQ, exact and sloppy (multiphrase_topk;
+      a PhraseQ is single-term slots, as in phrase_topk);
     - top-level SpanNearQ (span_near_topk) and nested SpanNearNQ
       trees (span_nested_topk);
     - TermAutomatonQ (automaton_topk);
@@ -1288,8 +1235,10 @@ class WandSearcher:
     The block-grid kernels (wand_topk, the phrase, span and automaton
     kernels, and MultiFieldWandSearcher's qf_dismax_topk) share one
     interval sweep: _Grid, _TopK and _conjoin; each adds only its
-    interval bound and its match test. The tree fold decodes whole
-    postings.
+    interval bound and its match test. The positional kernels' match
+    tests are the positional match layer of executor.py (and
+    spannest.emit_spans), which the flat executor runs too. The tree
+    fold decodes whole postings.
 
     Anything else (multi-term, MatchAll, payload and fielded shapes
     anywhere in the tree, a standalone SpanOrNQ) falls back in
@@ -1445,8 +1394,6 @@ class WandSearcher:
         exhaustive over decoded postings; positions are decoded from
         the .pos stream only when the query needs them (phrase/span
         shapes)."""
-        from lucene_solr_spark.search.executor import Searcher, _collect_terms
-
         needs_pos = _any_node(q, lambda n: isinstance(
             n, _POSITIONAL + (A.SpanOrNQ,)))
         needs_offs = _any_node(q, lambda n: isinstance(n, A.PayloadScoreQ))
@@ -1476,51 +1423,32 @@ class WandSearcher:
         keeps its pruning kernel, a flat term AND/OR/NOT takes
         boolean_topk, and any other tree the _tree fold. A spec with no
         terms can match nothing. Every kernel scores bit-equal to the
-        flat executor's evaluator of the same shape (duel-tested)."""
+        flat executor's evaluator of the same shape (duel-tested); the
+        positional ones share its match rules and positional_idf_terms."""
         bm25 = self.bm25
         k = int(k)
         nothing = KernelSpec((), None)
-        if isinstance(q, A.PhraseQ):
-            # two-phase phrase kernel; a segment missing a term cannot
-            # match
-            terms = list(q.terms)
-            uniq = sorted(set(terms))
-            dfs = self._global_df(uniq)
-            if any(dfs[t] == 0 for t in uniq):
+        if isinstance(q, (A.PhraseQ, A.MultiPhraseQ)):
+            # the slot-union kernel (a PhraseQ is single-term slots),
+            # with the flat executor's idf terms and rptGroups; a dead
+            # slot cannot match
+            slots = ([(t,) for t in q.terms] if isinstance(q, A.PhraseQ)
+                     else [tuple(s) for s in q.slots])
+            idf_terms = positional_idf_terms(q)
+            dfs = self._global_df(sorted(set(idf_terms)))
+            if any(all(dfs[t] == 0 for t in slot) for slot in slots):
                 return nothing
-            weight = self._phrase_weight(q.boost, terms, dfs)
+            weight = self._phrase_weight(q.boost, idf_terms, dfs)
             slop = int(q.slop)
-
-            def run_phrase(eps, norms, doc_base):
-                if any(t not in eps for t in uniq):
-                    return None
-                return phrase_topk(terms, eps, weight, norms, doc_base,
-                                   bm25, k=k, slop=slop)
-            return KernelSpec(tuple(uniq), run_phrase)
-        if isinstance(q, A.MultiPhraseQ):
-            # slot-union kernel; weight over ALL distinct slot terms,
-            # rptGroups from the flat evaluator's multiphrase_rpt_groups
-            from lucene_solr_spark.search.executor import (
-                multiphrase_rpt_groups)
-
-            all_terms = sorted({t for slot in q.slots for t in slot})
-            dfs = self._global_df(all_terms)
-            if any(all(dfs[t] == 0 for t in slot) for slot in q.slots):
-                return nothing
-            weight = self._phrase_weight(q.boost, all_terms, dfs)
-            groups, multi_term = multiphrase_rpt_groups(q.slots, q.slop)
-            slots = [tuple(s) for s in q.slots]
-            slop = int(q.slop)
+            groups, multi_term = multiphrase_rpt_groups(slots, slop)
             return KernelSpec(
-                tuple(t for t in all_terms if dfs[t] > 0),
+                tuple(t for t in sorted(dfs) if dfs[t] > 0),
                 lambda eps, norms, doc_base: multiphrase_topk(
                     slots, eps, weight, norms, doc_base, bm25, k=k,
                     slop=slop, groups=groups, multi_term=multi_term))
         if isinstance(q, (A.SpanNearQ, A.SpanNearNQ)):
             # constant-score span kernels: per-segment early
             # termination at k matches is exact (lowest docids win)
-            from lucene_solr_spark.search.spannest import leaf_terms
-
             nested = isinstance(q, A.SpanNearNQ)
             terms = sorted(leaf_terms(q) if nested else {q.first, q.second})
             dfs = self._global_df(terms)
@@ -1542,8 +1470,7 @@ class WandSearcher:
             # recipe over ALL automaton terms (absent ones add their
             # df=0 idf, as the flat path does)
             paths = q.finite_strings()
-            all_terms = sorted({t for p in paths for t in p
-                                if t is not None})
+            all_terms = positional_idf_terms(q)
             dfs = self._global_df(all_terms)
             present = tuple(t for t in all_terms if dfs[t] > 0)
             if not present:
@@ -1590,8 +1517,6 @@ class WandSearcher:
         node by node exactly as executor.Searcher._eval folds it
         (duel-tested). None when some node has no case here
         (_TREE_NODES), which leaves the query to the flat fallback."""
-        from lucene_solr_spark.search.executor import _collect_terms
-
         if _any_node(q, lambda n: not isinstance(n, _TREE_NODES)):
             return None
         dfs = self._global_df(sorted(_collect_terms(q)))
@@ -1794,8 +1719,6 @@ class WandSearcher:
         a shape that search() would route to the flat executor raises
         ValueError.
         """
-        from lucene_solr_spark.search.executor import _collect_terms
-
         self._check_snapshot()
         parsed = {qid: (A.parse_query(q) if isinstance(q, str) else q)
                   .rewrite() for qid, q in queries.items()}

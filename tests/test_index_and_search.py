@@ -148,6 +148,47 @@ def test_query_cache_filters(spark, tiny_index):
     assert len(qc._cached) == 1   # cached once, keyed by clause key
 
 
+def test_query_cache_use_history_is_bounded():
+    """UsageTrackingQueryCachingPolicy shape: the use counts live in a
+    ring of the last 256 keys, so 300 distinct one-off filters leave at
+    most 256 keys behind, and a filter repeated inside the window
+    still reaches min_uses and hits."""
+    from lucene_solr_spark.search import ast as A
+    from lucene_solr_spark.search.executor import QueryCache
+
+    class Frame:
+        def persist(self):
+            return self
+
+        def unpersist(self):
+            pass
+
+    qc = QueryCache(min_uses=2)
+    for i in range(300):
+        key = A.ConstQ(TermQ(f"t{i:06d}")).inner.key()
+        assert qc.get_or_build(key, Frame) is None
+    assert len(qc._history) <= 256
+    key = TermQ("t000299").key()          # last seen 1 lookup ago
+    assert qc.get_or_build(key, Frame) is not None
+    assert qc.get_or_build(key, Frame) is not None and qc.hits == 1
+    # the first keys fell out of the ring: their next use is a first use
+    assert qc.get_or_build(TermQ("t000000").key(), Frame) is None
+
+
+def test_sql_phrase_boost_scales_score(tiny_index):
+    """sql mode applies a PhraseQ boost like every other phrase-scored
+    shape: boost 2 doubles each doc's f64 score exactly."""
+    from lucene_solr_spark.search.ast import PhraseQ
+
+    s = Searcher(tiny_index, mode="sql")
+    terms = ("t000001", "t000002")
+    plain = {r["docid"]: r["score"] for r in s.matches(PhraseQ(terms)).collect()}
+    boosted = {r["docid"]: r["score"]
+               for r in s.matches(PhraseQ(terms, boost=2.0)).collect()}
+    assert plain, "fixture has no phrase matches"
+    assert boosted == {d: 2.0 * v for d, v in plain.items()}
+
+
 def test_random_query_duel_vs_oracle(tiny_index, tiny_oracle):
     """SearchEquivalenceTestBase pattern: randomized boolean trees
     must match the pure-numpy oracle bit-for-bit in lucene mode."""

@@ -381,15 +381,20 @@ PHRASES = [
 
 @pytest.mark.parametrize("slop", [0, 2])
 @pytest.mark.parametrize("terms", PHRASES)
-def test_phrase_duels_flat(seg_index, flat_searcher, terms, slop):
+def test_phrase_duels_flat(seg_index, flat_searcher, tiny_oracle, terms, slop):
     """PhraseQ over the segment index runs the two-phase kernel and
-    duels bit-equal with the flat executor (exact and sloppy)."""
+    duels bit-equal with the flat executor (exact and sloppy). Both
+    call the one exact-phrase rule, so exact phrases also duel the
+    numpy oracle, whose per-doc intersect is its own."""
     from lucene_solr_spark.search import ast as A
 
     q = A.PhraseQ(tuple(terms), slop=slop)
     a = _rows(WandSearcher(seg_index).search(q, k=10))
     b = _rows(flat_searcher.search(q, k=10))
     assert a == b, f"{terms} slop={slop}: wand={a[:3]} flat={b[:3]}"
+    if slop == 0:
+        exp = [(d, np.float32(s)) for d, s in tiny_oracle.top_k(q, k=10)]
+        assert a == exp, f"{terms}: wand={a[:3]} oracle={exp[:3]}"
 
 
 MULTIPHRASES = [

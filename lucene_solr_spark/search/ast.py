@@ -16,6 +16,12 @@ import re
 from dataclasses import dataclass, field
 
 
+class ParseError(ValueError):
+    """A query string parse_query cannot read: unbalanced or
+    truncated syntax, an unknown field, or nesting deeper than
+    MAX_PARSE_DEPTH."""
+
+
 class Query:
     def rewrite(self) -> "Query":
         return self
@@ -526,6 +532,9 @@ def _esc_decode(s: str) -> str:
 
 
 INDEXED_FIELDS = ("text",)
+# parenthesis nesting parse_query accepts (each level costs the
+# recursive-descent parser three Python frames)
+MAX_PARSE_DEPTH = 100
 
 
 def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
@@ -555,24 +564,26 @@ def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
     tokens = ["AND" if t == "&&" else "OR" if t == "||" else t
               for t in tokens]
     if not tokens:
-        raise ValueError(f"empty query: {s!r}")
-    pos = 0
+        raise ParseError(f"empty query: {s!r}")
+    pos = depth = 0
 
     def peek():
         return tokens[pos] if pos < len(tokens) else None
 
     def eat(tok=None):
         nonlocal pos
+        if pos >= len(tokens):
+            raise ParseError(f"unexpected end of query in {s!r}")
         t = tokens[pos]
         if tok is not None and t != tok:
-            raise ValueError(f"expected {tok}, got {t} in {s!r}")
+            raise ParseError(f"expected {tok}, got {t} in {s!r}")
         pos += 1
         return t
 
     def _check_field(fld: str) -> str:
         fld = _esc_decode(fld)
         if fld.lower() not in fields:
-            raise ValueError(f"unknown field {fld!r} in {s!r}")
+            raise ParseError(f"unknown field {fld!r} in {s!r}")
         return fld.lower()
 
     def _wrap(fld: str | None, q: Query) -> Query:
@@ -582,7 +593,10 @@ def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
         boost = 1.0
         m = re.search(r"\^([\d.]+)$", tok)
         if m:
-            boost = float(m.group(1))
+            try:
+                boost = float(m.group(1))
+            except ValueError:
+                raise ParseError(f"bad boost {m.group(0)!r} in {s!r}") from None
             tok = tok[: m.start()]
         m = re.match(r'^(\w+):(".*)$', tok, re.DOTALL)
         if m:
@@ -619,7 +633,7 @@ def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
             fld = _check_field(f0)
             tok = term
         if not tok:
-            raise ValueError(f"empty term in {s!r}")
+            raise ParseError(f"empty term in {s!r}")
         m = re.search(r'~(\d*)$', tok)
         if m and m.start() > 0:
             edits = int(m.group(1)) if m.group(1) else 2
@@ -636,6 +650,18 @@ def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
                                         boost=boost))
         return _wrap(fld, TermQ(_esc_decode(tok).lower(), boost=boost))
 
+    def parse_group() -> Query:
+        nonlocal depth
+        eat("(")
+        depth += 1
+        if depth > MAX_PARSE_DEPTH:
+            raise ParseError(
+                f"nesting deeper than {MAX_PARSE_DEPTH} in {s[:40]!r}...")
+        q = parse_or()
+        eat(")")
+        depth -= 1
+        return q
+
     def parse_atom() -> tuple[str, Query]:
         t = peek()
         marker = ""
@@ -647,20 +673,14 @@ def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
             tokens[pos] = t[1:]
             t = tokens[pos]
         if t == "(":
-            eat("(")
-            q = parse_or()
-            eat(")")
-            return marker, q
+            return marker, parse_group()
         if t is not None and t.endswith(":") and len(t) > 1:
             # field group f:(a OR b) — the field scopes every bare
             # leaf inside (FieldedQ threads it, multifield._strip's
             # ctx rule; == default_field stays bare)
             fld = _check_field(t[:-1])
             eat()
-            eat("(")
-            q = parse_or()
-            eat(")")
-            return marker, _wrap(fld, q)
+            return marker, _wrap(fld, parse_group())
         return marker, leaf(eat())
 
     def parse_and() -> tuple[str, Query]:
@@ -714,5 +734,5 @@ def parse_query(s: str, fields: tuple[str, ...] = INDEXED_FIELDS,
 
     q = parse_or()
     if pos != len(tokens):
-        raise ValueError(f"trailing tokens in {s!r}")
+        raise ParseError(f"trailing tokens in {s!r}")
     return q.rewrite()

@@ -38,7 +38,7 @@ Two scoring modes:
 
 from __future__ import annotations
 
-from collections import deque
+from collections import OrderedDict, deque
 from functools import reduce
 
 import numpy as np
@@ -345,6 +345,15 @@ def positional_idf_terms(q: A.Query) -> list[str]:
     return sorted({t for p in q.finite_strings() for t in p if t is not None})
 
 
+def phrase_weight(bm25: BM25, boost: float, terms, dfs: dict) -> np.float32:
+    """The f32 weight of a phrase-scored shape (both searchers):
+    f32(boost) * f32(sum of f64 idf over ``terms`` in the given order)
+    * (k1 + 1) in f32, as BM25.term_weight forms it."""
+    idf_sum64 = float(sum(bm25.idf(dfs[t]) for t in terms))
+    return (np.float32(boost) * np.float32(idf_sum64)
+            * (bm25.k1 + np.float32(1)))
+
+
 def _collect_terms(q: A.Query) -> set[str]:
     if isinstance(q, A.TermQ):
         return {q.term}
@@ -387,7 +396,8 @@ class QueryCache:
     clause key) once it appears ``min_uses`` times among the last
     USE_HISTORY keys looked up (the policy's bounded recent-filter
     ring) — scores are never cached, exactly like the reference, which
-    caches filter DocIdSets only."""
+    caches filter DocIdSets only. At ``max_entries`` the least recently
+    used entry is evicted; a hit refreshes its entry."""
 
     USE_HISTORY = 256
 
@@ -395,22 +405,21 @@ class QueryCache:
         self.max_entries = max_entries
         self.min_uses = min_uses
         self._history: deque[str] = deque(maxlen=self.USE_HISTORY)
-        self._cached: dict[str, DataFrame] = {}
+        self._cached: OrderedDict[str, DataFrame] = OrderedDict()
         self.hits = 0
         self.misses = 0
 
     def get_or_build(self, key: str, build) -> DataFrame | None:
         if key in self._cached:
             self.hits += 1
+            self._cached.move_to_end(key)
             return self._cached[key]
         self.misses += 1
         self._history.append(key)
         if self._history.count(key) < self.min_uses:
             return None
-        if len(self._cached) >= self.max_entries:  # simple eviction
-            old_key, old = next(iter(self._cached.items()))
-            old.unpersist()
-            del self._cached[old_key]
+        if len(self._cached) >= self.max_entries:  # least recently used
+            self._cached.popitem(last=False)[1].unpersist()
         df = build().persist()
         self._cached[key] = df
         return df
@@ -916,11 +925,9 @@ class Searcher:
         n = self.index.coll_stats["doc_count"]
         idf_sum = float(sum(
             np.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms))
-        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in terms))
-        weight = np.float32(np.float32(boost) * np.float32(idf_sum64)
-                            * np.float32(self.k1 + 1.0))
         return self._score_tf(with_freq, "pfreq",
-                              idf_sum * (self.k1 + 1.0) * boost, weight)
+                              idf_sum * (self.k1 + 1.0) * boost,
+                              phrase_weight(self.bm25, boost, terms, dfs))
 
     def _score_tf(self, frame: DataFrame, tf_col: str, w64: float,
                   w32: np.float32, keep: tuple[str, ...] = ()) -> DataFrame:

@@ -231,12 +231,10 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
                     min_should_match: int, k: int) -> DataFrame:
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from lucene_solr_spark.search.wand import (METADATA_COLS,
-                                               _grouped_postings,
-                                               _load_seg_norms,
-                                               global_topk,
+    from lucene_solr_spark.search.wand import (_load_seg_norms,
+                                               _segment_postings,
+                                               _segment_tasks, global_topk,
                                                qf_dismax_topk)
 
     terms = [w.lower() for w in qstr.split()]
@@ -254,7 +252,7 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
     if len(set(segs.values())) != 1:
         raise ValueError(f"per-field segment sets diverge: {segs}")
 
-    weights: dict[str, dict[str, float]] = {}
+    weights: dict[str, dict[str, np.float32]] = {}
     present_by_field: dict[str, list[str]] = {}
     for f, ws in wss.items():
         dfs = ws._global_df(sorted(set(terms)))
@@ -263,10 +261,10 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
         for t in present:
             # UNBOOSTED weight; the field boost applies as the flat
             # engine's post-multiply inside the kernel (boosts=)
-            weights.setdefault(t, {})[f] = float(
+            weights.setdefault(t, {})[f] = np.float32(
                 ws.bm25.term_weight(dfs[t]))
+    spark = next(iter(wss.values())).si.spark
     if not weights:
-        spark = next(iter(wss.values())).si.spark
         return spark.createDataFrame(
             [], "docid long, score float, rank int")
 
@@ -276,45 +274,28 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
     tie_ = float(tie)
     msm_ = int(min_should_match)
     terms_ = sorted(weights)
-    boosts_ = {f: float(qf[f]) for f in fields}
+    boosts_ = {f: np.float32(qf[f]) for f in fields}
 
-    def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
+    def per_segment(sid: int) -> pd.DataFrame | None:
         sources: dict[str, dict[str, object]] = {}
         norms: dict[str, np.ndarray] = {}
         doc_base = None
-        for f in sorted(paths):
-            sub = pdf[pdf["_field"] == f].drop(columns=["_field"])
-            nf, db = _load_seg_norms(paths[f], sid)
-            norms[f] = nf
+        for f in fields:
+            norms[f], db = _load_seg_norms(paths[f], sid)
             if doc_base is None:
                 doc_base = db
             elif db != doc_base:
                 raise ValueError(f"doc_base mismatch in seg {sid}")
-            if len(sub) == 0:
-                continue
-            eps = _grouped_postings(paths[f], sid, sub)
-            for t, gp in eps.items():
-                if t in weights and f in weights[t]:
-                    sources.setdefault(t, {})[f] = gp
-        d, s = qf_dismax_topk(
-            terms_, sources,
-            {t: {f: np.float32(w) for f, w in fw.items()}
-             for t, fw in weights.items()},
-            norms, doc_base, bm25s, k=k_, tie=tie_, msm=msm_,
-            boosts={f: np.float32(b) for f, b in boosts_.items()})
+            for t, gp in _segment_postings(paths[f], sid,
+                                           present_by_field[f]).items():
+                sources.setdefault(t, {})[f] = gp
+        if not sources:
+            return None
+        d, s = qf_dismax_topk(terms_, sources, weights, norms, doc_base,
+                              bm25s, k=k_, tie=tie_, msm=msm_,
+                              boosts=boosts_)
         return pd.DataFrame({"docid": d, "score": s})
 
-    rows = None
-    for f, ws in wss.items():
-        r = (ws.si.postings
-             .where(F.col("term").isin(present_by_field[f]))
-             .select(*METADATA_COLS)
-             .withColumn("_field", F.lit(f)))
-        rows = r if rows is None else rows.unionByName(r)
-    per_seg = rows.groupBy("seg_id").applyInPandas(
-        per_segment, schema="docid long, score float")
+    per_seg = _segment_tasks(spark, list(segs[fields[0]]), per_segment,
+                             "docid long, score float")
     return global_topk(per_seg, k)
-
-
-

@@ -4,7 +4,7 @@ The read path of EP2 (SURVEY §3) at block granularity:
 
   reference                                this engine
   ---------                                -----------
-  per-leaf scorer tree + BulkScorer        one grouped-map task per
+  per-leaf scorer tree + BulkScorer        one mapInPandas task per
     (IndexSearcher.search(leaves,...))       segment, numpy kernel inside
   ConjunctionDISI leapfrog / WAND          interval sweep over the merged
     (ConjunctionDISI.java:193-227;           block-boundary grid with
@@ -38,14 +38,16 @@ numpy oracle):
   ``score <= pqTop.score`` reject).
 
 Scale: one Spark task per segment (per segment and query shard in a
-batch); each task touches only the query terms' posting rows
-(term-pruned parquet read), decodes only blocks whose bound beats
-theta, and emits k rows per query. The driver-side merge is
-O(segments * k).
+batch), dealt by a ``spark.range`` task list with no scan and no
+exchange before it; each task reads its own segment's metadata rows,
+payloads and norms (term-pruned parquet reads), decodes only blocks
+whose bound beats theta, and emits k rows per query. The driver-side
+merge is O(segments * k).
 """
 
 from __future__ import annotations
 
+import os
 from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
@@ -68,8 +70,8 @@ from lucene_solr_spark.index.segments import SegmentIndex
 from lucene_solr_spark.search import ast as A
 from lucene_solr_spark.search.executor import (
     Searcher, _collect_terms, _union, automaton_freq, exact_phrase_freqs,
-    multiphrase_rpt_groups, positional_idf_terms, sloppy_phrase_freq,
-    span_near_match)
+    multiphrase_rpt_groups, phrase_weight, positional_idf_terms,
+    sloppy_phrase_freq, span_near_match)
 from lucene_solr_spark.search.spannest import emit_spans, leaf_terms, slot_groups
 
 
@@ -116,7 +118,7 @@ def _block_bounds(bm25: BM25, w, ep) -> np.ndarray:
 def _decode_block_cached(ep, j: int):
     """decode_nth_block through the worker-global decoded-array LRU
     (enabled when the posting carries a cache_key — set by
-    _grouped_postings; arrays are shared READ-ONLY, the kernel only
+    _segment_postings; arrays are shared READ-ONLY, the kernel only
     slices them)."""
     ck = getattr(ep, "cache_key", None)
     if ck is None:
@@ -980,11 +982,33 @@ def global_topk(hits: DataFrame, k: int) -> DataFrame:
     return top.withColumn("rank", F.row_number().over(w))
 
 
+def _segment_tasks(spark, tasks: list, run: Callable,
+                   schema: str) -> DataFrame:
+    """The one Spark plan every segment kernel runs in: one task per
+    entry of ``tasks`` (each names its segment), run as
+    ``spark.range(0, n, 1, n).mapInPandas`` — no postings scan and no
+    exchange before the Python boundary; ``run(task)`` reads what it
+    needs from the segment's own files and returns a pandas frame of
+    ``schema`` (or None for no rows)."""
+    def per_partition(batches):
+        for b in batches:
+            for i in b["id"]:
+                out = run(tasks[int(i)])
+                if out is not None and len(out):
+                    yield out
+
+    n = len(tasks)
+    return spark.range(0, n, 1, max(n, 1)).mapInPandas(per_partition,
+                                                       schema=schema)
+
+
 # Batched-serving result schema — shared with MultiFieldWandSearcher's
 # empty fast path so the two can never drift.
 SEARCH_MANY_SCHEMA = "qid string, docid long, score float, rank int"
 
-METADATA_COLS = ("seg_id", "term", "df", "ttf", "singleton_docid",
+# the posting-row columns a kernel task reads before any payload; the
+# partition directory postings/seg_id=N supplies the segment
+METADATA_COLS = ("term", "df", "ttf", "singleton_docid",
                  "skip_last_doc", "skip_doc_off", "skip_tf_off",
                  "bm_tf", "bm_norm", "tail_offset",
                  "imp_tf", "imp_norm",
@@ -1069,10 +1093,10 @@ def _prefetch_payloads(idx_path: str, seg_id: int, terms: list[str],
 def _make_group_fetcher(idx_path: str, seg_id: int):
     """Task-side lazy payload reader for one segment.
 
-    The Spark plan ships METADATA-ONLY posting rows to the kernel task
-    (term, df, skip arrays, block-max arrays — a few hundred bytes per
-    group row); encoded byte streams never transit the shuffle/Arrow
-    boundary. When the kernel decodes a block, the owning GROUP row's
+    The kernel task holds METADATA-ONLY posting rows (term, df, skip
+    arrays, block-max arrays — a few hundred bytes per group row,
+    read by _segment_postings); encoded byte streams are read only
+    on demand. When the kernel decodes a block, the owning GROUP row's
     payload is read straight from parquet: partition-pruned (one
     seg_id dir), row-group-pruned (rows are written sorted by
     (term, grp_id), so min/max statistics skip unrelated row groups)
@@ -1080,8 +1104,7 @@ def _make_group_fetcher(idx_path: str, seg_id: int):
     Groups whose blocks the kernel prunes by score bound cost NO IO at
     all. _GROUP_READAHEAD groups are fetched per read because the
     interval sweep requests ascend in docid order — the per-leaf .doc
-    stream readahead of the reference, with the scorer task doing its
-    own IO instead of the planner mailing it the stream."""
+    stream readahead of the reference."""
     cache: dict[tuple[str, int], tuple[bytes, bytes]] = {}
 
     def fetch(term: str, grp: int) -> tuple[bytes, bytes]:
@@ -1153,10 +1176,13 @@ def _is_singleton(row: dict) -> bool:
     return sd is not None and not (isinstance(sd, float) and np.isnan(sd))
 
 
-def _grouped_postings(idx_path: str, seg_id: int,
-                      pdf: pd.DataFrame,
+def _segment_postings(idx_path: str, seg_id: int, terms,
                       bulk_all: bool = False) -> dict[str, "GroupedPosting"]:
-    """Assemble one lazy GroupedPosting per term from its metadata rows.
+    """One lazy GroupedPosting per term of ``terms`` that segment
+    ``seg_id`` holds, from its METADATA_COLS rows: one term-filtered
+    read of postings/seg_id=N (rows are written sorted by (seg_id,
+    term, grp_id), so row-group statistics prune the read) — the
+    terms-dictionary seek of a leaf reader, done by the task itself.
 
     Payload strategy: SINGLE-group terms (everything but the zipf
     head) are bulk-seeded in one columnar read — their whole payload
@@ -1167,13 +1193,19 @@ def _grouped_postings(idx_path: str, seg_id: int,
     the batched-serving path and the tree fold, which will
     decode every group anyway, so per-group point reads only add IO
     round trips."""
+    import pyarrow.parquet as pq
+
     from lucene_solr_spark.index.codec import GroupedPosting
 
-    fetch = _make_group_fetcher(idx_path, seg_id)
+    seg_dir = f"{idx_path}/postings/seg_id={seg_id}"
+    terms = sorted(set(terms))
+    if not terms or not os.path.isdir(seg_dir):
+        return {}
     rows_by_term: dict[str, list[dict]] = {}
-    for i in range(len(pdf)):
-        row = pdf.iloc[i].to_dict()
+    for row in pq.read_table(seg_dir, columns=list(METADATA_COLS),
+                             filters=[("term", "in", terms)]).to_pylist():
         rows_by_term.setdefault(row["term"], []).append(row)
+    fetch = _make_group_fetcher(idx_path, seg_id)
     if bulk_all:
         bulk = [t for t, rows in rows_by_term.items()
                 if not (len(rows) == 1 and _is_singleton(rows[0]))]
@@ -1249,12 +1281,13 @@ class WandSearcher:
     def __init__(self, si: SegmentIndex, k1: float = 1.2, b: float = 0.75,
                  preload_stats: bool = False):
         """``preload_stats``: serving mode — the (term -> df)
-        dictionary and the metadata projection are PERSISTED IN
-        EXECUTOR MEMORY on first use (the FST term-dictionary / skip
-        tier of a serving stack; distributed, never an O(vocabulary)
-        driver collect). Novel query terms cost one tiny
-        InMemoryTableScan job; looked-up terms cache driver-side so
-        repeat traffic costs zero stats jobs."""
+        dictionary is PERSISTED IN EXECUTOR MEMORY on first use (the
+        FST term-dictionary tier of a serving stack; distributed,
+        never an O(vocabulary) driver collect). Novel query terms
+        cost one tiny InMemoryTableScan job; looked-up terms cache
+        driver-side so repeat traffic costs zero stats jobs. Kernel
+        tasks read their segment's metadata rows themselves in
+        either mode."""
         self.si = si
         self._k1 = k1
         self._b = b
@@ -1262,7 +1295,6 @@ class WandSearcher:
         self.bm25 = BM25(self.coll["doc_count"], self.coll["sum_ttf"], k1=k1, b=b)
         self._df_cache: OrderedDict[str, int] = OrderedDict()
         self._preload = preload_stats
-        self._preloaded = False
         self._snapshot = tuple(si.live_segments())
 
     def _check_snapshot(self) -> None:
@@ -1274,10 +1306,6 @@ class WandSearcher:
         if snap != self._snapshot:
             self._snapshot = snap
             self._df_cache.clear()
-            self._preloaded = False
-            if getattr(self, "_meta_df", None) is not None:
-                self._meta_df.unpersist()
-                self._meta_df = None
             if getattr(self, "_stats_df", None) is not None:
                 self._stats_df.unpersist()
                 self._stats_df = None
@@ -1328,23 +1356,6 @@ class WandSearcher:
             return pos[0], pos[1], neg
         return None
 
-    def _meta_rows(self) -> DataFrame:
-        """The metadata-only posting projection every kernel plan scans
-        (term filter + METADATA_COLS). In serving mode (preload_stats)
-        the projection is PERSISTED in Spark executor memory — the
-        in-RAM term-dictionary/skip-data tier of a serving stack
-        (Lucene's FST + .doc skip blocks stay hot the same way), so a
-        query batch pays an InMemoryTableScan instead of re-reading
-        parquet footers (measured ~1.0 s -> ~0.05 s per search_many on
-        the 500k bench index). Distributed cache, NOT a driver
-        collect; invalidated with the segment snapshot."""
-        if not self._preload:
-            return self.si.postings.select(*METADATA_COLS)
-        if getattr(self, "_meta_df", None) is None:
-            self._meta_df = (self.si.postings.select(*METADATA_COLS)
-                             .persist())
-        return self._meta_df
-
     def _global_df(self, terms: list[str]) -> dict[str, int]:
         """Global df per term. Serving mode (preload_stats) keeps the
         whole (term -> df) dictionary PERSISTED IN EXECUTOR MEMORY
@@ -1373,9 +1384,9 @@ class WandSearcher:
 
     def search(self, q: A.Query | str, k: int = 10) -> DataFrame:
         """Top-k (docid, score, rank) of one query. Segment-native shapes
-        (see the class docstring) run their kernel in one grouped-map
-        task per segment, then a global (score desc, docid asc) top-k;
-        other shapes take the flat executor fallback."""
+        (see the class docstring) run their kernel in one task per
+        segment (_kernel_plan), then a global (score desc, docid asc)
+        top-k; other shapes take the flat executor fallback."""
         self._check_snapshot()
         if isinstance(q, str):
             q = A.parse_query(q)
@@ -1410,13 +1421,6 @@ class WandSearcher:
                                       with_offsets=needs_offs)
         return Searcher(flat, mode="lucene").search(q, k=k)
 
-    def _phrase_weight(self, boost: float, terms, dfs: dict) -> np.float32:
-        """The flat phrase weight recipe, f32(boost) * f32(sum of idf
-        over ``terms`` in the given order) * f32(k1 + 1)."""
-        idf_sum64 = float(sum(self.bm25.idf(dfs[t]) for t in terms))
-        return (np.float32(boost) * np.float32(idf_sum64)
-                * np.float32(self._k1 + 1.0))
-
     def _kernel_spec(self, q: A.Query, k: int) -> KernelSpec | None:
         """The segment kernel of a rewritten query, or None when the
         shape has none (flat fallback): a top-level positional shape
@@ -1438,7 +1442,7 @@ class WandSearcher:
             dfs = self._global_df(sorted(set(idf_terms)))
             if any(all(dfs[t] == 0 for t in slot) for slot in slots):
                 return nothing
-            weight = self._phrase_weight(q.boost, idf_terms, dfs)
+            weight = phrase_weight(bm25, q.boost, idf_terms, dfs)
             slop = int(q.slop)
             groups, multi_term = multiphrase_rpt_groups(slots, slop)
             return KernelSpec(
@@ -1475,7 +1479,7 @@ class WandSearcher:
             present = tuple(t for t in all_terms if dfs[t] > 0)
             if not present:
                 return nothing
-            weight = self._phrase_weight(q.boost, all_terms, dfs)
+            weight = phrase_weight(bm25, q.boost, all_terms, dfs)
             return KernelSpec(present, lambda eps, norms, doc_base:
                               automaton_topk(paths, eps, weight, norms,
                                              doc_base, bm25, k=k))
@@ -1608,12 +1612,11 @@ class WandSearcher:
         return tuple(t for t in sorted(dfs) if dfs[t] > 0), node(q)
 
     def _kernel_plan(self, specs: dict[str, KernelSpec]) -> DataFrame | None:
-        """The one Spark plan every segment kernel runs in: metadata
-        rows of the specs' terms, exploded to the (seg_id, shard)
-        tasks whose specs read them, one grouped-map task per pair
-        that runs its specs in turn. Returns (qid, docid, score), at
-        most k rows per (query, segment), or None when no spec can
-        match.
+        """Run segment kernels through _segment_tasks: one task per
+        (live segment, shard) that reads the metadata rows of its
+        specs' terms and runs its specs in turn. Returns (qid, docid,
+        score), at most k rows per (query, segment), or None when no
+        spec can match.
 
         Specs are dealt round-robin (sorted qids) over
         ceil(parallelism / live segments) shards, capped by their
@@ -1623,25 +1626,25 @@ class WandSearcher:
         for several specs or an exhaustive kernel, which decode
         every group anyway."""
         specs = {qid: s for qid, s in specs.items() if s.terms}
-        if not specs:
+        segs = self.si.live_segments()
+        if not specs or not segs:
             return None
-        n_seg = max(1, len(self.si.live_segments()))
         par = self.si.spark.sparkContext.defaultParallelism
-        n_shards = min(-(-par // n_seg), len(specs))
+        n_shards = min(-(-par // len(segs)), len(specs))
         by_shard: dict[int, list[tuple[str, KernelSpec]]] = {}
-        term_shards: dict[str, set[int]] = {}
         for i, qid in enumerate(sorted(specs)):
             by_shard.setdefault(i % n_shards, []).append((qid, specs[qid]))
-            for t in specs[qid].terms:
-                term_shards.setdefault(t, set()).add(i % n_shards)
         idx_path = self.si.path
 
-        def per_task(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid, shard = int(key[0]), int(key[1])
-            mine = by_shard[shard]
-            norms, doc_base = _load_seg_norms(idx_path, sid)
+        def per_task(task: tuple) -> pd.DataFrame | None:
+            sid, mine = task
             bulk = len(mine) > 1 or any(s.bulk for _, s in mine)
-            eps = _grouped_postings(idx_path, sid, pdf, bulk_all=bulk)
+            eps = _segment_postings(idx_path, sid,
+                                    {t for _, s in mine for t in s.terms},
+                                    bulk_all=bulk)
+            if not eps:
+                return None
+            norms, doc_base = _load_seg_norms(idx_path, sid)
             out_q, out_d, out_s = [], [], []
             for qid, spec in mine:
                 if not any(t in eps for t in spec.terms):
@@ -1653,30 +1656,25 @@ class WandSearcher:
                 out_d.append(hit[0])
                 out_s.append(hit[1])
             if not out_q:
-                return pd.DataFrame({"qid": [], "docid": [], "score": []})
+                return None
             return pd.DataFrame({
                 "qid": out_q,
                 "docid": np.concatenate(out_d),
                 "score": np.concatenate(out_s),
             })
 
-        shard_map = F.create_map(*[
-            x for t, ss in sorted(term_shards.items())
-            for x in (F.lit(t),
-                      F.array(*[F.lit(int(s)) for s in sorted(ss)]))])
-        rows = (self._meta_rows()
-                .where(F.col("term").isin(sorted(term_shards)))
-                .withColumn("shard", F.explode(shard_map[F.col("term")])))
-        return rows.groupBy("seg_id", "shard").applyInPandas(
-            per_task, schema="qid string, docid long, score float")
+        return _segment_tasks(
+            self.si.spark, [(sid, mine) for sid in segs
+                            for mine in by_shard.values()],
+            per_task, "qid string, docid long, score float")
 
     def phrase_freqs(self, terms: list[str], slop: int = 0) -> DataFrame:
         """All (docid, phrase freq) matches of a phrase — the unranked
-        MatchesIterator view. Runs the same two-phase kernel with no
-        theta (every match is returned), still decoding docs only in
-        all-terms-active intervals and positions only for intersection
-        docs. pfreq is integral for slop=0, fractional (sloppyFreq
-        sums 1/(len+1)) for slop>0."""
+        MatchesIterator view, one task per live segment. Runs the same
+        two-phase kernel with no theta (every match is returned), still
+        decoding docs only in all-terms-active intervals and positions
+        only for intersection docs. pfreq is integral for slop=0,
+        fractional (sloppyFreq sums 1/(len+1)) for slop>0."""
         self._check_snapshot()
         terms_ = list(terms)
         uniq = sorted(set(terms_))
@@ -1687,26 +1685,23 @@ class WandSearcher:
         slop_ = int(slop)
         idx_path = self.si.path
 
-        def per_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            norms, doc_base = _load_seg_norms(idx_path, sid)
-            eps = _grouped_postings(idx_path, sid, pdf)
+        def per_segment(sid: int) -> pd.DataFrame | None:
+            eps = _segment_postings(idx_path, sid, uniq)
             if any(t not in eps for t in uniq):
-                return pd.DataFrame({"docid": np.empty(0, np.int64),
-                                     "pfreq": np.empty(0, np.float64)})
+                return None
+            norms, doc_base = _load_seg_norms(idx_path, sid)
             d, f = phrase_topk(terms_, eps, np.float32(1.0), norms,
                                doc_base, bm25, k=0, slop=slop_,
                                collect_freqs=True)
             return pd.DataFrame({"docid": d, "pfreq": f})
 
-        return (self._meta_rows().where(F.col("term").isin(uniq))
-                .groupBy("seg_id")
-                .applyInPandas(per_segment, schema="docid long, pfreq double"))
+        return _segment_tasks(self.si.spark, self.si.live_segments(),
+                              per_segment, "docid long, pfreq double")
 
     def search_many(self, queries: dict[str, A.Query | str],
                     k: int = 10) -> DataFrame:
         """Batched serving: run MANY queries in ONE Spark job. Each
-        (segment, shard) task receives the union of its queries' term
+        (segment, shard) task reads the union of its queries' term
         postings once and runs each query's kernel — the per-query
         job-scheduling overhead (the dominant latency at interactive
         k) is amortized across the batch, which is how a Spark-based

@@ -39,17 +39,18 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # CRITICAL for the search path: the per-segment kernel jobs
-        # shuffle a few KB of posting METADATA whose downstream task
-        # cost is CPU (decode + WAND kernel), not bytes. With the
-        # default 1m floor, AQE coalesces that tiny exchange to ONE
-        # partition and serializes every segment kernel through a
-        # single Python worker (measured: 3-term AND over 8 segments
-        # ran 8x the single-task time). A 1-byte floor keeps
-        # parallelism-first coalescing at per-row granularity for
-        # small shuffles; large shuffles still coalesce to
-        # total/parallelism as before. The latency-bound interactive
-        # profile of a search tier wants exactly this trade.
+        # Plans that shuffle a few KB of rows into CPU-heavy Python
+        # stages (the flat executor's positional groupBy(docid) feeding
+        # its match UDF, the index encoder's per-segment grouped maps)
+        # pay in CPU, not bytes. With the default 1m floor, AQE
+        # coalesces such a tiny exchange to ONE partition and
+        # serializes the Python work through a single worker (measured
+        # on the segment kernels when they still ran behind an
+        # exchange: a 3-term AND over 8 segments ran 8x the single-task
+        # time). A 1-byte floor keeps parallelism-first coalescing at
+        # per-row granularity for small shuffles; large shuffles still
+        # coalesce to total/parallelism as before. The segment kernels
+        # themselves run without an exchange (wand._segment_tasks).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

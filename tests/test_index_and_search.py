@@ -175,6 +175,72 @@ def test_query_cache_use_history_is_bounded():
     assert qc.get_or_build(TermQ("t000000").key(), Frame) is None
 
 
+def test_query_cache_evicts_least_recently_used():
+    """At max_entries the entry evicted is the one used longest ago: a
+    filter that keeps hitting stays cached while a newer one that is
+    never reused is evicted (and unpersisted)."""
+    from lucene_solr_spark.search.executor import QueryCache
+
+    class Frame:
+        def __init__(self):
+            self.persisted = False
+
+        def persist(self):
+            self.persisted = True
+            return self
+
+        def unpersist(self):
+            self.persisted = False
+
+    qc = QueryCache(max_entries=2, min_uses=1)
+    hot = qc.get_or_build("hot", Frame)
+    cold = qc.get_or_build("cold", Frame)
+    for _ in range(5):
+        assert qc.get_or_build("hot", Frame) is hot
+    new = qc.get_or_build("new", Frame)
+    assert list(qc._cached) == ["hot", "new"]
+    assert hot.persisted and new.persisted and not cold.persisted
+    assert qc.get_or_build("hot", Frame) is hot and qc.hits == 6
+
+
+@pytest.mark.parametrize("q", ["((((", "a AND", "(a", "a NOT", "+",
+                               "a^1.2.3", "(" * 3000 + "a" + ")" * 3000],
+                         ids=["open4", "and_end", "open_term", "not_end",
+                              "plus", "bad_boost", "deep3000"])
+def test_parse_errors_are_typed(q):
+    """Truncated syntax, a malformed boost and runaway nesting raise
+    ParseError (a ValueError), never IndexError or RecursionError."""
+    from lucene_solr_spark.search.ast import ParseError
+
+    with pytest.raises(ParseError):
+        parse_query(q)
+
+
+def test_parse_fuzz_parses_or_raises_parse_error():
+    """Seeded random strings over the query alphabet (terms, fields,
+    operators, brackets, quotes, boosts, slops, wildcards, escapes)
+    either parse or raise ParseError."""
+    import random
+
+    from lucene_solr_spark.search.ast import MAX_PARSE_DEPTH, ParseError
+
+    rng = random.Random(20261018)
+    pieces = list('aZ19 ()"~^*?:+-!/[]{}\\&|.') + [
+        "AND", "OR", "NOT", " TO ", "text:", "title:", "t000001", "*:*",
+        "&&", "||"]
+    parsed = 0
+    for _ in range(2000):
+        s = "".join(rng.choice(pieces) for _ in range(rng.randint(1, 25)))
+        try:
+            parse_query(s)
+            parsed += 1
+        except ParseError:
+            pass
+    assert 0 < parsed < 2000
+    ok = "(" * MAX_PARSE_DEPTH + "a" + ")" * MAX_PARSE_DEPTH
+    assert parse_query(ok) == TermQ("a")
+
+
 def test_sql_phrase_boost_scales_score(tiny_index):
     """sql mode applies a PhraseQ boost like every other phrase-scored
     shape: boost 2 doubles each doc's f64 score exactly."""

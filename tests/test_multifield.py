@@ -286,13 +286,10 @@ def test_qf_wand_kernel_prunes(mf_seg):
     intervals < total intervals on a selective two-term query over
     the 400-doc fixture (pruning is real, not just safe)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
 
     from lucene_solr_spark.search.multifield import MultiFieldWandSearcher
-    from lucene_solr_spark.search.wand import (METADATA_COLS, WandStats,
-                                               _grouped_postings,
-                                               _load_seg_norms,
+    from lucene_solr_spark.search.wand import (WandStats, _load_seg_norms,
+                                               _segment_postings,
                                                qf_dismax_topk)
 
     mw = MultiFieldWandSearcher(mf_seg, default_field="body")
@@ -309,11 +306,8 @@ def test_qf_wand_kernel_prunes(mf_seg):
     sources, norms = {}, {}
     doc_base = None
     for f in ("title", "body"):
-        pdf = (mf_seg[f].postings.where(F.col("term").isin(terms))
-               .where(F.col("seg_id") == sid)
-               .select(*METADATA_COLS).toPandas())
         norms[f], doc_base = _load_seg_norms(mf_seg[f].path, sid)
-        for t, gp in _grouped_postings(mf_seg[f].path, sid, pdf).items():
+        for t, gp in _segment_postings(mf_seg[f].path, sid, terms).items():
             sources.setdefault(t, {})[f] = gp
     st = WandStats()
     d, s = qf_dismax_topk(terms, sources, weights, norms, doc_base,

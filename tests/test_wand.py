@@ -295,15 +295,37 @@ def test_search_many_rejects_non_wand(seg_index):
         ws.search_many({"n": expanding})
 
 
+def _assert_segment_task_plan(df) -> str:
+    """The segment-task plan shape: exactly one MapInPandas, whose input
+    is a Range (the task list), no grouped map, and nothing below the
+    MapInPandas — no FileScan, no Exchange. Returns the plan text."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    lines = plan.splitlines()
+    at = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    assert len(at) == 1, plan
+    # the MapInPandas subtree: the lines after it indented deeper
+    col = lines[at[0]].index("MapInPandas")
+    below = []
+    for ln in lines[at[0] + 1:]:
+        node = ln.lstrip(" :+-")
+        if not node or len(ln) - len(node) <= col:
+            break
+        below.append(node)
+    assert len(below) == 1 and below[0].startswith("Range"), plan
+    return plan
+
+
 @pytest.mark.parametrize("shape", sorted(SEGMENT_NATIVE_SHAPES))
 def test_segment_native_plan_one_grouped_map(seg_index, shape):
-    """Every segment-native shape runs in one grouped-map kernel stage
-    over metadata-only rows: no as_flat_tables MapInPandas full
-    decode, and no fixed-width repartition before the kernel."""
+    """Every segment-native shape runs in one mapInPandas stage over the
+    segment task list (one task per segment group of work; the name is
+    kept so the test ids stay stable): each task reads its own metadata
+    rows, so no grouped map, no postings FileScan and no Exchange feed
+    the kernel, and no as_flat_tables full decode or fixed-width
+    repartition runs."""
     df = WandSearcher(seg_index).search(SEGMENT_NATIVE_SHAPES[shape], k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
-    assert "MapInPandas" not in plan
+    plan = _assert_segment_task_plan(df)
     assert "REPARTITION_BY_NUM" not in plan
 
 
@@ -445,7 +467,7 @@ def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
     assert ws._kernel_spec(fallback.rewrite(), 10) is None
     plan = (ws.search(fallback, k=10)
             ._jdf.queryExecution().executedPlan().toString())
-    assert "MapInPandas" in plan  # the flat decode ran
+    assert "FileScan parquet" in plan and "/postings" in plan, plan  # flat decode
     # the restriction: one isin over exactly the query's terms
     assert "t000001,t000002,t000100" in plan.replace(" ", ""), plan
 
@@ -478,19 +500,13 @@ def test_span_near_kernel_early_terminates(seg_index):
     """With a constant score, the kernel stops at k matches: asking
     for k=3 of a frequent pair decodes strictly fewer blocks than the
     exhaustive flat path would (stats counter evidence)."""
-    from pyspark.sql import functions as F
-
-    from lucene_solr_spark.search.wand import (METADATA_COLS, WandStats,
-                                               _grouped_postings,
+    from lucene_solr_spark.search.wand import (WandStats,
+                                               _segment_postings,
                                                span_near_topk)
 
-    ws = WandSearcher(seg_index)
-    pdf = (seg_index.postings
-           .where(F.col("term").isin(["t000000", "t000001"]))
-           .where(F.col("seg_id") == seg_index.live_segments()[0])
-           .select(*METADATA_COLS).toPandas())
-    eps = _grouped_postings(seg_index.path,
-                            int(seg_index.live_segments()[0]), pdf)
+    eps = _segment_postings(seg_index.path,
+                            int(seg_index.live_segments()[0]),
+                            ["t000000", "t000001"])
     st_small = WandStats()
     d3, _ = span_near_topk("t000000", "t000001", eps, 1.0, k=3,
                            slop=4, in_order=False, stats=st_small)
@@ -717,21 +733,15 @@ def test_span_nested_duels_flat(seg_index, flat_searcher, q):
 def test_span_nested_kernel_early_terminates(seg_index):
     """Constant score => the nested kernel stops at k matches, like
     span_near_topk (ascending docids win the tie-break)."""
-    from pyspark.sql import functions as F
-
-    from lucene_solr_spark.search.wand import (METADATA_COLS, WandStats,
-                                               _grouped_postings,
+    from lucene_solr_spark.search.wand import (WandStats,
+                                               _segment_postings,
                                                span_nested_topk)
 
     q = A.SpanNearNQ((A.SpanOrNQ(("t000000", "t000001")), "t000002"),
                      slop=4)
-    terms = ["t000000", "t000001", "t000002"]
-    sid = int(seg_index.live_segments()[0])
-    pdf = (seg_index.postings
-           .where(F.col("term").isin(terms))
-           .where(F.col("seg_id") == sid)
-           .select(*METADATA_COLS).toPandas())
-    eps = _grouped_postings(seg_index.path, sid, pdf)
+    eps = _segment_postings(seg_index.path,
+                            int(seg_index.live_segments()[0]),
+                            ["t000000", "t000001", "t000002"])
     st_small = WandStats()
     d3, _ = span_nested_topk(q, eps, 1.0, k=3, stats=st_small)
     st_all = WandStats()
@@ -816,8 +826,8 @@ def test_term_automaton_kernel_duels_flat(seg_index, flat_searcher,
 def test_synonym_blended_dismax_segment_native(seg_index, flat_searcher):
     """SynonymQ / BlendedTermQ / DisMaxQ-of-terms run segment-native
     (node cases of the _tree fold) and duel the flat executor
-    bit-equal; the plan ships metadata-only rows (no as_flat_tables
-    MapInPandas)."""
+    bit-equal; the plan is the segment-task map (no as_flat_tables
+    decode, no postings scan before the kernel)."""
     ws = WandSearcher(seg_index)
     shapes = [
         A.SynonymQ(("t000001", "t000002")),
@@ -833,12 +843,8 @@ def test_synonym_blended_dismax_segment_native(seg_index, flat_searcher):
         a = _rows(ws.search(q, k=10))
         b = _rows(flat_searcher.search(q, k=10))
         assert a == b, q.key()
-    plan = (ws.search(shapes[0], k=10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "FlatMapGroupsInPandas" in plan and "MapInPandas" not in plan
-    plan = (ws.search(shapes[4], k=10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "FlatMapGroupsInPandas" in plan and "MapInPandas" not in plan
+    _assert_segment_task_plan(ws.search(shapes[0], k=10))
+    _assert_segment_task_plan(ws.search(shapes[4], k=10))
 
 
 def test_df_cache_is_bounded(seg_index, monkeypatch):
@@ -934,21 +940,16 @@ def test_block_grid_kernel_stats(seg_index_blocks, kernel):
     most every interval, and a k=1 call decodes no more than an
     unbounded one."""
     seg_index = seg_index_blocks
-    from pyspark.sql import functions as F
-
-    from lucene_solr_spark.search.wand import (METADATA_COLS,
-                                               _grouped_postings,
-                                               _load_seg_norms)
+    from lucene_solr_spark.search.wand import (_load_seg_norms,
+                                               _segment_postings)
 
     terms, call = GRID_KERNELS[kernel]
     bm25 = WandSearcher(seg_index).bm25
     sid = int(seg_index.live_segments()[0])
-    pdf = (seg_index.postings.where(F.col("term").isin(terms))
-           .where(F.col("seg_id") == sid).select(*METADATA_COLS).toPandas())
     norms, doc_base = _load_seg_norms(seg_index.path, sid)
     stats = {}
     for k in (1, 10 ** 9):
-        eps = _grouped_postings(seg_index.path, sid, pdf)
+        eps = _segment_postings(seg_index.path, sid, terms)
         assert sorted(eps) == sorted(terms)
         st = stats[k] = WandStats()
         call(eps, norms, doc_base, bm25, k, st)
@@ -1013,7 +1014,7 @@ def test_random_tree_fold_duels_flat(seg_index, flat_searcher):
     """Seeded random boolean trees (depth <= 4: boosts, msm, NOT,
     ReqOpt, DisMax with tie, Const, Synonym/Blended, phrase and span
     leaves, equal-key clauses) all run the segment-tier fold — one
-    grouped map, no flat decode — and one WandSearcher.search_many
+    segment-task map, no flat decode — and one WandSearcher.search_many
     batch is bit-equal (docids and float32 score bits) to one flat
     Searcher.search_many batch."""
     import random
@@ -1061,9 +1062,7 @@ def test_random_tree_fold_duels_flat(seg_index, flat_searcher):
                 (r["rank"], r["docid"], np.float32(r["score"]).tobytes()))
         return {qid: sorted(rows) for qid, rows in out.items()}
     hits = ws.search_many(batch, k=10)
-    plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
-    assert "MapInPandas" not in plan
+    _assert_segment_task_plan(hits)
     got = by_qid(hits)
     exp = by_qid(flat_searcher.search_many(batch, k=10))
     assert len(exp) >= 12, "too few trees match anything"

@@ -27,4 +27,13 @@ Everything is DataFrame-first: Catalyst plans the relational parts,
 and the only Python on the hot path is vectorized Arrow/pandas UDFs.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# Only inside a Spark Python task (a worker deserializing an engine UDF);
+# the driver is never patched.
+if "pyspark" in _sys.modules and _sys.modules["pyspark"].TaskContext.get() is not None:
+    from lucene_solr_spark import _zipguard
+
+    _zipguard.install()

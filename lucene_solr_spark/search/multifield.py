@@ -34,6 +34,7 @@ from lucene_solr_spark.index.builder import IndexTables
 from lucene_solr_spark.index.multifield import MultiFieldIndex
 from lucene_solr_spark.search import ast as A
 from lucene_solr_spark.search.executor import B, K1, Searcher
+from lucene_solr_spark.search.wand import check_k
 
 _COMBINATORS = (A.AndQ, A.OrQ, A.NotQ, A.DisMaxQ, A.ReqOptQ, A.ConstQ,
                 A.MatchAllQ)
@@ -191,6 +192,7 @@ class MultiFieldWandSearcher:
         return self.searchers[next(iter(fields))], stripped
 
     def search(self, q, k: int = 10) -> DataFrame:
+        k = check_k(k)
         ws, inner = self._route(q)
         return ws.search(inner, k=k)
 
@@ -200,6 +202,7 @@ class MultiFieldWandSearcher:
         results union (qids must be globally unique)."""
         from functools import reduce
 
+        k = check_k(k)
         if not queries:
             from lucene_solr_spark.search.wand import SEARCH_MANY_SCHEMA
 
@@ -223,7 +226,8 @@ class MultiFieldWandSearcher:
         monotone max-over-fields bound (see wand.qf_dismax_topk).
         Scores bit-equal the flat MultiFieldSearcher on
         edismax_qf(qstr, qf, tie, min_should_match) (duel-tested)."""
-        return _qf_search_impl(self, qstr, qf, tie, min_should_match, k)
+        return _qf_search_impl(self, qstr, qf, tie, min_should_match,
+                               check_k(k))
 
 
 def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,

@@ -974,6 +974,14 @@ _TREE_NODES = _POSITIONAL + (A.TermQ, A.SynonymQ, A.BlendedTermQ, A.AndQ,
                              A.OrQ, A.DisMaxQ, A.NotQ, A.ReqOptQ, A.ConstQ)
 
 
+def check_k(k) -> int:
+    """A top-k search needs an integer k >= 1, checked on the driver
+    before any job (TopScoreDocCollector.create: numHits must be > 0)."""
+    if isinstance(k, bool) or not isinstance(k, (int, np.integer)) or k < 1:
+        raise ValueError(f"k must be an integer >= 1, got {k!r}")
+    return int(k)
+
+
 def global_topk(hits: DataFrame, k: int) -> DataFrame:
     """TopDocs.merge over per-segment hits: global (score desc,
     docid asc) top-k with its 1-based rank."""
@@ -1387,6 +1395,7 @@ class WandSearcher:
         (see the class docstring) run their kernel in one task per
         segment (_kernel_plan), then a global (score desc, docid asc)
         top-k; other shapes take the flat executor fallback."""
+        k = check_k(k)
         self._check_snapshot()
         if isinstance(q, str):
             q = A.parse_query(q)
@@ -1714,6 +1723,7 @@ class WandSearcher:
         a shape that search() would route to the flat executor raises
         ValueError.
         """
+        k = check_k(k)
         self._check_snapshot()
         parsed = {qid: (A.parse_query(q) if isinstance(q, str) else q)
                   .rewrite() for qid, q in queries.items()}

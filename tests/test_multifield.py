@@ -281,6 +281,24 @@ def test_qf_wand_duels_flat(mf_seg, mf_index, qstr, qf, tie, msm):
     assert len(got) > 0
 
 
+def test_multifield_wand_rejects_k_below_one(mf_seg):
+    """Every MultiFieldWandSearcher entry point refuses k < 1 on the
+    driver, before routing or any job."""
+    from lucene_solr_spark.search.multifield import MultiFieldWandSearcher
+
+    mw = MultiFieldWandSearcher(mf_seg, default_field="body")
+    for k in (0, -3):
+        with pytest.raises(ValueError, match="k must be an integer >= 1"):
+            mw.search("title:t000000", k=k)
+        with pytest.raises(ValueError, match="k must be an integer >= 1"):
+            mw.search_many({"q": "body:t000001"}, k=k)
+        with pytest.raises(ValueError, match="k must be an integer >= 1"):
+            mw.search_many({}, k=k)
+        with pytest.raises(ValueError, match="k must be an integer >= 1"):
+            mw.search_qf("t000000 t000005", {"title": 3.0, "body": 1.0},
+                         k=k)
+
+
 def test_qf_wand_kernel_prunes(mf_seg):
     """The qf kernel's theta bound actually skips work: scored
     intervals < total intervals on a selective two-term query over

@@ -295,6 +295,19 @@ def test_search_many_rejects_non_wand(seg_index):
         ws.search_many({"n": expanding})
 
 
+@pytest.mark.parametrize("k", [0, -1, 2.5, True])
+def test_search_rejects_k_below_one(seg_index, k):
+    """k < 1 (or a non-integer k) is refused on the driver with a
+    ValueError, before any job, by search and search_many alike
+    (TopScoreDocCollector.create: numHits must be > 0). Before the
+    check, k=0 failed inside the Spark task (an IndexError in _TopK)."""
+    ws = WandSearcher(seg_index)
+    with pytest.raises(ValueError, match="k must be an integer >= 1"):
+        ws.search("t000001", k=k)
+    with pytest.raises(ValueError, match="k must be an integer >= 1"):
+        ws.search_many({"a": "t000001", "b": "t000001 AND t000002"}, k=k)
+
+
 def _assert_segment_task_plan(df) -> str:
     """The segment-task plan shape: exactly one MapInPandas, whose input
     is a Range (the task list), no grouped map, and nothing below the

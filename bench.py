@@ -156,13 +156,11 @@ def bench_wand_queries(spark, n_docs: int) -> dict[str, float]:
     out = f"/tmp/bench_wandidx_v{len(POSTING_ROW_FIELDS)}_{n_docs}"
     if not glob.glob(f"{out}/segments_meta*"):
         build_segment_index(spark.read.parquet(src), out, seg_size=1 << 13)
-    # preload_stats: the serving-tier configuration — the (term -> df)
-    # dictionary loads once (Lucene keeps its FST term dictionary hot
-    # in the JVM the same way), so a query pays ONE Spark job
+    # a query pays ONE Spark job: df is read on the driver and the
+    # top-k merges there
     ws = WandSearcher(
         __import__("lucene_solr_spark.index.segments",
-                   fromlist=["SegmentIndex"]).SegmentIndex(path=out, spark=spark),
-        preload_stats=True)
+                   fromlist=["SegmentIndex"]).SegmentIndex(path=out, spark=spark))
     times: dict[str, float] = {"trials": QUERY_TRIALS}
     t0 = time.time()
     ws.search("t000001", k=10).collect()  # warm (stats cache, parquet footer)
@@ -198,7 +196,7 @@ def bench_wand_large(spark, n_docs: int = 500_000,
         t0 = time.time()
         build_segment_index(spark.read.parquet(src), out, seg_size=seg_size)
         times["build_sec"] = round(time.time() - t0, 2)
-    ws = WandSearcher(SegmentIndex(path=out, spark=spark), preload_stats=True)
+    ws = WandSearcher(SegmentIndex(path=out, spark=spark))
     ws.search("t000001", k=10).collect()  # warm
     big_qset = {
         "wl_term_head": "t000000",

@@ -34,7 +34,8 @@ from lucene_solr_spark.index.builder import IndexTables
 from lucene_solr_spark.index.multifield import MultiFieldIndex
 from lucene_solr_spark.search import ast as A
 from lucene_solr_spark.search.executor import B, K1, Searcher
-from lucene_solr_spark.search.wand import check_k
+from lucene_solr_spark.search.wand import (SEARCH_MANY_SCHEMA, check_k,
+                                           local_frame)
 
 _COMBINATORS = (A.AndQ, A.OrQ, A.NotQ, A.DisMaxQ, A.ReqOptQ, A.ConstQ,
                 A.MatchAllQ)
@@ -198,23 +199,22 @@ class MultiFieldWandSearcher:
 
     def search_many(self, queries: dict, k: int = 10) -> DataFrame:
         """Batched serving: queries route per entry; each field's
-        batch runs through that field's shared-task-grid search_many,
-        results union (qids must be globally unique)."""
-        from functools import reduce
-
+        batch runs through that field's shared-task-grid search_many
+        (one job per field), and the driver concatenates the answers
+        into one local frame (qids must be globally unique)."""
         k = check_k(k)
-        if not queries:
-            from lucene_solr_spark.search.wand import SEARCH_MANY_SCHEMA
-
-            spark = next(iter(self.searchers.values())).si.spark
-            return spark.createDataFrame([], SEARCH_MANY_SCHEMA)
         by_field: dict = {}
         for qid, q in queries.items():
             ws, inner = self._route(q)
             by_field.setdefault(id(ws), (ws, {}))[1][qid] = inner
-        outs = [ws.search_many(qs, k=k)
-                for ws, qs in by_field.values()]
-        return reduce(lambda a, b: a.unionByName(b), outs)
+        outs = [ws.search_many(qs, k=k) for ws, qs in by_field.values()]
+        if len(outs) == 1:
+            return outs[0]
+        rows = [r for out in outs for r in out.collect()]  # no job
+        return local_frame(next(iter(self.searchers.values())).si.spark,
+                           SEARCH_MANY_SCHEMA,
+                           dict(zip(("qid", "docid", "score", "rank"),
+                                    zip(*rows))))
 
     def search_qf(self, qstr: str, qf: dict[str, float],
                   tie: float = 0.0, min_should_match: int = 1,
@@ -238,7 +238,7 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
 
     from lucene_solr_spark.search.wand import (_load_seg_norms,
                                                _segment_postings,
-                                               _segment_tasks, global_topk,
+                                               _segment_tasks, merge_topk,
                                                qf_dismax_topk)
 
     terms = [w.lower() for w in qstr.split()]
@@ -269,8 +269,7 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
                 ws.bm25.term_weight(dfs[t]))
     spark = next(iter(wss.values())).si.spark
     if not weights:
-        return spark.createDataFrame(
-            [], "docid long, score float, rank int")
+        return merge_topk(spark, None, k)
 
     paths = {f: ws.si.path for f, ws in wss.items()}
     bm25s = {f: ws.bm25 for f, ws in wss.items()}
@@ -302,4 +301,4 @@ def _qf_search_impl(mw: "MultiFieldWandSearcher", qstr: str,
 
     per_seg = _segment_tasks(spark, list(segs[fields[0]]), per_segment,
                              "docid long, score float")
-    return global_topk(per_seg, k)
+    return merge_topk(spark, per_seg, k)

@@ -16,9 +16,9 @@ The read path of EP2 (SURVEY §3) at block granularity:
     (Lucene50SkipReader)                     skip_last_doc arrays (log-time)
   TopScoreDocCollector bounded heap        per-segment top-k arrays with
     (TopScoreDocCollector.java:63-80)        float32 threshold theta
-  TopDocs.merge tie-breaks                 global ORDER BY score DESC,
-    (TopDocs.java:96-110)                    docid ASC LIMIT k (tiny input:
-                                             k rows per segment)
+  TopDocs.merge tie-breaks                 coordinator merge on the driver:
+    (TopDocs.java:96-110; Solr               np.lexsort (score desc, docid
+     QueryComponent.mergeIds)                asc) over <= k rows per task
 
 Correctness invariants (duel-tested against the flat executor and the
 numpy oracle):
@@ -41,8 +41,11 @@ Scale: one Spark task per segment (per segment and query shard in a
 batch), dealt by a ``spark.range`` task list with no scan and no
 exchange before it; each task reads its own segment's metadata rows,
 payloads and norms (term-pruned parquet reads), decodes only blocks
-whose bound beats theta, and emits k rows per query. The driver-side
-merge is O(segments * k).
+whose bound beats theta, and emits k rows per query. A search() or a
+search_many() batch is ONE Spark job with one stage (that task map),
+run when called; the driver reads global df itself (_global_df) and
+merges the task rows in O(segments * k) into a local frame whose
+collect starts no job (merge_topk).
 """
 
 from __future__ import annotations
@@ -56,9 +59,8 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from lucene_solr_spark.functions.bm25 import BM25
 from lucene_solr_spark.index.codec import (
@@ -982,12 +984,48 @@ def check_k(k) -> int:
     return int(k)
 
 
-def global_topk(hits: DataFrame, k: int) -> DataFrame:
-    """TopDocs.merge over per-segment hits: global (score desc,
-    docid asc) top-k with its 1-based rank."""
-    top = hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("docid"))
-    return top.withColumn("rank", F.row_number().over(w))
+_ARROW_TYPES = {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
+                "float": pa.float32(), "double": pa.float64()}
+SEARCH_SCHEMA = "docid long, score float, rank int"
+# Batched-serving result schema — shared with MultiFieldWandSearcher's
+# batch paths so the two can never drift.
+SEARCH_MANY_SCHEMA = "qid string, docid long, score float, rank int"
+
+
+def local_frame(spark, schema: str, cols: dict | None = None) -> DataFrame:
+    """A driver-side answer as a local frame (LocalTableScan over one
+    Arrow table): collecting it starts no Spark job. ``cols`` maps each
+    column of the DDL ``schema`` to its values; None = no rows."""
+    cols = cols or {}
+    return spark.createDataFrame(pa.table({
+        name: pa.array(cols.get(name, []), _ARROW_TYPES[typ])
+        for name, typ in (f.split() for f in schema.split(", "))}))
+
+
+def merge_topk(spark, hits: DataFrame | None, k: int,
+               by_qid: bool = False) -> DataFrame:
+    """TopDocs.merge on the coordinator (Solr's
+    QueryComponent.mergeIds): collect the per-task top-k rows of
+    ``hits`` as Arrow (the one job of a search; None = no rows, no
+    job), keep each query's (score desc, docid asc) top k with its
+    1-based rank, and answer with a local frame of SEARCH_SCHEMA, or of
+    SEARCH_MANY_SCHEMA for ``by_qid``."""
+    schema = SEARCH_MANY_SCHEMA if by_qid else SEARCH_SCHEMA
+    if hits is None:
+        return local_frame(spark, schema)
+    t = hits.toArrow()
+    docid = t["docid"].to_numpy()
+    score = t["score"].to_numpy().astype(np.float32)
+    qid = (t["qid"].to_numpy(zero_copy_only=False) if by_qid
+           else np.zeros(len(docid)))
+    code = np.unique(qid, return_inverse=True)[1]
+    order = np.lexsort((docid, -score, code))
+    rank = np.arange(len(order)) - np.searchsorted(code[order],
+                                                   code[order]) + 1
+    keep = order[rank <= k]
+    return local_frame(spark, schema, {
+        "qid": qid[keep], "docid": docid[keep], "score": score[keep],
+        "rank": rank[rank <= k]})
 
 
 def _segment_tasks(spark, tasks: list, run: Callable,
@@ -1009,10 +1047,6 @@ def _segment_tasks(spark, tasks: list, run: Callable,
     return spark.range(0, n, 1, max(n, 1)).mapInPandas(per_partition,
                                                        schema=schema)
 
-
-# Batched-serving result schema — shared with MultiFieldWandSearcher's
-# empty fast path so the two can never drift.
-SEARCH_MANY_SCHEMA = "qid string, docid long, score float, rank int"
 
 # the posting-row columns a kernel task reads before any payload; the
 # partition directory postings/seg_id=N supplies the segment
@@ -1288,21 +1322,16 @@ class WandSearcher:
 
     def __init__(self, si: SegmentIndex, k1: float = 1.2, b: float = 0.75,
                  preload_stats: bool = False):
-        """``preload_stats``: serving mode — the (term -> df)
-        dictionary is PERSISTED IN EXECUTOR MEMORY on first use (the
-        FST term-dictionary tier of a serving stack; distributed,
-        never an O(vocabulary) driver collect). Novel query terms
-        cost one tiny InMemoryTableScan job; looked-up terms cache
-        driver-side so repeat traffic costs zero stats jobs. Kernel
-        tasks read their segment's metadata rows themselves in
-        either mode."""
+        """``preload_stats`` is accepted and ignored: global df is
+        always read on the driver from the live segments' (term, df)
+        rows (_global_df), so there is no serving-mode stats tier to
+        preload. The keyword is kept for existing callers."""
         self.si = si
         self._k1 = k1
         self._b = b
         self.coll = si.coll_stats()
         self.bm25 = BM25(self.coll["doc_count"], self.coll["sum_ttf"], k1=k1, b=b)
         self._df_cache: OrderedDict[str, int] = OrderedDict()
-        self._preload = preload_stats
         self._snapshot = tuple(si.live_segments())
 
     def _check_snapshot(self) -> None:
@@ -1314,9 +1343,6 @@ class WandSearcher:
         if snap != self._snapshot:
             self._snapshot = snap
             self._df_cache.clear()
-            if getattr(self, "_stats_df", None) is not None:
-                self._stats_df.unpersist()
-                self._stats_df = None
             self.coll = self.si.coll_stats()
             self.bm25 = BM25(self.coll["doc_count"], self.coll["sum_ttf"],
                              k1=self._k1, b=self._b)
@@ -1365,55 +1391,52 @@ class WandSearcher:
         return None
 
     def _global_df(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term. Serving mode (preload_stats) keeps the
-        whole (term -> df) dictionary PERSISTED IN EXECUTOR MEMORY
-        (the FST term-dictionary tier — Lucene keeps it off-heap, not
-        in the coordinator) and collects ONLY the queried terms' rows:
-        O(query terms) driver transfer per novel-term batch, never the
-        O(vocabulary) driver collect this used to do. Looked-up terms
-        LRU into _df_cache (at most DF_CACHE_TERMS entries) so repeat
-        traffic costs zero jobs."""
-        if self._preload and getattr(self, "_stats_df", None) is None:
-            self._stats_df = (self.si.postings.groupBy("term")
-                              .agg(F.sum("df").alias("df")).persist())
-            self._stats_df.count()  # materialize once (one stats job)
+        """Global df per term, read on the driver with no Spark job: per
+        live segment, one term-filtered pyarrow read of the (term, df)
+        rows of postings/seg_id=N (the row-group-pruned read
+        _segment_postings does in a task), summed over every row of a
+        term. Looked-up terms LRU into _df_cache (at most
+        DF_CACHE_TERMS entries), so repeat traffic reads nothing."""
+        import pyarrow.parquet as pq
+
         dfs = {t: _lru_get(self._df_cache, t) for t in set(terms)}
-        missing = [t for t, df in dfs.items() if df is None]
+        missing = sorted(t for t, df in dfs.items() if df is None)
         if missing:
-            src = (self._stats_df.where(F.col("term").isin(missing))
-                   if self._preload else
-                   self.si.postings.where(F.col("term").isin(missing))
-                   .groupBy("term").agg(F.sum("df").alias("df")))
-            got = {r["term"]: int(r["df"]) for r in src.collect()}
+            got = dict.fromkeys(missing, 0)
+            for sid in self.si.live_segments():
+                seg_dir = f"{self.si.path}/postings/seg_id={sid}"
+                if os.path.isdir(seg_dir):
+                    for row in pq.read_table(
+                            seg_dir, columns=["term", "df"],
+                            filters=[("term", "in", missing)]).to_pylist():
+                        got[row["term"]] += row["df"]
             for t in missing:
-                dfs[t] = got.get(t, 0)
+                dfs[t] = got[t]
                 _lru_put(self._df_cache, t, dfs[t], DF_CACHE_TERMS)
         return {t: dfs[t] for t in terms}
 
     def search(self, q: A.Query | str, k: int = 10) -> DataFrame:
-        """Top-k (docid, score, rank) of one query. Segment-native shapes
-        (see the class docstring) run their kernel in one task per
-        segment (_kernel_plan), then a global (score desc, docid asc)
-        top-k; other shapes take the flat executor fallback."""
+        """Top-k (docid, score, rank) of one query, as a local frame:
+        a segment-native shape (see the class docstring) runs its
+        kernel in ONE Spark job when search() is called, one task per
+        segment (_kernel_plan), and the driver merges the rows
+        (merge_topk); other shapes run the flat executor fallback,
+        merged the same way."""
         k = check_k(k)
         self._check_snapshot()
         if isinstance(q, str):
             q = A.parse_query(q)
         q = q.rewrite()
         spec = self._kernel_spec(q, k)
-        if spec is None:
-            return self._search_flat(q, k)
-        hits = self._kernel_plan({"": spec})
-        if hits is None:
-            return self.si.spark.createDataFrame(
-                [], "docid long, score float, rank int")
-        return global_topk(hits.select("docid", "score"), k)
+        hits = (self._search_flat(q, k).select("docid", "score")
+                if spec is None else self._kernel_plan({"": spec}))
+        return merge_topk(self.si.spark, hits, k)
 
     def _search_flat(self, q: A.Query, k: int) -> DataFrame:
-        """Fallback for trees with a node _tree has no case for:
-        exhaustive over decoded postings; positions are decoded from
-        the .pos stream only when the query needs them (phrase/span
-        shapes)."""
+        """The lazy fallback plan for trees with a node _tree has no
+        case for: exhaustive over decoded postings; positions are
+        decoded from the .pos stream only when the query needs them
+        (phrase/span shapes). search() merges its rows."""
         needs_pos = _any_node(q, lambda n: isinstance(
             n, _POSITIONAL + (A.SpanOrNQ,)))
         needs_offs = _any_node(q, lambda n: isinstance(n, A.PayloadScoreQ))
@@ -1689,7 +1712,7 @@ class WandSearcher:
         uniq = sorted(set(terms_))
         dfs = self._global_df(uniq)
         if any(dfs[t] == 0 for t in uniq):
-            return self.si.spark.createDataFrame([], "docid long, pfreq double")
+            return local_frame(self.si.spark, "docid long, pfreq double")
         bm25 = self.bm25
         slop_ = int(slop)
         idx_path = self.si.path
@@ -1709,15 +1732,16 @@ class WandSearcher:
 
     def search_many(self, queries: dict[str, A.Query | str],
                     k: int = 10) -> DataFrame:
-        """Batched serving: run MANY queries in ONE Spark job. Each
-        (segment, shard) task reads the union of its queries' term
-        postings once and runs each query's kernel — the per-query
-        job-scheduling overhead (the dominant latency at interactive
-        k) is amortized across the batch, which is how a Spark-based
-        search tier actually serves traffic (micro-batched
-        scatter-gather, EP2b's PURPOSE_GET_TOP_IDS phase for a whole
-        request window). Returns (qid, docid, score, rank), each
-        query's rows bit-equal to its own search().
+        """Batched serving: run MANY queries in ONE Spark job, when
+        search_many() is called. Each (segment, shard) task reads the
+        union of its queries' term postings once and runs each query's
+        kernel — the per-query job-scheduling overhead (the dominant
+        latency at interactive k) is amortized across the batch, which
+        is how a Spark-based search tier actually serves traffic
+        (micro-batched scatter-gather, EP2b's PURPOSE_GET_TOP_IDS phase
+        for a whole request window). The driver merges each query's
+        task rows (merge_topk) and returns (qid, docid, score, rank) as
+        a local frame, each query's rows bit-equal to its own search().
 
         Accepts every segment-native shape (see the class docstring);
         a shape that search() would route to the flat executor raises
@@ -1738,9 +1762,5 @@ class WandSearcher:
             specs[qid] = self._kernel_spec(q, k)
             if specs[qid] is None:
                 raise ValueError(f"query {qid!r} has no segment kernel")
-        hits = self._kernel_plan(specs)
-        if hits is None:
-            return self.si.spark.createDataFrame([], SEARCH_MANY_SCHEMA)
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (hits.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k))
+        return merge_topk(self.si.spark, self._kernel_plan(specs), k,
+                          by_qid=True)

@@ -65,8 +65,10 @@ def get_spark(
         # exchange: a 3-term AND over 8 segments ran 8x the single-task
         # time). A 1-byte floor keeps parallelism-first coalescing at
         # per-row granularity for small shuffles; large shuffles still
-        # coalesce to total/parallelism as before. The segment kernels
-        # themselves run without an exchange (wand._segment_tasks).
+        # coalesce to total/parallelism as before. No segment-tier
+        # search shuffles any more (a search or a search_many batch is
+        # one wand._segment_tasks stage, merged on the driver); only the
+        # flat _eval_positional and the index encoders still need this.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

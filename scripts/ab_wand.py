@@ -44,7 +44,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"label": label, "trials": TRIALS}
     ws = WandSearcher(SegmentIndex(path="/tmp/bench_wandidx_v18_40000",
-                                   spark=spark), preload_stats=True)
+                                   spark=spark))
     t0 = time.time()
     ws.search("t000001", k=10).collect()
     out["warmup"] = round(time.time() - t0, 3)

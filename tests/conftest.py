@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from lucene_solr_spark.session import get_spark
@@ -14,6 +16,29 @@ def spark():
     s = get_spark(app_name="lss-tests", cores=8, shuffle_partitions=8,
                   extra_conf={"spark.driver.memory": "4g"})
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_stages(spark):
+    """count(fn) -> (Spark jobs, their stages) that fn() starts, read
+    from the StatusTracker under a job group of its own once the
+    listener bus has drained."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(fn) -> tuple[int, int]:
+        group = f"count-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        return len(jobs), len({s for j in jobs
+                               for s in st.getJobInfo(j).stageIds})
+    return count
 
 
 @pytest.fixture(scope="session")

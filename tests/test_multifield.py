@@ -257,6 +257,31 @@ def test_multifield_wand_search_many(mf_seg, title_index, body_index):
         assert sorted(by_qid[qid]) == sorted(want), qid
 
 
+def test_multifield_wand_answers_are_local(mf_seg, jobs_stages):
+    """Empty answers (an empty batch, a qf query whose terms no field
+    holds) start no Spark job and keep the schemas of non-empty ones;
+    a batch over two fields answers with one local frame, whose
+    collect starts no job."""
+    from lucene_solr_spark.search.multifield import MultiFieldWandSearcher
+
+    mw = MultiFieldWandSearcher(mf_seg, default_field="body")
+    qf = {"title": 3.0, "body": 1.0}
+    out = {}
+
+    def run():
+        out["many"] = mw.search_many({}, k=5).collect()
+        out["qf"] = mw.search_qf("missingterm", qf, k=5).collect()
+
+    assert jobs_stages(run) == (0, 0)
+    assert out == {"many": [], "qf": []}
+    both = mw.search_many({"q1": "title:t000000", "q2": "body:t000001"}, k=5)
+    assert mw.search_many({}, k=5).dtypes == both.dtypes
+    assert mw.search_qf("missingterm", qf, k=5).dtypes == \
+        mw.search_qf("t000000", qf, k=5).dtypes
+    assert jobs_stages(both.collect) == (0, 0)
+    assert {r["qid"] for r in both.collect()} == {"q1", "q2"}
+
+
 @pytest.mark.parametrize("qstr,qf,tie,msm", [
     ("t000000 t000005", {"title": 3.0, "body": 1.0}, 0.0, 1),
     ("t000000 t000002 t000010", {"title": 2.0, "body": 1.0}, 0.0, 2),

@@ -9,8 +9,11 @@ is both safe (never changes results) and real (skips blocks).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lucene_solr_spark.functions.bm25 import BM25, length_norm_byte
 from lucene_solr_spark.index.codec import encode_posting
@@ -308,10 +311,18 @@ def test_search_rejects_k_below_one(seg_index, k):
         ws.search_many({"a": "t000001", "b": "t000001 AND t000002"}, k=k)
 
 
+def _kernel_plan_of(ws, queries: dict):
+    """The segment-task frame search()/search_many() collect for
+    ``queries`` (before the driver-side merge)."""
+    return ws._kernel_plan({qid: ws._kernel_spec(q.rewrite(), 10)
+                            for qid, q in queries.items()})
+
+
 def _assert_segment_task_plan(df) -> str:
     """The segment-task plan shape: exactly one MapInPandas, whose input
     is a Range (the task list), no grouped map, and nothing below the
-    MapInPandas — no FileScan, no Exchange. Returns the plan text."""
+    MapInPandas — no FileScan, no Exchange (a whole-stage-codegen
+    ``*(n)`` prefix is not a node). Returns the plan text."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan, plan
     lines = plan.splitlines()
@@ -324,7 +335,7 @@ def _assert_segment_task_plan(df) -> str:
         node = ln.lstrip(" :+-")
         if not node or len(ln) - len(node) <= col:
             break
-        below.append(node)
+        below.append(re.sub(r"^\*\(\d+\) ", "", node))
     assert len(below) == 1 and below[0].startswith("Range"), plan
     return plan
 
@@ -336,10 +347,54 @@ def test_segment_native_plan_one_grouped_map(seg_index, shape):
     kept so the test ids stay stable): each task reads its own metadata
     rows, so no grouped map, no postings FileScan and no Exchange feed
     the kernel, and no as_flat_tables full decode or fixed-width
-    repartition runs."""
-    df = WandSearcher(seg_index).search(SEGMENT_NATIVE_SHAPES[shape], k=10)
+    repartition runs. The plan is the kernel frame that search()
+    collects before its driver-side merge."""
+    df = _kernel_plan_of(WandSearcher(seg_index),
+                         {"": SEGMENT_NATIVE_SHAPES[shape]})
     plan = _assert_segment_task_plan(df)
     assert "REPARTITION_BY_NUM" not in plan
+
+
+def test_one_job_one_stage_per_search(seg_index, jobs_stages):
+    """Every segment-native shape's search() with a cold df cache is
+    ONE Spark job with one stage (the segment-task map; df is read on
+    the driver, top-k merges on the driver), and collecting its answer
+    starts no further job; a warm search_many batch of every shape is
+    one job with one stage too."""
+    ws = WandSearcher(seg_index)
+    for name, q in SEGMENT_NATIVE_SHAPES.items():
+        ws._df_cache.clear()
+        assert jobs_stages(lambda: ws.search(q, k=10).collect()) == (1, 1), \
+            name
+    batch = dict(SEGMENT_NATIVE_SHAPES)
+    ws.search_many(batch, k=10)
+    assert jobs_stages(
+        lambda: ws.search_many(batch, k=10).collect()) == (1, 1)
+
+
+def test_empty_answers_start_no_job(seg_index, jobs_stages):
+    """An answer known empty on the driver (an absent term, an empty
+    batch, a phrase with an absent term) starts no Spark job, with a
+    cold df cache, and keeps the schema of a non-empty answer."""
+    ws = WandSearcher(seg_index)
+    out = {}
+
+    def run():
+        out["one"] = ws.search("missingterm", k=10).collect()
+        out["many"] = ws.search_many({}, k=10).collect()
+        out["pf"] = ws.phrase_freqs(["t000001", "missingterm"]).collect()
+
+    assert jobs_stages(run) == (0, 0)
+    assert out == {"one": [], "many": [], "pf": []}
+    assert ws.search("missingterm", k=10).dtypes == \
+        ws.search("t000001", k=10).dtypes == \
+        [("docid", "bigint"), ("score", "float"), ("rank", "int")]
+    assert ws.search_many({}, k=10).dtypes == \
+        ws.search_many({"a": "t000001"}, k=10).dtypes == \
+        [("qid", "string"), ("docid", "bigint"), ("score", "float"),
+         ("rank", "int")]
+    assert ws.phrase_freqs(["t000001", "missingterm"]).dtypes == \
+        ws.phrase_freqs(["t000001", "t000002"]).dtypes
 
 
 def test_impact_frontier_tightens_bounds_safely():
@@ -478,7 +533,7 @@ def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
         assert a == b, q.key()
     fallback = shapes[3]
     assert ws._kernel_spec(fallback.rewrite(), 10) is None
-    plan = (ws.search(fallback, k=10)
+    plan = (ws._search_flat(fallback.rewrite(), 10)
             ._jdf.queryExecution().executedPlan().toString())
     assert "FileScan parquet" in plan and "/postings" in plan, plan  # flat decode
     # the restriction: one isin over exactly the query's terms
@@ -794,20 +849,27 @@ def test_boolean_topk_dispatch(monkeypatch):
     assert list(d1) == list(d2) and s1.tobytes() == s2.tobytes()
 
 
-def test_preload_stats_no_vocab_collect(seg_index, flat_searcher):
-    """Serving mode keeps the term dictionary in EXECUTOR memory: the
-    driver-side cache holds only queried terms afterwards (never the
-    O(vocabulary) dict the r2-r4 implementation collected), and
-    results are unchanged vs the non-preload searcher."""
-    ws = WandSearcher(seg_index, preload_stats=True)
+def test_preload_stats_no_vocab_collect(seg_index, flat_searcher,
+                                        jobs_stages):
+    """The df lookup reads only the queried terms' (term, df) rows, on
+    the driver: afterwards the driver-side cache holds only the queried
+    terms (never the O(vocabulary) dict the r2-r4 implementation
+    collected), the lookup starts no Spark job, its dfs equal the
+    index's term statistics, and results equal a fresh searcher's."""
+    ws = WandSearcher(seg_index)
+    terms = ["t000001", "t000002", "missingterm"]
+    got = {}
+    assert jobs_stages(lambda: got.update(ws._global_df(terms))) == (0, 0)
+    assert set(ws._df_cache) == set(terms)
+    exp = {r["term"]: r["df"] for r in seg_index.term_stats
+           .where(F.col("term").isin(terms)).collect()}
+    assert got == {t: exp.get(t, 0) for t in terms}
     a = _rows(ws.search("t000001 OR t000002", k=10))
-    assert set(ws._df_cache) == {"t000001", "t000002"}
-    assert ws._stats_df is not None and ws._stats_df.is_cached
     b = _rows(WandSearcher(seg_index).search("t000001 OR t000002", k=10))
     assert a == b
-    # repeat terms cost zero stats jobs (cache hit path)
+    # repeat terms read nothing new (cache hit path)
     ws.search("t000001", k=5).collect()
-    assert set(ws._df_cache) == {"t000001", "t000002"}
+    assert set(ws._df_cache) == set(terms)
 
 
 AUTOMATON_SHAPES = [
@@ -856,8 +918,8 @@ def test_synonym_blended_dismax_segment_native(seg_index, flat_searcher):
         a = _rows(ws.search(q, k=10))
         b = _rows(flat_searcher.search(q, k=10))
         assert a == b, q.key()
-    _assert_segment_task_plan(ws.search(shapes[0], k=10))
-    _assert_segment_task_plan(ws.search(shapes[4], k=10))
+    _assert_segment_task_plan(_kernel_plan_of(ws, {"": shapes[0]}))
+    _assert_segment_task_plan(_kernel_plan_of(ws, {"": shapes[4]}))
 
 
 def test_df_cache_is_bounded(seg_index, monkeypatch):
@@ -1074,9 +1136,8 @@ def test_random_tree_fold_duels_flat(seg_index, flat_searcher):
             out.setdefault(r["qid"], []).append(
                 (r["rank"], r["docid"], np.float32(r["score"]).tobytes()))
         return {qid: sorted(rows) for qid, rows in out.items()}
-    hits = ws.search_many(batch, k=10)
-    _assert_segment_task_plan(hits)
-    got = by_qid(hits)
+    _assert_segment_task_plan(_kernel_plan_of(ws, batch))
+    got = by_qid(ws.search_many(batch, k=10))
     exp = by_qid(flat_searcher.search_many(batch, k=10))
     assert len(exp) >= 12, "too few trees match anything"
     for qid in batch:

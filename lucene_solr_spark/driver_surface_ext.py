@@ -9,6 +9,7 @@ quantized doubles, deterministic tie-breaks).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -786,24 +787,23 @@ def _wand_quantized(spark, sf, q: A.Query, k: int = 10) -> DataFrame:
     score, hence <= its quantum) — or the fetch exhausted the matches.
     Otherwise re-fetch with a larger k. The k-row materialization here
     is driver-side by design (top-k results are tiny)."""
-    from lucene_solr_spark.search.wand import WandSearcher
+    from lucene_solr_spark.search.wand import WandSearcher, local_frame
 
     ws = WandSearcher(_seg_index(spark, sf))
     factor = 3
     while True:
-        hits = (ws.search(q, k=factor * k)
-                .withColumn("score_q",
-                            F.floor(F.col("score").cast("double") * Q)
-                            .cast("long"))
-                .orderBy(F.desc("score_q"), F.asc("docid"))
-                .select("docid", "score_q").collect())
+        # rank the <= factor*k local rows in Python: no Spark job
+        hits = sorted(((math.floor(float(r["score"]) * Q), int(r["docid"]))
+                       for r in ws.search(q, k=factor * k).collect()),
+                      key=lambda h: (-h[0], h[1]))
         if (len(hits) < factor * k or len(hits) <= k
-                or hits[k - 1]["score_q"] > hits[-1]["score_q"]):
+                or hits[k - 1][0] > hits[-1][0]):
             break
         factor *= 4  # quantization-band collision spans the window
-    rows = [(int(r["docid"]), int(r["score_q"]), i + 1)
-            for i, r in enumerate(hits[:k])]
-    return spark.createDataFrame(rows, "doc_id long, score_q long, rank long")
+    top = hits[:k]
+    return local_frame(spark, "doc_id long, score_q long, rank long", {
+        "doc_id": [d for _, d in top], "score_q": [s for s, _ in top],
+        "rank": list(range(1, len(top) + 1))})
 
 
 def _f32_topk_sql(terms: list[str], k: int = 10, having: str = "") -> str:

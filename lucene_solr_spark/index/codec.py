@@ -670,13 +670,15 @@ class GroupedPosting:
     prunes never cost payload IO (nor shuffle transfer).
     """
 
-    def __init__(self, rows: list[dict], fetch, pos_fetch=None):
+    def __init__(self, rows: list[dict], fetch, pos_fetch=None,
+                 offs_fetch=None):
         rows = sorted(rows, key=lambda r: int(r["grp_id"]))
         self._rows = rows
         self._fetch = fetch
         self.pos_fetch = pos_fetch      # grp_id -> pos_enc bytes (lazy)
+        self.offs_fetch = offs_fetch    # grp_id -> offs_enc bytes (lazy)
         self._eps: dict[int, EncodedPosting] = {}
-        self._pos_cache: dict[int, tuple] = {}
+        self._pos_cache: dict[tuple, tuple] = {}
         one = rows[0]
         sd = one["singleton_docid"]
         self.singleton_docid = (None if sd is None
@@ -765,15 +767,26 @@ class GroupedPosting:
         standalone (split_posting_to_rows re-encodes group slices with
         per-doc resets). The per-doc delta-cumsum is one segmented
         cumsum over the whole batch, no per-doc Python loop."""
-        if self.pos_fetch is None:
-            raise ValueError("GroupedPosting has no pos_fetch attached")
+        return self._flat(docids, self.pos_fetch, 1, "positions")
+
+    def offsets_flat(self, docids: np.ndarray) -> tuple[np.ndarray,
+                                                        np.ndarray]:
+        """positions_flat over the .pay stream (``offs_fetch``): START
+        offsets, every second vint of its [start delta, length] pairs."""
+        return self._flat(docids, self.offs_fetch, 2, "offsets")
+
+    def _flat(self, docids, fetch, stride: int,
+              what: str) -> tuple[np.ndarray, np.ndarray]:
+        if fetch is None:
+            raise ValueError(f"GroupedPosting has no {what} fetcher attached")
         docids = np.asarray(docids, dtype=np.int64)
         n = len(docids)
         if self.singleton_docid is not None:
-            blob = self.pos_fetch(int(self._rows[0]["grp_id"]))
+            blob = fetch(int(self._rows[0]["grp_id"]))
             if not blob:
-                raise ValueError("index was built without positions")
-            pos = np.cumsum(read_vints_arr(blob)[: int(self.blockmax_tf[0])])
+                raise ValueError(f"index was built without {what}")
+            pos = np.cumsum(read_vints_arr(blob)[::stride][
+                : int(self.blockmax_tf[0])])
             return (np.repeat(np.arange(n, dtype=np.int64), len(pos)),
                     np.tile(pos, n))
         glast = getattr(self, "_glast", None)
@@ -787,16 +800,16 @@ class GroupedPosting:
         parts_pos: list[np.ndarray] = []
         for g in np.unique(gi):
             g = int(g)
-            cached = self._pos_cache.get(g)
+            cached = self._pos_cache.get((what, g))
             if cached is None:
                 gdocs, gtfs = decode_posting(self._group_ep(g))
-                blob = self.pos_fetch(int(self._rows[g]["grp_id"]))
+                blob = fetch(int(self._rows[g]["grp_id"]))
                 if not blob:
-                    raise ValueError("index was built without positions")
-                vals = read_vints_arr(blob)
+                    raise ValueError(f"index was built without {what}")
+                vals = read_vints_arr(blob)[::stride]
                 starts = np.concatenate(([0], np.cumsum(gtfs)))
                 cached = (gdocs, gtfs, vals, starts)
-                self._pos_cache[g] = cached
+                self._pos_cache[(what, g)] = cached
             gdocs, gtfs, vals, starts = cached
             sel = np.nonzero(gi == g)[0]
             idxs = np.searchsorted(gdocs, docids[sel])

@@ -299,19 +299,12 @@ class SegmentIndex:
                 .orderBy("docid").limit(k))
 
     def as_flat_tables(self, with_positions: bool = False,
-                       terms: list[str] | None = None,
                        with_offsets: bool = False) -> IndexTables:
         """Adapter: view the segment index through the flat-index API
-        (decodes postings on the fly) — used by dueling tests and as
-        the phrase/span fallback path (positions decode from the .pos
-        stream, char offsets from the .pay-analogue offs_enc stream,
-        when the index stores them).
-
-        ``terms``: restrict the decode to these terms — a plain Column
-        filter that DOES reach the parquet scan (predicate pushdown
-        cannot cross the decode UDF, so the filter must sit below it).
-        term_stats/coll_stats stay index-global either way.
-        """
+        (decodes postings on the fly) — used by dueling tests and
+        driver queries (positions decode from the .pos stream, char
+        offsets from the .pay-analogue offs_enc stream, when the index
+        stores them)."""
         from lucene_solr_spark.index.codec import posting_from_row
 
         def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -359,10 +352,7 @@ class SegmentIndex:
             schema += ", positions array<int>"
         if with_offsets:
             schema += ", starts array<int>, ends array<int>"
-        src = self.postings
-        if terms is not None:
-            src = src.where(F.col("term").isin(list(terms)))
-        flat = src.mapInPandas(explode, schema=schema)
+        flat = self.postings.mapInPandas(explode, schema=schema)
         docs = self.docs
         out = IndexTables(
             docs=docs,
@@ -374,7 +364,7 @@ class SegmentIndex:
         # append/merge + refresh() can re-derive fresh tables (the
         # flat-engine analogue of WandSearcher._check_snapshot).
         out._segment_source = self
-        out._flat_args = dict(with_positions=with_positions, terms=terms,
+        out._flat_args = dict(with_positions=with_positions,
                               with_offsets=with_offsets)
         out._segment_snapshot = tuple(self.live_segments())
         return out

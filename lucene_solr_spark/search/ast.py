@@ -13,7 +13,9 @@ bare terms, quoted phrases).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
+
+from pyspark.sql import functions as F
 
 
 class ParseError(ValueError):
@@ -30,6 +32,14 @@ class Query:
         """Canonical clause-ordering key (used to fix float summation
         order deterministically — SURVEY §7 'float32 determinism')."""
         raise NotImplementedError
+
+    def nodes(self):
+        """This node and every Query below it, depth first."""
+        yield self
+        for v in (getattr(self, f.name) for f in fields(self)):
+            for c in v if isinstance(v, tuple) else (v,):
+                if isinstance(c, Query):
+                    yield from c.nodes()
 
 
 @dataclass(frozen=True)
@@ -388,13 +398,14 @@ class MultiTermQ(Query):
 
     Default rewrite is CONSTANT_SCORE_REWRITE: matching docs get
     score = boost regardless of tf (MultiTermQueryConstantScoreWrapper).
-    The executor expands matching terms against the term dictionary
-    (term_stats table) — the Spark analogue of FST/automaton
+    Both searchers expand the query against the term dictionary with
+    the one Column predicate ``term_predicate()`` (Java-regex rlike,
+    Spark levenshtein) — the Spark analogue of FST/automaton
     intersection (codecs/blocktree/IntersectTermsEnum.java).
     """
     boost: float = 1.0
 
-    def term_predicate(self):  # -> Column function over F.col("term")
+    def term_predicate(self):  # -> boolean Column over F.col("term")
         raise NotImplementedError
 
 
@@ -405,6 +416,9 @@ class PrefixQ(MultiTermQ):
 
     def key(self) -> str:
         return f"pre:{self.prefix}"
+
+    def term_predicate(self):
+        return F.col("term").startswith(self.prefix)
 
 
 @dataclass(frozen=True)
@@ -427,6 +441,9 @@ class WildcardQ(MultiTermQ):
                 out.append(re.escape(ch))
         return "^" + "".join(out) + "$"
 
+    def term_predicate(self):
+        return F.col("term").rlike(self.to_regex())
+
 
 @dataclass(frozen=True)
 class RegexpQ(MultiTermQ):
@@ -435,6 +452,9 @@ class RegexpQ(MultiTermQ):
 
     def key(self) -> str:
         return f"re:{self.regex}"
+
+    def term_predicate(self):
+        return F.col("term").rlike("^" + self.regex + "$")
 
 
 @dataclass(frozen=True)
@@ -449,6 +469,9 @@ class FuzzyQ(MultiTermQ):
     def key(self) -> str:
         return f"fz:{self.term}~{self.max_edits}"
 
+    def term_predicate(self):
+        return F.levenshtein(F.col("term"), F.lit(self.term)) <= self.max_edits
+
 
 @dataclass(frozen=True)
 class TermRangeQ(MultiTermQ):
@@ -462,6 +485,14 @@ class TermRangeQ(MultiTermQ):
     def key(self) -> str:
         return f"rng:{self.lower}..{self.upper}"
 
+    def term_predicate(self):
+        t, pred = F.col("term"), F.lit(True)
+        if self.lower is not None:
+            pred &= t >= self.lower if self.include_lower else t > self.lower
+        if self.upper is not None:
+            pred &= t <= self.upper if self.include_upper else t < self.upper
+        return pred
+
 
 @dataclass(frozen=True)
 class TermInSetQ(MultiTermQ):
@@ -471,6 +502,9 @@ class TermInSetQ(MultiTermQ):
 
     def key(self) -> str:
         return "in:" + ",".join(sorted(self.terms))
+
+    def term_predicate(self):
+        return F.col("term").isin(list(self.terms))
 
 
 # --- mini-language parser ------------------------------------------------

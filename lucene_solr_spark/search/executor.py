@@ -372,8 +372,6 @@ def _collect_terms(q: A.Query) -> set[str]:
     if isinstance(q, A.ConstQ):
         return _collect_terms(q.inner)
     # closed-set leaves that score from their own terms' postings
-    # (per-term df and coll_stats are index-global regardless of a
-    # term-restricted decode, so restriction preserves scores)
     if isinstance(q, (A.SynonymQ, A.BlendedTermQ)):
         return set(q.terms)
     if isinstance(q, A.SpanNearQ):
@@ -802,29 +800,9 @@ class Searcher:
         return agg.select("docid", "score")
 
     def _eval_multiterm(self, q: A.MultiTermQ) -> DataFrame:
-        """CONSTANT_SCORE_REWRITE: expand terms against the term
-        dictionary, union postings, dedup docids, constant score."""
-        t = F.col("term")
-        if isinstance(q, A.PrefixQ):
-            pred = t.startswith(q.prefix)
-        elif isinstance(q, A.WildcardQ):
-            pred = t.rlike(q.to_regex())
-        elif isinstance(q, A.RegexpQ):
-            pred = t.rlike("^" + q.regex + "$")
-        elif isinstance(q, A.FuzzyQ):
-            pred = F.levenshtein(t, F.lit(q.term)) <= q.max_edits
-        elif isinstance(q, A.TermRangeQ):
-            conds = []
-            if q.lower is not None:
-                conds.append(t >= q.lower if q.include_lower else t > q.lower)
-            if q.upper is not None:
-                conds.append(t <= q.upper if q.include_upper else t < q.upper)
-            pred = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-        elif isinstance(q, A.TermInSetQ):
-            pred = t.isin(list(q.terms))
-        else:
-            raise TypeError(type(q).__name__)
-        terms = self.index.term_stats.where(pred).select("term")
+        """CONSTANT_SCORE_REWRITE: expand terms (q.term_predicate) against
+        the term dictionary, union postings, dedup docids, constant score."""
+        terms = self.index.term_stats.where(q.term_predicate()).select("term")
 
         # broadcast the (small) expanded term set into the postings scan
         def build():

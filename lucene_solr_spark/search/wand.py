@@ -43,7 +43,8 @@ exchange before it; each task reads its own segment's metadata rows,
 payloads and norms (term-pruned parquet reads), decodes only blocks
 whose bound beats theta, and emits k rows per query. A search() or a
 search_many() batch is ONE Spark job with one stage (that task map),
-run when called; the driver reads global df itself (_global_df) and
+run when called (after one _expand job for multi-term leaves); the
+driver reads global df itself (_global_df) and
 merges the task rows in O(segments * k) into a local frame whose
 collect starts no job (merge_topk).
 """
@@ -71,7 +72,7 @@ from lucene_solr_spark.index.codec import (
 from lucene_solr_spark.index.segments import SegmentIndex
 from lucene_solr_spark.search import ast as A
 from lucene_solr_spark.search.executor import (
-    Searcher, _collect_terms, _union, automaton_freq, exact_phrase_freqs,
+    POSITIONAL, _collect_terms, _union, automaton_freq, exact_phrase_freqs,
     multiphrase_rpt_groups, phrase_weight, positional_idf_terms,
     sloppy_phrase_freq, span_near_match)
 from lucene_solr_spark.search.spannest import emit_spans, leaf_terms, slot_groups
@@ -933,6 +934,56 @@ def qf_dismax_topk(
     return top.result()
 
 
+def _payload_score(q: A.PayloadScoreQ, w: np.float32, bm25: BM25) -> Callable:
+    """PayloadScoreQuery as a _tree node, in Searcher._eval_payload_score's
+    order: the term's offset payloads folded per doc in f64, times its
+    f32 BM25 (weight ``w``) with include_span_score, times f32(boost)."""
+    if q.func not in ("min", "max", "sum", "avg"):
+        raise ValueError(f"unknown payload function {q.func!r}")
+    fold = {"min": np.minimum, "max": np.maximum}.get(q.func, np.add)
+    t, boost = q.term, np.float64(np.float32(q.boost))
+
+    def run(eps, norms, doc_base, stats):
+        if t not in eps:
+            return _no_hits()
+        d, tf = _decoded(eps[t], stats)
+        v = fold.reduceat(eps[t].offsets_flat(d)[1],
+                          np.cumsum(tf) - tf).astype(np.float64)
+        if q.func == "avg":
+            v /= tf
+        if q.include_span_score:
+            v *= bm25.score(np.full(len(d), w, np.float32), tf,
+                            norms[d - doc_base])
+        return d, (v * boost).astype(np.float32)
+    return run
+
+
+def _payload_check(q: A.SpanPayloadCheckQ) -> Callable:
+    """SpanPayloadCheckQuery as a _tree node at f32(boost):
+    exact_phrase_freqs over one pseudo-slot per span position holding
+    its term's occurrences whose offset payload matches."""
+    if len(q.terms) != len(q.payloads):
+        raise ValueError("SpanPayloadCheckQ needs one payload per "
+                         "span position")
+    slots = [(t, int(p)) for t, p in zip(q.terms, q.payloads)]
+    uniq, c = sorted(set(q.terms)), np.float32(q.boost)
+
+    def run(eps, norms, doc_base, stats):
+        if any(t not in eps for t in uniq):
+            return _no_hits()
+        docs = reduce(np.intersect1d,
+                      [_decoded(eps[t], stats)[0] for t in uniq])
+        flat = {}
+        for i, (t, p) in enumerate(slots):
+            (di, pos), pay = (eps[t].positions_flat(docs),
+                              eps[t].offsets_flat(docs)[1])
+            flat[i] = (di[pay == p], pos[pay == p])
+        hit = docs[exact_phrase_freqs([(i,) for i in range(len(slots))],
+                                      flat)[0]]
+        return hit, np.full(len(hit), c, np.float32)
+    return run
+
+
 # --- Spark orchestration ----------------------------------------------------
 
 
@@ -940,6 +991,7 @@ class KernelSpec(NamedTuple):
     """One query's segment kernel: the terms whose metadata rows it
     reads, and ``run(eps, norms, doc_base) -> (docids, scores)`` over
     one segment's postings (None when the query cannot match there).
+    A None ``run`` matches nothing (no job); a termless one still runs.
     ``bulk``: the kernel decodes every posting group anyway, so the
     task reads all payloads in one go."""
     terms: tuple[str, ...]
@@ -950,30 +1002,6 @@ class KernelSpec(NamedTuple):
 def _only(eps: dict, terms) -> dict:
     """The postings of ``terms`` that this segment has."""
     return {t: eps[t] for t in terms if t in eps}
-
-
-def _any_node(q: A.Query, pred) -> bool:
-    """True when ``pred`` holds for q or a node of its boolean tree
-    (span and phrase leaves are not descended into)."""
-    if pred(q):
-        return True
-    kids = ()
-    if isinstance(q, (A.AndQ, A.OrQ, A.DisMaxQ)):
-        kids = q.clauses
-    elif isinstance(q, A.NotQ):
-        kids = (q.positive, q.negative)
-    elif isinstance(q, A.ReqOptQ):
-        kids = (q.required, q.optional)
-    elif isinstance(q, A.ConstQ):
-        kids = (q.inner,)
-    return any(_any_node(c, pred) for c in kids)
-
-
-# the nodes WandSearcher._tree folds on the segment tier
-_POSITIONAL = (A.PhraseQ, A.MultiPhraseQ, A.SpanNearQ, A.SpanNearNQ,
-               A.TermAutomatonQ)
-_TREE_NODES = _POSITIONAL + (A.TermQ, A.SynonymQ, A.BlendedTermQ, A.AndQ,
-                             A.OrQ, A.DisMaxQ, A.NotQ, A.ReqOptQ, A.ConstQ)
 
 
 def check_k(k) -> int:
@@ -1165,12 +1193,12 @@ def _make_group_fetcher(idx_path: str, seg_id: int):
     return fetch
 
 
-def _make_pos_fetcher(idx_path: str, seg_id: int):
+def _make_pos_fetcher(idx_path: str, seg_id: int, column: str = "pos_enc"):
     """Lazy .pos payload reader (the .pos stream open of
-    ExactPhraseScorer): per-(term, group) point reads of the pos_enc
-    column only — docs/tfs payloads are NOT re-read, and groups whose
-    docs never reach the phrase's docid intersection cost no IO.
-    Shares the worker-global payload LRU under a "pos"-tagged key.
+    ExactPhraseScorer; offs_enc: the .pay stream): per-(term, group)
+    point reads of ``column`` only — docs/tfs payloads are NOT re-read,
+    and groups whose docs never reach the phrase's docid intersection
+    cost no IO. Shares the payload LRU under a column-tagged key.
 
     Adaptive readahead: the phrase sweep requests a term's groups in
     ascending order, so after the THIRD miss on the same term the
@@ -1188,7 +1216,7 @@ def _make_pos_fetcher(idx_path: str, seg_id: int):
         key = (term, grp)
         if key not in cache:
             hit = _lru_get(_PAYLOAD_CACHE,
-                           (idx_path, seg_id, term, grp, "pos"))
+                           (idx_path, seg_id, term, grp, column))
             if hit is not None:
                 cache[key] = hit
                 return hit
@@ -1198,15 +1226,15 @@ def _make_pos_fetcher(idx_path: str, seg_id: int):
                 filters.append(("grp_id", "<", grp + _POS_READAHEAD))
             t = pq.read_table(
                 f"{idx_path}/postings/seg_id={seg_id}",
-                columns=["term", "grp_id", "pos_enc"],
+                columns=["term", "grp_id", column],
                 filters=filters)
             for tm, g, p in zip(t["term"].to_pylist(),
                                 t["grp_id"].to_pylist(),
-                                t["pos_enc"].to_pylist()):
+                                t[column].to_pylist()):
                 blob = p if p is not None else b""
                 cache[(tm, int(g))] = blob
                 _lru_put(_PAYLOAD_CACHE,
-                         (idx_path, seg_id, tm, int(g), "pos"), blob,
+                         (idx_path, seg_id, tm, int(g), column), blob,
                          _PAYLOAD_CACHE_CELLS)
         return cache[key]
 
@@ -1257,10 +1285,12 @@ def _segment_postings(idx_path: str, seg_id: int, terms,
     if bulk:
         _prefetch_payloads(idx_path, seg_id, bulk, fetch.cache)
     pos_fetch = _make_pos_fetcher(idx_path, seg_id)
+    offs_fetch = _make_pos_fetcher(idx_path, seg_id, "offs_enc")
     out: dict[str, GroupedPosting] = {}
     for t, rows in rows_by_term.items():
         gp = GroupedPosting(rows, lambda g, t=t: fetch(t, g),
-                            pos_fetch=lambda g, t=t: pos_fetch(t, g))
+                            pos_fetch=lambda g, t=t: pos_fetch(t, g),
+                            offs_fetch=lambda g, t=t: offs_fetch(t, g))
         gp.cache_key = (idx_path, seg_id, t)
         out[t] = gp
     return out
@@ -1289,22 +1319,21 @@ def _load_seg_norms(idx_path: str, seg_id: int) -> tuple[np.ndarray, int]:
 class WandSearcher:
     """Segment-level top-k search with block-max WAND pruning.
 
-    Segment-native shapes, each a per-segment kernel that search()
-    runs alone and search_many() batches:
+    Every query but a FieldedQ (ValueError before any job;
+    MultiFieldWandSearcher strips it first) is a per-segment kernel
+    that search() runs alone and search_many() batches:
 
     - flat boolean: TermQ, AndQ/OrQ over unboosted terms (with
       min_should_match), NotQ whose negative side is a
       term/OR-of-terms (boolean_topk: the term fold or wand_topk);
     - PhraseQ and MultiPhraseQ, exact and sloppy (multiphrase_topk;
       a PhraseQ is single-term slots, as in phrase_topk);
-    - top-level SpanNearQ (span_near_topk) and nested SpanNearNQ
-      trees (span_nested_topk);
+    - top-level SpanNearQ (span_near_topk), nested SpanNearNQ trees
+      and a standalone SpanOrNQ (span_nested_topk);
     - TermAutomatonQ (automaton_topk);
-    - every other tree of boosted terms, SynonymQ, BlendedTermQ,
-      AndQ, OrQ (msm), DisMaxQ, NotQ, ReqOptQ, ConstQ and the
-      positional leaves above, at any depth (_tree: one recursive
-      fold over the segment's decoded postings, BooleanWeight's
-      per-leaf scorer tree).
+    - any other tree (MultiTermQ leaves expand in one job per call,
+      _expand; _tree: one recursive fold over the segment's decoded
+      postings, BooleanWeight's per-leaf scorer tree).
 
     The block-grid kernels (wand_topk, the phrase, span and automaton
     kernels, and MultiFieldWandSearcher's qf_dismax_topk) share one
@@ -1313,11 +1342,6 @@ class WandSearcher:
     tests are the positional match layer of executor.py (and
     spannest.emit_spans), which the flat executor runs too. The tree
     fold decodes whole postings.
-
-    Anything else (multi-term, MatchAll, payload and fielded shapes
-    anywhere in the tree, a standalone SpanOrNQ) falls back in
-    search() to the exhaustive flat executor over decoded postings
-    (same scores, no pruning).
     """
 
     def __init__(self, si: SegmentIndex, k1: float = 1.2, b: float = 0.75,
@@ -1417,50 +1441,52 @@ class WandSearcher:
 
     def search(self, q: A.Query | str, k: int = 10) -> DataFrame:
         """Top-k (docid, score, rank) of one query, as a local frame:
-        a segment-native shape (see the class docstring) runs its
-        kernel in ONE Spark job when search() is called, one task per
-        segment (_kernel_plan), and the driver merges the rows
-        (merge_topk); other shapes run the flat executor fallback,
-        merged the same way."""
+        its kernel runs in ONE Spark job when search() is called (after
+        one _expand job for multi-term leaves), one task per segment
+        (_kernel_plan), and the driver merges the rows (merge_topk)."""
         k = check_k(k)
+        return merge_topk(self.si.spark,
+                          self._kernel_plan(self._specs({"": q}, k)), k)
+
+    def _specs(self, queries: dict[str, A.Query | str],
+               k: int) -> dict[str, KernelSpec]:
+        """Parse, rewrite and compile a batch (one df lookup, one
+        _expand); a FieldedQ raises ValueError before any job."""
         self._check_snapshot()
-        if isinstance(q, str):
-            q = A.parse_query(q)
-        q = q.rewrite()
-        spec = self._kernel_spec(q, k)
-        hits = (self._search_flat(q, k).select("docid", "score")
-                if spec is None else self._kernel_plan({"": spec}))
-        return merge_topk(self.si.spark, hits, k)
+        parsed = {qid: (A.parse_query(q) if isinstance(q, str) else q)
+                  .rewrite() for qid, q in queries.items()}
+        nodes = [n for q in parsed.values() for n in q.nodes()]
+        if any(isinstance(n, A.FieldedQ) for n in nodes):
+            raise ValueError("a FieldedQ needs MultiFieldWandSearcher")
+        self._global_df(sorted(set().union(*map(_collect_terms,
+                                                parsed.values()))))
+        expanded = self._expand(nodes)
+        return {qid: self._kernel_spec(q, k, expanded)
+                for qid, q in parsed.items()}
 
-    def _search_flat(self, q: A.Query, k: int) -> DataFrame:
-        """The lazy fallback plan for trees with a node _tree has no
-        case for: exhaustive over decoded postings; positions are
-        decoded from the .pos stream only when the query needs them
-        (phrase/span shapes). search() merges its rows."""
-        needs_pos = _any_node(q, lambda n: isinstance(
-            n, _POSITIONAL + (A.SpanOrNQ,)))
-        needs_offs = _any_node(q, lambda n: isinstance(n, A.PayloadScoreQ))
-        # term-restricted decode is only valid when the term set is
-        # closed (multi-term queries expand against the dictionary;
-        # Synonym/Blended/SpanNear leaves are closed — their terms
-        # come back from _collect_terms, and df/coll stats stay
-        # index-global under restriction)
-        expands = _any_node(q, lambda n: isinstance(
-            n, (A.MultiTermQ, A.MatchAllQ)))
-        qterms = None if expands else (sorted(_collect_terms(q)) or None)
-        flat = self.si.as_flat_tables(with_positions=needs_pos,
-                                      terms=qterms,
-                                      with_offsets=needs_offs)
-        return Searcher(flat, mode="lucene").search(q, k=k)
+    def _expand(self, nodes) -> dict:
+        """{leaf: expanded terms} of the MultiTermQs among ``nodes``, by
+        ONE one-stage scan of the live postings' term column filtered by
+        the OR of their term_predicate (prefix/range/in-set push down)."""
+        leaves = list(dict.fromkeys(
+            n for n in nodes if isinstance(n, A.MultiTermQ)))
+        if not leaves:
+            return {}
+        preds = [q.term_predicate() for q in leaves]
+        rows = self.si.postings.where(reduce(lambda a, b: a | b, preds)).select(
+            "term", *[p.alias(f"m{i}") for i, p in enumerate(preds)]).collect()
+        return {q: tuple(sorted({r["term"] for r in rows if r[f"m{i}"]}))
+                for i, q in enumerate(leaves)}
 
-    def _kernel_spec(self, q: A.Query, k: int) -> KernelSpec | None:
-        """The segment kernel of a rewritten query, or None when the
-        shape has none (flat fallback): a top-level positional shape
-        keeps its pruning kernel, a flat term AND/OR/NOT takes
-        boolean_topk, and any other tree the _tree fold. A spec with no
-        terms can match nothing. Every kernel scores bit-equal to the
-        flat executor's evaluator of the same shape (duel-tested); the
-        positional ones share its match rules and positional_idf_terms."""
+    def _kernel_spec(self, q: A.Query, k: int,
+                     expanded: dict | None = None) -> KernelSpec:
+        """The segment kernel of a rewritten query (a None run matches
+        nothing): a top-level positional shape keeps its pruning kernel,
+        a flat term AND/OR/NOT takes boolean_topk, and any other tree
+        the _tree fold (``expanded``: _expand's answer, computed when
+        None). Every kernel scores bit-equal to the flat executor's
+        evaluator of the same shape (duel-tested); the positional ones
+        share its match rules and positional_idf_terms."""
         bm25 = self.bm25
         k = int(k)
         nothing = KernelSpec((), None)
@@ -1482,10 +1508,10 @@ class WandSearcher:
                 lambda eps, norms, doc_base: multiphrase_topk(
                     slots, eps, weight, norms, doc_base, bm25, k=k,
                     slop=slop, groups=groups, multi_term=multi_term))
-        if isinstance(q, (A.SpanNearQ, A.SpanNearNQ)):
+        if isinstance(q, (A.SpanNearQ, A.SpanNearNQ, A.SpanOrNQ)):
             # constant-score span kernels: per-segment early
             # termination at k matches is exact (lowest docids win)
-            nested = isinstance(q, A.SpanNearNQ)
+            nested = not isinstance(q, A.SpanNearQ)
             terms = sorted(leaf_terms(q) if nested else {q.first, q.second})
             dfs = self._global_df(terms)
             present = tuple(t for t in terms if dfs[t] > 0)
@@ -1517,15 +1543,7 @@ class WandSearcher:
                                              doc_base, bm25, k=k))
         shape = self._flat_terms(q)
         if shape is None:
-            tree = self._tree(q)
-            if tree is None:
-                return None
-
-            def run_tree(eps, norms, doc_base):
-                top = _TopK(k)
-                top.push(*tree[1](eps, norms, doc_base, WandStats()))
-                return top.result()
-            return KernelSpec(tree[0], run_tree, bulk=True)
+            return self._tree(q, k, expanded)
         terms, msm, neg_terms = shape
         dfs = self._global_df(terms + neg_terms)
         present = tuple(sorted({t for t in terms if dfs[t] > 0}))
@@ -1546,20 +1564,21 @@ class WandSearcher:
                                 k=k, msm=msm, exclude=exclude)
         return KernelSpec(present + negs, run_boolean)
 
-    def _tree(self, q: A.Query) -> tuple[tuple[str, ...], Callable] | None:
-        """Compile a rewritten query tree to ``(terms, run)``:
-        ``run(eps, norms, doc_base, stats)`` returns every match of the
-        tree in one segment as (docids ascending, f32 scores), folded
-        node by node exactly as executor.Searcher._eval folds it
-        (duel-tested). None when some node has no case here
-        (_TREE_NODES), which leaves the query to the flat fallback."""
-        if _any_node(q, lambda n: not isinstance(n, _TREE_NODES)):
-            return None
+    def _tree(self, q: A.Query, k: int,
+              expanded: dict | None = None) -> KernelSpec:
+        """Compile a rewritten query tree to a bulk KernelSpec (top k
+        per segment). Each node compiles to ``run(eps, norms,
+        doc_base, stats)`` -> every match of its subtree as (docids
+        ascending, f32 scores), folded exactly as Searcher._eval folds
+        it (duel-tested). No present term and no MatchAllQ: run None."""
+        if expanded is None:
+            expanded = self._expand(q.nodes())
         dfs = self._global_df(sorted(_collect_terms(q)))
         bm25, n_docs = self.bm25, int(self.coll["doc_count"])
+        tree_terms: set[str] = {t for t in dfs if dfs[t] > 0}
 
         def node(q: A.Query) -> Callable:
-            if isinstance(q, _POSITIONAL):
+            if isinstance(q, POSITIONAL):
                 # the leaf's own kernel, asked for every match
                 leaf = self._kernel_spec(q, n_docs).run or (lambda *_: None)
 
@@ -1580,6 +1599,26 @@ class WandSearcher:
                     d, s = _term_hits(eps[t], w, norms, doc_base, bm25, stats)
                     return d, _boost(s, boost)
                 return run
+            if isinstance(q, A.MultiTermQ):
+                # CONSTANT_SCORE_REWRITE: the expanded terms' docids
+                terms, c = expanded[q], np.float32(q.boost)
+                tree_terms.update(terms)
+
+                def run(eps, norms, doc_base, stats):
+                    d = _union([_decoded(eps[t], stats)[0]
+                                for t in terms if t in eps])
+                    return d, np.full(len(d), c, np.float32)
+                return run
+            if isinstance(q, A.MatchAllQ):
+                # no deletes: the segment's docid range
+                c = np.float32(q.boost)
+                return lambda eps, norms, doc_base, stats: (
+                    np.arange(doc_base, doc_base + len(norms)),
+                    np.full(len(norms), c, np.float32))
+            if isinstance(q, A.PayloadScoreQ):
+                return _payload_score(q, bm25.term_weight(dfs[q.term]), bm25)
+            if isinstance(q, A.SpanPayloadCheckQ):
+                return _payload_check(q)
             if isinstance(q, (A.SynonymQ, A.BlendedTermQ)):
                 # one weight from the blended df (max over the terms)
                 terms = sorted(t for t in set(q.terms) if dfs[t] > 0)
@@ -1623,6 +1662,9 @@ class WandSearcher:
                     d = inner(eps, norms, doc_base, stats)[0]
                     return d, np.full(len(d), c, np.float32)
                 return run
+            if not isinstance(q, (A.AndQ, A.OrQ, A.DisMaxQ)):
+                raise ValueError(f"{type(q).__name__} has no single-field "
+                                 "segment case")
             # AndQ / OrQ / DisMaxQ: clauses in sorted key order; only
             # the flat OR orders equal-key clauses by score (one group)
             kids = sorted(q.clauses, key=lambda c: c.key())
@@ -1641,14 +1683,23 @@ class WandSearcher:
                 return _fold([[hits[i] for i in g] for g in groups], need, tie)
             return run
 
-        return tuple(t for t in sorted(dfs) if dfs[t] > 0), node(q)
+        tree = node(q)
+        if not tree_terms and not any(isinstance(n, A.MatchAllQ)
+                                      for n in q.nodes()):
+            return KernelSpec((), None)
+
+        def run_tree(eps, norms, doc_base):
+            top = _TopK(k)
+            top.push(*tree(eps, norms, doc_base, WandStats()))
+            return top.result()
+        return KernelSpec(tuple(sorted(tree_terms)), run_tree, bulk=True)
 
     def _kernel_plan(self, specs: dict[str, KernelSpec]) -> DataFrame | None:
         """Run segment kernels through _segment_tasks: one task per
         (live segment, shard) that reads the metadata rows of its
         specs' terms and runs its specs in turn. Returns (qid, docid,
         score), at most k rows per (query, segment), or None when no
-        spec can match.
+        spec can match (every run is None).
 
         Specs are dealt round-robin (sorted qids) over
         ceil(parallelism / live segments) shards, capped by their
@@ -1657,7 +1708,7 @@ class WandSearcher:
         serves: lazy per group for one pruning kernel, one bulk read
         for several specs or an exhaustive kernel, which decode
         every group anyway."""
-        specs = {qid: s for qid, s in specs.items() if s.terms}
+        specs = {qid: s for qid, s in specs.items() if s.run is not None}
         segs = self.si.live_segments()
         if not specs or not segs:
             return None
@@ -1674,13 +1725,9 @@ class WandSearcher:
             eps = _segment_postings(idx_path, sid,
                                     {t for _, s in mine for t in s.terms},
                                     bulk_all=bulk)
-            if not eps:
-                return None
             norms, doc_base = _load_seg_norms(idx_path, sid)
             out_q, out_d, out_s = [], [], []
             for qid, spec in mine:
-                if not any(t in eps for t in spec.terms):
-                    continue
                 hit = spec.run(eps, norms, doc_base)
                 if hit is None:
                     continue
@@ -1732,35 +1779,13 @@ class WandSearcher:
 
     def search_many(self, queries: dict[str, A.Query | str],
                     k: int = 10) -> DataFrame:
-        """Batched serving: run MANY queries in ONE Spark job, when
-        search_many() is called. Each (segment, shard) task reads the
-        union of its queries' term postings once and runs each query's
-        kernel — the per-query job-scheduling overhead (the dominant
-        latency at interactive k) is amortized across the batch, which
-        is how a Spark-based search tier actually serves traffic
-        (micro-batched scatter-gather, EP2b's PURPOSE_GET_TOP_IDS phase
-        for a whole request window). The driver merges each query's
-        task rows (merge_topk) and returns (qid, docid, score, rank) as
-        a local frame, each query's rows bit-equal to its own search().
-
-        Accepts every segment-native shape (see the class docstring);
-        a shape that search() would route to the flat executor raises
-        ValueError.
-        """
+        """Batched serving (micro-batched scatter-gather, EP2b's
+        PURPOSE_GET_TOP_IDS phase for a request window): every shape
+        search() accepts, in ONE Spark job (plus one expansion job when
+        a query holds multi-term leaves), each (segment, shard) task
+        reading its queries' postings once; the driver merges each
+        query's rows (merge_topk) into a local frame of (qid, docid,
+        score, rank), bit-equal to per-query search()."""
         k = check_k(k)
-        self._check_snapshot()
-        parsed = {qid: (A.parse_query(q) if isinstance(q, str) else q)
-                  .rewrite() for qid, q in queries.items()}
-        # one df lookup for the whole batch; the per-query specs below
-        # then hit the df cache
-        all_terms = sorted(set().union(*map(_collect_terms,
-                                            parsed.values())))
-        if all_terms:
-            self._global_df(all_terms)
-        specs = {}
-        for qid, q in parsed.items():
-            specs[qid] = self._kernel_spec(q, k)
-            if specs[qid] is None:
-                raise ValueError(f"query {qid!r} has no segment kernel")
-        return merge_topk(self.si.spark, self._kernel_plan(specs), k,
-                          by_qid=True)
+        return merge_topk(self.si.spark, self._kernel_plan(
+            self._specs(queries, k)), k, by_qid=True)

@@ -70,3 +70,21 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert "docid" in df.columns and "score" in df.columns
+
+
+def test_wand_quantized_ranks_on_the_driver(spark, jobs_stages):
+    """_wand_quantized ranks its at most factor*k collected rows in
+    Python and answers with a local frame: a warm call plus collect
+    starts no job beyond those of WandSearcher(si) and one
+    search(q, k=3k).collect() (a Spark sort over the local answer
+    costs ~3 jobs of its own)."""
+    from lucene_solr_spark import driver_surface_ext as ext
+    from lucene_solr_spark.search import ast as A
+    from lucene_solr_spark.search.wand import WandSearcher
+
+    q = A.OrQ((A.TermQ("scan"), A.TermQ("slow"), A.TermQ("merge")))
+    ext._wand_quantized(spark, SF_DIR, q).collect()
+    si = ext._seg_index(spark, SF_DIR)
+    base = jobs_stages(lambda: WandSearcher(si).search(q, k=30).collect())
+    got = jobs_stages(lambda: ext._wand_quantized(spark, SF_DIR, q).collect())
+    assert got[0] <= base[0], (got, base)

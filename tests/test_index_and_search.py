@@ -1277,22 +1277,70 @@ def test_payload_score_functions(spark, offsets_index_tiny):
         assert abs(got[d] - float(np.max(a)) * base[d]) < 1e-9
 
 
-def test_payload_score_wand_fallback(spark, pages_tiny, tmp_path_factory):
-    """PayloadScoreQ over the segment index routes through the
-    offsets-enabled flat fallback (term-restricted) and matches the
-    flat evaluation."""
+@pytest.fixture(scope="module")
+def offsets_seg_index(pages_tiny, tmp_path_factory):
     from lucene_solr_spark.index.segments import build_segment_index
+
+    path = str(tmp_path_factory.mktemp("payidx") / "idx")
+    return build_segment_index(pages_tiny, path, seg_size=128,
+                               store_offsets=True)
+
+
+def _f32_bits(df) -> list:
+    return [(r["docid"], np.float32(r["score"]).tobytes())
+            for r in sorted(df.collect(), key=lambda r: r["rank"])]
+
+
+def test_payload_score_wand_fallback(offsets_seg_index, jobs_stages):
+    """PayloadScoreQ over the segment index runs on the segment tier
+    (the .pay stream read task-side, one job with one stage) and is
+    bit-equal (docid and float32 score bits) to the flat evaluation
+    for each payload function, with and without include_span_score."""
     from lucene_solr_spark.search import ast as A
     from lucene_solr_spark.search.executor import Searcher
     from lucene_solr_spark.search.wand import WandSearcher
 
-    path = str(tmp_path_factory.mktemp("payidx") / "idx")
-    si = build_segment_index(pages_tiny, path, seg_size=128,
-                             store_offsets=True)
-    q = A.PayloadScoreQ("t000002", func="avg")
-    a = [(r["docid"], round(float(r["score"]), 6)) for r in
-         WandSearcher(si).search(q, k=10).orderBy("rank").collect()]
+    si = offsets_seg_index
+    ws = WandSearcher(si)
     flat = Searcher(si.as_flat_tables(with_offsets=True), mode="lucene")
-    b = [(r["docid"], round(float(r["score"]), 6)) for r in
-         flat.search(q, k=10).orderBy("rank").collect()]
-    assert a == b and len(a) > 0
+    for func in ("min", "max", "sum", "avg"):
+        for span in (False, True):
+            q = A.PayloadScoreQ("t000002", func=func, include_span_score=span,
+                                boost=1.3)
+            a = _f32_bits(ws.search(q, k=10))
+            assert a == _f32_bits(flat.search(q, k=10)) and len(a) > 0, \
+                (func, span)
+    assert jobs_stages(lambda: ws.search(q, k=10).collect()) == (1, 1)
+
+
+def test_span_payload_check_segment_tier(offsets_seg_index, jobs_stages):
+    """SpanPayloadCheckQ through WandSearcher.search on an offsets index
+    (it raised "needs a payloads column or an index built with offsets"
+    when it took the positions-only flat fallback): with the start
+    offsets of an adjacent pair found in the data the answer is
+    non-empty, and it is bit-equal to the flat executor over the
+    positions+offsets tables; a mismatching payload gives the same
+    empty answer on both. One job with one stage."""
+    from lucene_solr_spark.search import ast as A
+    from lucene_solr_spark.search.executor import Searcher
+    from lucene_solr_spark.search.wand import WandSearcher
+
+    si = offsets_seg_index
+    flat_t = si.as_flat_tables(with_positions=True, with_offsets=True)
+    occ = {}
+    for r in flat_t.postings.where(F.col("term").isin(
+            ["t000000", "t000001", "t000002"])).collect():
+        for p, st in zip(r["positions"], r["starts"]):
+            occ[(r["docid"], p)] = (r["term"], st)
+    (d, p), (t1, s1) = next((dp, v) for dp, v in sorted(occ.items())
+                            if (dp[0], dp[1] + 1) in occ)
+    t2, s2 = occ[(d, p + 1)]
+    ws = WandSearcher(si)
+    flat = Searcher(flat_t, mode="lucene")
+    q = A.SpanPayloadCheckQ((t1, t2), (s1, s2), boost=2.0)
+    a = _f32_bits(ws.search(q, k=50))
+    assert a == _f32_bits(flat.search(q, k=50)) and d in [x for x, _ in a]
+    miss = A.SpanPayloadCheckQ((t1, t2), (s1, s2 + 1))
+    assert _f32_bits(ws.search(miss, k=10)) == \
+        _f32_bits(flat.search(miss, k=10)) == []
+    assert jobs_stages(lambda: ws.search(q, k=10).collect()) == (1, 1)

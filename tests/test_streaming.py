@@ -415,8 +415,8 @@ def test_topic_stream_checkpointed(spark, pages_tiny, tmp_path_factory):
             self.si = si
 
         def matches(self, q):
-            return Searcher(self.si.as_flat_tables(
-                terms=["t000001"]), mode="sql").matches(q)
+            return Searcher(self.si.as_flat_tables(),
+                            mode="sql").matches(q)
 
     from lucene_solr_spark.search import ast as A
 

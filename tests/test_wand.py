@@ -9,6 +9,7 @@ is both safe (never changes results) and real (skips blocks).
 
 from __future__ import annotations
 
+import dataclasses
 import re
 
 import numpy as np
@@ -52,7 +53,7 @@ def flat_searcher(tiny_index):
 
 def _rows(df):
     return [(r["docid"], np.float32(r["score"])) for r in
-            df.select("docid", "score").orderBy("rank").collect()]
+            sorted(df.collect(), key=lambda r: r["rank"])]
 
 
 @pytest.mark.parametrize("q", QUERIES)
@@ -258,6 +259,24 @@ SEGMENT_NATIVE_SHAPES = {
                     A.TermQ("t000002"))),
     "span_in_or": A.OrQ((A.SpanNearQ("t000001", "t000002", slop=2),
                          A.TermQ("t000100"))),
+    "span_or": A.SpanOrNQ(("t000001", "t000002"), boost=1.5),
+    "match_all_not": A.NotQ(A.MatchAllQ(boost=0.7), A.TermQ("t000300")),
+}
+
+# the shapes that took the flat fallback before every node had a _tree
+# case: the six multi-term leaves (constant score f32(boost)), a pure
+# negative query, a standalone SpanOr and a multi-term leaf in an OR
+FORMER_FALLBACK_SHAPES = {
+    "prefix": A.PrefixQ("t00000", boost=2.5),
+    "wildcard": A.WildcardQ("t00001?"),
+    "regexp": A.RegexpQ("t0000[12]."),
+    "fuzzy": A.FuzzyQ("t000001", max_edits=1, boost=0.7),
+    "range": A.TermRangeQ("t000010", "t000020", include_upper=False),
+    "in_set": A.TermInSetQ(("t000003", "t004999", "missingterm")),
+    "not_all": A.parse_query("*:* -t000300"),
+    "span_or": A.SpanOrNQ(("t000001", A.SpanNearNQ(("t000002", "t000003"),
+                                                   slop=3))),
+    "prefix_or_term": A.OrQ((A.PrefixQ("t00000"), A.TermQ("t000100"))),
 }
 
 
@@ -288,14 +307,98 @@ def test_search_many_matches_individual(seg_index):
     assert "none" not in got
 
 
-def test_search_many_rejects_non_wand(seg_index):
-    """Shapes without a segment kernel (a multi-term leaf anywhere in
-    the tree takes the flat fallback in search()) are refused by
-    search_many."""
+def _bits_by_qid(df) -> dict:
+    out: dict = {}
+    for r in df.collect():
+        out.setdefault(r["qid"], []).append(
+            (r["rank"], r["docid"], np.float32(r["score"]).tobytes()))
+    return {qid: sorted(rows) for qid, rows in out.items()}
+
+
+def test_search_many_batches_former_fallback_shapes(seg_index, flat_searcher,
+                                                    jobs_stages):
+    """Every shape that once took the flat fallback batches in ONE
+    search_many: warm, one multi-term expansion job plus the kernel
+    job, each one stage (a SegmentIndex handle's first postings scan
+    adds one parquet schema job), and each query's rows bit-equal
+    (docid and float32 score bits) to its own search() and to the flat
+    executor. A FieldedQ is the one node the single-field searcher
+    refuses: ValueError before any job, even beside a multi-term
+    leaf."""
     ws = WandSearcher(seg_index)
-    expanding = A.OrQ((A.PrefixQ("t00000"), A.TermQ("t000100")))
-    with pytest.raises(ValueError):
-        ws.search_many({"n": expanding})
+    batch = dict(FORMER_FALLBACK_SHAPES)
+    ws.search_many(batch, k=10)
+    got: dict = {}
+    assert jobs_stages(lambda: got.update(
+        _bits_by_qid(ws.search_many(batch, k=10)))) == (2, 2)
+    exp = _bits_by_qid(flat_searcher.search_many(batch, k=10))
+    assert set(got) == set(exp) == set(batch)
+    for qid, q in batch.items():
+        single = sorted((r["rank"], r["docid"],
+                         np.float32(r["score"]).tobytes())
+                        for r in ws.search(q, k=10).collect())
+        assert got.get(qid, []) == single == exp.get(qid, []), qid
+    fielded = A.FieldedQ("title", A.PrefixQ("t00000"))
+
+    def refused():
+        with pytest.raises(ValueError, match="FieldedQ"):
+            ws.search(fielded, k=10)
+        with pytest.raises(ValueError, match="FieldedQ"):
+            ws.search_many({"f": A.OrQ((fielded, A.TermQ("t000001"))),
+                            "p": A.PrefixQ("t00000")}, k=10)
+    assert jobs_stages(refused) == (0, 0)
+
+
+# one instance of every concrete ast.Query node
+NODE_EXAMPLES = [
+    A.TermQ("t000001"), A.MatchAllQ(), A.PhraseQ(("t000001", "t000002")),
+    A.MultiPhraseQ((("t000001",), ("t000002", "t000003"))),
+    A.AndQ((A.TermQ("t000001"), A.TermQ("t000002"))),
+    A.OrQ((A.TermQ("t000001"), A.TermQ("t000002"))),
+    A.NotQ(A.TermQ("t000001"), A.TermQ("t000002")),
+    A.DisMaxQ((A.TermQ("t000001"), A.TermQ("t000002")), tie_breaker=0.1),
+    A.SynonymQ(("t000001", "t000002")),
+    A.BlendedTermQ(("t000001", "t000002")),
+    A.ReqOptQ(A.TermQ("t000001"), A.TermQ("t000002")),
+    A.SpanNearQ("t000001", "t000002", slop=1),
+    A.SpanOrNQ(("t000001", "t000002")),
+    A.SpanNearNQ(("t000001", "t000002"), slop=1),
+    A.PayloadScoreQ("t000001"),
+    A.SpanPayloadCheckQ(("t000001", "t000002"), (0, 8)),
+    A.TermAutomatonQ(((0, 1, "t000001"), (1, 2, "t000002")), (2,)),
+    A.ConstQ(A.TermQ("t000001"), boost=2.0),
+    A.FieldedQ("title", A.TermQ("t000001")),
+    A.PrefixQ("t00000"), A.WildcardQ("t00000?"), A.RegexpQ("t00000."),
+    A.FuzzyQ("t000001", max_edits=1), A.TermRangeQ("t000001", "t000003"),
+    A.TermInSetQ(("t000001", "t000002")),
+]
+
+
+def test_every_query_node_compiles_to_a_segment_spec(seg_index, jobs_stages):
+    """Node-coverage guard: every concrete ast.Query subclass (walked
+    recursively from ast.Query, so a new node type fails here until it
+    has a segment case) compiles through _kernel_spec to a runnable
+    spec, except FieldedQ, which raises ValueError without starting a
+    job."""
+    concrete, todo = set(), [A.Query]
+    while todo:
+        for sub in todo.pop().__subclasses__():
+            todo.append(sub)
+            if dataclasses.is_dataclass(sub):
+                concrete.add(sub)
+    assert {type(q) for q in NODE_EXAMPLES} == concrete
+    ws = WandSearcher(seg_index)
+    for q in NODE_EXAMPLES:
+        if isinstance(q, A.FieldedQ):
+            continue
+        spec = ws._kernel_spec(q.rewrite(), 10)
+        assert isinstance(spec, W.KernelSpec) and spec.run is not None, q
+    fielded = next(q for q in NODE_EXAMPLES if isinstance(q, A.FieldedQ))
+
+    def refused():
+        with pytest.raises(ValueError, match="FieldedQ"):
+            ws._kernel_spec(fielded.rewrite(), 10)
+    assert jobs_stages(refused) == (0, 0)
 
 
 @pytest.mark.parametrize("k", [0, -1, 2.5, True])
@@ -314,8 +417,7 @@ def test_search_rejects_k_below_one(seg_index, k):
 def _kernel_plan_of(ws, queries: dict):
     """The segment-task frame search()/search_many() collect for
     ``queries`` (before the driver-side merge)."""
-    return ws._kernel_plan({qid: ws._kernel_spec(q.rewrite(), 10)
-                            for qid, q in queries.items()})
+    return ws._kernel_plan(ws._specs(queries, 10))
 
 
 def _assert_segment_task_plan(df) -> str:
@@ -511,13 +613,13 @@ def test_multiphrase_duels_flat(seg_index, flat_searcher, slots, slop):
 
 
 def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
-    """Synonym, Blended and a SpanNear inside an OR run the segment
-    tree fold; a standalone SpanOrNQ inside an OR has no segment case
-    and goes through the exhaustive flat fallback with a
-    TERM-RESTRICTED decode (closed term set). All four duel the flat
-    executor, and the fallback's plan filters the postings scan on the
-    query's terms below the decode instead of decoding the whole
-    dictionary."""
+    """Synonym, Blended, a SpanNear inside an OR and a standalone
+    SpanOrNQ inside an OR (the one shape of these that took the flat
+    fallback before SpanOrNQ had a segment case) all run the segment
+    tree fold and duel the flat executor bit-equal; the SpanOr-in-OR
+    spec runs in the segment-task plan, with no postings scan or
+    decode before the kernel (so there is no term-restricted flat
+    decode left to check)."""
     from lucene_solr_spark.search import ast as A
 
     ws = WandSearcher(seg_index)
@@ -531,13 +633,7 @@ def test_closed_leaf_fallback_duels_and_restricts(seg_index, flat_searcher):
         a = _rows(ws.search(q, k=10))
         b = _rows(flat_searcher.search(q, k=10))
         assert a == b, q.key()
-    fallback = shapes[3]
-    assert ws._kernel_spec(fallback.rewrite(), 10) is None
-    plan = (ws._search_flat(fallback.rewrite(), 10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "FileScan parquet" in plan and "/postings" in plan, plan  # flat decode
-    # the restriction: one isin over exactly the query's terms
-    assert "t000001,t000002,t000100" in plan.replace(" ", ""), plan
+    _assert_segment_task_plan(_kernel_plan_of(ws, {"": shapes[3]}))
 
 
 SPAN_SHAPES = [
@@ -619,10 +715,10 @@ def test_phrase_freqs_values_match_flat(seg_index, terms, slop):
 
     got = {r["docid"]: r["pfreq"] for r in WandSearcher(seg_index)
            .phrase_freqs(list(terms), slop=slop).collect()}
-    flat = seg_index.as_flat_tables(with_positions=True,
-                                    terms=sorted(set(terms)))
+    flat = seg_index.as_flat_tables(with_positions=True)
     pos: dict = {}
-    for r in flat.postings.collect():
+    for r in flat.postings.where(F.col("term").isin(sorted(set(terms)))
+                                 ).collect():
         pos.setdefault(r["docid"], {})[r["term"]] = np.asarray(
             r["positions"], np.int64)
     groups = [[i for i, t in enumerate(terms) if t == d]
@@ -1045,17 +1141,31 @@ def _random_tree(rng, depth: int) -> A.Query:
     zipf-head, tail and missing terms."""
     if depth == 0 or rng.random() < 0.45:
         r, t = rng.random(), rng.choice(TREE_TERMS)
-        if r < 0.7:
+        if r < 0.55:
             return A.TermQ(t, boost=rng.choice([1.0, 1.0, 2.0, 0.7]))
-        if r < 0.78:
+        if r < 0.61:
             return A.SynonymQ(tuple(rng.sample(TREE_TERMS, 2)),
                               boost=rng.choice([1.0, 1.5]))
-        if r < 0.86:
+        if r < 0.67:
             return A.BlendedTermQ(tuple(rng.sample(TREE_TERMS, 3)))
-        if r < 0.93:
+        if r < 0.72:
             return A.PhraseQ(("t000000", t), slop=rng.choice([0, 2]))
-        return A.SpanNearQ("t000001", t, slop=rng.choice([0, 3]),
-                           in_order=rng.random() < 0.5)
+        if r < 0.77:
+            return A.SpanNearQ("t000001", t, slop=rng.choice([0, 3]),
+                               in_order=rng.random() < 0.5)
+        if r < 0.82:
+            return A.SpanOrNQ(tuple(rng.sample(TREE_TERMS, 2)),
+                              boost=rng.choice([1.0, 0.5]))
+        if r < 0.86:
+            return A.MatchAllQ(boost=rng.choice([1.0, 0.3]))
+        boost = rng.choice([1.0, 1.0, 3.0])
+        return rng.choice([
+            A.PrefixQ(t[:-2], boost=boost),
+            A.WildcardQ(t[:-2] + "?" + t[-1], boost=boost),
+            A.FuzzyQ(t, max_edits=rng.choice([1, 2]), boost=boost),
+            A.TermRangeQ(t, t[:-1] + "9", include_lower=rng.random() < 0.5,
+                         boost=boost),
+            A.TermInSetQ(tuple(rng.sample(TREE_TERMS, 3)), boost=boost)])
 
     def kids(n):
         return tuple(_random_tree(rng, depth - 1) for _ in range(n))
@@ -1075,23 +1185,14 @@ def _random_tree(rng, depth: int) -> A.Query:
     return A.ConstQ(kids(1)[0], boost=rng.choice([1.0, 2.5]))
 
 
-def _walk(q):
-    yield q
-    for attr in ("clauses", "positive", "negative", "required", "optional",
-                 "inner"):
-        sub = getattr(q, attr, None)
-        for c in (sub if isinstance(sub, tuple) else (sub,)):
-            if isinstance(c, A.Query):
-                yield from _walk(c)
-
-
 def test_random_tree_fold_duels_flat(seg_index, flat_searcher):
     """Seeded random boolean trees (depth <= 4: boosts, msm, NOT,
-    ReqOpt, DisMax with tie, Const, Synonym/Blended, phrase and span
-    leaves, equal-key clauses) all run the segment-tier fold — one
-    segment-task map, no flat decode — and one WandSearcher.search_many
-    batch is bit-equal (docids and float32 score bits) to one flat
-    Searcher.search_many batch."""
+    ReqOpt, DisMax with tie, Const, Synonym/Blended, phrase, span and
+    SpanOr leaves, multi-term and MatchAll leaves, equal-key clauses)
+    all run the segment-tier fold — one segment-task map, no flat
+    decode — and one WandSearcher.search_many batch is bit-equal
+    (docids and float32 score bits) to one flat Searcher.search_many
+    batch."""
     import random
 
     rng = random.Random(2024)
@@ -1117,28 +1218,23 @@ def test_random_tree_fold_duels_flat(seg_index, flat_searcher):
         if isinstance(q, (A.AndQ, A.OrQ, A.DisMaxQ, A.NotQ, A.ReqOptQ,
                           A.ConstQ)):
             trees.append(q)
-    nodes = [n for q in trees for n in _walk(q.rewrite())]
+    nodes = [n for q in trees for n in q.rewrite().nodes()]
     assert {A.TermQ, A.SynonymQ, A.BlendedTermQ, A.PhraseQ, A.SpanNearQ,
-            A.AndQ, A.OrQ, A.NotQ, A.ReqOptQ, A.DisMaxQ,
-            A.ConstQ} <= {type(n) for n in nodes}
+            A.SpanOrNQ, A.MatchAllQ, A.PrefixQ, A.WildcardQ, A.FuzzyQ,
+            A.TermRangeQ, A.TermInSetQ, A.AndQ, A.OrQ, A.NotQ, A.ReqOptQ,
+            A.DisMaxQ, A.ConstQ} <= {type(n) for n in nodes}
     assert any(isinstance(n, A.OrQ) and n.min_should_match > 1 for n in nodes)
     assert any(isinstance(n, A.DisMaxQ) and n.tie_breaker > 0 for n in nodes)
     assert any(getattr(n, "boost", 1.0) != 1.0 for n in nodes)
 
     ws = WandSearcher(seg_index)
-    for q in trees:
-        assert ws._kernel_spec(q.rewrite(), 10) is not None, q.key()
     batch = {f"q{i:02d}": q for i, q in enumerate(trees)}
-
-    def by_qid(df):
-        out: dict = {}
-        for r in df.collect():
-            out.setdefault(r["qid"], []).append(
-                (r["rank"], r["docid"], np.float32(r["score"]).tobytes()))
-        return {qid: sorted(rows) for qid, rows in out.items()}
-    _assert_segment_task_plan(_kernel_plan_of(ws, batch))
-    got = by_qid(ws.search_many(batch, k=10))
-    exp = by_qid(flat_searcher.search_many(batch, k=10))
+    specs = ws._specs(batch, 10)
+    _assert_segment_task_plan(ws._kernel_plan(specs))
+    got = _bits_by_qid(ws.search_many(batch, k=10))
+    exp = _bits_by_qid(flat_searcher.search_many(batch, k=10))
     assert len(exp) >= 12, "too few trees match anything"
     for qid in batch:
+        # a spec that cannot run is one whose flat answer is empty
+        assert specs[qid].run is not None or qid not in exp, qid
         assert got.get(qid) == exp.get(qid), (qid, batch[qid].key())

@@ -31,9 +31,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
 from lucene_solr_spark.analysis import tokens_udf
 from lucene_solr_spark.functions.bm25 import length_norm_byte
@@ -41,18 +40,6 @@ from lucene_solr_spark.index.docid import assign_doc_ids
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
-
-
-@pandas_udf(IntegerType())
-def _norm_byte_udf(lengths: pd.Series) -> pd.Series:
-    """Vectorized byte315 norm from field length (0 for empty docs —
-    Lucene omits the norm entry; score path maps it via cache[0])."""
-    arr = lengths.to_numpy(dtype=np.int64)
-    out = np.zeros(len(arr), dtype=np.int32)
-    nz = arr > 0
-    out[nz] = length_norm_byte(arr[nz]).astype(np.int32)
-    return pd.Series(out)
 
 
 @dataclass
@@ -235,27 +222,3 @@ def build_index(
 
     return IndexTables(docs=docs, postings=postings, term_stats=term_stats,
                        coll_stats=coll_stats)
-
-
-def write_index(tables: IndexTables, path: str, term_buckets: int = 32) -> None:
-    """Persist the index. Postings are repartitioned by term so a
-    term-lookup is partition-prunable; on a real deployment these
-    would be Iceberg tables bucketed by term with sorted files
-    (SURVEY §1.4) — plain parquet directories stand in here."""
-    tables.docs.repartition("docid").write.mode("overwrite").parquet(f"{path}/docs")
-    (
-        tables.postings.repartition(term_buckets, "term")
-        .sortWithinPartitions("term", "docid")
-        .write.mode("overwrite")
-        .parquet(f"{path}/postings")
-    )
-    tables.term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
-
-
-def read_index(spark: SparkSession, path: str) -> IndexTables:
-    docs = spark.read.parquet(f"{path}/docs")
-    postings = spark.read.parquet(f"{path}/postings")
-    term_stats = spark.read.parquet(f"{path}/term_stats")
-    row = docs.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    return IndexTables(docs, postings, term_stats,
-                       {"doc_count": row["n"], "sum_ttf": row["s"]})

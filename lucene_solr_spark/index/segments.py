@@ -179,9 +179,6 @@ def commit_segments_meta(meta: DataFrame, path: str) -> int:
     return new_gen
 
 
-def index_exists(spark: SparkSession, path: str) -> bool:
-    return read_segments_meta(spark, path) is not None
-
 META_SCHEMA = (
     "seg_id int, doc_base long, doc_count long, sum_doclen long, "
     "term_count long, posting_rows long, max_df long, "

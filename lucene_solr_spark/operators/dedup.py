@@ -202,34 +202,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return sums.select("id", sig.cast("long").alias("simhash"))
 
 
-def hamming_pairs(sig_df: DataFrame, max_distance: int = 3,
-                  bits: int = 32, blocks: int = 4) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, using the
-    pigeonhole block trick: if distance <= max_distance < blocks, at
-    least one of `blocks` bit-blocks is identical — join candidates on
-    each block, verify with popcount. Returns (id_a, id_b, dist)."""
-    width = bits // blocks
-    mask = (1 << width) - 1
-    banded = sig_df.select(
-        "id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(k).alias("blk"),
-                     F.shiftright("simhash", k * width).bitwiseAND(F.lit(mask))
-                     .alias("key"))
-            for k in range(blocks)
-        ])).alias("b"),
-    ).select("id", "simhash", "b.blk", "b.key")
-    a = banded.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"),
-                      "blk", "key")
-    b = banded.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"),
-                      "blk", "key")
-    cand = (a.join(b, ["blk", "key"]).where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sh_a", "sh_b").distinct())
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.withColumn("dist", dist).where(
-        F.col("dist") <= max_distance).select("id_a", "id_b", "dist")
-
-
 def embedding_dupes(emb: DataFrame, dim: int, threshold: float,
                     n_planes: int = 8, seed: int = 42,
                     id_col: str = "vec_id",

@@ -29,15 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def field_facet(df: DataFrame, field: str, limit: int = 10,
-                sort_by_count: bool = True) -> DataFrame:
-    """Per-value counts, top `limit` buckets, Solr default sort
-    (count desc, value asc)."""
-    counts = df.groupBy(field).agg(F.count(F.lit(1)).alias("cnt"))
-    order = [F.desc("cnt"), F.asc(field)] if sort_by_count else [F.asc(field)]
-    return counts.orderBy(*order).limit(limit)
-
-
 def range_facet(df: DataFrame, field: str, start: float, end: float,
                 gap: float) -> DataFrame:
     """Numeric range buckets [start+i*gap, start+(i+1)*gap)."""

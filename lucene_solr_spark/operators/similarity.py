@@ -369,45 +369,3 @@ def sq8_topk_indexed(spark, path: str, query_vec: list[float], k: int = 10,
     return (scored.orderBy(*order).limit(k)
             .withColumn("rank", F.row_number().over(Window.orderBy(*order))
                         .cast("long")))
-
-
-def sq8_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Ad-hoc quantized top-k over a float frame (no persisted layout;
-    the serving path is build_ann_index + sq8_topk_indexed, which
-    never touches the float column). Ranks by the INTEGER dot product
-    of int8 codes (query quantized the same way) — exact integer
-    arithmetic, bit-stable across engines.
-
-    Metric note: because each vector's codes are scaled by ITS OWN
-    max|x|, the raw code dot is the dot of max-normalized vectors —
-    NOT the FAISS SQ8 reconstructed similarity (that multiplies the
-    stored scale back in; sq8_topk_indexed does). Exact as
-    arithmetic; as a metric it ranks direction only. Zero vectors
-    (scale 0) are excluded. Returns (vec_id, dot_q, rank).
-
-    The standard serving recipe composes this as stage 1 of
-    SQ8-then-rerank: take top-C here (C ~ 5-10x k), then re-rank the
-    survivors by exact float cosine (brute_force_topk on the C rows).
-    """
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qm = float(np.abs(q).max())
-    if qm == 0.0:
-        raise ValueError("zero query vector")
-    qc = np.floor(q * 127.0 / qm)
-    qlit = F.array(*[F.lit(int(v)) for v in qc])
-    codes, mx = sq8_codes(F.col(vec_col))
-    enc = embeddings.where(
-        F.array_max(F.transform(F.col(vec_col),
-                                lambda x: F.abs(x.cast("double")))) > 0
-    ).select(F.col(id_col), codes.alias("_c"))
-    dot = F.aggregate(
-        F.zip_with(F.col("_c"), qlit, lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
-    scored = enc.select(id_col, dot.alias("dot_q"))
-    order = [F.desc("dot_q"), F.asc(id_col)]
-    return (scored.orderBy(*order).limit(k)
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order))
-                        .cast("long")))

@@ -454,7 +454,29 @@ class RegexpQ(MultiTermQ):
         return f"re:{self.regex}"
 
     def term_predicate(self):
-        return F.col("term").rlike("^" + self.regex + "$")
+        regex = "^" + self.regex + "$"
+        _check_java_regex(regex)
+        return F.col("term").rlike(regex)
+
+
+def _check_java_regex(regex: str) -> None:
+    """ParseError unless java.util.regex.Pattern (rlike's semantics)
+    compiles ``regex``: one py4j call on the driver, no Spark job, so a
+    bad regexp fails before the expansion job starts."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+    from pyspark.errors import IllegalArgumentException
+
+    sc = SparkContext._active_spark_context
+    if sc is None:  # no session yet: nothing to compile against
+        return
+    try:
+        sc._jvm.java.util.regex.Pattern.compile(regex)
+    except (Py4JJavaError, IllegalArgumentException) as e:
+        # a PatternSyntaxException; a SparkSession's py4j handler
+        # converts it to IllegalArgumentException
+        why = str(e).strip().splitlines()[0]
+        raise ParseError(f"bad regexp {regex!r}: {why}") from None
 
 
 @dataclass(frozen=True)

@@ -62,6 +62,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from lucene_solr_spark.functions.bm25 import BM25
 from lucene_solr_spark.index.codec import (
@@ -1467,13 +1468,18 @@ class WandSearcher:
     def _expand(self, nodes) -> dict:
         """{leaf: expanded terms} of the MultiTermQs among ``nodes``, by
         ONE one-stage scan of the live postings' term column filtered by
-        the OR of their term_predicate (prefix/range/in-set push down)."""
+        the OR of their term_predicate (prefix/range/in-set push down).
+        The read's schema is given, so no parquet schema-inference job
+        runs first, even on a fresh SegmentIndex handle."""
         leaves = list(dict.fromkeys(
             n for n in nodes if isinstance(n, A.MultiTermQ)))
         if not leaves:
             return {}
         preds = [q.term_predicate() for q in leaves]
-        rows = self.si.postings.where(reduce(lambda a, b: a | b, preds)).select(
+        terms = (self.si.spark.read.schema("term string, seg_id int")
+                 .parquet(f"{self.si.path}/postings")
+                 .where(F.col("seg_id").isin(list(self._snapshot))))
+        rows = terms.where(reduce(lambda a, b: a | b, preds)).select(
             "term", *[p.alias(f"m{i}") for i, p in enumerate(preds)]).collect()
         return {q: tuple(sorted({r["term"] for r in rows if r[f"m{i}"]}))
                 for i, q in enumerate(leaves)}

@@ -26,10 +26,3 @@ def load_table(spark: SparkSession, name: str, base: str | None = None) -> DataF
 def load_tables(spark: SparkSession, base: str | None = None,
                 names: list[str] | None = None) -> dict[str, DataFrame]:
     return {n: load_table(spark, n, base) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, base: str | None = None) -> None:
-    """Register all tables as temp views (mirrors the driver's DuckDB
-    side, so spark.sql(...) oracle strings can be tested in-repo)."""
-    for n in TABLES:
-        load_table(spark, n, base).createOrReplaceTempView(n)

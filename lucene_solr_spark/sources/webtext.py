@@ -82,14 +82,3 @@ def synth_pages(spark: SparkSession, n_rows: int, seed: int = 42,
         .mapInPandas(gen, schema="url string, warc_ts timestamp, html binary, "
                                  "text string, lang string")
     )
-
-
-def extract_text_from_html(html: bytes) -> str:
-    """The 'extraction' step whose output must be byte-identical to the
-    text column per url (BASELINE.json input_hint per-row invariant)."""
-    body = html
-    if body.startswith(b"<html><body>"):
-        body = body[len(b"<html><body>"):]
-    if body.endswith(b"</body></html>"):
-        body = body[: -len(b"</body></html>")]
-    return body.decode("utf-8")

@@ -1,13 +1,18 @@
 """Measure the per-task Python floor of a local Spark session.
 
-Run as: python scripts/python_task_floor.py [--runs N] [--cores C]
-(from the repo root, or with the repo on PYTHONPATH). Prints the median
-over N runs of four figures, in ms:
+Run as: python scripts/python_task_floor.py [--runs N] [--cores C] [--tcp]
+(from the repo root, or with the repo on PYTHONPATH). ``--tcp`` turns
+off the session's Unix-domain-socket transport, so both floors can be
+measured; ``transport`` in the output says which one ran (``uds`` or
+``tcp``). Prints the median over N runs of five figures, in ms:
 
 - ``jvm_collect``: a JVM-only ``spark.range(3).collect()``;
 - ``noop_python_job``: a no-op 3-task ``mapInPandas`` job, run after the
   probe job below, so its reused workers hold the zip-directory guard
   as an engine task's workers do;
+- ``noop_python_toarrow``: the same job ending in ``toArrow()``, as a
+  search's kernel job does (its Arrow result stream is the transfer
+  that stalls over loopback TCP; ``collect()``'s does not);
 - ``worker_invalidate_unguarded``: one in-worker
   ``importlib.invalidate_caches()`` without the guard, i.e. what
   pyspark's worker pays at the start of each task on CPython < 3.12
@@ -66,17 +71,23 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--cores", type=int, default=4)
+    ap.add_argument("--tcp", action="store_true",
+                    help="Python<->JVM sockets over loopback TCP, not UDS")
     args = ap.parse_args()
 
     from lucene_solr_spark.session import get_spark
 
+    conf = {"spark.ui.showConsoleProgress": "false"}
+    if args.tcp:
+        conf["spark.python.unix.domain.socket.enabled"] = "false"
     spark = get_spark(app_name="python-task-floor", cores=args.cores,
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+                      extra_conf=conf)
+    uds = spark.conf.get("spark.python.unix.domain.socket.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     schema = "unguarded double, guarded double, zip_importers int"
     rows3 = spark.range(0, 3, 1, 3)
     samples: dict[str, list[float]] = {
-        "jvm_collect": [], "noop_python_job": [],
+        "jvm_collect": [], "noop_python_job": [], "noop_python_toarrow": [],
         "worker_invalidate_unguarded": [], "worker_invalidate_guarded": []}
     n_zip = set()
     for _ in range(args.runs):
@@ -90,8 +101,12 @@ def main() -> None:
         t0 = time.perf_counter()
         rows3.mapInPandas(lambda it: it, "id long").collect()
         samples["noop_python_job"].append((time.perf_counter() - t0) * 1e3)
+        t0 = time.perf_counter()
+        rows3.mapInPandas(lambda it: it, "id long").toArrow()
+        samples["noop_python_toarrow"].append((time.perf_counter() - t0) * 1e3)
     out = {k: round(statistics.median(v), 2) for k, v in samples.items()}
-    out.update(runs=args.runs, zip_importers=sorted(n_zip),
+    out.update(transport="uds" if uds == "true" else "tcp",
+               runs=args.runs, zip_importers=sorted(n_zip),
                python=sys.version.split()[0])
     print(json.dumps(out))
     spark.stop()

@@ -51,6 +51,9 @@ def test_kill_mid_build_then_resume(spark, corpus, tmp_path_factory):
     # launch the victim build and SIGKILL it mid-flight
     env = dict(os.environ)
     env["SPARK_DRIVER_MEMORY"] = "4g"
+    # a SIGKILLed session cannot remove its socket directory: keep it
+    # under this test's own tmp dir
+    env["TMPDIR"] = str(base)
     proc = subprocess.Popen(
         [sys.executable, "-c", _CHILD, corpus, victim_path],
         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, env=env,

@@ -1,4 +1,5 @@
-"""Session defaults and the Python worker's zip-directory guard.
+"""Session defaults, the Unix-domain-socket transport and the Python
+worker's zip-directory guard.
 
 The guard (lucene_solr_spark._zipguard) keeps importlib.invalidate_caches()
 from re-reading unchanged zip archives; pyspark's worker calls it at the
@@ -6,16 +7,23 @@ start of every task."""
 
 from __future__ import annotations
 
+import glob
 import importlib
 import os
+import shutil
+import stat
+import subprocess
 import sys
+import tempfile
 import zipfile
 import zipimport
 
 import pytest
 
-from lucene_solr_spark import _zipguard
+from lucene_solr_spark import _zipguard, session
 from lucene_solr_spark.session import driver_heap
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 LAZY_ZIP_CACHES = pytest.mark.skipif(
     sys.version_info >= (3, 12),
@@ -28,6 +36,82 @@ def test_driver_heap_is_an_eighth_of_ram_at_least_1g():
     assert driver_heap(125 * 1024) == "16000m"
     assert driver_heap(4096) == "1024m"
     assert driver_heap(0) == "1024m"
+
+
+def test_session_runs_python_over_a_private_socket_dir(spark):
+    """UDS is on, its directory is 0700 and the test user's, the longest
+    socket path fits sun_path, and Python jobs and transfers work."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+    st = os.stat(sock_dir)
+    assert stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
+    longest = len(os.fsencode(sock_dir)) + session.SOCKET_NAME_BYTES
+    assert longest <= session.SUN_PATH_MAX
+
+    def tag(batches):
+        for b in batches:
+            yield b.assign(id=b["id"] * 10)
+    got = spark.range(0, 3, 1, 3).mapInPandas(tag, "id long").toArrow()
+    assert sorted(got.column("id").to_pylist()) == [0, 10, 20]
+    rows = [(1, "a"), (2, "b")]
+    assert [tuple(r) for r in
+            spark.createDataFrame(rows, "n long, s string").collect()] == rows
+
+
+def test_socket_dir_falls_back_to_tmp_then_to_tcp(tmp_path, monkeypatch):
+    """An over-long TMPDIR sends the directory to /tmp; when no base
+    fits, no socket directory is made and no UDS conf is set."""
+    long_base = tmp_path / ("d" * (session.SUN_PATH_MAX - 40))
+    long_base.mkdir()
+    monkeypatch.setenv("TMPDIR", str(long_base))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    assert tempfile.gettempdir() == str(long_base)
+    made = session.make_socket_dir()
+    try:
+        assert os.path.dirname(made) == "/tmp"
+        assert os.path.basename(made).startswith(session.SOCKET_DIR_PREFIX)
+        assert stat.S_IMODE(os.stat(made).st_mode) == 0o700
+        assert len(os.fsencode(made)) + session.SOCKET_NAME_BYTES <= \
+            session.SUN_PATH_MAX
+    finally:
+        os.rmdir(made)
+
+    monkeypatch.setattr(session, "FALLBACK_SOCKET_BASE", str(long_base))
+    monkeypatch.setattr(session, "_socket_dir", None)
+    assert session.make_socket_dir() is None
+    assert session._uds_conf() == {}
+    assert session._socket_dir is None
+    assert os.listdir(long_base) == []
+
+
+def test_normal_exit_removes_the_socket_dir(tmp_path):
+    """A process that starts a session and runs a Python job leaves no
+    socket directory behind when it exits normally."""
+    base = tempfile.mkdtemp(prefix="sockexit-", dir="/tmp")
+    script = (
+        "import os\n"
+        "from lucene_solr_spark.session import get_spark\n"
+        "spark = get_spark(app_name='lss-exit', cores=2, extra_conf="
+        "{'spark.driver.memory': '1g', 'spark.ui.showConsoleProgress': 'false'})\n"
+        "d = spark.sparkContext.getConf().get("
+        "'spark.python.unix.domain.socket.dir')\n"
+        "assert os.path.isdir(d)\n"
+        "spark.range(0, 2, 1, 2).mapInPandas(lambda it: it, 'id long').collect()\n"
+        "print(d)\n")
+    env = {**os.environ, "TMPDIR": base, "PYTHONPATH": REPO}
+    try:
+        out = subprocess.run([sys.executable, "-c", script], env=env,
+                             cwd=str(tmp_path), capture_output=True,
+                             text=True, timeout=300)
+        assert out.returncode == 0, out.stderr[-2000:]
+        sock_dir = out.stdout.strip().splitlines()[-1]
+        assert os.path.dirname(sock_dir) == base
+        assert not os.path.exists(sock_dir)
+        assert glob.glob(os.path.join(base, session.SOCKET_DIR_PREFIX + "*")) == []
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _write_zip(path, modules):

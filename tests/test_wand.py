@@ -318,9 +318,8 @@ def _bits_by_qid(df) -> dict:
 def test_search_many_batches_former_fallback_shapes(seg_index, flat_searcher,
                                                     jobs_stages):
     """Every shape that once took the flat fallback batches in ONE
-    search_many: warm, one multi-term expansion job plus the kernel
-    job, each one stage (a SegmentIndex handle's first postings scan
-    adds one parquet schema job), and each query's rows bit-equal
+    search_many: one multi-term expansion job plus the kernel job, each
+    one stage, and each query's rows bit-equal
     (docid and float32 score bits) to its own search() and to the flat
     executor. A FieldedQ is the one node the single-field searcher
     refuses: ValueError before any job, even beside a multi-term
@@ -347,6 +346,68 @@ def test_search_many_batches_former_fallback_shapes(seg_index, flat_searcher,
             ws.search_many({"f": A.OrQ((fielded, A.TermQ("t000001"))),
                             "p": A.PrefixQ("t00000")}, k=10)
     assert jobs_stages(refused) == (0, 0)
+
+
+def test_expansion_on_a_fresh_handle_is_one_job(seg_index, jobs_stages):
+    """The expansion reads the postings' term column with a given
+    schema, so a fresh SegmentIndex handle's first multi-term batch is
+    the expansion job plus the kernel job: no schema-inference job."""
+    from lucene_solr_spark.index.segments import SegmentIndex
+
+    ws = WandSearcher(SegmentIndex(seg_index.path, seg_index.spark))
+    batch = {"prefix": A.PrefixQ("t00000"), "term": A.TermQ("t000100")}
+    got: dict = {}
+    assert jobs_stages(lambda: got.update(
+        _bits_by_qid(ws.search_many(batch, k=10)))) == (2, 2)
+    assert got == _bits_by_qid(WandSearcher(seg_index).search_many(batch, k=10))
+
+
+def test_bad_regexp_raises_parse_error_before_any_job(seg_index,
+                                                      flat_searcher,
+                                                      jobs_stages):
+    """A regexp java.util.regex cannot compile is a ParseError raised on
+    the driver by both searchers, before any Spark job."""
+    ws = WandSearcher(seg_index)
+
+    def refused():
+        with pytest.raises(A.ParseError, match="bad regexp"):
+            ws.search("/re(/", k=10)
+        with pytest.raises(A.ParseError, match="bad regexp"):
+            ws.search_many({"a": A.TermQ("t000001"),
+                            "b": A.OrQ((A.RegexpQ("t0[0"),
+                                        A.TermQ("t000002")))}, k=10)
+        with pytest.raises(A.ParseError, match="bad regexp"):
+            flat_searcher.search("/re(/", k=10)
+    assert jobs_stages(refused) == (0, 0)
+
+
+def test_concurrent_callers_get_the_serial_answers(seg_index):
+    """4 threads sharing one warm WandSearcher, each cycling mixed
+    shapes, get answers bit-equal (docid and float32 score bits) to the
+    serial ones."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    shapes = ["t000001", "t000001 AND t000002", "t000001 OR t000100",
+              "t000001 NOT t000002", '"t000001 t000002"~2',
+              "(t000001 AND t000002) OR t000100",
+              A.OrQ((A.PrefixQ("t00001"), A.TermQ("t000100")))]
+    ws = WandSearcher(seg_index)
+
+    def bits(q):
+        return [(r["rank"], r["docid"], np.float32(r["score"]).tobytes())
+                for r in ws.search(q, k=10).collect()]
+
+    serial = [bits(q) for q in shapes]
+
+    def caller(start: int) -> list:
+        order = [(start + i) % len(shapes) for i in range(len(shapes))]
+        return [(i, bits(shapes[i])) for i in order]
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        answers = [a for got in pool.map(caller, range(4)) for a in got]
+    assert len(answers) == 4 * len(shapes)
+    for i, got in answers:
+        assert got == serial[i], shapes[i]
 
 
 # one instance of every concrete ast.Query node
